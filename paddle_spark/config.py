@@ -161,8 +161,5 @@ class ExtractConfig:
     # figure) and the committed goldens byte-stable.
     ocr_images: bool = False
 
-    def layout_threshold(self, label_id: int) -> float:
-        return LAYOUT_THRESHOLDS.get(label_id, 0.5)
-
 
 DEFAULT_CONFIG = ExtractConfig()

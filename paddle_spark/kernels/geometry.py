@@ -56,17 +56,13 @@ def iou_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 def threshold_filter(
     scores: np.ndarray, label_ids: np.ndarray, thresholds: dict[int, float]
 ) -> np.ndarray:
-    """Per-class score mask (F2): keep where score >= threshold[label].
-
-    Vectorized via a lookup table (``np.take``), mirroring the reference's
-    class->min-score map (pipeline_config.yaml:84-104).
+    """Per-class score mask (F2): keep where score >= threshold[label],
+    mirroring the reference's class->min-score map
+    (pipeline_config.yaml:84-104). Ids absent from the map, negative or
+    huge ones included, get the default 0.5.
     """
-    max_id = int(label_ids.max(initial=0))
-    lut = np.full(max_id + 1, 0.5)
-    for k, v in thresholds.items():
-        if k <= max_id:
-            lut[k] = v
-    return scores >= lut[label_ids]
+    thr = np.array([thresholds.get(l, 0.5) for l in label_ids.tolist()], dtype=np.float64)
+    return scores >= thr
 
 
 def nms(
@@ -74,9 +70,9 @@ def nms(
     scores: np.ndarray,
     label_ids: np.ndarray,
     iou_threshold: float = 0.5,
-    class_aware: bool = True,
 ) -> np.ndarray:
-    """Greedy IoU NMS (D1, layout_nms parity). Returns keep indices in
+    """Greedy class-aware IoU NMS (D1, layout_nms parity): a box only
+    suppresses boxes of its own label. Returns keep indices in
     descending-score order. Ties break on original index (stable)."""
     n = len(boxes)
     if n == 0:
@@ -90,10 +86,7 @@ def nms(
         if suppressed[idx]:
             continue
         keep.append(idx)
-        over = ious[idx] >= iou_threshold
-        if class_aware:
-            over &= label_ids == label_ids[idx]
-        suppressed |= over
+        suppressed |= (ious[idx] >= iou_threshold) & (label_ids == label_ids[idx])
         suppressed[idx] = True  # already kept; never revisit
     return np.asarray(keep, dtype=np.int64)
 

@@ -1,337 +1,3 @@
-"""Small-N pure-Python twin of the per-page geometry chain.
-
-Real detector pages carry 10-40 boxes; at that size NumPy's per-call fixed
-cost dominates the layout branch (~571 us/page measured, spread across
-6 vectorized kernels). This module re-implements the exact chain over
-plain lists/floats — Python floats ARE IEEE doubles, every arithmetic
-expression is written identically to the NumPy twin, and every sort
-reproduces the corresponding ``np.lexsort`` key order — so results are
-bit-identical (pinned by tests/test_geometry_fast_equivalence.py over the
-corpus and hypothesis-random pages).
-
-``kernels.layout.process_page`` dispatches here for pages with
-<= FAST_PATH_MAX_BOXES boxes; the NumPy path remains both the executable
-spec and the large-page path (a 500-box table page is where vectorization
-actually wins).
-"""
-
-from __future__ import annotations
-
-from paddle_spark.config import (
-    DROP_LABELS,
-    LABELS,
-    LAYOUT_THRESHOLDS,
-    ExtractConfig,
-    merge_mode_for,
-)
+"""Box-count split for jobbench/trace.py's per-page layout timings (its only reader)."""
 
 FAST_PATH_MAX_BOXES = 64
-
-
-def _iou(a: list[float], b: list[float]) -> float:
-    iw = min(a[2], b[2]) - max(a[0], b[0])
-    if iw <= 0.0:
-        return 0.0
-    ih = min(a[3], b[3]) - max(a[1], b[1])
-    if ih <= 0.0:
-        return 0.0
-    inter = iw * ih
-    area_a = max(0.0, a[2] - a[0]) * max(0.0, a[3] - a[1])
-    area_b = max(0.0, b[2] - b[0]) * max(0.0, b[3] - b[1])
-    union = area_a + area_b - inter
-    return inter / union if union > 0 else 0.0
-
-
-def _overlap_ratio(a: list[float], b: list[float]) -> float:
-    """intersection / smaller-area (merge-mode trigger)."""
-    iw = min(a[2], b[2]) - max(a[0], b[0])
-    ih = min(a[3], b[3]) - max(a[1], b[1])
-    inter = max(0.0, iw) * max(0.0, ih)
-    area_a = max(0.0, (a[2] - a[0]) * (a[3] - a[1]))
-    area_b = max(0.0, (b[2] - b[0]) * (b[3] - b[1]))
-    smaller = min(area_a, area_b)
-    return inter / smaller if smaller > 0 else 0.0
-
-
-def _nms_py(boxes, scores, label_ids, iou_threshold):
-    """Greedy class-aware NMS; returns keep indices SORTED ascending
-    (document order — matching np.sort(nms(...)) in the caller)."""
-    n = len(boxes)
-    order = sorted(range(n), key=lambda i: (-scores[i], i))
-    suppressed = [False] * n
-    keep = []
-    for idx in order:
-        if suppressed[idx]:
-            continue
-        keep.append(idx)
-        bi, li = boxes[idx], label_ids[idx]
-        for j in range(n):
-            if not suppressed[j] and label_ids[j] == li and _iou(bi, boxes[j]) >= iou_threshold:
-                suppressed[j] = True
-    keep.sort()
-    return keep
-
-
-def _merge_py(boxes, scores, label_ids, texts, containment_threshold):
-    """Per-class merge modes, greedy by (ratio desc, i, j), loop to fixpoint
-    — mirrors geometry.apply_merge_modes including the union text join."""
-    n = len(boxes)
-    alive = [True] * n
-    boxes = [list(b) for b in boxes]
-    scores = list(scores)
-    texts = list(texts)
-    changed = True
-    while changed:
-        changed = False
-        pairs = []
-        for i in range(n):
-            if not alive[i]:
-                continue
-            for j in range(i + 1, n):
-                if not alive[j] or label_ids[j] != label_ids[i]:
-                    continue
-                r = _overlap_ratio(boxes[i], boxes[j])
-                if r >= containment_threshold:
-                    pairs.append((-r, i, j))
-        if not pairs:
-            break
-        pairs.sort()
-        for _, i, j in pairs:
-            if not (alive[i] and alive[j]):
-                continue
-            mode = merge_mode_for(int(label_ids[i]))
-            area_i = (boxes[i][2] - boxes[i][0]) * (boxes[i][3] - boxes[i][1])
-            area_j = (boxes[j][2] - boxes[j][0]) * (boxes[j][3] - boxes[j][1])
-            big, small = (i, j) if area_i >= area_j else (j, i)
-            if mode == "large":
-                alive[small] = False
-            elif mode == "small":
-                alive[big] = False
-            else:  # union
-                first, second = (
-                    (i, j)
-                    if (boxes[i][1], boxes[i][0], i) <= (boxes[j][1], boxes[j][0], j)
-                    else (j, i)
-                )
-                boxes[first] = [
-                    min(boxes[i][0], boxes[j][0]),
-                    min(boxes[i][1], boxes[j][1]),
-                    max(boxes[i][2], boxes[j][2]),
-                    max(boxes[i][3], boxes[j][3]),
-                ]
-                scores[first] = max(scores[i], scores[j])
-                ta, tb = texts[first], texts[second]
-                texts[first] = (ta + " " + tb).strip() if ta or tb else ""
-                alive[second] = False
-            changed = True
-    keep = [k for k in range(n) if alive[k]]
-    return (
-        [boxes[k] for k in keep],
-        [scores[k] for k in keep],
-        [label_ids[k] for k in keep],
-        [texts[k] for k in keep],
-    )
-
-
-def _unclip_py(boxes, ratio_x, ratio_y, page_w, page_h):
-    out = []
-    for b in boxes:
-        cx = (b[0] + b[2]) / 2.0
-        cy = (b[1] + b[3]) / 2.0
-        hw = (b[2] - b[0]) / 2.0 * ratio_x
-        hh = (b[3] - b[1]) / 2.0 * ratio_y
-        out.append(
-            [
-                min(max(cx - hw, 0.0), page_w),
-                min(max(cy - hh, 0.0), page_h),
-                min(max(cx + hw, 0.0), page_w),
-                min(max(cy + hh, 0.0), page_h),
-            ]
-        )
-    return out
-
-
-def _group_lines_py(boxes, overlap_threshold):
-    """y-interval sweep with running envelope — line id per box, mirroring
-    geometry.group_lines (order by y1 then x1, stable)."""
-    n = len(boxes)
-    order = sorted(range(n), key=lambda i: (boxes[i][1], boxes[i][0], i))
-    out = [0] * n
-    line = -1
-    env_y2 = float("inf")
-    env_h = float("inf")
-    first = True
-    run_max_y2 = float("-inf")
-    run_max_h = float("-inf")
-    for k in order:
-        y1, y2 = boxes[k][1], boxes[k][3]
-        h = max(0.0, y2 - y1)
-        prev_env = float("inf") if first else run_max_y2
-        prev_h = float("inf") if first else run_max_h
-        overlap = min(prev_env, y2) - y1
-        min_h = min(h, prev_h)
-        if min_h <= 0:
-            min_h = 1.0
-        if first or overlap < overlap_threshold * min_h:
-            line += 1
-        out[k] = line
-        run_max_y2 = y2 if first else max(run_max_y2, y2)
-        run_max_h = h if first else max(run_max_h, h)
-        first = False
-    return out
-
-
-def _cluster_columns_py(idxs, boxes, overlap_threshold):
-    """Column ids for the boxes at ``idxs`` (x-interval sweep), mirroring
-    geometry._cluster_columns."""
-    order = sorted(idxs, key=lambda i: (boxes[i][0], boxes[i][1], i))
-    col_of = {}
-    col = -1
-    first = True
-    run_max_x2 = float("-inf")
-    run_max_w = float("-inf")
-    for k in order:
-        x1, x2 = boxes[k][0], boxes[k][2]
-        w = max(0.0, x2 - x1)
-        prev_env = float("inf") if first else run_max_x2
-        prev_w = float("inf") if first else run_max_w
-        overlap = min(prev_env, x2) - x1
-        min_w = min(w, prev_w)
-        if min_w <= 0:
-            min_w = 1.0
-        if first or overlap < overlap_threshold * min_w:
-            col += 1
-        col_of[k] = col
-        run_max_x2 = x2 if first else max(run_max_x2, x2)
-        run_max_w = w if first else max(run_max_w, w)
-        first = False
-    return col_of
-
-
-def _reading_order_py(boxes, page_w, cfg):
-    """Band/column/position permutation, mirroring geometry.reading_order."""
-    n = len(boxes)
-    if n == 0:
-        return []
-    widths = [b[2] - b[0] for b in boxes]
-    span_thr = cfg.spanner_width_frac * page_w
-    is_span = [w >= span_thr for w in widths]
-    span_idx = [i for i in range(n) if is_span[i]]
-    span_cy = {i: (boxes[i][1] + boxes[i][3]) / 2.0 for i in span_idx}
-    span_sorted = sorted(span_idx, key=lambda i: (span_cy[i], i))
-    boundaries = [span_cy[i] for i in span_sorted]
-
-    import bisect
-
-    band = [0] * n
-    for i in range(n):
-        cy = (boxes[i][1] + boxes[i][3]) / 2.0
-        band[i] = 2 * bisect.bisect_left(boundaries, cy)
-    for k, i in enumerate(span_sorted):
-        band[i] = 2 * k + 1
-
-    col = [0] * n
-    bands_nonspan = sorted({band[i] for i in range(n) if not is_span[i]})
-    for b in bands_nonspan:
-        members = [i for i in range(n) if band[i] == b and not is_span[i]]
-        col_of = _cluster_columns_py(members, boxes, cfg.column_overlap_threshold)
-        for i, c in col_of.items():
-            col[i] = c
-    return sorted(
-        range(n), key=lambda i: (band[i], col[i], boxes[i][1], boxes[i][0], i)
-    )
-
-
-def process_page_py(page: dict, cfg: ExtractConfig) -> tuple[list[dict], int]:
-    """Pure-Python twin of kernels.layout.process_page (same signature,
-    bit-identical output — see module docstring)."""
-    raw = page.get("boxes", [])
-    if not raw:
-        return [], 0
-    n_in = len(raw)
-    boxes = [[float(b["x1"]), float(b["y1"]), float(b["x2"]), float(b["y2"])] for b in raw]
-    scores = [float(b["score"]) for b in raw]
-    label_ids = [int(b["label_id"]) for b in raw]
-    texts = [b.get("text", "") or "" for b in raw]
-    page_w = float(page.get("width", 1700.0))
-    page_h = float(page.get("height", 2200.0))
-
-    # F2 per-class threshold
-    keep = [
-        k for k in range(n_in)
-        if scores[k] >= LAYOUT_THRESHOLDS.get(label_ids[k], 0.5)
-    ]
-    boxes = [boxes[k] for k in keep]
-    scores = [scores[k] for k in keep]
-    label_ids = [label_ids[k] for k in keep]
-    texts = [texts[k] for k in keep]
-
-    # D1 class-aware NMS (keep in document order)
-    keep = _nms_py(boxes, scores, label_ids, cfg.nms_iou_threshold)
-    boxes = [boxes[k] for k in keep]
-    scores = [scores[k] for k in keep]
-    label_ids = [label_ids[k] for k in keep]
-    texts = [texts[k] for k in keep]
-
-    # D2 merge modes
-    boxes, scores, label_ids, texts = _merge_py(
-        boxes, scores, label_ids, texts, cfg.merge_containment_threshold
-    )
-
-    # D3 unclip + page clip
-    boxes = _unclip_py(boxes, cfg.unclip_ratio_x, cfg.unclip_ratio_y, page_w, page_h)
-
-    # F6 boilerplate-label drop
-    labels = [LABELS[i] if 0 <= i < len(LABELS) else "text" for i in label_ids]
-    content = [lab not in DROP_LABELS for lab in labels]
-    n_dropped = n_in - sum(content)
-    boxes = [b for b, m in zip(boxes, content) if m]
-    scores = [s for s, m in zip(scores, content) if m]
-    labels = [l for l, m in zip(labels, content) if m]
-    texts = [t for t, m in zip(texts, content) if m]
-    if not boxes:
-        return [], n_dropped
-
-    # W2 line-group OCR fragments
-    ocr = [lab == "ocr_text" for lab in labels]
-    if any(ocr):
-        frag_idx = [k for k in range(len(boxes)) if ocr[k]]
-        frag_boxes = [boxes[k] for k in frag_idx]
-        line_ids = _group_lines_py(frag_boxes, cfg.line_overlap_threshold)
-        merged_boxes, merged_texts, merged_scores = [], [], []
-        for line in sorted(set(line_ids)):
-            gidx = [g for g in range(len(frag_boxes)) if line_ids[g] == line]
-            order = sorted(
-                gidx, key=lambda g: (frag_boxes[g][0], frag_boxes[g][1], g)
-            )
-            lb = [frag_boxes[g] for g in gidx]
-            merged_boxes.append(
-                [
-                    min(b[0] for b in lb),
-                    min(b[1] for b in lb),
-                    max(b[2] for b in lb),
-                    max(b[3] for b in lb),
-                ]
-            )
-            merged_texts.append(
-                " ".join(texts[frag_idx[g]] for g in order).strip()
-            )
-            merged_scores.append(max(scores[frag_idx[g]] for g in gidx))
-        rest = [k for k in range(len(boxes)) if not ocr[k]]
-        boxes = [boxes[k] for k in rest] + merged_boxes
-        scores = [scores[k] for k in rest] + merged_scores
-        labels = [labels[k] for k in rest] + ["text"] * len(merged_boxes)
-        texts = [texts[k] for k in rest] + merged_texts
-
-    # W1 reading order
-    perm = _reading_order_py(boxes, page_w, cfg)
-    ordered = [
-        {
-            "label": str(labels[i]),
-            "bbox": [float(v) for v in boxes[i]],
-            "score": float(scores[i]),
-            "text": texts[i],
-        }
-        for i in perm
-    ]
-    return ordered, n_dropped

@@ -48,13 +48,16 @@ from paddle_spark.kernels import geometry as G
 
 SYNTH_SENTINEL = b"%paddle-spark-synthetic"
 
-# pages at or below this box count take the pure-Python fast path
-from paddle_spark.kernels.geometry_fast import FAST_PATH_MAX_BOXES as _FAST_MAX  # noqa: E402
-
 
 def is_synthetic_pdf(payload: bytes) -> bool:
     nl = payload.find(b"\n")
     return nl >= 0 and payload[nl + 1 :].startswith(SYNTH_SENTINEL)
+
+
+def _reject_constant(name: str):
+    """``json.loads`` hook for ``NaN``/``Infinity``/``-Infinity``: box
+    geometry must be finite, so such a page is malformed."""
+    raise ValueError(f"non-finite number {name} in layout payload")
 
 
 def parse_synthetic_pdf(payload: bytes) -> list[dict]:
@@ -65,7 +68,7 @@ def parse_synthetic_pdf(payload: bytes) -> list[dict]:
     if not rest.startswith(SYNTH_SENTINEL):
         raise ValueError("not a synthetic layout payload")
     body = rest[rest.index(b"\n") + 1 :]
-    doc = json.loads(body.decode("utf-8"))
+    doc = json.loads(body.decode("utf-8"), parse_constant=_reject_constant)
     return doc["pages"]
 
 
@@ -95,17 +98,14 @@ def process_page(
     raw = page.get("boxes", [])
     if not raw:
         return [], 0
-    if len(raw) <= _FAST_MAX:
-        # typical detector pages carry 10-40 boxes; below this size the
-        # pure-Python twin beats NumPy's per-call fixed costs ~3x with
-        # bit-identical output (tests/test_geometry_fast_equivalence.py)
-        from paddle_spark.kernels.geometry_fast import process_page_py
-
-        return process_page_py(page, cfg)
     n_in = len(raw)
     boxes = np.array([[b["x1"], b["y1"], b["x2"], b["y2"]] for b in raw], dtype=np.float64)
     scores = np.array([b["score"] for b in raw], dtype=np.float64)
     label_ids = np.array([int(b["label_id"]) for b in raw], dtype=np.int64)
+    if not (np.isfinite(boxes).all() and np.isfinite(scores).all()):
+        # an overflowing literal (1e400) parses to inf without the
+        # parse_constant hook ever seeing it
+        raise ValueError("non-finite box geometry")
     texts = [b.get("text", "") or "" for b in raw]
     page_w = float(page.get("width", 1700.0))
     page_h = float(page.get("height", 2200.0))

@@ -41,6 +41,12 @@ def test_threshold_per_class():
     labels = np.array([0, 1, 15, 15])  # thr 0.3, 0.5, 0.45, 0.45
     mask = G.threshold_filter(scores, labels, LAYOUT_THRESHOLDS)
     assert mask.tolist() == [True, False, True, False]
+    # ids outside the map get the default 0.5: a negative id must not wrap
+    # to another class's threshold (label 2's 0.4), and a huge one must not
+    # size a lookup table
+    for labels in ([2, -1], [2, 10**9]):
+        mask = G.threshold_filter(np.array([0.4, 0.4]), np.array(labels), LAYOUT_THRESHOLDS)
+        assert mask.tolist() == [True, False]
 
 
 # ---------- NMS (D1) ----------

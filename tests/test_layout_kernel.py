@@ -1,8 +1,14 @@
 """Layout branch kernel tests: threshold/NMS/merge/order/assembly."""
 
 import json
+import tracemalloc
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from paddle_spark.config import LABEL_ID, ExtractConfig
+from paddle_spark.kernels.extract import extract_document
 from paddle_spark.kernels.layout import extract_layout, process_page
 from paddle_spark.sources.synth import gen_pages_pdf, make_pdf, _rng
 
@@ -139,7 +145,63 @@ def test_markdown_variant():
 
 
 def test_malformed_payload_raises():
-    import pytest
-
     with pytest.raises(Exception):
         extract_layout(b"%PDF-1.4\nnot json at all")
+    box = mk_box(0, "text", 10, 10, 900, 100, 0.9, "alpha")
+    for bad in ("NaN", "Infinity", "1e400"):
+        payload = mk_payload(
+            [{"page_no": 0, "width": 1000, "height": 1000, "boxes": [box]}]
+        ).replace(b'"x2": 900', b'"x2": ' + bad.encode())
+        with pytest.raises(ValueError):
+            extract_layout(payload)
+        r = extract_document(payload)
+        assert not r.parse_ok and r.branch == "layout"
+
+
+def test_huge_label_id_gets_default_threshold():
+    boxes = [
+        dict(mk_box(0, "text", 10, 10, 900, 100, 0.6, "kept"), label_id=10**9),
+        dict(mk_box(1, "text", 10, 200, 900, 300, 0.4, "gone"), label_id=10**9),
+    ]
+    payload = mk_payload([{"page_no": 0, "width": 1000, "height": 1000, "boxes": boxes}])
+    tracemalloc.start()
+    try:
+        r = extract_document(payload)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert r.parse_ok and "kept" in r.text and "gone" not in r.text
+    assert peak < 10_000_000
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(-2, 21),                     # label_id
+            st.floats(0.0, 1700.0, width=32),        # x1
+            st.floats(0.0, 2200.0, width=32),        # y1
+            st.floats(1.0, 1700.0, width=32),        # w
+            st.floats(1.0, 400.0, width=32),         # h
+            st.floats(0.0, 1.0, width=32),           # score
+        ),
+        max_size=120,
+    )
+)
+def test_process_page_properties(raw):
+    # 0-120 boxes: sparse pages and dense ones past 64 boxes alike
+    boxes = [
+        {
+            "box_id": k, "label": "", "label_id": lid,
+            "x1": x, "y1": y, "x2": x + w, "y2": y + h,
+            "score": s, "text": f"t{k}",
+        }
+        for k, (lid, x, y, w, h, s) in enumerate(raw)
+    ]
+    page = {"page_no": 0, "width": 1700, "height": 2200, "boxes": boxes}
+    blocks, n_dropped = process_page(page)
+    assert process_page(page) == (blocks, n_dropped)
+    for b in blocks:
+        x1, y1, x2, y2 = b["bbox"]
+        assert 0.0 <= x1 <= x2 <= 1700 and 0.0 <= y1 <= y2 <= 2200
+    assert 0 <= n_dropped <= len(boxes)
