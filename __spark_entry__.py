@@ -5,7 +5,12 @@ sf0.001 documents table. `queries()` exposes one entry per implemented
 operator family from SURVEY.md §2 plus the training-data ops (dedup /
 similarity / text analysis / multimodal); `oracle_sql()` gives the DuckDB
 twin for every SQL-expressible one (rows-only entries are the genuinely
-non-SQL ops: layout geometry, MinHash/SimHash/LSH hashing, stub decode).
+non-SQL ops: layout geometry, MinHash/SimHash/LSH hashing).
+
+Each entry is a module-level builder `q_<name>(spark, sf_dir)` plus, for
+most, an oracle SQL string. Both dicts are derived from one ordered table,
+`_registry()` at the end of this module, which declares every entry, every
+suite member and every oracle exactly once.
 
 Conventions that keep the driver's hash-compare honest:
 - every computed column is aliased identically on both sides;
@@ -53,36 +58,6 @@ _FAN_KEY = {
     "orders": "o_orderkey",
 }
 
-# parquet footer metadata per fixture path (driver-side, cached: counting
-# row groups costs one footer read)
-_ROW_GROUPS: dict[str, int] = {}
-
-
-def _scan_row_groups(path: str) -> int:
-    """Total parquet row groups under a local fixture path (0 = unknown).
-    The row group is parquet's split unit: a single-file fixture with one
-    row group can never scan in parallel, while one with >= N row groups
-    scans N-way once spark.sql.files.minPartitionNum shrinks the split
-    size (paddle_spark.plans.build_session sets that floor)."""
-    if path not in _ROW_GROUPS:
-        n = 0
-        try:
-            import pyarrow.parquet as pq
-
-            local = path[5:] if path.startswith("file:") else path
-            if os.path.isdir(local):
-                for f in os.listdir(local):
-                    if f.endswith(".parquet"):
-                        n += pq.ParquetFile(
-                            os.path.join(local, f)
-                        ).metadata.num_row_groups
-            elif os.path.exists(local):
-                n = pq.ParquetFile(local).metadata.num_row_groups
-        except Exception:
-            n = 0
-        _ROW_GROUPS[path] = n
-    return _ROW_GROUPS[path]
-
 
 def _t(
     spark: SparkSession,
@@ -110,13 +85,17 @@ def _t(
         # One input file ≈ one row group ≈ one scan partition for these
         # small fixtures; fan out so per-row-heavy queries parallelize.
         # (inputFiles, not df.rdd.getNumPartitions — stay off the RDD API.)
+        from paddle_spark.operators.extract_job import _local_row_groups
+
         p = spark.sparkContext.defaultParallelism
-        if _scan_row_groups(path) >= max(2, p // 8):
+        files = df.inputFiles()
+        if (_local_row_groups(files) or 0) >= max(2, p // 8):
             # enough row groups: the scan itself parallelizes (split-size
-            # floor in build_session) and map-side partial aggregation
-            # runs in the scan stage — no shuffle at all (guide §2.4)
+            # floor in build_session: the row group is parquet's split
+            # unit) and map-side partial aggregation runs in the scan
+            # stage — no shuffle at all (guide §2.4)
             return df
-        if len(df.inputFiles()) < max(2, p // 4):
+        if len(files) < max(2, p // 4):
             # ``key`` lets a caller align the fan-out with its downstream
             # window/groupBy key so both share ONE exchange (guide §2.4);
             # default is the table PK (hash, not round-robin: see _FAN_KEY)
@@ -1473,19 +1452,6 @@ FROM events GROUP BY 1, 2
 """
 
 
-def q_temporal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal suite over the events table — order-sensitive concat
-    (A2: string_agg ORDER BY), gap-based sessionization (lag + running
-    sum), and tumbling 1h windows (X11, the batch twin of
-    streaming.batch_windowed_agg). One null-padded union frame; each
-    branch keeps its own exact oracle."""
-    return _suite_frame(spark, sf_dir, [
-        ("ordered_concat", q_ordered_concat),
-        ("sessionize", q_sessionize),
-        ("time_buckets", q_time_buckets),
-    ])
-
-
 # ---------------------------------------------------------------------------
 # dedup family
 # ---------------------------------------------------------------------------
@@ -2076,15 +2042,6 @@ FROM cg JOIN bg USING (gram) GROUP BY 1
 """
 
 
-def q_text_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-safety suite: PII redaction + benchmark decontamination
-    (operators/safety.py), unioned by name."""
-    return _suite_frame(spark, sf_dir, [
-        ("pii_redact", q_pii_redact),
-        ("decontaminate", q_decontaminate),
-    ])
-
-
 # ---------------------------------------------------------------------------
 # corpus mixing: deterministic hash sampling + sequence packing
 # ---------------------------------------------------------------------------
@@ -2182,17 +2139,6 @@ WHERE ('0x' || substr(md5(d.source || '/' || d.doc_id), 1, 8))::UBIGINT % 10000
 """
 
 
-def q_corpus_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-mixing suite: deterministic stratified hash sampling,
-    temperature rebalancing (alpha=0.5), and greedy sequence packing
-    (operators/sampling.py), unioned by name."""
-    return _suite_frame(spark, sf_dir, [
-        ("hash_sample", q_hash_sample),
-        ("temperature_sample", q_temperature_sample),
-        ("pack_sequences", q_pack_sequences),
-    ])
-
-
 def q_mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from paddle_spark.operators.multimodal import binary_meta
 
@@ -2247,25 +2193,6 @@ FROM embeddings WHERE vec_id < 10
 """
 
 
-def q_mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the registry in round 4 (kept as a callable for
-    tests/history): decode_media's plumbing is exactly covered by
-    mm_decode_dims' exact oracle, and real pixel-derived features live
-    in mm_visual_features/ann_pixel_topk. The digest feature remains the
-    documented stand-in for NEURAL embeddings only."""
-    from paddle_spark.operators.multimodal import decode_media
-
-    d = _t(spark, sf_dir, "documents")
-    media = d.select(
-        F.col("doc_id").alias("media_id"), F.encode("text", "utf-8").alias("payload")
-    )
-    dec = decode_media(media)
-    return dec.select(
-        "media_id", "width", "height", "n_frames",
-        F.to_json("feature").alias("feature_json"), "decode_ok",
-    )
-
-
 # ---------------------------------------------------------------------------
 # enrichment: caption join + merge-back (J1/J2/J5/J6/X2/F5/F7)
 # ---------------------------------------------------------------------------
@@ -2273,8 +2200,9 @@ def q_mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mm_decode_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decode plumbing with an EXACT oracle: the digest-derived dims of
     decode_fake are reproducible in SQL (sha256 hex arithmetic), so the
-    Arrow-batched mapInPandas stage gets a hash-green row (feature vector
-    checked rows-only in mm_decode_stub; dims/frames checked here)."""
+    Arrow-batched mapInPandas stage gets a hash-green row (dims/frames
+    checked here; the digest feature vector is not SQL-expressible and
+    real pixel features live in mm_visual_features/ann_pixel_topk)."""
     from paddle_spark.operators.multimodal import decode_media
 
     d = _t(spark, sf_dir, "documents")
@@ -3109,17 +3037,6 @@ FROM d
 """
 
 
-def q_mm_audio_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio + video suite: WAV/PCM feature extraction, AVI/MJPEG frame
-    sampling (kernels/riffav.py), and container-level metadata over
-    MP4/WebM/AVI (kernels/bmff.py, ebml.py), unioned by name."""
-    return _suite_frame(spark, sf_dir, [
-        ("audio_stats", q_audio_stats),
-        ("video_frames", q_video_frames),
-        ("container_meta", q_container_meta),
-    ])
-
-
 def q_visual_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Visual near-duplicate detection at scale with an EXACT oracle:
     banded Hamming join over the pixel dhash (operators/multimodal.
@@ -3178,90 +3095,6 @@ FROM (
   FROM emb q JOIN emb c ON q.vec_id < 8 AND c.vec_id != q.vec_id
 ) WHERE rank <= 3
 """
-
-
-# ---------------------------------------------------------------------------
-# consolidated suites: several single-operator demos united into one frame
-# (Spark unionByName(allowMissingColumns) ≡ DuckDB UNION ALL BY NAME, both
-# null-padding by column name) so the whole registry fits inside one driver
-# correctness window — every entry gets a row every round, no rotation.
-# ---------------------------------------------------------------------------
-
-def _suite_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    parts: list[tuple[str, Callable[[SparkSession, str], DataFrame]]],
-) -> DataFrame:
-    from functools import reduce
-
-    frames = [
-        q(spark, sf_dir).select(F.lit(n).alias("q"), "*") for n, q in parts
-    ]
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    )
-
-
-def _suite_oracle(parts: list[tuple[str, str]]) -> str:
-    return "\nUNION ALL BY NAME\n".join(
-        f"SELECT '{n}' AS q, * FROM ({sql})" for n, sql in parts
-    )
-
-
-def q_relational_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Core relational aggregation suite — pricing summary (TPC-H Q1
-    shape), region-rollup join revenue (Q5 shape), grouping-sets cube,
-    distinct aggregates, and shipping-priority window (Q3 shape) — as one
-    null-padded union frame. Each branch keeps its own exact oracle
-    semantics; `q` labels the branch."""
-    return _suite_frame(spark, sf_dir, [
-        ("pricing_summary", q_pricing_summary),
-        ("regional_revenue", q_regional_revenue),
-        ("cube_rollup", q_cube_rollup),
-        ("distinct_agg", q_distinct_agg),
-        ("shipping_priority", q_shipping_priority),
-    ])
-
-
-def q_windows_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window/order/limit suite — per-group top-k (W4), row numbering
-    (W3), continuation flags (T4), set ops, and truncation (W5)."""
-    return _suite_frame(spark, sf_dir, [
-        ("topk_per_group", q_topk_per_group),
-        ("row_numbering", q_row_numbering),
-        ("continuation_flags", q_continuation_flags),
-        ("set_ops", q_set_ops),
-        ("truncate", q_truncate),
-    ])
-
-
-def q_job_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3+A4/A6 consolidated: total/conditional counters and the
-    status-server aggregation (sum active / max configured / clamped
-    idle) as one null-padded union suite."""
-    return _suite_frame(spark, sf_dir, [
-        ("counter_aggregates", q_counter_aggregates),
-        ("status_aggregation", q_status_aggregation),
-    ])
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF suite: deterministic-seed assignment and the quantizer after
-    ONE DataFrame-native k-means round (ivf_train), same schema."""
-    return _suite_frame(spark, sf_dir, [
-        ("ivf_assign", q_ann_ivf_assign),
-        ("ivf_refined", q_ann_ivf_refined),
-    ])
-
-
-def q_dedup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact twins for the rows-only hash-dependent dedup paths: the
-    full MinHash banding pipeline and the SimHash banded Hamming join on
-    planted inputs whose outputs are closed-form (the 50 planted pairs)."""
-    return _suite_frame(spark, sf_dir, [
-        ("minhash_planted", q_dedup_minhash_planted),
-        ("simhash_planted", q_dedup_simhash_planted),
-    ])
 
 
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3698,58 +3531,6 @@ FROM (
 """
 
 
-def q_text_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-ranking suite: CCNet-style bigram-LM perplexity bucketing and
-    BM25 inverted-index retrieval — the two corpus-scoring workhorses of
-    a training-data pipeline (quality gating; contamination forensics /
-    targeted sample pulls)."""
-    return _suite_frame(spark, sf_dir, [
-        ("lm_perplexity", q_lm_perplexity),
-        ("bm25_search", q_bm25_search),
-    ])
-
-
-def q_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Key-dedup suite: exact text dedup (D4, groupBy-rep), last-wins
-    key collapse (J5, window rn=1), paragraph-level boilerplate
-    removal (CCNet/Dolma-style), ExactSubstr span dedup, and
-    Bloom-filter corpus membership (incremental-crawl gate)."""
-    return _suite_frame(spark, sf_dir, [
-        ("dedup_exact", q_dedup_exact),
-        ("dedup_lastwins", q_dedup_lastwins),
-        ("paragraph_dedup", q_paragraph_dedup),
-        ("span_dedup", q_span_dedup),
-        ("bloom_membership", q_bloom_membership),
-    ])
-
-
-def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup suite: exact pairwise cosine baseline and the
-    banded hyperplane-LSH scale path (planted duplicates make the LSH
-    output equal the exact pairwise result — both branches hash-green)."""
-    return _suite_frame(spark, sf_dir, [
-        ("embedding_cosine", q_dedup_embedding_cosine),
-        ("embedding_bucketed", q_dedup_embedding_bucketed),
-    ])
-
-
-def q_string_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String/scalar kernel suite — regex extraction, bbox-key
-    normalization (X3), data-URI strip (X6), base64 round-trip (X1),
-    the HTML strip chain (X4), unicode text normalization
-    (hygiene chain + NFC + CCNet hash key, operators/normalize.py),
-    and HTML <table> recognition to pipe-table markdown."""
-    return _suite_frame(spark, sf_dir, [
-        ("regex_extract", q_regex_extract),
-        ("key_normalize", q_key_normalize),
-        ("data_uri_strip", q_data_uri_strip),
-        ("b64_roundtrip", q_b64_roundtrip),
-        ("html_strip", q_html_strip),
-        ("text_clean", q_text_clean),
-        ("html_table", q_html_table),
-    ])
-
-
 def _domain_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with a deterministic synthetic URL (23 hosts) plus the
     hashed-linear classifier's (n_tokens, keep) — the per-document inputs
@@ -4028,252 +3809,288 @@ FROM orders WHERE o_orderkey < 1500
 """
 
 
-def q_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL suite — canonicalization, outlink extraction, the
-    domain-level curation pair (per-host stats + host gate), the
-    link-graph host rank, the robots.txt politeness gate, and the
-    SURT/CDX web-archive index kernel."""
-    return _suite_frame(spark, sf_dir, [
-        ("url_canonicalize", q_url_canonicalize),
-        ("outlinks", q_outlinks),
-        ("domain_stats", q_domain_stats),
-        ("domain_gate", q_domain_gate),
-        ("host_rank", q_host_rank),
-        ("robots_gate", q_robots_gate),
-        ("surt_cdx", q_surt_cdx),
-        ("sitemap", q_sitemap),
-    ])
-
-
-def q_spatial_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial theta-join suite — overlap (J3) and above (J4), each in
-    BOTH forms: the exact theta join (BNLJ at fixture scale) and the
-    grid-bucketed scale path (cell equi-join candidates + exact filter,
-    provably the same output). One null-padded union frame; the bucketed
-    branches share their exact twins' oracles."""
-    return _suite_frame(spark, sf_dir, [
-        ("overlap_join", q_overlap_join),
-        ("overlap_join_bucketed", q_overlap_join_bucketed),
-        ("above_join", q_above_join),
-        ("above_join_bucketed", q_above_join_bucketed),
-    ])
-
-
-def q_filters_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter-family suite — score threshold (F2/F3), minimum size (F5),
-    label drop (F6), and staleness TTL (F10/T1)."""
-    return _suite_frame(spark, sf_dir, [
-        ("score_filter", q_score_filter),
-        ("min_size_filter", q_min_size_filter),
-        ("label_filter", q_label_filter),
-        ("stale_filter", q_stale_filter),
-    ])
-
-
 # ---------------------------------------------------------------------------
 # registry
+#
+# One ordered table declares every driver entry exactly once. queries() and
+# oracle_sql() are both derived from it, so a suite member's `q` label and
+# its DuckDB twin can never drift apart. Two entry forms:
+#   leaf:  (name, builder, oracle SQL or None for a rows-only entry)
+#   suite: (name, [(member, builder, oracle SQL), ...])
+# A suite unites several single-operator demos into one null-padded frame
+# (Spark unionByName(allowMissingColumns) ≡ DuckDB UNION ALL BY NAME, both
+# null-padding by column name), each member labelled by a `q` column and
+# keeping its own exact oracle, so the whole registry fits inside one
+# driver correctness window — every entry gets a row every round, no
+# rotation.
 # ---------------------------------------------------------------------------
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order IS the driver's execution order. The driver's
-    correctness window has historically capped near 50 rows (r01: 47,
-    r02/r03: 50), so single-operator demos are consolidated into
-    null-padded union suites (q_relational_core etc.) to keep this
-    registry comfortably inside one window — every entry gets a driver
-    row every round. Newest / previously-unverified entries still run
-    first; two-round-stable entries run last."""
-    return {
-        # --- NEW NAMES this round (r5) run first ---
-        "text_ranking": q_text_ranking,            # NEW: LM perplexity + BM25 top-k
-        "mm_exif": q_mm_exif,                      # NEW: EXIF APP1/IFD metadata
-        "bpe_tokenize": q_bpe_tokenize,            # NEW: real BPE train+encode
-        "c4_filters": q_c4_filters,                # NEW: C4 line/page cleaning rules
-        "text_safety": q_text_safety,              # NEW: PII redact + decontaminate
-        "corpus_sampling": q_corpus_sampling,      # NEW: hash sample + seq packing
-        "job_counters": q_job_counters,            # consolidates counter/status aggs
-        "ann_ivf": q_ann_ivf,                      # consolidates assign + refined
-        "dedup_planted": q_dedup_planted,          # consolidates minhash/simhash twins
-        "dedup_keys": q_dedup_keys,                # consolidates exact + lastwins
-        "dedup_embedding": q_dedup_embedding,      # consolidates cosine + bucketed
-        "extract_orientation": q_extract_orientation,  # NEW: 0/90/180/270 classify + OCR
-        "extract_tables": q_extract_tables,        # NEW: cell grid -> markdown table
-        "mm_audio_video": q_mm_audio_video,        # NEW: WAV stats + AVI frame sample
-        "dedup_cluster": q_dedup_cluster,          # NEW: pairs -> components -> canonical
-        # --- NEW NAMES last round (r4) ---
-        "extract_scanned": q_extract_scanned,      # pixels -> boxes -> text
-        "extract_scanned_pdf": q_extract_scanned_pdf,  # NEW: scanned PDF fallback
-        "mm_visual_features": q_mm_visual_features,  # NEW: dhash + histogram
-        "ann_pixel_topk": q_ann_pixel_topk,        # NEW: ANN over pixel features
-        "visual_near_dup": q_visual_near_dup,      # NEW: banded dhash Hamming join
-        "filters_suite": q_filters_suite,          # F2/F3+F5+F6+F10 consolidated
-        "string_kernels": q_string_kernels,        # X1/X3/X4/X6 + regex
-        "url_kernels": q_url_kernels,              # canonicalize + outlinks
-        "relational_core": q_relational_core,      # Q1/Q5-shape + cube + distinct
-        "windows_limits": q_windows_limits,        # top-k/rownum/flags/sets/trunc
-        "spatial_joins": q_spatial_joins,          # J3/J4 exact + bucketed twins
-        # (mm_decode_stub is retired from the registry: decode_media's
-        # plumbing is exactly covered by mm_decode_dims' exact oracle, and
-        # its digest feature is superseded by mm_visual_features)
-        "mm_decode_dims": q_mm_decode_dims,
-        "mm_pixel_stats": q_mm_pixel_stats,        # NEW: real pixel decode, exact oracle
-        "mm_frame_sample": q_mm_frame_sample,      # NEW: animated-GIF frame sampling
-        "extract_real_pdf": q_extract_real_pdf,    # NEW: exact oracle thru kernels/pdf.py
-        "ann_lsh_planted": q_ann_lsh_planted,
+Builder = Callable[[SparkSession, str], DataFrame]
+Member = tuple[str, Builder, str]
 
-        "text_stats": q_text_stats,        # consolidates tokens/quality/fingerprint
-        "text_signals": q_text_signals,    # consolidates langid/repetition
-        "mm_binary_meta": q_mm_binary_meta,
-        "ann_lsh": q_ann_lsh,              # rows-only scale path (multi-probe knob)
-        # --- extraction pipeline (flagship + layout branch) ---
-        "extract_html": q_extract_html,
-        "extract_layout": q_extract_layout,
-        "extract_layout_oracle": q_extract_layout_oracle,
-        "extract_layout_markdown": q_extract_layout_markdown,
-        "extract_blocks": q_extract_blocks,
-        "classify_payloads": q_classify_payloads,
-        # --- joins ---
-        "computed_key_join": q_computed_key_join,
-        "left_join_coalesce": q_left_join_coalesce,
-        "caption_enrich": q_caption_enrich,
-        # --- dedup family (dedup_keys/dedup_planted/dedup_embedding
-        #     suites above carry exact/lastwins, the planted twins, and
-        #     the embedding cosine/bucketed pair) ---
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "ann_topk": q_ann_topk,
-        # --- aggregations (job_counters suite above carries
-        #     counter_aggregates + status_aggregation) ---
-        "temporal_suite": q_temporal_suite,
+
+def _suite_frame(members: list[Member]) -> Builder:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from functools import reduce
+
+        frames = [
+            q(spark, sf_dir).select(F.lit(n).alias("q"), "*")
+            for n, q, _ in members
+        ]
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
+
+    return build
+
+
+def _suite_oracle(members: list[Member]) -> str:
+    return "\nUNION ALL BY NAME\n".join(
+        f"SELECT '{n}' AS q, * FROM ({sql})" for n, _, sql in members
+    )
+
+
+def _registry() -> list[tuple]:
+    """The ordered entry table (a function, not a constant: some oracle
+    strings are built by helpers that import operator modules)."""
+    return [
+        # Text ranking: CCNet-style bigram-LM perplexity bucketing and BM25
+        # inverted-index retrieval — quality gating, contamination
+        # forensics and targeted sample pulls.
+        ("text_ranking", [
+            ("lm_perplexity", q_lm_perplexity, _LM_PERPLEXITY_ORACLE),
+            ("bm25_search", q_bm25_search, _BM25_ORACLE),
+        ]),
+        ("mm_exif", q_mm_exif, _MM_EXIF_ORACLE),  # EXIF APP1/IFD metadata
+        ("bpe_tokenize", q_bpe_tokenize, _BPE_ORACLE),  # BPE train + encode
+        ("c4_filters", q_c4_filters, _C4_ORACLE),  # C4 line/page cleaning
+        # Corpus safety (operators/safety.py): PII redaction and benchmark
+        # decontamination.
+        ("text_safety", [
+            ("pii_redact", q_pii_redact, _pii_oracle()),
+            ("decontaminate", q_decontaminate, _DECONTAMINATE_ORACLE),
+        ]),
+        # Corpus mixing (operators/sampling.py): deterministic stratified
+        # hash sampling, temperature rebalancing (alpha=0.5) and greedy
+        # sequence packing.
+        ("corpus_sampling", [
+            ("hash_sample", q_hash_sample, _HASH_SAMPLE_ORACLE),
+            ("temperature_sample", q_temperature_sample,
+             _TEMPERATURE_SAMPLE_ORACLE),
+            ("pack_sequences", q_pack_sequences, _PACK_SEQUENCES_ORACLE),
+        ]),
+        # Job counters (A3+A4/A6): total/conditional counters and the
+        # status-server aggregation (sum active / max configured /
+        # clamped idle).
+        ("job_counters", [
+            ("counter_aggregates", q_counter_aggregates, _COUNTER_ORACLE),
+            ("status_aggregation", q_status_aggregation, _STATUS_AGG_ORACLE),
+        ]),
+        # IVF: deterministic-seed assignment, and the quantizer after ONE
+        # DataFrame-native k-means round (ivf_train), same schema.
+        ("ann_ivf", [
+            ("ivf_assign", q_ann_ivf_assign, _IVF_ORACLE),
+            ("ivf_refined", q_ann_ivf_refined, _IVF_REFINED_ORACLE),
+        ]),
+        # Exact twins for the rows-only hash-dependent dedup paths: the full
+        # MinHash banding pipeline and the SimHash banded Hamming join on
+        # planted inputs whose outputs are closed-form (the 50 planted
+        # pairs).
+        ("dedup_planted", [
+            ("minhash_planted", q_dedup_minhash_planted,
+             _PLANTED_PAIRS_ORACLE),
+            ("simhash_planted", q_dedup_simhash_planted,
+             _SIMHASH_PLANTED_ORACLE),
+        ]),
+        # Key dedup: exact text dedup (D4, groupBy-rep), last-wins key
+        # collapse (J5, window rn=1), paragraph-level boilerplate removal
+        # (CCNet/Dolma-style), ExactSubstr span dedup, and Bloom-filter
+        # corpus membership (incremental-crawl gate).
+        ("dedup_keys", [
+            ("dedup_exact", q_dedup_exact, _DEDUP_EXACT_ORACLE),
+            ("dedup_lastwins", q_dedup_lastwins, _DEDUP_LASTWINS_ORACLE),
+            ("paragraph_dedup", q_paragraph_dedup, _PARAGRAPH_DEDUP_ORACLE),
+            ("span_dedup", q_span_dedup, _SPAN_DEDUP_ORACLE),
+            ("bloom_membership", q_bloom_membership,
+             _BLOOM_MEMBERSHIP_ORACLE),
+        ]),
+        # Embedding near-dups: exact pairwise cosine baseline and the banded
+        # hyperplane-LSH scale path (planted duplicates make the LSH output
+        # equal the exact pairwise result — both members hash-green).
+        ("dedup_embedding", [
+            ("embedding_cosine", q_dedup_embedding_cosine,
+             _EMB_NEAR_DUP_ORACLE),
+            ("embedding_bucketed", q_dedup_embedding_bucketed,
+             _EMB_BUCKETED_ORACLE),
+        ]),
+        # 0/90/180/270 page orientation classify + OCR
+        ("extract_orientation", q_extract_orientation,
+         _EXTRACT_ORIENTATION_ORACLE),
+        # cell grid -> markdown table
+        ("extract_tables", q_extract_tables, _tables_oracle()),
+        # Audio + video: WAV/PCM features and AVI/MJPEG frame sampling
+        # (kernels/riffav.py), container metadata over MP4/WebM/AVI
+        # (kernels/bmff.py, ebml.py).
+        ("mm_audio_video", [
+            ("audio_stats", q_audio_stats, _AUDIO_STATS_ORACLE),
+            ("video_frames", q_video_frames, _VIDEO_FRAMES_ORACLE),
+            ("container_meta", q_container_meta, _CONTAINER_META_ORACLE),
+        ]),
+        # near-dup pairs -> components -> canonical doc
+        ("dedup_cluster", q_dedup_cluster, _DEDUP_CLUSTER_ORACLE),
+        # pixels -> boxes -> text
+        ("extract_scanned", q_extract_scanned, _EXTRACT_SCANNED_ORACLE),
+        # scanned-PDF fallback
+        ("extract_scanned_pdf", q_extract_scanned_pdf,
+         _EXTRACT_SCANNED_PDF_ORACLE),
+        # dhash + histogram
+        ("mm_visual_features", q_mm_visual_features, _MM_VISUAL_ORACLE),
+        # ANN over pixel features
+        ("ann_pixel_topk", q_ann_pixel_topk, _ANN_PIXEL_ORACLE),
+        # banded dhash Hamming join
+        ("visual_near_dup", q_visual_near_dup, _VISUAL_NEAR_DUP_ORACLE),
+        # Filter family: score threshold (F2/F3), minimum size (F5), label
+        # drop (F6), staleness TTL (F10/T1).
+        ("filters_suite", [
+            ("score_filter", q_score_filter, _SCORE_FILTER_ORACLE),
+            ("min_size_filter", q_min_size_filter, _MIN_SIZE_ORACLE),
+            ("label_filter", q_label_filter, _LABEL_FILTER_ORACLE),
+            ("stale_filter", q_stale_filter, _STALE_FILTER_ORACLE),
+        ]),
+        # String/scalar kernels: regex extraction, bbox-key normalization
+        # (X3), data-URI strip (X6), base64 round-trip (X1), the HTML strip
+        # chain (X4), unicode text normalization (hygiene chain + NFC +
+        # CCNet hash key, operators/normalize.py), and HTML <table>
+        # recognition to pipe-table markdown.
+        ("string_kernels", [
+            ("regex_extract", q_regex_extract, _REGEX_EXTRACT_ORACLE),
+            ("key_normalize", q_key_normalize, _KEY_NORMALIZE_ORACLE),
+            ("data_uri_strip", q_data_uri_strip, _DATA_URI_ORACLE),
+            ("b64_roundtrip", q_b64_roundtrip, _B64_ORACLE),
+            ("html_strip", q_html_strip, _HTML_STRIP_ORACLE),
+            ("text_clean", q_text_clean, _text_clean_oracle()),
+            ("html_table", q_html_table, _HTML_TABLE_ORACLE),
+        ]),
+        # URLs: canonicalization, outlink extraction, the domain-level
+        # curation pair (per-host stats + host gate), the link-graph host
+        # rank, the robots.txt politeness gate, the SURT/CDX web-archive
+        # index kernel, and sitemap parsing.
+        ("url_kernels", [
+            ("url_canonicalize", q_url_canonicalize, _URL_CANON_ORACLE),
+            ("outlinks", q_outlinks, _OUTLINKS_ORACLE),
+            ("domain_stats", q_domain_stats, _DOMAIN_STATS_ORACLE),
+            ("domain_gate", q_domain_gate, _DOMAIN_GATE_ORACLE),
+            ("host_rank", q_host_rank, _host_rank_oracle()),
+            ("robots_gate", q_robots_gate, _ROBOTS_GATE_ORACLE),
+            ("surt_cdx", q_surt_cdx, _SURT_CDX_ORACLE),
+            ("sitemap", q_sitemap, _SITEMAP_ORACLE),
+        ]),
+        # Core relational aggregation: pricing summary (TPC-H Q1 shape),
+        # region-rollup join revenue (Q5 shape), grouping-sets cube,
+        # distinct aggregates, shipping-priority window (Q3 shape).
+        ("relational_core", [
+            ("pricing_summary", q_pricing_summary, _PRICING_ORACLE),
+            ("regional_revenue", q_regional_revenue,
+             _REGIONAL_REVENUE_ORACLE),
+            ("cube_rollup", q_cube_rollup, _CUBE_ORACLE),
+            ("distinct_agg", q_distinct_agg, _DISTINCT_AGG_ORACLE),
+            ("shipping_priority", q_shipping_priority,
+             _SHIPPING_PRIORITY_ORACLE),
+        ]),
+        # Window/order/limit: per-group top-k (W4), row numbering (W3),
+        # continuation flags (T4), set ops, truncation (W5).
+        ("windows_limits", [
+            ("topk_per_group", q_topk_per_group, _TOPK_ORACLE),
+            ("row_numbering", q_row_numbering, _ROW_NUMBER_ORACLE),
+            ("continuation_flags", q_continuation_flags,
+             _CONTINUATION_ORACLE),
+            ("set_ops", q_set_ops, _SET_OPS_ORACLE),
+            ("truncate", q_truncate, _TRUNCATE_ORACLE),
+        ]),
+        # Spatial theta joins: overlap (J3) and above (J4), each as the
+        # exact theta join (BNLJ at fixture scale) and the grid-bucketed
+        # scale path (cell equi-join candidates + exact filter, provably
+        # the same output, so it shares its exact twin's oracle).
+        ("spatial_joins", [
+            ("overlap_join", q_overlap_join, _OVERLAP_JOIN_ORACLE),
+            ("overlap_join_bucketed", q_overlap_join_bucketed,
+             _OVERLAP_JOIN_ORACLE),
+            ("above_join", q_above_join, _ABOVE_JOIN_ORACLE),
+            ("above_join_bucketed", q_above_join_bucketed,
+             _ABOVE_JOIN_ORACLE),
+        ]),
+        # decode_media plumbing, digest-derived dims
+        ("mm_decode_dims", q_mm_decode_dims, _MM_DECODE_DIMS_ORACLE),
+        # real pixel decode
+        ("mm_pixel_stats", q_mm_pixel_stats, _MM_PIXEL_STATS_ORACLE),
+        # animated-GIF frame sampling
+        ("mm_frame_sample", q_mm_frame_sample, _MM_FRAME_SAMPLE_ORACLE),
+        # real PDF parser chain (kernels/pdf.py)
+        ("extract_real_pdf", q_extract_real_pdf, _EXTRACT_REAL_PDF_ORACLE),
+        ("ann_lsh_planted", q_ann_lsh_planted, _ANN_LSH_PLANTED_ORACLE),
+        # tokens + quality + fingerprint
+        ("text_stats", q_text_stats, _TEXT_STATS_ORACLE),
+        # langid + repetition
+        ("text_signals", q_text_signals, _text_signals_oracle()),
+        ("mm_binary_meta", q_mm_binary_meta, _MM_META_ORACLE),
+        # Rows-only entries (oracle None) are the hash-dependent outputs
+        # that are not SQL-expressible on arbitrary input. EVERY one has a
+        # hash-green exact twin on a constructed input where the
+        # algorithm's output is closed-form: ann_lsh -> ann_lsh_planted,
+        # extract_layout -> extract_layout_oracle/_markdown,
+        # dedup_minhash_lsh / dedup_simhash -> dedup_planted.
+        ("ann_lsh", q_ann_lsh, None),  # scale path (multi-probe knob)
+        # extraction pipeline: flagship + layout branch
+        ("extract_html", q_extract_html, _EXTRACT_HTML_ORACLE),
+        ("extract_layout", q_extract_layout, None),
+        ("extract_layout_oracle", q_extract_layout_oracle,
+         _EXTRACT_LAYOUT_ORACLE),
+        ("extract_layout_markdown", q_extract_layout_markdown,
+         _EXTRACT_LAYOUT_MD_ORACLE),
+        ("extract_blocks", q_extract_blocks, _EXTRACT_BLOCKS_ORACLE),
+        ("classify_payloads", q_classify_payloads, _CLASSIFY_ORACLE),
+        # joins
+        ("computed_key_join", q_computed_key_join, _COMPUTED_KEY_JOIN_ORACLE),
+        ("left_join_coalesce", q_left_join_coalesce, _LEFT_JOIN_ORACLE),
+        ("caption_enrich", q_caption_enrich, _CAPTION_ENRICH_ORACLE),
+        # dedup family (the suites above carry exact/lastwins, the planted
+        # twins and the embedding pair)
+        ("dedup_ngram_jaccard", q_dedup_ngram_jaccard, _NGRAM_JACCARD_ORACLE),
+        ("dedup_minhash_lsh", q_dedup_minhash_lsh, None),
+        ("dedup_simhash", q_dedup_simhash, None),
+        ("ann_topk", q_ann_topk, _ANN_TOPK_ORACLE),
+        # Temporal, over the events table: order-sensitive concat (A2:
+        # string_agg ORDER BY), gap-based sessionization (lag + running
+        # sum), tumbling 1h windows (X11, the batch twin of
+        # streaming.batch_windowed_agg).
+        ("temporal_suite", [
+            ("ordered_concat", q_ordered_concat, _ORDERED_CONCAT_ORACLE),
+            ("sessionize", q_sessionize, _SESSIONIZE_ORACLE),
+            ("time_buckets", q_time_buckets, _TIME_BUCKETS_ORACLE),
+        ]),
+    ]
+
+
+def queries() -> dict[str, Builder]:
+    """Driver entries in registry order, which IS the driver's execution
+    order. The driver's correctness window has historically capped near
+    50 rows (r01: 47, r02/r03: 50), so single-operator demos are
+    consolidated into suites to keep the registry comfortably inside one
+    window — every entry gets a driver row every round. Newest /
+    previously-unverified entries run first; two-round-stable entries
+    run last."""
+    return {
+        name: _suite_frame(spec) if isinstance(spec, list) else spec
+        for name, spec, *_ in _registry()
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "text_ranking": _suite_oracle([
-            ("lm_perplexity", _LM_PERPLEXITY_ORACLE),
-            ("bm25_search", _BM25_ORACLE),
-        ]),
-        "mm_exif": _MM_EXIF_ORACLE,
-        "bpe_tokenize": _BPE_ORACLE,
-        "c4_filters": _C4_ORACLE,
-        "extract_orientation": _EXTRACT_ORIENTATION_ORACLE,
-        "extract_tables": _tables_oracle(),
-        "dedup_cluster": _DEDUP_CLUSTER_ORACLE,
-        "mm_audio_video": _suite_oracle([
-            ("audio_stats", _AUDIO_STATS_ORACLE),
-            ("video_frames", _VIDEO_FRAMES_ORACLE),
-            ("container_meta", _CONTAINER_META_ORACLE),
-        ]),
-        "extract_scanned": _EXTRACT_SCANNED_ORACLE,
-        "extract_scanned_pdf": _EXTRACT_SCANNED_PDF_ORACLE,
-        "mm_visual_features": _MM_VISUAL_ORACLE,
-        "ann_pixel_topk": _ANN_PIXEL_ORACLE,
-        "visual_near_dup": _VISUAL_NEAR_DUP_ORACLE,
-        "extract_html": _EXTRACT_HTML_ORACLE,
-        "extract_real_pdf": _EXTRACT_REAL_PDF_ORACLE,
-        "mm_pixel_stats": _MM_PIXEL_STATS_ORACLE,
-        "mm_frame_sample": _MM_FRAME_SAMPLE_ORACLE,
-        "text_stats": _TEXT_STATS_ORACLE,
-        "text_signals": _text_signals_oracle(),
-        "extract_layout_oracle": _EXTRACT_LAYOUT_ORACLE,
-        "extract_layout_markdown": _EXTRACT_LAYOUT_MD_ORACLE,
-        "extract_blocks": _EXTRACT_BLOCKS_ORACLE,
-        "classify_payloads": _CLASSIFY_ORACLE,
-        "filters_suite": _suite_oracle([
-            ("score_filter", _SCORE_FILTER_ORACLE),
-            ("min_size_filter", _MIN_SIZE_ORACLE),
-            ("label_filter", _LABEL_FILTER_ORACLE),
-            ("stale_filter", _STALE_FILTER_ORACLE),
-        ]),
-        "computed_key_join": _COMPUTED_KEY_JOIN_ORACLE,
-        "left_join_coalesce": _LEFT_JOIN_ORACLE,
-        "spatial_joins": _suite_oracle([
-            ("overlap_join", _OVERLAP_JOIN_ORACLE),
-            ("overlap_join_bucketed", _OVERLAP_JOIN_ORACLE),
-            ("above_join", _ABOVE_JOIN_ORACLE),
-            ("above_join_bucketed", _ABOVE_JOIN_ORACLE),
-        ]),
-        "dedup_keys": _suite_oracle([
-            ("dedup_exact", _DEDUP_EXACT_ORACLE),
-            ("dedup_lastwins", _DEDUP_LASTWINS_ORACLE),
-            ("paragraph_dedup", _PARAGRAPH_DEDUP_ORACLE),
-            ("span_dedup", _SPAN_DEDUP_ORACLE),
-            ("bloom_membership", _BLOOM_MEMBERSHIP_ORACLE),
-        ]),
-        "caption_enrich": _CAPTION_ENRICH_ORACLE,
-        "temporal_suite": _suite_oracle([
-            ("ordered_concat", _ORDERED_CONCAT_ORACLE),
-            ("sessionize", _SESSIONIZE_ORACLE),
-            ("time_buckets", _TIME_BUCKETS_ORACLE),
-        ]),
-        "job_counters": _suite_oracle([
-            ("counter_aggregates", _COUNTER_ORACLE),
-            ("status_aggregation", _STATUS_AGG_ORACLE),
-        ]),
-        "text_safety": _suite_oracle([
-            ("pii_redact", _pii_oracle()),
-            ("decontaminate", _DECONTAMINATE_ORACLE),
-        ]),
-        "corpus_sampling": _suite_oracle([
-            ("hash_sample", _HASH_SAMPLE_ORACLE),
-            ("temperature_sample", _TEMPERATURE_SAMPLE_ORACLE),
-            ("pack_sequences", _PACK_SEQUENCES_ORACLE),
-        ]),
-        "relational_core": _suite_oracle([
-            ("pricing_summary", _PRICING_ORACLE),
-            ("regional_revenue", _REGIONAL_REVENUE_ORACLE),
-            ("cube_rollup", _CUBE_ORACLE),
-            ("distinct_agg", _DISTINCT_AGG_ORACLE),
-            ("shipping_priority", _SHIPPING_PRIORITY_ORACLE),
-        ]),
-        "windows_limits": _suite_oracle([
-            ("topk_per_group", _TOPK_ORACLE),
-            ("row_numbering", _ROW_NUMBER_ORACLE),
-            ("continuation_flags", _CONTINUATION_ORACLE),
-            ("set_ops", _SET_OPS_ORACLE),
-            ("truncate", _TRUNCATE_ORACLE),
-        ]),
-        "string_kernels": _suite_oracle([
-            ("regex_extract", _REGEX_EXTRACT_ORACLE),
-            ("key_normalize", _KEY_NORMALIZE_ORACLE),
-            ("data_uri_strip", _DATA_URI_ORACLE),
-            ("b64_roundtrip", _B64_ORACLE),
-            ("html_strip", _HTML_STRIP_ORACLE),
-            ("text_clean", _text_clean_oracle()),
-            ("html_table", _HTML_TABLE_ORACLE),
-        ]),
-        "url_kernels": _suite_oracle([
-            ("url_canonicalize", _URL_CANON_ORACLE),
-            ("outlinks", _OUTLINKS_ORACLE),
-            ("domain_stats", _DOMAIN_STATS_ORACLE),
-            ("domain_gate", _DOMAIN_GATE_ORACLE),
-            ("host_rank", _host_rank_oracle()),
-            ("robots_gate", _ROBOTS_GATE_ORACLE),
-            ("surt_cdx", _SURT_CDX_ORACLE),
-            ("sitemap", _SITEMAP_ORACLE),
-        ]),
-        "dedup_ngram_jaccard": _NGRAM_JACCARD_ORACLE,
-        "dedup_embedding": _suite_oracle([
-            ("embedding_cosine", _EMB_NEAR_DUP_ORACLE),
-            ("embedding_bucketed", _EMB_BUCKETED_ORACLE),
-        ]),
-        "dedup_planted": _suite_oracle([
-            ("minhash_planted", _PLANTED_PAIRS_ORACLE),
-            ("simhash_planted", _SIMHASH_PLANTED_ORACLE),
-        ]),
-        "ann_topk": _ANN_TOPK_ORACLE,
-        "ann_ivf": _suite_oracle([
-            ("ivf_assign", _IVF_ORACLE),
-            ("ivf_refined", _IVF_REFINED_ORACLE),
-        ]),
-        "ann_lsh_planted": _ANN_LSH_PLANTED_ORACLE,
-        "mm_binary_meta": _MM_META_ORACLE,
-        "mm_decode_dims": _MM_DECODE_DIMS_ORACLE,
-        # rows-only (hash-dependent outputs, not SQL-expressible on
-        # arbitrary input): extract_layout, dedup_minhash_lsh,
-        # dedup_simhash, ann_lsh. EVERY one has a hash-green exact twin on
-        # a constructed input where the algorithm's output is closed-form:
-        # extract_layout_oracle/_markdown, dedup_minhash_planted,
-        # dedup_simhash_planted, ann_lsh_planted.
-    }
+    """The DuckDB twin of every entry that has one (rows-only entries
+    are absent)."""
+    out = {}
+    for name, spec, *oracle in _registry():
+        sql = _suite_oracle(spec) if isinstance(spec, list) else oracle[0]
+        if sql is not None:
+            out[name] = sql
+    return out

@@ -3,7 +3,9 @@
 NOT the driver bench — bench.py is frozen; this file exists so the round
 can (a) isolate per-query timings with the noop sink, (b) dump
 ``explain("formatted")`` for every headline query into plans/r06/, and
-(c) time sub-metrics bench.py blends (per-format pixel decode).
+(c) time sub-metrics bench.py blends (per-format pixel decode). The
+headline query list and the noop/best-of-N timing helpers are bench.py's
+own, imported from it.
 
 Usage:
   python bench_extra.py plans [suffix]     # write plans/r06/<q>_<suffix>.txt
@@ -18,36 +20,15 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
+from bench import HEADLINE, force, timed_best
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "pricing_summary", "computed_key_join", "ordered_concat",
-    "topk_per_group", "sessionize", "time_buckets", "dedup_minhash_lsh",
-    "ann_topk", "text_stats", "span_dedup", "host_rank", "lm_perplexity",
-    "bm25_search", "mm_exif", "extract_real_pdf", "extract_scanned",
-    "extract_orientation", "extract_tables",
-]
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def timed_best(mk, repeats: int = 3) -> float:
-    best = None
-    for _ in range(repeats):
-        t0 = time.time()
-        force(mk())
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return best
 
 
 def build(app: str):

@@ -40,14 +40,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--no-wet", dest="wet", action="store_false",
                     help="force WET handling off (skip the auto-probe)")
-    ap.add_argument(
-        "--bloom-prefilter", action="store_true",
-        help="split definitely-new snapshot rows off with a Bloom bitset "
-             "over the previous output's keys before the exact joins "
-             "(identical result; at crawl scale the changed/new portion "
-             "skips the big shuffle)",
-    )
-    ap.add_argument("--bloom-m-bits", type=int, default=1 << 22)
     args = ap.parse_args(argv)
     out_norm = os.path.normpath(os.path.realpath(args.output))
     for other in (args.prev, args.input_new):
@@ -99,10 +91,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     stats = delta_stats(pages_new, prev, wet=wet)
     stats["wet"] = bool(wet)
-    merged = delta_extract(
-        pages_new, prev, cfg, args.n_partitions,
-        bloom_prefilter=args.bloom_prefilter, bloom_m_bits=args.bloom_m_bits,
-    )
+    merged = delta_extract(pages_new, prev, cfg, args.n_partitions)
     # STATIC overwrite (not dynamic): the merged frame IS the complete new
     # snapshot, so every old partition must go — with dynamic mode a bucket
     # whose urls all disappeared would keep its stale files and the output

@@ -8,11 +8,12 @@ an anti-join on the input-payload hash:
     new snapshot ──┬─ (url, payload_xxh) unchanged ──> carry prev rows
                    └─ changed / new ──> extract_pages (the narrow waist)
 
-``payload_xxh`` (xxhash64 of the raw payload, computed JVM-side in
-extract_pages) is stored in every extracted row, so the previous output
-table IS the change-detection index — no extra state. Both joins are
-hash equi-joins on (url, payload_xxh); with both tables bucketed by the
-salted url hash they co-partition and the shuffle is one-sided.
+``payload_xxh`` (xxhash64 of the raw payload, computed JVM-side by
+extract_job.payload_key_col) is stored in every extracted row, so the
+previous output table IS the change-detection index — no extra state.
+Both joins are hash equi-joins on (url, payload_xxh); with both tables
+bucketed by the salted url hash they co-partition and the shuffle is
+one-sided.
 
 Byte-identity guarantee: carried rows were produced by the same kernels
 from the same bytes, so the merged output equals a full re-extraction
@@ -21,29 +22,12 @@ row-for-row (pinned by test_delta).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-from paddle_spark.operators.extract_job import extract_pages
+from paddle_spark.operators.extract_job import extract_pages, payload_key_col
 
 _KEY = ["url", "payload_xxh"]
-
-
-def payload_key_col(pages: DataFrame, wet: bool) -> Column:
-    """The input-lineage key, EXACTLY mirroring how extract_pages stores
-    ``payload_xxh`` (operators/extract_job.py): plain ``xxhash64(html)``
-    normally; with WET passthrough, null-html conversion rows key on the
-    pre-extracted text bytes. Without this parity, unchanged WET rows
-    (html null → xxhash64(NULL) is a constant) would never match their
-    previous output — every delta run would re-extract them — and
-    distinct-text WET rows sharing a url would collapse under the
-    constant hash."""
-    use_wet = wet and "text" in pages.columns
-    if not use_wet:
-        return F.xxhash64("html")
-    wet_text = F.when(F.col("html").isNull(), F.col("text"))
-    return F.xxhash64(F.coalesce(F.col("html"), F.encode(wet_text, "utf-8")))
 
 
 def delta_extract(
@@ -51,9 +35,6 @@ def delta_extract(
     extracted_prev: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     n_partitions: int | None = None,
-    bloom_prefilter: bool = False,
-    bloom_m_bits: int = 1 << 22,
-    bloom_k: int = 5,
 ) -> DataFrame:
     """Extraction output for the NEW snapshot, re-running kernels only on
     changed/new payloads. Disappeared urls drop out (the output always
@@ -71,54 +52,20 @@ def delta_extract(
     WET snapshots: pass ``cfg`` with ``wet_passthrough=True`` (the same
     cfg the previous output was extracted with) — the change key then
     mirrors the WET lineage hash, so unchanged conversion rows carry
-    forward instead of re-extracting every run.
-
-    ``bloom_prefilter=True`` inserts a Bloom bitset (operators/bloom.py)
-    over prev's composite key before the exact joins: snapshot rows the
-    bitset rejects are DEFINITELY new (no false negatives) and skip the
-    anti-join entirely; only the bitset's accepts — mostly-unchanged rows
-    plus a tunable false-positive residue — reach the exact joins. At
-    crawl scale the map-side split removes the changed/new portion of
-    the snapshot from the big shuffle; the result is identical to the
-    plain path row-for-row (pinned by test_delta). Size ``bloom_m_bits``
-    at ~10 bits per prev key for ~1% FP at k=5."""
+    forward instead of re-extracting every run."""
     new_keyed = pages_new.withColumn(
         "payload_xxh", payload_key_col(pages_new, cfg.wet_passthrough)
     ).dropDuplicates(_KEY)
     prev_cols = [c for c in extracted_prev.columns if c != "run_id"]
     prev = extracted_prev.select(*prev_cols).dropDuplicates(_KEY)
 
-    definitely_new = None
-    if bloom_prefilter:
-        from paddle_spark.operators.bloom import bloom_build, bloom_probe
-
-        ck = F.xxhash64("url", "payload_xxh")
-        bloom = bloom_build(
-            prev.select(ck.alias("_delta_bk")), "_delta_bk", bloom_m_bits, bloom_k
-        )
-        probed = bloom_probe(
-            new_keyed.withColumn("_delta_bk", ck),
-            bloom,
-            "_delta_bk",
-            bloom_m_bits,
-            bloom_k,
-        )
-        definitely_new = (
-            probed.filter(~F.col("in_bloom")).drop("_delta_bk", "in_bloom")
-        )
-        new_keyed = probed.filter(F.col("in_bloom")).drop("_delta_bk", "in_bloom")
-
     # unchanged: previous rows whose (url, hash) still exists in the new
-    # snapshot — a semi-join keeps exactly those. (With the prefilter,
-    # definitely-new rows can't match prev, so restricting the semi-join's
-    # right side to the bitset accepts changes nothing.)
+    # snapshot — a semi-join keeps exactly those
     carried = prev.join(
         new_keyed.select(*_KEY), _KEY, "left_semi"
     )
     # changed/new: snapshot rows with no matching previous output
     todo = new_keyed.join(prev.select(*_KEY), _KEY, "left_anti")
-    if definitely_new is not None:
-        todo = todo.unionByName(definitely_new)
     # shuffle=True: delta outputs feed the same partitionBy(bucket) sink
     # as full runs — keep the salted clustering (see checkpoint.py)
     fresh = extract_pages(todo.drop("payload_xxh"), cfg, n_partitions, shuffle=True)

@@ -27,7 +27,7 @@ import os
 from dataclasses import replace
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -190,6 +190,22 @@ def _needs_fanout_shuffle(pages: DataFrame, n_parts: int) -> bool:
         return True
 
 
+def payload_key_col(pages: DataFrame, wet: bool) -> Column:
+    """The input-lineage key stored as ``payload_xxh`` (JVM-side xxhash64
+    of the raw input): plain ``xxhash64(html)`` normally; with WET
+    passthrough, null-html conversion rows key on the pre-extracted text
+    bytes. extract_pages stores it and delta extraction matches on it
+    (operators/delta.py) — without the WET form, unchanged WET rows
+    (html null → xxhash64(NULL) is a constant) would never match their
+    previous output, so every delta run would re-extract them, and
+    distinct-text WET rows sharing a url would collapse under the
+    constant hash."""
+    if not (wet and "text" in pages.columns):
+        return F.xxhash64("html")
+    wet_text = F.when(F.col("html").isNull(), F.col("text"))
+    return F.xxhash64(F.coalesce(F.col("html"), F.encode(wet_text, "utf-8")))
+
+
 def extract_pages(
     pages: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
@@ -231,13 +247,9 @@ def extract_pages(
         wet_text.alias("wet_text"),
         "lang",
         url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt).alias("bucket"),
-        # JVM-side input hash (xxhash64 of the raw input) rides through
-        # the kernel untouched: input lineage + delta-extraction key
-        F.xxhash64(
-            F.coalesce(F.col("html"), F.encode(wet_text, "utf-8"))
-            if use_wet
-            else F.col("html")
-        ).alias("payload_xxh"),
+        # the input hash rides through the kernel untouched: input
+        # lineage + delta-extraction key
+        payload_key_col(pages, cfg.wet_passthrough).alias("payload_xxh"),
     )
     if shuffle is None:
         shuffle = _needs_fanout_shuffle(pages, n_parts)

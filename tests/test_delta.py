@@ -157,16 +157,3 @@ def test_delta_only_extracts_changed(spark, snapshots):
         prev.select("url", "payload_xxh"), ["url", "payload_xxh"], "left_anti"
     )
     assert todo.count() == 60
-
-
-def test_delta_bloom_prefilter_identical(spark, snapshots):
-    """The Bloom-prefilter arm must be row-identical to the plain path:
-    no false negatives means nothing unchanged leaks into re-extraction
-    incorrectly and nothing new is lost."""
-    v1, v2 = snapshots
-    prev = extract_pages(v1, n_partitions=4).withColumn("run_id", F.lit("r1"))
-    plain = delta_extract(v2, prev, n_partitions=4)
-    bloomed = delta_extract(v2, prev, n_partitions=4, bloom_prefilter=True)
-    p = {r["url"]: (r["text_sha256"], r["payload_xxh"]) for r in plain.collect()}
-    b = {r["url"]: (r["text_sha256"], r["payload_xxh"]) for r in bloomed.collect()}
-    assert p == b

@@ -6,6 +6,7 @@ Floats compare with 1e-6 tolerance (both sides round in-query; the
 tolerance only absorbs last-ulp noise in pre-round sums).
 """
 
+import json
 import math
 import os
 
@@ -89,3 +90,22 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_registry_pinned():
+    """The driver contract is frozen: ``queries()`` keys in execution
+    order, and every ``oracle_sql()`` string byte-for-byte (sha256), as
+    recorded in goldens/entry_registry.json (tests/gen_goldens.py
+    registry). Needs no Spark session."""
+    from gen_goldens import REGISTRY_OUT, registry_contract
+
+    pinned = json.loads(REGISTRY_OUT.read_text())
+    now = registry_contract()
+    assert now["queries"] == pinned["queries"]
+    assert now["rows_only"] == pinned["rows_only"]
+    assert sorted(now["oracle_sha256"]) == sorted(pinned["oracle_sha256"])
+    changed = [
+        n for n, h in pinned["oracle_sha256"].items()
+        if now["oracle_sha256"][n] != h
+    ]
+    assert not changed, f"oracle_sql() text changed: {changed}"
