@@ -186,36 +186,44 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_extract_html(spark, SF0001)
 
 
+def _pdf_pages(
+    docs: DataFrame, scheme: str, make_payload: Callable[[int], bytes]
+) -> DataFrame:
+    """Pages rows for the synthetic PDF fixtures: each doc id becomes
+    (``<scheme>://<id>``, null warc_ts, ``make_payload(id)``, null text,
+    'en')."""
+    import pandas as pd
+
+    def to_pages(batches):
+        for pdf in batches:
+            ids = [int(i) for i in pdf["doc_id"].tolist()]
+            yield pd.DataFrame(
+                {
+                    "url": [f"{scheme}://{i}" for i in ids],
+                    "warc_ts": pd.Series([None] * len(ids), dtype="datetime64[us]"),
+                    "html": [make_payload(i) for i in ids],
+                    "text": pd.Series([None] * len(ids), dtype="object"),
+                    "lang": ["en"] * len(ids),
+                }
+            )
+
+    return docs.mapInPandas(
+        to_pages,
+        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+
+
 def q_extract_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layout branch over synthetic detector-box PDFs derived from doc ids.
     Rows-only on THIS arbitrary fixture (box layouts are pseudo-random);
     the same chain is hash-green on closed-form inputs via its exact
     twins extract_layout_oracle / extract_layout_markdown / extract_real_pdf,
     and pinned by the pytest golden/property suites."""
-    import pandas as pd
-
     from paddle_spark.operators.extract_job import extract_pages
     from paddle_spark.sources.synth import make_pdf, _rng
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").limit(50)
-
-    def to_pdf(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "url": [f"pdf://{i}" for i in ids],
-                    "warc_ts": pd.Series([None] * len(ids), dtype="datetime64[us]"),
-                    "html": [make_pdf(_rng(42, int(i)), int(i)) for i in ids],
-                    "text": pd.Series([None] * len(ids), dtype="object"),
-                    "lang": ["en"] * len(ids),
-                }
-            )
-
-    pages = docs.mapInPandas(
-        to_pdf,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = _pdf_pages(docs, "pdf", lambda i: make_pdf(_rng(42, i), i))
     out = extract_pages(pages, n_partitions=4)
     return out.select(
         "url", "text_sha256", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
@@ -230,32 +238,13 @@ def q_extract_layout_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictable effect, so the expected text is a SQL string literal.
     Reference semantics: pipeline_config.yaml:84-127, model.py:311-316,
     testScript.py:138-150."""
-    import pandas as pd
-
     from paddle_spark.operators.extract_job import extract_pages
     from paddle_spark.sources.synth import make_oracle_pdf
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 100
     )
-
-    def to_pdf(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "url": [f"pdf-oracle://{i}" for i in ids],
-                    "warc_ts": pd.Series([None] * len(ids), dtype="datetime64[us]"),
-                    "html": [make_oracle_pdf(int(i)) for i in ids],
-                    "text": pd.Series([None] * len(ids), dtype="object"),
-                    "lang": ["en"] * len(ids),
-                }
-            )
-
-    pages = docs.mapInPandas(
-        to_pdf,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = _pdf_pages(docs, "pdf-oracle", make_oracle_pdf)
     out = extract_pages(pages, n_partitions=4)
     return out.select(
         "url", "text", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
@@ -325,8 +314,6 @@ def q_extract_real_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembly chain is pinned to a SQL string literal. This is the
     driver-green twin of the pytest make_real_pdf suite; reference
     semantics: model.py:300-337 (per-page parse -> ordered text)."""
-    import pandas as pd
-
     from paddle_spark.operators.extract_job import extract_pages
     from paddle_spark.sources.synth import make_real_pdf
 
@@ -334,34 +321,16 @@ def q_extract_real_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < 100
     )
 
-    def to_pdf(batches):
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"].tolist()]
-            payloads = [
-                make_real_pdf(
-                    [
-                        [f"Real pdf line one for doc {i}.",
-                         f"Line two: value {7 * i}."],
-                        [f"Closing page for doc {i}."],
-                    ],
-                    compress=bool(i % 2),  # odd ids exercise FlateDecode
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": [f"real-pdf://{i}" for i in ids],
-                    "warc_ts": pd.Series([None] * len(ids), dtype="datetime64[us]"),
-                    "html": payloads,
-                    "text": pd.Series([None] * len(ids), dtype="object"),
-                    "lang": ["en"] * len(ids),
-                }
-            )
+    def payload(i: int) -> bytes:
+        return make_real_pdf(
+            [
+                [f"Real pdf line one for doc {i}.", f"Line two: value {7 * i}."],
+                [f"Closing page for doc {i}."],
+            ],
+            compress=bool(i % 2),  # odd ids exercise FlateDecode
+        )
 
-    pages = docs.mapInPandas(
-        to_pdf,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = _pdf_pages(docs, "real-pdf", payload)
     out = extract_pages(pages, n_partitions=4)
     return out.select(
         "url", "text", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
@@ -2637,33 +2606,15 @@ def q_extract_scanned_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (kernels/pdf.py), and runs the deterministic OCR chain
     (kernels/scan.py) inside the same page assembly — the reference's
     core dataflow (model.py:300-337) as one driver-checked row."""
-    import pandas as pd
-
     from paddle_spark.operators.extract_job import extract_pages
+    from paddle_spark.sources.synth import make_scanned_pdf
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
         F.col("doc_id") < 100
     )
-
-    def to_pdf(batches):
-        from paddle_spark.sources.synth import make_scanned_pdf
-
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"].tolist()]
-            yield pd.DataFrame(
-                {
-                    "url": [f"scanpdf://{i}" for i in ids],
-                    "warc_ts": [None] * len(ids),
-                    "html": [
-                        make_scanned_pdf(i, "dct" if i % 2 else "flate")
-                        for i in ids
-                    ],
-                    "lang": ["en"] * len(ids),
-                }
-            )
-
-    pages = docs.mapInPandas(
-        to_pdf, schema="url string, warc_ts timestamp, html binary, lang string"
+    pages = _pdf_pages(
+        docs, "scanpdf",
+        lambda i: make_scanned_pdf(i, "dct" if i % 2 else "flate"),
     )
     return extract_pages(pages, n_partitions=8).select(
         "url", "text", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"

@@ -63,11 +63,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--no-ocr-scanned-pdfs", dest="ocr_scanned_pdfs",
                     action="store_false", default=True,
                     help="disable the scanned-PDF image-XObject OCR fallback")
-    ap.add_argument("--pixel-codec", default="auto",
-                    choices=["auto", "python", "system", "native", "off"],
-                    help="decode path for any pixel work (kernels/pixels."
-                         "decoder_for); 'auto' = system codecs when "
-                         "bound, pure Python otherwise")
     args = ap.parse_args(argv)
     if sum(bool(x) for x in (args.gen, args.input, args.input_warc)) != 1:
         ap.error("exactly one of --input / --input-warc / --gen is required")
@@ -105,7 +100,6 @@ def main(argv: list[str] | None = None) -> int:
         wet_passthrough=bool(args.input_warc),
         ocr_images=args.ocr_images,
         ocr_scanned_pdfs=args.ocr_scanned_pdfs,
-        pixel_codec=args.pixel_codec,
     )
 
     if args.gen:

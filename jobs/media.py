@@ -5,12 +5,13 @@
 
 The image-pipeline user surface as a launchable job (the same
 spark-submit contract as jobs/extract.py): binary metadata always;
-REAL pixel statistics and dhash/histogram visual features when the
-codec knob allows decode. ``--codec`` is ExtractConfig.pixel_codec's
-CLI face — 'python' (pure, bit-exact), 'system' (ctypes libpng/giflib/
-libwebp where present), 'native' (PIL), 'fake' (digest stand-in,
-metadata-only pipelines), and refuses decode-dependent outputs under
-'off' at plan construction, not per-row.
+REAL pixel statistics and dhash/histogram visual features unless the
+codec is 'fake'. ``--codec`` names the pixel decoder
+(kernels/pixels.decoder_for) — 'auto' (default: system codecs when
+bound, pure Python otherwise), 'python' (pure, bit-exact), 'system'
+(ctypes libpng/giflib/libwebp/libtiff/libjpeg; refuses hosts without
+them at plan construction) — or 'fake' (digest stand-in, metadata-only
+pipelines: no pixel decode at all).
 
 Prints one JSON line: {"n_media", "n_decoded", "decode_rate",
 "by_kind": {...}, "elapsed_sec", "imgs_per_sec"}.
@@ -36,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="synthesize N mixed-codec images instead")
     ap.add_argument("--output", required=True)
     ap.add_argument("--codec", default="auto",
-                    choices=["auto", "python", "system", "native", "fake"])
+                    choices=["auto", "python", "system", "fake"])
     ap.add_argument("--features", action="store_true",
                     help="also write dhash + histogram visual features")
     ap.add_argument("--max-dim", type=int, default=640)

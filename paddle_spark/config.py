@@ -14,12 +14,10 @@ Parity notes (reference = xynehq/paddle @ /root/reference, read-only):
 - layout_unclip_ratio [1.0, 1.0] mirrors pipeline_config.yaml:106.
 - page caps mirror server/model_repo/layout-parsing/1/model.py:29,35
   (default max input imgs 10 -> we default to unlimited, hard cap 200).
-- caption-size-style minimum block geometry mirrors
-  layout_captioning.py:203-221 / caption_config.yaml:9-11
-  (w >= 100, h >= 100, area >= 10000 for image blocks).
-- "text above image" gap <= 100 px mirrors
-  imageCaptioningExperiments/bbox_text_matcher.py:70-83.
-- overlap margin ratio 0.1 mirrors bbox_text_matcher.py:40-68.
+- the caption-association geometry (overlap margin, "text above image"
+  gap, minimum image block size) is not configured here: its defaults
+  live on the operators that use it (functions.boxes_overlap_cond,
+  functions.above_cond, operators/enrich.py).
 """
 
 from __future__ import annotations
@@ -117,13 +115,6 @@ class ExtractConfig:
     max_pages_per_doc: int | None = None
     hard_page_cap: int = 200
 
-    # ---- geometry association (kept for enrichment ops) ----
-    overlap_margin_ratio: float = 0.1     # bbox_text_matcher.py:40-68
-    above_max_distance: float = 100.0     # bbox_text_matcher.py:70-83
-    min_image_w: float = 100.0            # caption_config.yaml:9-11
-    min_image_h: float = 100.0
-    min_image_area: float = 10000.0
-
     # ---- job level ----
     n_buckets: int = 64          # url-hash buckets for checkpoint lineage
     salt: int = 0                # repartition salt (defuses domain skew)
@@ -136,18 +127,6 @@ class ExtractConfig:
     # text column — the default plan keeps the F1 pruning invariant
     # (ReadSchema excludes text).
     wet_passthrough: bool = False
-    # Pixel-decode codec for the multimodal/scanned operators:
-    # 'auto' (r6 default: the 'system' arm when any shared library is
-    # bound — byte-identical to the pure decoders on their shared domain,
-    # parity-pinned per format — else pure Python), 'python' (pure-Python
-    # kernels — bit-exact but ~10^2-10^3 imgs/s/core, see
-    # BENCH/BASELINE.md), 'system' (ctypes system codecs where bound:
-    # libpng 6.4x/core on PNG, giflib 7.8x/core on GIF, libwebp for
-    # lossy VP8; raises when no library is present), 'native'
-    # (PIL on the cluster), or 'off' (refuse at plan construction —
-    # header/metadata-only jobs). The knob exists so a 100-TB job can't
-    # silently run per-bit Huffman decode.
-    pixel_codec: str = "auto"
     # Scanned-PDF fallback: pages with no text layer but embedded image
     # XObjects run the deterministic OCR chain (kernels/scan.py) over the
     # decoded page images. On by default: born-digital pages never reach
@@ -157,8 +136,8 @@ class ExtractConfig:
     # Standalone IMAGE payloads: opt-in OCR (same deterministic chain).
     # Off by default on purpose — an image row is a zero-block success
     # unless the job asks for OCR, keeping the hot path free of pixel
-    # decode for photo-dominated corpora (see pixel_codec's measured
-    # figure) and the committed goldens byte-stable.
+    # decode for photo-dominated corpora and the committed goldens
+    # byte-stable.
     ocr_images: bool = False
 
 

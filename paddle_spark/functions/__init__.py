@@ -162,6 +162,17 @@ def url_bucket_col(url: Column, n_buckets: int, salt: int = 0) -> Column:
     return F.pmod(F.xxhash64(url, F.lit(salt)), F.lit(n_buckets)).cast("int")
 
 
+def hash_bucket_col(key: Column, n_buckets: int) -> Column:
+    """Stable cross-engine hash bucket in [0, n_buckets): first 8 hex
+    chars of md5(key) as an unsigned int, mod n_buckets. md5 (not
+    murmur/xxhash) so a SQL oracle replays it exactly — in DuckDB
+    ``('0x' || substr(md5(key), 1, 8))::UBIGINT % n_buckets``."""
+    return (
+        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+        % F.lit(n_buckets)
+    )
+
+
 def canonical_url_col(url: Column) -> Column:
     """URL canonicalization for url-keyed dedup/grouping — the standard
     web-pipeline normalizations, all JVM-side regex/string ops:

@@ -49,19 +49,17 @@ def extract_document(
 ) -> ExtractResult:
     """Extract main content from one raw payload.
 
-    Never raises for a bad *payload* (T5 fault isolation). A bad *config*
-    (``ocr_images=True`` with ``pixel_codec='off'``, or ``'native'``
-    without PIL) raises ``ValueError``/``ImportError`` BEFORE the
-    fault-isolation try — misconfiguration must fail the job, not turn
-    every image row into a quiet error row. Spark callers pre-resolve
-    ``pixel_decode`` once at plan construction (operators/extract_job.py)
-    so the raise happens on the driver, matching decoder_for's contract.
+    Never raises for a bad *payload* (T5 fault isolation). With
+    ``cfg.ocr_images`` image payloads decode through ``pixel_decode``;
+    Spark callers resolve it once at plan construction
+    (operators/extract_job.py), and it defaults to
+    ``kernels/pixels.decoder_for("auto")``.
     """
     kind = classify_payload(payload)
     if kind == KIND_IMAGE and cfg.ocr_images and pixel_decode is None:
         from paddle_spark.kernels.pixels import decoder_for
 
-        pixel_decode = decoder_for(cfg.pixel_codec)  # fail-fast, outside try
+        pixel_decode = decoder_for("auto")
     try:
         if kind == KIND_HTML:
             text, kept, dropped = extract_html(payload, cfg)

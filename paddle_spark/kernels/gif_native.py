@@ -1,5 +1,5 @@
 """ctypes binding to the system giflib — third-party LZW cross-check
-plus the fast GIF arm of ``pixel_codec='system'``.
+plus the fast GIF arm of ``decoder_for('system')``.
 
 GIF decodes from scratch in kernels/pixels.py (per-frame LZW, interlace,
 local/global palettes) and composites in decode_gif_composited. This

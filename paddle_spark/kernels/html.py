@@ -23,8 +23,7 @@ A from-scratch Readability/trafilatura-class boilerplate stripper:
 
 Deliberately dependency-free: ``lxml`` is not guaranteed in the runtime, and
 byte-identity across the single-process golden generator and Spark workers
-requires one implementation. If lxml ever becomes available it can be slotted
-in behind ``_HAVE_LXML`` as a faster tokenizer with identical semantics.
+requires one implementation.
 """
 
 from __future__ import annotations
@@ -34,14 +33,6 @@ import re
 from dataclasses import dataclass
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-
-try:  # pragma: no cover - optional fast path, absent in this runtime
-    import lxml  # noqa: F401
-
-    _HAVE_LXML = True
-except ImportError:  # pragma: no cover
-    _HAVE_LXML = False
-
 
 # One token per match: comment | script island | style island | tag | text.
 # The payload is decoded ONCE (utf-8, errors=replace) and tokenized as str:

@@ -6,9 +6,10 @@ selection + successive approximation, DC/AC refinement scans, EOB runs),
 grayscale or YCbCr, 4:4:4 / 4:2:2 / 4:2:0 sampling, restart intervals,
 8/16-bit quantization tables. Decoding is spec-faithful but NOT
 speed-tuned — per-bit Huffman walks in Python are fine for test corpora
-and metadata/stats paths; a throughput cluster should still swap in a
-native codec behind kernels/pixels.decoder_for("native") for bulk image
-work.
+and metadata/stats paths. Bulk image work runs the libjpeg entropy
+decode in front of this module's reconstruction
+(kernels/pixels.decoder_for("system"), the 'auto' default wherever
+libjpeg is bound — kernels/jpeg_native.py).
 
 Out of scope (returns None, callers degrade): arithmetic coding, 12-bit
 precision, hierarchical (SOF5+), 4-component CMYK/Adobe transforms.

@@ -30,16 +30,15 @@ Scope (graceful degradation, never an exception escaping decode_pixels):
 - APNG: ``decode_apng_composited`` replays acTL/fcTL/fdAT animations —
   per-frame deflate sub-images through the same unfilter machinery,
   placement, dispose 0/1/2, blend source/alpha-over.
-- Resize: TWO paths. ``resize_pil_bilinear`` (preprocess default)
+- Resize: ``resize_pil_bilinear`` (the frame preprocessing resize)
   implements Pillow's published two-pass ImagingResample BILINEAR —
   triangle filter with support widening on downscale, per-window
   normalization, 22-bit fixed-point coefficients, 8-bit re-quantization
   between passes — i.e. the reference's PIL call re-derived from the
   public algorithm (bit-parity is the design goal; no PIL exists here
   to cross-check, so it is pinned by closed-form cases instead).
-  ``resize_bilinear`` is the cheaper half-pixel-center SAMPLER, kept
-  for the dhash grid. Dims/means of the driver-oracle constructions
-  are exact under both.
+  ``resize_bilinear`` is the cheaper half-pixel-center SAMPLER that
+  builds the dhash grid (operators/multimodal.visual_features).
 """
 
 from __future__ import annotations
@@ -114,7 +113,7 @@ def decode_png_pixels(p: bytes) -> np.ndarray | None:
         # interprets 16-bit samples as linear light and sRGB-encodes
         # them down to 8 bits (measured: 257 -> 20, not 1), an
         # interpretation most gamma-encoded 16-bit files don't satisfy;
-        # the 'system'/'native' arms carry those. Adam7 interlace
+        # the 'system' arm carries those. Adam7 interlace
         # (interlace=1) decodes below.
         return None
     # dimension + pixel-count guards: one hostile 10^8-px header must not
@@ -739,17 +738,14 @@ def decode_pixels(p: bytes | None) -> np.ndarray | None:
 
 
 def decoder_for(codec: str):
-    """Resolve the pixel-decode callable for a config knob, so bulk jobs
-    must CHOOSE a codec instead of silently running the correctness-first
-    pure-Python Huffman/unfilter loops over 100 TB (see the measured
-    pixel_decode_imgs_per_sec figure in BENCH/BASELINE.md):
+    """Resolve the pixel-decode callable for a codec name. Operators call
+    it where the plan is built, so a bad name fails the job on the driver:
 
-    - ``python``: this module + kernels/jpeg.py. Bit-exact, tested,
-      ~37 imgs/s/core measured on 64-160 px mixed codecs
-      (BENCH/BASELINE.md) — fine for oracles, goldens, and modest
-      corpora; a deliberate choice for bulk.
-    - ``native``: PIL-backed decode for production throughput; raises
-      ImportError in runtimes without PIL rather than degrading quietly.
+    - ``auto`` (default): the ``system`` arm when any codec library is
+      bound, the pure ``python`` codecs otherwise.
+    - ``python``: this module + kernels/jpeg.py. Bit-exact and tested,
+      ~37 imgs/s/core on 64-160 px mixed codecs (BENCH/BASELINE.md) —
+      the pure reference for oracles, goldens and parity runs.
     - ``system``: system shared-library codecs through ctypes where
       bound — PNG via libpng (kernels/png_native.py, byte-identical to
       the pure decoder on its shared domain and a superset beyond it:
@@ -761,11 +757,10 @@ def decoder_for(codec: str):
       decoder's own NumPy reconstruction, so pixels are byte-identical
       by construction; the shim owns libjpeg's setjmp error contract
       entirely inside C — the reason plain ctypes could not bind
-      libjpeg) — pure Python for everything else. The bulk path that is
-      MEASURABLE in this sandbox (no PIL here); raises ImportError when
-      no system codec library is present at all.
-    - ``off``: refuse pixel decode at plan-construction time — the guard
-      for jobs that only need headers/metadata (kernels/raster.py).
+      libjpeg) — pure Python for everything else. Raises ImportError
+      when no system codec library is present at all.
+
+    Any other name raises ValueError.
     """
     if codec == "python":
         return decode_pixels
@@ -775,8 +770,8 @@ def decoder_for(codec: str):
         # shared domain (parity-pinned per format) and 6-31x faster per
         # core — falling back to the pure-Python codecs on hosts with no
         # system libraries. The explicit names remain for oracle parity
-        # runs ('python') and hard requirements ('system'/'native' raise
-        # instead of degrading). NOTE: availability is probed where the
+        # runs ('python') and hard requirements ('system' raises instead
+        # of degrading). NOTE: availability is probed where the
         # plan is CONSTRUCTED (the driver); on a heterogeneous deployment
         # whose driver image lacks libraries the executors have, 'auto'
         # quietly picks the pure path — pass codec='system' to fail fast
@@ -801,10 +796,9 @@ def decoder_for(codec: str):
             or jpeg_native.have_native_jpeg()
         ):
             raise ImportError(
-                "pixel_codec='system' found no system codec libraries "
+                "pixel codec 'system' found no system codec libraries "
                 "(libpng16 / libgif / libwebp / libtiff / libjpeg) on "
-                "this host; choose 'python' (pure, slower) or 'native' "
-                "(PIL)"
+                "this host; choose 'auto' or 'python' (pure, slower)"
             )
 
         def _system(p: bytes | None) -> np.ndarray | None:
@@ -844,46 +838,9 @@ def decoder_for(codec: str):
                 return None
 
         return _system
-    if codec == "native":
-        try:
-            from PIL import Image
-        except ImportError as e:
-            raise ImportError(
-                "pixel_codec='native' needs PIL on executors; install it "
-                "or choose pixel_codec='python' (slower, pure-Python)"
-            ) from e
-
-        import io
-
-        def _native(p: bytes | None) -> np.ndarray | None:
-            if not p:
-                return None
-            try:
-                im = Image.open(io.BytesIO(p))
-                # Mode-normalize so 'native' and 'python' agree on layout:
-                # P-mode would otherwise yield a 2-D palette-INDEX array
-                # (and I;16 uint16, CMYK 4ch) that to_3ch/pixel_stats would
-                # silently treat as gray. Keep L/LA/RGB/RGBA (the layouts
-                # the python codec emits); resolve everything else.
-                if im.mode not in ("L", "LA", "RGB", "RGBA"):
-                    has_alpha = (
-                        "transparency" in im.info
-                        or im.mode in ("PA", "RGBa", "La")
-                    )
-                    im = im.convert("RGBA" if has_alpha else "RGB")
-                return np.asarray(im)
-            except Exception:
-                return None
-
-        return _native
-    if codec == "off":
-        raise ValueError(
-            "pixel decode is disabled (pixel_codec='off'); pick 'python' "
-            "(pure-Python, correctness-first), 'system' (ctypes libpng/"
-            "libwebp where present), or 'native' (PIL) explicitly before "
-            "running a bulk pixel job"
-        )
-    raise ValueError(f"unknown pixel codec {codec!r}")
+    raise ValueError(
+        f"unknown pixel codec {codec!r}; choose 'auto', 'python' or 'system'"
+    )
 
 
 def to_3ch(img: np.ndarray) -> np.ndarray:
@@ -1024,21 +981,17 @@ def resize_pil_bilinear(img: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
 
 
 def preprocess_frame(
-    img: np.ndarray, max_dim: int = 6000, resample: str = "pil"
+    img: np.ndarray, max_dim: int = 6000
 ) -> tuple[np.ndarray, int, int]:
     """The reference's full frame preprocessing: 3-channel normalize ->
     downscale cap -> BGR. Returns (bgr_image, out_w, out_h).
 
-    ``resample``: 'pil' (default) = Pillow's published two-pass triangle
-    filter incl. fixed-point rounding — the reference calls PIL resize
-    (model.py:355-364), so this is the parity path; 'sampling' = the
-    half-pixel-center bilinear SAMPLER (cheaper, kept for the dhash
-    grid and as the documented approximation). Both are exact on solid
-    colors, so the driver oracles hold under either."""
+    The downscale is ``resize_pil_bilinear`` — Pillow's published
+    two-pass triangle filter incl. fixed-point rounding, because the
+    reference calls PIL resize (model.py:355-364)."""
     img = to_3ch(img)
     h, w = img.shape[:2]
     nw, nh = capped_size(w, h, max_dim)
     if (nw, nh) != (w, h):
-        resize = resize_pil_bilinear if resample == "pil" else resize_bilinear
-        img = resize(img, nw, nh)
+        img = resize_pil_bilinear(img, nw, nh)
     return rgb_to_bgr(img), nw, nh

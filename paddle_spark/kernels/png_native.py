@@ -13,9 +13,8 @@ back to the pure decoder.
 Two jobs:
 
 * **Throughput arm**: ``decoder_for('system')`` (kernels/pixels.py)
-  routes PNG through this binding for bulk jobs — a C-speed path that is
-  MEASURED in this sandbox (BENCH/BASELINE.md), unlike the PIL-backed
-  'native' path which this environment cannot import.
+  routes PNG through this binding for bulk jobs — a C-speed path with
+  a measured figure (BENCH/BASELINE.md).
 * **Independent cross-check**: PNG is lossless, so on the domain the pure
   decoder accepts (8-bit, non-interlaced, no gamma-bearing ancillary
   chunks) the two decoders must agree BYTE-FOR-BYTE — a third-party

@@ -4,9 +4,9 @@ The reference iterates image frames through PIL with a 6000-px downscale
 cap (/root/reference/server/model_repo/layout-parsing/1/model.py:339-368,
 :34). This module is the cheap HEADER path: dimensions and frame counts
 from plain container bytes, which is all the metadata path and the
-extraction branch need. Full pixel decode lives in kernels/pixels.py and
-kernels/jpeg.py (PNG/BMP/GIF/JPEG/TIFF); WEBP pixels stay with the
-declared swap point (kernels/pixels.decoder_for("native")).
+extraction branch need. Full pixel decode lives in kernels/pixels.py,
+kernels/jpeg.py and kernels/webp.py, behind one codec switch
+(kernels/pixels.decoder_for: 'auto', 'python' or 'system').
 Formats: PNG, GIF (with frame walk), JPEG (SOF scan), TIFF (IFD chain),
 BMP, WEBP (VP8X). Returns None for anything unrecognized/truncated —
 callers degrade, never raise.

@@ -56,24 +56,19 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-_IN_COLS = ["url", "warc_ts", "html", "wet_text", "lang", "bucket", "payload_xxh"]
-
 
 def make_extract_batch(cfg: ExtractConfig):
     """Build the mapInPandas body with `cfg` captured by closure (the
     analog of the per-request kwargs dict, model.py:400-431 — but constant
     per job, shipped once in the serialized closure)."""
 
-    # Resolve the pixel decoder AT PLAN CONSTRUCTION (this runs on the
-    # driver when the mapInPandas stage is declared): ocr_images with
-    # pixel_codec='off' refuses here, and 'native' without PIL raises
-    # ImportError here — never per-row inside the fault-isolation try
-    # (same contract as operators/scanned.py).
+    # Resolve the pixel decoder once, at plan construction (same contract
+    # as operators/scanned.py), not per row on the executors.
     pixel_decode = None
     if cfg.ocr_images:
         from paddle_spark.kernels.pixels import decoder_for
 
-        pixel_decode = decoder_for(cfg.pixel_codec)
+        pixel_decode = decoder_for("auto")
 
     def extract_batch(batches):
         for pdf in batches:
@@ -99,13 +94,7 @@ def make_extract_batch(cfg: ExtractConfig):
                 "error": [None] * n,
             }
             payloads = pdf["html"].to_numpy()
-            # wet_text only exists when the caller opted into WET
-            # passthrough (streaming/extract_stream feeds html-only)
-            wet = (
-                pdf["wet_text"].to_numpy()
-                if "wet_text" in pdf.columns
-                else [None] * n
-            )
+            wet = pdf["wet_text"].to_numpy()
             for i in range(n):
                 if payloads[i] is None and wet[i] is not None:
                     # WET conversion record: the text IS the extraction

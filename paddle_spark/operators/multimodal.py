@@ -12,12 +12,12 @@ Lossy WEBP decodes through the system-libwebp ctypes arm
 (kernels/webp_native.py); only audio/video remain the declared seam. There is
 ONE codec switch for the whole package — ``kernels/pixels.decoder_for``:
 every pixel operator (including ``decode_media``) takes a ``codec`` knob
-resolved there at plan construction ('python' = the pure codecs here,
-'native' = mode-normalized PIL for bulk throughput on a real cluster,
-'off' = refuse). Feature vectors
-are PIXEL-DERIVED since round 4 (``visual_features``: dhash + channel
-histograms); ``decode_fake``'s digest feature remains only as the
-plumbing stand-in for NEURAL embeddings.
+resolved there at plan construction ('auto' = the system codecs when any
+library is bound, else the pure codecs; 'python' = the pure codecs here;
+'system' = the ctypes system codecs, refusing hosts without them).
+Feature vectors are PIXEL-DERIVED since round 4 (``visual_features``:
+dhash + channel histograms); ``decode_fake``'s digest feature remains
+only as the plumbing stand-in for NEURAL embeddings.
 
 Reference analog: the blip-caption backend's batched execute loop
 (/root/reference/server/model_repo/blip-caption/1/model.py:226-292 —
@@ -100,8 +100,8 @@ def decode_media(media: DataFrame, id_col: str = "media_id",
     ``codec='fake'`` (default) keeps the deterministic digest stand-in
     for neural embeddings — header-true dims, digest feature (the oracled
     plumbing path). Any other value routes through the package's single
-    codec switch, ``kernels/pixels.decoder_for`` ('python' pure codecs or
-    'native' mode-normalized PIL), resolved HERE at plan construction;
+    codec switch, ``kernels/pixels.decoder_for`` ('auto', 'python' or
+    'system'), resolved HERE at plan construction;
     the feature becomes the real per-channel pixel means (0..1)."""
     src = media.select(
         F.col(id_col).cast("long").alias("media_id"), F.col(payload_col).alias("payload")
@@ -112,7 +112,7 @@ def decode_media(media: DataFrame, id_col: str = "media_id",
         from paddle_spark.kernels.pixels import decoder_for, to_3ch
         from paddle_spark.kernels.raster import decode_image_header
 
-        decode = decoder_for(codec)  # validates / gates at plan construction
+        decode = decoder_for(codec)  # validates at plan construction
 
         def decode_one(payload):
             img = decode(payload)
@@ -319,9 +319,8 @@ def pixel_stats(
     processed frame. Arrow-batched mapInPandas with per-item isolation
     (T5): undecodable payloads (out-of-scope variants, lossy WEBP on a
     host without libwebp, or garbage) yield decode_ok=false rows, never task
-    failures. ``codec`` gates the decode path (kernels/pixels.decoder_for):
-    'off' refuses at plan construction, 'native' demands PIL — a bulk job
-    must opt into the pure-Python codecs deliberately."""
+    failures. ``codec`` picks the decode path (kernels/pixels.decoder_for)
+    at plan construction; an unknown name raises there."""
     from paddle_spark.kernels.pixels import decoder_for, preprocess_frame
 
     decode = decoder_for(codec)
@@ -410,33 +409,23 @@ def frame_sample(
     )
     from paddle_spark.kernels.raster import decode_image_header
 
-    decode = decoder_for(codec)  # validates / gates at plan construction
-    if codec == "native":  # pragma: no cover - PIL absent in this runtime
-        def decode_frame(p, fno):
-            import io
+    decode = decoder_for(codec)  # validates at plan construction
 
-            import numpy as np
-            from PIL import Image
-
-            im = Image.open(io.BytesIO(p))
-            im.seek(fno)
-            return np.asarray(im.convert("RGB"))
-    else:
-        def decode_frame(p, fno):
-            # COMPOSITED frames: placement + transparency + disposal
-            # replayed on the canvas, so a sampled frame of an optimized
-            # animation is the image a viewer would show
-            if p[:6] in (b"GIF87a", b"GIF89a"):
-                return decode_gif_composited(p, frame=fno)
-            if p[:8] == b"\x89PNG\r\n\x1a\n" and b"acTL" in p:
-                apng = decode_apng_composited(p, frame=fno)
-                if apng is not None:
-                    return apng
-            if p[:4] in (b"II*\x00", b"MM\x00*"):
-                # multi-page TIFF: pages are independent IFDs (no
-                # composition semantics), one decode per sampled page
-                return decode_tiff_pixels(p, ifd=fno)
-            return decode(p) if fno == 0 else None
+    def decode_frame(p, fno):
+        # COMPOSITED frames: placement + transparency + disposal
+        # replayed on the canvas, so a sampled frame of an optimized
+        # animation is the image a viewer would show
+        if p[:6] in (b"GIF87a", b"GIF89a"):
+            return decode_gif_composited(p, frame=fno)
+        if p[:8] == b"\x89PNG\r\n\x1a\n" and b"acTL" in p:
+            apng = decode_apng_composited(p, frame=fno)
+            if apng is not None:
+                return apng
+        if p[:4] in (b"II*\x00", b"MM\x00*"):
+            # multi-page TIFF: pages are independent IFDs (no
+            # composition semantics), one decode per sampled page
+            return decode_tiff_pixels(p, ifd=fno)
+        return decode(p) if fno == 0 else None
 
     src = media.select(
         F.col(id_col).cast("long").alias("media_id"),
@@ -631,7 +620,7 @@ def video_frames(
         decode_dib_frame,
     )
 
-    decode = decoder_for(codec)  # validates / gates at plan construction
+    decode = decoder_for(codec)  # validates at plan construction
     src = media.select(
         F.col(id_col).cast("long").alias("media_id"),
         F.col(payload_col).alias("payload"),

@@ -24,22 +24,14 @@ corpus (mandate ops "beyond the reference", like dedup/ANN/safety):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from paddle_spark.functions import hash_bucket_col
 
 #: Buckets for the sampling decision; rates are expressed in basis
 #: points of this (10000 = keep everything).
 SAMPLE_BUCKETS = 10_000
-
-
-def hash_bucket_col(key: Column) -> Column:
-    """Deterministic bucket in [0, SAMPLE_BUCKETS) from a stable key:
-    first 8 hex chars of md5 -> uint32 -> mod. Identical in DuckDB as
-    ('0x' || substr(md5(key), 1, 8))::UBIGINT % 10000."""
-    return (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-        % SAMPLE_BUCKETS
-    )
 
 
 def hash_sample(
@@ -53,7 +45,7 @@ def hash_sample(
     stratum's rate (fraction in [0, 1]). Unlisted strata use
     default_rate. Pure Column ops; the plan is scan -> filter, so
     partition pruning and pushdown still apply upstream."""
-    bucket = hash_bucket_col(F.col(key_col))
+    bucket = hash_bucket_col(F.col(key_col), SAMPLE_BUCKETS)
     threshold = F.lit(int(default_rate * SAMPLE_BUCKETS))
     for stratum, rate in sorted(rates.items()):
         threshold = F.when(
@@ -156,7 +148,7 @@ def temperature_sample(
     aggregate, broadcast the #strata rate rows back, map-side filter —
     the corpus itself is never shuffled."""
     rates = temperature_rates(df, stratum_col, alpha)
-    bucket = hash_bucket_col(F.col(key_col))
+    bucket = hash_bucket_col(F.col(key_col), SAMPLE_BUCKETS)
     return (
         df.join(F.broadcast(rates.select(stratum_col, "rate_bp")), stratum_col)
         .filter(bucket < F.col("rate_bp"))

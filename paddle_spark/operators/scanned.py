@@ -45,9 +45,7 @@ def extract_scanned(
     src = pages.select("url", "payload")
     if n_partitions:
         src = src.repartition(n_partitions, "url")
-    # resolved at plan construction: pixel_codec='off' refuses here, not
-    # mid-task on an executor
-    decode = decoder_for(cfg.pixel_codec)
+    decode = decoder_for("auto")  # resolved at plan construction
 
     def run(batches):
         from paddle_spark.kernels.scan import ocr_page
@@ -102,7 +100,7 @@ def extract_scanned_oriented(
     src = pages.select("url", "payload")
     if n_partitions:
         src = src.repartition(n_partitions, "url")
-    decode = decoder_for(cfg.pixel_codec)  # plan-construction gate
+    decode = decoder_for("auto")  # resolved at plan construction
 
     def run(batches):
         from paddle_spark.kernels.scan import ocr_page_oriented

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from paddle_spark.functions import hash_bucket_col
 from paddle_spark.operators.dedup import words_col
 
 # Tiny deterministic stopword lists for the n-gram/stopword language
@@ -231,17 +232,6 @@ def repetition_features(
 # ---------------------------------------------------------------------------
 # hashed-linear quality classifier (fastText/CCNet-style scorer)
 # ---------------------------------------------------------------------------
-
-def hash_bucket_col(token: Column, n_buckets: int) -> Column:
-    """Stable cross-engine hashing-trick bucket: first 8 hex chars of
-    md5(token) as an unsigned int, mod n_buckets. md5 (not murmur) so a
-    SQL oracle replays the identical bucketing (same trick as
-    sampling.hash_sample)."""
-    return (
-        F.conv(F.substring(F.md5(token), 1, 8), 16, 10).cast("long")
-        % F.lit(n_buckets)
-    )
-
 
 def hashed_linear_score(
     df: DataFrame,

@@ -3,10 +3,11 @@
 The batch job is the idiomatic shape for a Common-Crawl backfill (SURVEY
 §1.2), but the extraction stage itself is stateless map-only — so it
 composes with Structured Streaming unchanged: ``readStream`` on the pages
-source -> the SAME ``make_extract_batch`` kernel via ``mapInPandas`` ->
-``writeStream``. Byte-identity per url carries over verbatim (same kernel
-bytes). Use for continuous ingestion (e.g. a crawler landing parquet files
-into a directory / Kafka topic of WARC records).
+source -> the SAME ``extract_pages`` plan (without its fan-out shuffle)
+-> ``writeStream``. Byte-identity per url carries over verbatim (same
+plan, same kernel bytes), WET passthrough included. Use for continuous
+ingestion (e.g. a crawler landing parquet files into a directory / Kafka
+topic of WARC records).
 
 Checkpointing: Structured Streaming's own WAL checkpoint replaces the
 batch job's bucket-lineage table (exactly-once per micro-batch from the
@@ -19,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-from paddle_spark.functions import url_bucket_col
-from paddle_spark.operators.extract_job import EXTRACTED_SCHEMA, make_extract_batch
+from paddle_spark.operators.extract_job import extract_pages
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -28,18 +28,9 @@ PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang strin
 def streaming_extract(
     pages_stream: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """Declare the streaming extraction plan over a streaming pages frame."""
-    from pyspark.sql import functions as F
-
-    src = pages_stream.select(
-        "url",
-        "warc_ts",
-        "html",
-        "lang",
-        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt).alias("bucket"),
-        F.xxhash64("html").alias("payload_xxh"),
-    )
-    return src.mapInPandas(make_extract_batch(cfg), schema=EXTRACTED_SCHEMA)
+    """Declare the streaming extraction plan over a streaming pages frame:
+    the batch plan (extract_pages) without its fan-out shuffle."""
+    return extract_pages(pages_stream, cfg, shuffle=False)
 
 
 def read_pages_stream(

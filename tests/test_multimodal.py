@@ -48,8 +48,8 @@ def test_decode_stub_schema_and_determinism(media):
 def test_decode_media_real_codec_single_switch(spark):
     """decode_media(codec='python') routes through the ONE codec switch
     (kernels/pixels.decoder_for): real dims + channel-mean features for a
-    decodable PNG, per-item isolation for garbage, and 'off' refuses at
-    plan construction — not per row."""
+    decodable PNG, per-item isolation for garbage, and an unknown codec
+    refuses at plan construction — not per row."""
     import numpy as np
 
     from paddle_spark.sources.synth import make_png
@@ -66,7 +66,7 @@ def test_decode_media_real_codec_single_switch(spark):
     assert r1["feature"] == [1.0, 0.0, 0.0]
     assert not rows[2]["decode_ok"]
     with pytest.raises(ValueError):
-        MM.decode_media(df, codec="off")  # plan construction, no action ran
+        MM.decode_media(df, codec="bogus")  # plan construction, no action ran
 
 
 def test_pixel_stats_real_decode_and_isolation(spark):
@@ -206,29 +206,19 @@ def test_visual_features_feed_ann(spark):
 
 
 def test_pixel_codec_knob(spark):
-    """The bulk-decode gate: 'off' and unknown codecs refuse at plan
-    construction (driver side, not mid-task), and 'native' demands PIL
-    instead of silently falling back to the slow pure-Python path."""
-    import pytest
-
-    from paddle_spark.operators.scanned import extract_scanned
-    from paddle_spark.operators.extract_job import with_config
-
+    """The codec switch takes exactly 'auto', 'python' and 'system'. Any
+    other name — including the removed 'native' (PIL) and 'off' values —
+    refuses at plan construction (driver side, not mid-task)."""
     media = spark.createDataFrame([(0, b"x")], "media_id long, payload binary")
-    with pytest.raises(ValueError, match="disabled"):
-        MM.pixel_stats(media, codec="off")
-    with pytest.raises(ValueError, match="unknown"):
-        MM.visual_features(media, codec="bogus")
-    with pytest.raises(ValueError, match="disabled"):
-        MM.frame_sample(media, codec="off")
-    pages = spark.createDataFrame([("u", b"x")], "url string, payload binary")
-    with pytest.raises(ValueError, match="disabled"):
-        extract_scanned(pages, with_config(pixel_codec="off"))
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="PIL"):
-            MM.pixel_stats(media, codec="native")
+    ops = (MM.pixel_stats, MM.visual_features, MM.frame_sample,
+           MM.video_frames, MM.decode_media)
+    for codec in ("native", "off", "bogus"):
+        for op in ops:
+            with pytest.raises(ValueError, match="unknown pixel codec"):
+                op(media, codec=codec)
+    for codec in ("auto", "python"):
+        for op in ops:
+            op(media, codec=codec)
 
 
 def test_visual_near_dups_banded_hamming(spark):

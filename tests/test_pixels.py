@@ -178,6 +178,11 @@ def test_preprocess_frame_end_to_end():
     bgr2, ow2, oh2 = preprocess_frame(small, max_dim=128)
     assert (ow2, oh2) == (20, 10)
     assert np.array_equal(bgr2, small[:, :, ::-1])
+    # solid colour survives the downscale exactly, channels swapped
+    solid = np.full((300, 200, 3), (9, 90, 190), np.uint8)
+    bgr3, ow3, oh3 = preprocess_frame(solid, max_dim=128)
+    assert (ow3, oh3) == (85, 128)
+    assert (bgr3 == (190, 90, 9)).all()
 
 
 def test_gif_roundtrip_lzw():
@@ -534,15 +539,25 @@ class TestPilParityResize:
         assert 100 <= a[1:3, 1:3, 0].mean() <= 155
 
     def test_preprocess_frame_resample_knob(self):
+        """preprocess_frame has no resample option: the Pillow-parity
+        triangle filter is its only downscale, never the 2-tap sampler."""
         import numpy as np
 
-        from paddle_spark.kernels.pixels import preprocess_frame
+        from paddle_spark.kernels.pixels import (
+            preprocess_frame,
+            resize_bilinear,
+            resize_pil_bilinear,
+        )
 
-        solid = np.full((300, 200, 3), (9, 90, 190), np.uint8)
-        for mode in ("pil", "sampling"):
-            bgr, ow, oh = preprocess_frame(solid, max_dim=128, resample=mode)
-            assert (ow, oh) == (85, 128)
-            assert (bgr[0, 0] == (190, 90, 9)).all()
+        img = np.zeros((32, 24, 3), np.uint8)
+        img[::2] = 255
+        img[:, :, 2] = 40
+        with pytest.raises(TypeError):
+            preprocess_frame(img, max_dim=8, resample="sampling")
+        bgr, ow, oh = preprocess_frame(img, max_dim=8)
+        assert (ow, oh) == (6, 8)
+        assert np.array_equal(bgr, resize_pil_bilinear(img, 6, 8)[:, :, ::-1])
+        assert not np.array_equal(bgr, resize_bilinear(img, 6, 8)[:, :, ::-1])
 
 
 class TestApngComposition:
@@ -732,75 +747,3 @@ class TestWildImages:
                     ), f
         # the sample is dominated by 8-bit PNGs: nearly all must decode
         assert decoded >= int(0.9 * len(sample)), (decoded, len(sample))
-
-
-class TestNativeCodecParity:
-    """The 'native' (PIL) codec is the designated 100-TB bulk path; these
-    contract tests run wherever PIL exists (skipped in runtimes without
-    it, same gate pattern as the Iceberg-jar test) and pin that 'native'
-    and 'python' agree on OUTPUT LAYOUT — in particular that P-mode
-    palette images come back as resolved RGB, not 2-D index arrays
-    (VERDICT r4 'What's wrong' #1)."""
-
-    @pytest.fixture()
-    def native(self):
-        pytest.importorskip("PIL")
-        from paddle_spark.kernels.pixels import decoder_for
-
-        return decoder_for("native")
-
-    def test_palette_gif_resolves_to_rgb(self, native):
-        from paddle_spark.kernels.pixels import decode_pixels
-        from paddle_spark.sources.synth import make_gif
-
-        pal = _rand((7, 3), seed=61)
-        idx = _rand((9, 11), seed=62) % 7
-        p = make_gif([idx], pal)
-        a, b = native(p), decode_pixels(p)
-        assert a is not None and a.ndim == 3 and a.dtype == np.uint8
-        assert a.shape[2] in (3, 4)
-        assert np.array_equal(a[:, :, :3], b[:, :, :3])
-
-    def test_palette_png_resolves_to_rgb(self, native):
-        from paddle_spark.kernels.pixels import decode_png_pixels
-
-        pal = _rand((7, 3), seed=63)
-        idx = _rand((10, 12, 1), seed=64) % 7
-
-        def chunk(tag, data):
-            return (len(data).to_bytes(4, "big") + tag + data
-                    + zlib.crc32(tag + data).to_bytes(4, "big"))
-
-        h, w = idx.shape[:2]
-        ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 3, 0, 0, 0])
-        raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(h))
-        p = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-             + chunk(b"PLTE", pal.tobytes())
-             + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-        a = native(p)
-        assert a is not None and a.ndim == 3 and a.dtype == np.uint8
-        assert np.array_equal(a[:, :, :3], decode_png_pixels(p))
-
-    def test_rgb_formats_byte_identical(self, native):
-        from paddle_spark.kernels.pixels import decode_pixels
-        from paddle_spark.sources.synth import make_bmp, make_png
-
-        arr = _rand((13, 9, 3), seed=65)
-        for payload in (make_png(arr), make_bmp(arr)):
-            a, b = native(payload), decode_pixels(payload)
-            assert a is not None and a.dtype == np.uint8
-            assert np.array_equal(a[:, :, :3] if a.ndim == 3 else a, b)
-
-    def test_channel_means_agree_via_to_3ch(self, native):
-        """The downstream contract: pixel_stats-style channel means match
-        between codecs after to_3ch normalization (gray + palette)."""
-        from paddle_spark.kernels.pixels import decode_pixels, to_3ch
-        from paddle_spark.sources.synth import make_gif, make_png
-
-        pal = _rand((5, 3), seed=66)
-        idx = _rand((8, 8), seed=67) % 5
-        gray = _rand((7, 7), seed=68)
-        for payload in (make_gif([idx], pal), make_png(gray[:, :, None])):
-            ma = to_3ch(native(payload)).reshape(-1, 3).mean(axis=0)
-            mb = to_3ch(decode_pixels(payload)).reshape(-1, 3).mean(axis=0)
-            assert np.allclose(ma, mb, atol=1e-9), payload[:8]

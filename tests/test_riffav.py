@@ -117,7 +117,7 @@ class TestOperators:
         got = {(r["media_id"], r["frame_no"]): r["mean_r"] for r in out}
         assert got == {(7, 0): 30.0, (7, 2): 90.0}
         with pytest.raises(ValueError):
-            video_frames(df, codec="off")  # plan-construction refusal
+            video_frames(df, codec="bogus")  # plan-construction refusal
 
 
 def test_extract_document_media_kinds():

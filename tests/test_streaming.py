@@ -104,3 +104,39 @@ def test_streaming_scanned_pdf_byte_identity(spark, tmp_path):
     for i in range(12):
         exp = extract_document(make_scanned_pdf(i, "dct" if i % 2 else "flate")).text_sha256
         assert got[f"scanpdf://{i}"] == exp
+
+
+def test_streaming_wet_passthrough_matches_batch(spark, tmp_path):
+    """With wet_passthrough, WET conversion rows (html null, text
+    pre-extracted) pass through the streaming plan as branch='wet' rows,
+    exactly as in the batch job: stream and batch give identical rows,
+    payload_xxh included."""
+    import datetime as dt
+
+    from paddle_spark.operators.extract_job import extract_pages, with_config
+    from paddle_spark.sources.synth import gen_pages_spark
+    from paddle_spark.streaming.extract_stream import PAGES_DDL, streaming_extract
+
+    ts = dt.datetime(2024, 1, 1)
+    wet = [(f"https://wet{i}.example/p", ts, None, f"wet text {i}", "en")
+           for i in range(10)]
+    src = str(tmp_path / "in")
+    gen_pages_spark(spark, 30, seed=42, n_partitions=2).unionByName(
+        spark.createDataFrame(wet, PAGES_DDL)
+    ).write.parquet(src)
+    cfg = with_config(wet_passthrough=True)
+
+    stream = streaming_extract(spark.readStream.schema(PAGES_DDL).parquet(src), cfg)
+    q = (
+        stream.writeStream.format("memory").queryName("wet_stream")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    got = {r["url"]: r for r in spark.sql("SELECT * FROM wet_stream").collect()}
+    want = {
+        r["url"]: r
+        for r in extract_pages(spark.read.parquet(src), cfg, n_partitions=2).collect()
+    }
+    assert len(want) == 40 and got == want
+    assert sum(r["branch"] == "wet" and r["parse_ok"] for r in got.values()) == 10
