@@ -48,7 +48,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="catalog table for lineage instead of --checkpoint")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--n-partitions", type=int, default=None,
-                    help="map-stage width (default: n_buckets)")
+                    help="initial partition count of the bucket rebalance, "
+                         "which AQE then coalesces or splits "
+                         "(default: spark.sql.shuffle.partitions)")
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="lineage granularity (checkpoint unit)")
     ap.add_argument("--salt", type=int, default=0)

@@ -26,10 +26,13 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
 from paddle_spark.operators.extract_job import extract_pages, extraction_metrics
@@ -192,11 +195,12 @@ def run_extract_job(
     # lineage that also makes the metrics read below EXACT (stale partitions
     # left in a reused output dir by an earlier run can never be attributed
     # to this run, even for buckets this run's input does not cover).
-    # shuffle=True (not auto): this path WRITES partitionBy(bucket), so
-    # the salted repartition doubles as output clustering — without it
-    # every task would emit a file into every bucket directory (the
-    # small-files trap, guide §6). The auto-skip is for noop/analysis
-    # consumers, not the partitioned sink.
+    # shuffle=True (not auto): this path WRITES partitionBy(bucket), and
+    # the rebalance on bucket puts each bucket in one shuffle partition,
+    # so the write emits one file per bucket (more only where AQE splits
+    # an oversized bucket) — without it every task would emit a file into
+    # every bucket directory (the small-files trap, guide §6). The
+    # auto-skip is for noop/analysis consumers, not the partitioned sink.
     extracted = extract_pages(todo, cfg, n_partitions, shuffle=True).withColumn(
         "run_id", F.lit(run_id)
     )
@@ -217,31 +221,34 @@ def run_extract_job(
     this_run = out.filter(
         F.col("bucket").isin(candidates) & (F.col("run_id") == run_id)
     )
-    metrics = extraction_metrics(this_run)
-    now = F.current_timestamp()
-    total = metrics.agg(
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("docs"),
-        F.coalesce(F.sum("n_failures"), F.lit(0)).alias("fails"),
-    ).collect()[0]
-    docs_per_sec = float(total["docs"]) / elapsed if elapsed > 0 else 0.0
-    cp_rows = metrics.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("bucket"),
-        F.col("n_docs").cast("long"),
-        F.col("n_failures").cast("long"),
-        F.col("blocks_kept").cast("long"),
-        F.col("blocks_dropped").cast("long"),
-        F.lit(docs_per_sec).alias("docs_per_sec"),
-        (now - F.expr(f"INTERVAL {int(elapsed)} SECONDS")).alias("started_at"),
-        now.alias("finished_at"),
-        F.lit("success").alias("status"),
-    )
+    # One scan: at most n_buckets rows come back, and the totals and the
+    # lineage rows are both built from them on the driver.
+    metrics = extraction_metrics(this_run).collect()
+    docs = sum(r["n_docs"] for r in metrics)
+    fails = sum(r["n_failures"] for r in metrics)
+    docs_per_sec = docs / elapsed if elapsed > 0 else 0.0
+    finished_at = datetime.now(timezone.utc)
+    started_at = finished_at - timedelta(seconds=elapsed)
+    # an Arrow table becomes a DataFrame in the JVM; a list of tuples
+    # would run a Python worker inside the append job
+    cp_rows = spark.createDataFrame(
+        pa.Table.from_pylist(
+            [
+                dict(r.asDict(), run_id=run_id, docs_per_sec=docs_per_sec,
+                     started_at=started_at, finished_at=finished_at,
+                     status="success")
+                for r in metrics
+            ],
+            schema=to_arrow_schema(CHECKPOINT_SCHEMA),
+        ),
+        CHECKPOINT_SCHEMA,
+    ).coalesce(1)  # one checkpoint file per append
     append_checkpoint(cp_rows, checkpoint_path, checkpoint_table)
 
     return {
         "run_id": run_id,
-        "n_docs": int(total["docs"]),
-        "n_failures": int(total["fails"]),
+        "n_docs": docs,
+        "n_failures": fails,
         "buckets_skipped": n_skipped,
         "elapsed_sec": elapsed,
         "docs_per_sec": docs_per_sec,

@@ -67,7 +67,9 @@ def delta_extract(
     # changed/new: snapshot rows with no matching previous output
     todo = new_keyed.join(prev.select(*_KEY), _KEY, "left_anti")
     # shuffle=True: delta outputs feed the same partitionBy(bucket) sink
-    # as full runs — keep the salted clustering (see checkpoint.py)
+    # as full runs — the rebalance gives the fresh rows one file per
+    # bucket (see checkpoint.py); carried rows keep the semi-join's
+    # partitioning
     fresh = extract_pages(todo.drop("payload_xxh"), cfg, n_partitions, shuffle=True)
     return carried.unionByName(fresh)
 

@@ -10,9 +10,12 @@ per-url byte-identity invariant hold at any parallelism.
 Scale design (100 TB / 10^12 rows):
 - Input scan stays columnar: we select exactly (url, warc_ts, html, lang)
   — column pruning reaches the parquet/Iceberg scan.
-- ``repartition(n, salted url-hash)`` is the job's only shuffle; it defuses
-  host-domain skew (one mega-host = many buckets) and sets the unit of
-  checkpoint lineage. Everything downstream is map-only.
+- A rebalance on the salted url-hash ``bucket`` is the job's only shuffle:
+  it defuses host-domain skew (one mega-host = many buckets), gathers
+  each bucket (the unit of checkpoint lineage) into one shuffle
+  partition, and leaves the task count to AQE, which coalesces small
+  partitions and splits oversized ones. Everything downstream is
+  map-only.
 - Extraction runs in Arrow-batched Python workers (one per core — the
   analog of the reference's Triton instance pool,
   config_gpu_paddlex.pbtxt:18-24); per-doc try/except means one poisoned
@@ -152,7 +155,7 @@ def _local_row_groups(files: list[str]) -> int | None:
 
 
 def _needs_fanout_shuffle(pages: DataFrame, n_parts: int) -> bool:
-    """Best-effort auto decision for the salted repartition: False only
+    """Best-effort auto decision for the bucket rebalance: False only
     when the input is provably at least min(n_parts, cores)-way parallel.
 
     Wide plans (joins/aggregates/windows/repartitions upstream) are
@@ -203,21 +206,27 @@ def extract_pages(
 ) -> DataFrame:
     """Declare the extraction plan over a `pages` DataFrame.
 
-    ``n_partitions`` defaults to ``cfg.n_buckets`` — on a real cluster set
-    it to ~2-3x total cores; AQE cannot resize this map stage, so the
-    repartition width is the parallelism knob.
+    ``shuffle`` controls the rebalance on ``bucket`` ahead of the kernel
+    stage: ``True`` forces it (skew defense for inputs clustered by
+    host/crawl order), ``False`` skips it, and the default ``None`` skips
+    it only when the incoming frame already has at least
+    ``min(n_partitions or cfg.n_buckets, defaultParallelism)`` partitions
+    — a well-sharded corpus then flows scan -> kernel with NO shuffle of
+    the payload bytes at all (guide §2.4/§8: the extraction output is
+    per-row pure, so partitioning can never change results —
+    oracle-pinned). The shuffle stays the default whenever the input
+    arrives in few or skewed partitions.
 
-    ``shuffle`` controls the salted repartition ahead of the kernel stage:
-    ``True`` forces it (skew defense for inputs clustered by host/crawl
-    order), ``False`` skips it, and the default ``None`` skips it only
-    when the incoming frame already has at least ``min(n_partitions,
-    defaultParallelism)`` partitions — a well-sharded corpus then flows
-    scan -> kernel with NO shuffle of the payload bytes at all (guide
-    §2.4/§8: the extraction output is per-row pure, so partitioning can
-    never change results — oracle-pinned). The shuffle stays the default
-    whenever the input arrives in few or skewed partitions.
+    The rebalance hashes on ``bucket`` alone, so each bucket lands in one
+    shuffle partition and a ``partitionBy("bucket")`` write emits one file
+    per bucket. ``n_partitions`` is its initial partition count (default
+    ``spark.sql.shuffle.partitions``); AQE then coalesces small partitions
+    and splits any larger than ``advisoryPartitionSizeInBytes``, so bucket
+    count and task count stay decoupled without a fixed width. Until a
+    bucket outgrows the advisory size the stage runs at most one task per
+    bucket, so ``cfg.n_buckets`` should not be below the core count. With
+    AQE disabled the rebalance is a plain hash repartition on ``bucket``.
     """
-    n_parts = n_partitions or cfg.n_buckets
     # WET conversion rows (html null, text pre-extracted by the crawl)
     # pass through the kernel stage verbatim when cfg.wet_passthrough;
     # their lineage hash keys on the text bytes so delta extraction
@@ -241,12 +250,9 @@ def extract_pages(
         payload_key_col(pages, cfg.wet_passthrough).alias("payload_xxh"),
     )
     if shuffle is None:
-        shuffle = _needs_fanout_shuffle(pages, n_parts)
+        shuffle = _needs_fanout_shuffle(pages, n_partitions or cfg.n_buckets)
     if shuffle:
-        # The one shuffle: salted url-hash. Bucket count (lineage
-        # granularity) and partition count (parallelism) are decoupled on
-        # purpose.
-        src = src.repartition(n_parts, "bucket", "url")
+        src = src.hint("rebalance", *([n_partitions] if n_partitions else []), "bucket")
     return src.mapInPandas(make_extract_batch(cfg), schema=EXTRACTED_SCHEMA)
 
 

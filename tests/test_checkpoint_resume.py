@@ -303,3 +303,50 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
     finally:
         for t in (out_t, cp_t):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _files_per_bucket(out_path):
+    import os
+
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(out_path, d)))
+        for d in os.listdir(out_path)
+        if d.startswith("bucket=")
+    }
+
+
+def test_write_is_one_file_per_bucket(spark, tiny_pages, paths):
+    """The rebalance on bucket puts each bucket in one shuffle partition,
+    so the partitioned write emits exactly one file per bucket directory
+    (a hash on (bucket, url) scattered each bucket over many tasks)."""
+    out_path, cp_path = paths
+    run_extract_job(spark, tiny_pages, out_path, cp_path, run_id="f1", cfg=CFG)
+    files = _files_per_bucket(out_path)
+    assert len(files) == CFG.n_buckets
+    assert set(files.values()) == {1}, files
+
+
+def test_rebalance_split_keeps_output(spark, tiny_pages, tmp_path):
+    """Under a small advisory partition size AQE splits the bucket
+    partitions: more files than buckets, but per-url output and resume
+    are unchanged."""
+    cols = ["url", "text_sha256", "parse_ok"]
+    base_out = str(tmp_path / "base_out")
+    run_extract_job(spark, tiny_pages, base_out, str(tmp_path / "base_cp"),
+                    run_id="b1", cfg=CFG)
+    base = sorted(spark.read.parquet(base_out).select(*cols).collect())
+
+    out_path, cp_path = str(tmp_path / "out"), str(tmp_path / "cp")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    try:
+        run_extract_job(spark, tiny_pages, out_path, cp_path, run_id="s1", cfg=CFG)
+        again = run_extract_job(spark, tiny_pages, out_path, cp_path,
+                                run_id="s1", cfg=CFG)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    files = _files_per_bucket(out_path)
+    assert len(files) == CFG.n_buckets
+    assert sum(files.values()) > CFG.n_buckets, files
+    assert sorted(spark.read.parquet(out_path).select(*cols).collect()) == base
+    assert again["n_docs"] == 0
+    assert again["buckets_skipped"] == CFG.n_buckets

@@ -86,16 +86,25 @@ def test_salted_buckets_defuse_host_skew(spark, tiny_pages):
     assert len(counts) == 16  # every bucket populated
 
 
-def test_extraction_partitions_balanced(spark, tiny_pages):
-    """After the salted repartition, rows per physical partition are even
-    (mapInPandas work is balanced even with a dominant host)."""
+def test_extraction_plan_is_one_bucket_rebalance(spark, tiny_pages):
+    """shuffle=True plans exactly one Exchange, a rebalance hashed on
+    bucket alone (so each bucket is one shuffle partition and AQE may
+    resize the stage), with or without n_partitions; shuffle=False plans
+    none."""
+    import re
+
     from paddle_spark.operators.extract_job import extract_pages
 
-    out = extract_pages(tiny_pages, n_partitions=8, shuffle=True).withColumn(
-        "pid", F.spark_partition_id()
-    )
-    counts = [r["count"] for r in out.groupBy("pid").count().collect()]
-    assert max(counts) < 3 * (sum(counts) / len(counts))
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    for n, width in ((None, default), (5, "5")):
+        plan = plan_of(extract_pages(tiny_pages, n_partitions=n, shuffle=True))
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        assert len(exchanges) == 1, plan
+        assert re.search(
+            rf"Exchange hashpartitioning\(bucket#\d+, {width}\), "
+            r"REBALANCE_PARTITIONS_BY_COL", exchanges[0]
+        ), plan
+    assert "Exchange" not in plan_of(extract_pages(tiny_pages, shuffle=False))
 
 
 def test_bucketed_tables_colocate_join_no_shuffle(spark, tmp_path):
