@@ -27,7 +27,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--langs", default="en", help="comma list of kept languages")
     ap.add_argument("--min-quality", type=float, default=0.3)
     ap.add_argument("--min-tokens", type=int, default=10)
-    ap.add_argument("--n-partitions", type=int, default=None)
+    ap.add_argument("--n-partitions", type=int, default=None,
+                    help="partitions of the --gen input, and the initial "
+                         "partition count of extraction's bucket rebalance")
     ap.add_argument("--transitive-near-dedup", action="store_true",
                     help="connected-components canonical keep instead of "
                          "greedy pair drop (chain-correct near-dedup)")

@@ -4,7 +4,14 @@ Launch (cluster):
     zip -r paddle_spark.zip paddle_spark
     spark-submit --py-files paddle_spark.zip jobs/extract.py \
         --input <pages table/path> --output <extracted path> \
-        --checkpoint <checkpoint path> --run-id R1 --n-partitions 2048
+        --checkpoint <checkpoint path> --run-id R1 --n-buckets 4096
+
+The extraction stage rebalances on the lineage bucket, so it runs at most
+one task per bucket until a bucket's shuffle data outgrows
+spark.sql.adaptive.advisoryPartitionSizeInBytes: --n-buckets, not
+--n-partitions, bounds its parallelism. Keep --n-buckets at or above the
+cluster's core count, and keep it fixed across runs that resume or
+delta against the same output (it decides each url's bucket).
 
 Launch (sandbox smoke):
     spark-submit --master 'local[8]' --py-files paddle_spark.zip \
@@ -50,9 +57,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--n-partitions", type=int, default=None,
                     help="initial partition count of the bucket rebalance, "
                          "which AQE then coalesces or splits "
-                         "(default: spark.sql.shuffle.partitions)")
+                         "(default: spark.sql.shuffle.partitions); it does "
+                         "not widen the extraction stage")
     ap.add_argument("--n-buckets", type=int, default=64,
-                    help="lineage granularity (checkpoint unit)")
+                    help="lineage granularity (checkpoint unit); also the "
+                         "most tasks the extraction stage runs until a "
+                         "bucket outgrows the AQE advisory partition size")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--bucket-groups", type=int, default=1,
                     help="commit incrementally in N sequential bucket groups\n"

@@ -224,8 +224,12 @@ def extract_pages(
     and splits any larger than ``advisoryPartitionSizeInBytes``, so bucket
     count and task count stay decoupled without a fixed width. Until a
     bucket outgrows the advisory size the stage runs at most one task per
-    bucket, so ``cfg.n_buckets`` should not be below the core count. With
-    AQE disabled the rebalance is a plain hash repartition on ``bucket``.
+    bucket, so ``cfg.n_buckets`` should not be below the core count, and
+    a larger ``n_partitions`` does not widen it. AQE merges by shuffle
+    bytes, not kernel cost: an input under about 1 MB of shuffle per core
+    (``coalescePartitions.minPartitionSize``) runs on fewer tasks than
+    cores however slow its pages are. With AQE disabled the rebalance is
+    a plain hash repartition on ``bucket``.
     """
     # WET conversion rows (html null, text pre-extracted by the crawl)
     # pass through the kernel stage verbatim when cfg.wet_passthrough;
