@@ -18,8 +18,13 @@ Launch (sandbox smoke):
         jobs/extract.py --gen 2000 --output /tmp/out --checkpoint /tmp/cp
 
 Re-running the same command with the same --run-id resumes: buckets with
-committed lineage are anti-joined away and their output partitions are
-left untouched (idempotent per-bucket overwrite).
+committed lineage are filtered out by a driver-side NOT IN predicate and
+their output partitions are left untouched (idempotent per-bucket
+overwrite).
+
+The lineage counters are reported by the extraction tasks through an
+accumulator, so the job needs a classic session (spark-submit gives one);
+Spark Connect has no accumulators.
 """
 
 from __future__ import annotations

@@ -8,11 +8,19 @@ aggregated by /root/reference/server/status_server.py:56-123) as rows in a
     run_id, bucket, n_docs, n_failures, docs_per_sec,
     started_at, finished_at, status
 
-Resume = anti-join: pages whose bucket already has a ``success`` row for
-this run_id are skipped (the batch analog of TTL-dropping stale heartbeats,
-status_server.py:79-101). Output is written ``partitionBy("bucket")`` with
-dynamic partition overwrite, so re-running a bucket replaces exactly its
-own files — exactly-once per url without a transactional table.
+The counters in a lineage row come from the extraction tasks themselves,
+as each serving instance reports its own (layout_status.py): every task
+reports its per-bucket counts under its partition id into a
+``PartitionCounts`` accumulator (operators/extract_job.py), and the driver
+sums them — the output is never read back. Accumulators need a classic
+session (``spark-submit`` jobs are classic); Spark Connect has none.
+
+Resume: pages whose bucket already has a ``success`` row for this run_id
+are filtered out by a driver-side ``NOT IN`` predicate (the batch analog
+of TTL-dropping stale heartbeats, status_server.py:79-101). Output is
+written ``partitionBy("bucket")`` with dynamic partition overwrite, so
+re-running a bucket replaces exactly its own files — exactly-once per url
+without a transactional table.
 
 On a cluster with the Iceberg runtime jar this maps 1:1 onto
 ``writeTo(...).overwritePartitions()`` + an Iceberg checkpoint table —
@@ -35,7 +43,11 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-from paddle_spark.operators.extract_job import extract_pages, extraction_metrics
+from paddle_spark.operators.extract_job import (
+    PartitionCounts,
+    bucket_totals,
+    extract_pages,
+)
 
 def iceberg_catalog_configured(spark: SparkSession, catalog: str = "iceberg") -> bool:
     """True when an Iceberg catalog is bound on this session (the runtime
@@ -63,12 +75,22 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 
+def _empty_checkpoint(spark: SparkSession) -> DataFrame:
+    # an Arrow table is a LocalTableScan, so collecting it starts no job;
+    # an empty list of rows would run 4 Python-worker tasks to learn that
+    # nothing is there
+    return spark.createDataFrame(
+        pa.Table.from_pylist([], schema=to_arrow_schema(CHECKPOINT_SCHEMA)),
+        CHECKPOINT_SCHEMA,
+    )
+
+
 def read_checkpoint(spark: SparkSession, path: str | None) -> DataFrame:
     if path and os.path.isdir(path) and any(
         f.endswith(".parquet") for root, _, fs in os.walk(path) for f in fs
     ):
         return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-    return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+    return _empty_checkpoint(spark)
 
 
 def completed_buckets(
@@ -83,7 +105,7 @@ def completed_buckets(
         cp = (
             spark.read.table(checkpoint_table)
             if spark.catalog.tableExists(checkpoint_table)
-            else spark.createDataFrame([], CHECKPOINT_SCHEMA)
+            else _empty_checkpoint(spark)
         )
     else:
         cp = read_checkpoint(spark, path)
@@ -160,8 +182,9 @@ def run_extract_job(
 ) -> dict:
     """Run (or resume) the extraction job.
 
-    Returns a summary dict: {run_id, n_docs, n_failures, buckets_done,
-    buckets_skipped, docs_per_sec}.
+    Returns a summary dict: {run_id, n_docs, n_failures, buckets_skipped,
+    elapsed_sec, docs_per_sec}. Needs a classic session: the lineage
+    counters travel in an accumulator, which Spark Connect lacks.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = completed_buckets(spark, checkpoint_path, run_id, checkpoint_table)
@@ -191,41 +214,26 @@ def run_extract_job(
     ).drop("bucket")
 
     t0 = time.time()
-    # Every output row is stamped with its producing run_id — per-row
-    # lineage that also makes the metrics read below EXACT (stale partitions
-    # left in a reused output dir by an earlier run can never be attributed
-    # to this run, even for buckets this run's input does not cover).
+    # Every output row is stamped with its producing run_id (per-row
+    # lineage). The counters come only from this call's tasks, so stale
+    # partitions left in a reused output dir by an earlier run are never
+    # attributed to this run.
     # shuffle=True (not auto): this path WRITES partitionBy(bucket), and
     # the rebalance on bucket puts each bucket in one shuffle partition,
     # so the write emits one file per bucket (more only where AQE splits
     # an oversized bucket) — without it every task would emit a file into
     # every bucket directory (the small-files trap, guide §6). The
     # auto-skip is for noop/analysis consumers, not the partitioned sink.
-    extracted = extract_pages(todo, cfg, n_partitions, shuffle=True).withColumn(
-        "run_id", F.lit(run_id)
-    )
+    acc = spark.sparkContext.accumulator({}, PartitionCounts())
+    extracted = extract_pages(
+        todo, cfg, n_partitions, shuffle=True, metrics=acc
+    ).withColumn("run_id", F.lit(run_id))
     write_extracted(extracted, output_path, output_table)
     elapsed = time.time() - t0
 
-    # Lineage/metrics from durable output — but NEVER a full-table pass:
-    # bucket ∈ candidates prunes to this run's partitions (done buckets
-    # were skipped; untouched buckets can't hold our run_id), run_id == ours
-    # excludes stale rows, and the groupBy reads 4 narrow int columns
-    # (column pruning: the heavy `text` column is never scanned).
-    candidates = [b for b in range(cfg.n_buckets) if b not in done_set]
-    out = (
-        spark.read.table(output_table)
-        if output_table is not None
-        else spark.read.parquet(output_path)
-    )
-    this_run = out.filter(
-        F.col("bucket").isin(candidates) & (F.col("run_id") == run_id)
-    )
-    # One scan: at most n_buckets rows come back, and the totals and the
-    # lineage rows are both built from them on the driver.
-    metrics = extraction_metrics(this_run).collect()
-    docs = sum(r["n_docs"] for r in metrics)
-    fails = sum(r["n_failures"] for r in metrics)
+    totals = sorted(bucket_totals(acc.value).items())
+    docs = sum(c[0] for _, c in totals)
+    fails = sum(c[1] for _, c in totals)
     docs_per_sec = docs / elapsed if elapsed > 0 else 0.0
     finished_at = datetime.now(timezone.utc)
     started_at = finished_at - timedelta(seconds=elapsed)
@@ -234,10 +242,11 @@ def run_extract_job(
     cp_rows = spark.createDataFrame(
         pa.Table.from_pylist(
             [
-                dict(r.asDict(), run_id=run_id, docs_per_sec=docs_per_sec,
-                     started_at=started_at, finished_at=finished_at,
-                     status="success")
-                for r in metrics
+                dict(run_id=run_id, bucket=b, n_docs=n, n_failures=f,
+                     blocks_kept=kept, blocks_dropped=dropped,
+                     docs_per_sec=docs_per_sec, started_at=started_at,
+                     finished_at=finished_at, status="success")
+                for b, (n, f, kept, dropped) in totals
             ],
             schema=to_arrow_schema(CHECKPOINT_SCHEMA),
         ),
@@ -271,7 +280,7 @@ def run_extract_job_grouped(
     sequential sub-jobs, each committing its own output partitions and
     lineage rows. A crash in group k preserves groups 0..k-1 durably —
     at 10^12-doc scale this bounds re-work to one group instead of the
-    whole run. Resume semantics are unchanged (same run_id anti-join);
+    whole run. Resume semantics are unchanged (same run_id resume filter);
     the reference analog is the per-instance heartbeat cadence
     (layout_status.py:100-102) turned into commit cadence.
     """

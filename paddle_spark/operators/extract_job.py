@@ -30,6 +30,7 @@ import os
 from dataclasses import replace
 
 import pandas as pd
+from pyspark import Accumulator, AccumulatorParam, TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,10 +61,49 @@ EXTRACTED_SCHEMA = T.StructType(
 )
 
 
-def make_extract_batch(cfg: ExtractConfig):
+class PartitionCounts(AccumulatorParam):
+    """Accumulator of per-task extraction counters:
+    ``{partition_id: {bucket: [n_docs, n_failures, blocks_kept,
+    blocks_dropped]}}``.
+
+    Merging REPLACES a repeated partition id instead of adding to it. A
+    failed attempt reports nothing, and a recomputed or speculative
+    attempt of a partition reports the same rows (the bucket rebalance
+    reproduces each partition exactly), so its entry overwrites an
+    identical one and the counts stay exact under retries. The
+    reference's analog is one heartbeat file per serving instance,
+    rewritten in place (layout_status.py:61-86)."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
+
+
+def bucket_totals(parts: dict) -> dict:
+    """Sum a ``PartitionCounts`` value over partitions: ``{bucket:
+    [n_docs, n_failures, blocks_kept, blocks_dropped]}`` (one bucket may
+    span several partitions when AQE splits it)."""
+    totals: dict = {}
+    for counts in parts.values():
+        for b, c in counts.items():
+            t = totals.setdefault(b, [0, 0, 0, 0])
+            for j, v in enumerate(c):
+                t[j] += v
+    return totals
+
+
+def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
     """Build the mapInPandas body with `cfg` captured by closure (the
     analog of the per-request kwargs dict, model.py:400-431 — but constant
-    per job, shipped once in the serialized closure)."""
+    per job, shipped once in the serialized closure).
+
+    With a ``PartitionCounts`` accumulator as ``metrics``, the body tallies
+    the ``extraction_metrics`` counters per bucket as it goes and, after
+    the task's last batch, reports them once under the task's partition
+    id."""
 
     # Resolve the pixel decoder once, at plan construction (same contract
     # as operators/scanned.py), not per row on the executors.
@@ -74,6 +114,7 @@ def make_extract_batch(cfg: ExtractConfig):
         pixel_decode = decoder_for("auto")
 
     def extract_batch(batches):
+        counts = None if metrics is None else {}
         for pdf in batches:
             if cfg.fail_batch_marker and pdf["url"].str.contains(
                 cfg.fail_batch_marker, regex=False
@@ -108,16 +149,24 @@ def make_extract_batch(cfg: ExtractConfig):
                     out["text_sha256"][i] = sha256_text(wet[i])
                     out["parse_ok"][i] = True
                     out["branch"][i] = "wet"
-                    continue
-                r = extract_document(payloads[i], cfg, pixel_decode)
-                out["text"][i] = r.text
-                out["text_sha256"][i] = r.text_sha256
-                out["n_blocks_kept"][i] = r.n_blocks_kept
-                out["n_blocks_dropped"][i] = r.n_blocks_dropped
-                out["parse_ok"][i] = r.parse_ok
-                out["branch"][i] = r.branch
-                out["error"][i] = r.error or None
+                else:
+                    r = extract_document(payloads[i], cfg, pixel_decode)
+                    out["text"][i] = r.text
+                    out["text_sha256"][i] = r.text_sha256
+                    out["n_blocks_kept"][i] = r.n_blocks_kept
+                    out["n_blocks_dropped"][i] = r.n_blocks_dropped
+                    out["parse_ok"][i] = r.parse_ok
+                    out["branch"][i] = r.branch
+                    out["error"][i] = r.error or None
+                if counts is not None:
+                    c = counts.setdefault(int(out["bucket"][i]), [0, 0, 0, 0])
+                    c[0] += 1
+                    c[1] += not out["parse_ok"][i]
+                    c[2] += out["n_blocks_kept"][i]
+                    c[3] += out["n_blocks_dropped"][i]
             yield pd.DataFrame(out)
+        if counts is not None:
+            metrics.add({TaskContext.get().partitionId(): counts})
 
     return extract_batch
 
@@ -203,8 +252,13 @@ def extract_pages(
     cfg: ExtractConfig = DEFAULT_CONFIG,
     n_partitions: int | None = None,
     shuffle: bool | None = None,
+    metrics: Accumulator | None = None,
 ) -> DataFrame:
     """Declare the extraction plan over a `pages` DataFrame.
+
+    ``metrics``, a ``PartitionCounts`` accumulator, receives the per-bucket
+    counters of every task that runs the plan (see ``make_extract_batch``);
+    accumulators need a classic session, Spark Connect has none.
 
     ``shuffle`` controls the rebalance on ``bucket`` ahead of the kernel
     stage: ``True`` forces it (skew defense for inputs clustered by
@@ -257,13 +311,14 @@ def extract_pages(
         shuffle = _needs_fanout_shuffle(pages, n_partitions or cfg.n_buckets)
     if shuffle:
         src = src.hint("rebalance", *([n_partitions] if n_partitions else []), "bucket")
-    return src.mapInPandas(make_extract_batch(cfg), schema=EXTRACTED_SCHEMA)
+    return src.mapInPandas(make_extract_batch(cfg, metrics), schema=EXTRACTED_SCHEMA)
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
     """Per-bucket extraction metrics (A3/A4 analog: the reference's
     instance-status aggregation, status_server.py:56-123, re-expressed as a
-    groupBy over lineage buckets)."""
+    groupBy over lineage buckets). ``run_extract_job`` takes the same
+    counters from ``PartitionCounts``; this groupBy is their test oracle."""
     return extracted.groupBy("bucket").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).cast("long").alias("n_failures"),

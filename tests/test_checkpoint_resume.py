@@ -6,6 +6,11 @@ must (a) skip completed buckets, (b) produce exactly-once output per url,
 (c) leave lineage rows for every bucket.
 """
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,13 +21,32 @@ from paddle_spark.operators.checkpoint import (
     read_checkpoint,
     run_extract_job,
 )
+from paddle_spark.operators.extract_job import (
+    PartitionCounts,
+    bucket_totals,
+    extract_pages,
+    extraction_metrics,
+)
 
 CFG = ExtractConfig(n_buckets=8)
+COUNTERS = ["bucket", "n_docs", "n_failures", "blocks_kept", "blocks_dropped"]
 
 
 @pytest.fixture()
 def paths(tmp_path):
     return str(tmp_path / "extracted"), str(tmp_path / "checkpoint")
+
+
+def assert_lineage_is_oracle(spark, out_path, cp_path, run_id):
+    """Every lineage row of ``run_id`` equals ``extraction_metrics`` over
+    the output rows stamped with ``run_id``, per bucket and counter."""
+    lineage = (
+        read_checkpoint(spark, cp_path).filter(F.col("run_id") == run_id)
+        .select(*COUNTERS).collect()
+    )
+    written = spark.read.parquet(out_path).filter(F.col("run_id") == run_id)
+    oracle = extraction_metrics(written).select(*COUNTERS).collect()
+    assert sorted(map(tuple, lineage)) == sorted(map(tuple, oracle))
 
 
 def test_full_run_writes_lineage(spark, tiny_pages, paths):
@@ -37,6 +61,7 @@ def test_full_run_writes_lineage(spark, tiny_pages, paths):
     assert all(r["status"] == "success" for r in rows)
     assert sum(r["n_docs"] for r in rows) == summary["n_docs"]
     assert all(r["docs_per_sec"] > 0 for r in rows)
+    assert_lineage_is_oracle(spark, out_path, cp_path, "r1")
 
 
 def test_resume_skips_done_buckets_exactly_once(spark, tiny_pages, paths):
@@ -69,6 +94,7 @@ def test_resume_skips_done_buckets_exactly_once(spark, tiny_pages, paths):
     per_bucket = cp.groupBy("bucket").count().collect()
     assert {r["bucket"] for r in per_bucket} == set(range(CFG.n_buckets))
     assert all(r["count"] == 1 for r in per_bucket)
+    assert_lineage_is_oracle(spark, out_path, cp_path, "r2")
 
 
 def test_crash_then_resume_exactly_once(spark, tiny_pages, paths):
@@ -185,32 +211,152 @@ def test_reused_output_dir_never_attributes_stale_data(spark, tiny_pages, paths)
     assert per_run["new"] == n_subset
 
 
-def test_metrics_read_is_partition_pruned(spark, tiny_pages, paths):
-    """The lineage/metrics read must touch only this run's bucket
-    partitions — never a full-table scan of the output dir (round-1
-    verdict item #6)."""
+def _jobs_started(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_starts_three_jobs(spark, tiny_pages, paths):
+    """The lineage counters come from the extraction tasks: a fresh run is
+    the rebalance map stage, the write and the checkpoint append — no read
+    of its own output — and a missing checkpoint is answered without a
+    job."""
     out_path, cp_path = paths
-    # pre-existing durable lineage for buckets 0-5 under the same run_id
-    half = tiny_pages.withColumn(
-        "b", url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
-    ).filter(F.col("b") < 6).drop("b")
-    run_extract_job(spark, half, out_path, cp_path, run_id="r9", cfg=CFG,
-                    n_partitions=4)
-    # resume: only buckets 6,7 remain
-    run_extract_job(spark, tiny_pages, out_path, cp_path, run_id="r9",
-                    cfg=CFG, n_partitions=4)
-    # replicate the metrics read the job performs and check that the scan
-    # (a) partition-prunes on bucket and (b) never reads the heavy text col
-    out = spark.read.parquet(out_path)
-    pruned = out.filter(
-        F.col("bucket").isin([6, 7]) & (F.col("run_id") == "r9")
-    ).groupBy("bucket").count()
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan.split(
-        "PartitionFilters", 1
-    )[1][:200], plan
-    scan = plan.split("ReadSchema", 1)[1][:300]
-    assert "text" not in scan, scan
+    assert _jobs_started(
+        spark, "cp_probe",
+        lambda: completed_buckets(spark, cp_path, "j1").collect(),
+    ) == 0
+    assert _jobs_started(
+        spark, "cp_probe_table",
+        lambda: completed_buckets(spark, None, "j1", "ps_missing_cp").collect(),
+    ) == 0
+    assert _jobs_started(
+        spark, "fresh_run",
+        lambda: run_extract_job(spark, tiny_pages, out_path, cp_path,
+                                run_id="j1", cfg=CFG),
+    ) == 3
+    assert _jobs_started(
+        spark, "same_run_id",
+        lambda: run_extract_job(spark, tiny_pages, out_path, cp_path,
+                                run_id="j1", cfg=CFG),
+    ) == 2
+
+
+def test_partition_counts_replace_repeated_partition(spark, tiny_pages):
+    """A repeated partition id (a recomputed or speculative attempt)
+    replaces its entry; distinct partitions of one bucket add up. Running
+    the same plan twice into one accumulator recomputes every partition
+    and still counts each document once."""
+    param = PartitionCounts()
+    acc = param.zero({})
+    acc = param.addInPlace(acc, {0: {3: [5, 1, 10, 2]}})
+    acc = param.addInPlace(acc, {1: {3: [2, 0, 4, 1], 4: [1, 1, 0, 0]}})
+    acc = param.addInPlace(acc, {0: {3: [5, 1, 10, 2]}})
+    assert acc == {0: {3: [5, 1, 10, 2]}, 1: {3: [2, 0, 4, 1], 4: [1, 1, 0, 0]}}
+    assert bucket_totals(acc) == {3: [7, 1, 14, 3], 4: [1, 1, 0, 0]}
+
+    acc = spark.sparkContext.accumulator({}, PartitionCounts())
+    extracted = extract_pages(tiny_pages, CFG, shuffle=True, metrics=acc)
+    for _ in range(2):
+        extracted.write.format("noop").mode("overwrite").save()
+    counted = sorted((b, *c) for b, c in bucket_totals(acc.value).items())
+    oracle = extraction_metrics(extracted).select(*COUNTERS).collect()
+    assert counted == sorted(map(tuple, oracle))
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F, types as T
+
+from paddle_spark.config import ExtractConfig
+from paddle_spark.operators import checkpoint, extract_job
+from paddle_spark.sources.synth import gen_pages_pdf
+
+tmp, n_rows = sys.argv[1], int(sys.argv[2])
+marker = os.path.join(tmp, "attempt0_failed")
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    .getOrCreate()
+)
+make = extract_job.make_extract_batch
+
+
+def flaky_make_extract_batch(cfg, metrics=None):
+    body = make(cfg, metrics)
+
+    def run(batches):
+        ctx = TaskContext.get()
+        for k, batch in enumerate(body(batches)):
+            yield batch
+            if k == 1 and ctx.attemptNumber() == 0 and ctx.partitionId() == 0:
+                open(marker, "w").close()
+                raise RuntimeError("injected failure after two batches")
+
+    return run
+
+
+extract_job.make_extract_batch = flaky_make_extract_batch
+schema = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("html", T.BinaryType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+])
+pages = spark.createDataFrame(gen_pages_pdf(n_rows, seed=42), schema=schema)
+out, cp = os.path.join(tmp, "out"), os.path.join(tmp, "cp")
+summary = checkpoint.run_extract_job(
+    spark, pages, out, cp, run_id="retry", cfg=ExtractConfig(n_buckets=8)
+)
+cols = ["bucket", "n_docs", "n_failures", "blocks_kept", "blocks_dropped"]
+lineage = checkpoint.read_checkpoint(spark, cp).select(*cols).collect()
+written = spark.read.parquet(out)
+oracle = extract_job.extraction_metrics(written).select(*cols).collect()
+urls = [r["url"] for r in written.select("url").collect()]
+print(json.dumps({
+    "failed_once": os.path.exists(marker),
+    "summary_docs": summary["n_docs"],
+    "lineage": sorted(map(list, lineage)),
+    "oracle": sorted(map(list, oracle)),
+    "n_urls": len(urls),
+    "n_distinct_urls": len(set(urls)),
+}))
+spark.stop()
+"""
+
+
+def test_retried_task_counts_once(tmp_path):
+    """Attempt 0 of partition 0 fails after two Arrow batches; its retry
+    reports the partition's counters once, so the lineage still equals the
+    output oracle and the summary equals N. Runs in its own local[2,2]
+    session (two task attempts) with 16-row batches."""
+    n_rows = 200
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p
+    )
+    env.setdefault("PYSPARK_PYTHON", sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path), str(n_rows)],
+        env=env, cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert res["failed_once"]
+    assert res["lineage"] == res["oracle"]
+    assert res["summary_docs"] == n_rows
+    assert res["n_urls"] == res["n_distinct_urls"] == n_rows
 
 
 def test_table_write_branch(spark, tiny_pages, tmp_path):
@@ -348,5 +494,7 @@ def test_rebalance_split_keeps_output(spark, tiny_pages, tmp_path):
     assert len(files) == CFG.n_buckets
     assert sum(files.values()) > CFG.n_buckets, files
     assert sorted(spark.read.parquet(out_path).select(*cols).collect()) == base
+    # a split bucket's counters arrive under several partition ids
+    assert_lineage_is_oracle(spark, out_path, cp_path, "s1")
     assert again["n_docs"] == 0
     assert again["buckets_skipped"] == CFG.n_buckets
