@@ -120,7 +120,6 @@ def run_level(
         "--conf", "spark.executor.memory=5g",
         "--conf", "spark.driver.memory=8g",
         "--conf", f"spark.sql.shuffle.partitions={cores_total}",
-        "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=2048",
         "--conf", f"spark.pyspark.python={sys.executable}",
         "--py-files", zp,
         os.path.join(REPO, "BENCH", "cluster_child.py"),

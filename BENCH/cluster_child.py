@@ -2,7 +2,7 @@
 
 Runs the SAME extraction job bench_scaling.py times at local[K], but on a
 real standalone cluster (spark://...): separate executor JVMs, real netty
-shuffle between them for the salted repartition, python workers forked per
+shuffle between them for the bucket rebalance, python workers forked per
 executor. The orchestrator (bench_cluster.py) submits this at two cluster
 sizes (N and 4N executors, fixed executor.cores) — the literal north-rule
 shape.
@@ -33,7 +33,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from pyspark.sql import SparkSession
+from paddle_spark.plans import build_session
 
 
 def executor_backends(app_id: str) -> list[str]:
@@ -56,7 +56,7 @@ def main() -> None:
     ap.add_argument("--repeat", type=int, default=2)
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("cluster_scaling").getOrCreate()
+    spark = build_session("paddle_spark_cluster_scaling")
     sc = spark.sparkContext
     cores_total = int(sc.getConf().get("spark.cores.max"))
 

@@ -4,6 +4,9 @@
         --gen 20000 --output /tmp/curated --langs en --min-quality 0.3
 
 Prints one JSON line with the funnel counts.
+
+Session: plans.session.build_session sets the engine keys; the launcher
+owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
 """
 
 from __future__ import annotations
@@ -37,20 +40,11 @@ def main(argv: list[str] | None = None) -> int:
     if not args.gen and not args.input:
         ap.error("one of --input / --gen is required")
 
-    from pyspark.sql import SparkSession
-
     from paddle_spark.operators.curate import curate
+    from paddle_spark.plans import build_session
     from paddle_spark.sources.synth import gen_pages_spark
 
-    spark = (
-        SparkSession.builder.appName("paddle_spark_curate")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session("paddle_spark_curate")
 
     if args.gen:
         n_parts = args.n_partitions or spark.sparkContext.defaultParallelism

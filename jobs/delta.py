@@ -9,6 +9,9 @@ The previous output table's ``payload_xxh`` column is the change index
 (operators/delta.py); unchanged pages carry their rows forward verbatim
 (byte-identity by construction), changed/new pages run the kernels.
 Prints one JSON summary line with the work-saved fraction.
+
+Session: plans.session.build_session sets the engine keys; the launcher
+owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
 """
 
 from __future__ import annotations
@@ -67,17 +70,10 @@ def main(argv: list[str] | None = None) -> int:
 
     from paddle_spark.config import ExtractConfig
     from paddle_spark.operators.delta import delta_extract, delta_stats
+    from paddle_spark.plans import build_session
 
     preexisting = SparkSession.getActiveSession() is not None
-    spark = (
-        SparkSession.builder.appName("paddle_spark_delta")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session("paddle_spark_delta")
 
     pages_new = spark.read.parquet(args.input_new)
     prev = spark.read.parquet(args.prev)

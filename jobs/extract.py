@@ -25,6 +25,9 @@ overwrite).
 The lineage counters are reported by the extraction tasks through an
 accumulator, so the job needs a classic session (spark-submit gives one);
 Spark Connect has no accumulators.
+
+Session: plans.session.build_session sets the engine keys; the launcher
+owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
 """
 
 from __future__ import annotations
@@ -88,25 +91,15 @@ def main(argv: list[str] | None = None) -> int:
     if not args.checkpoint and not args.checkpoint_table:
         ap.error("one of --checkpoint / --checkpoint-table is required")
 
-    from pyspark.sql import SparkSession
-
     from paddle_spark.config import ExtractConfig
     from paddle_spark.operators.checkpoint import (
         run_extract_job,
         run_extract_job_grouped,
     )
+    from paddle_spark.plans import build_session
     from paddle_spark.sources.synth import gen_pages_spark
 
-    # spark-submit owns master/memory; default only if launched bare.
-    spark = (
-        SparkSession.builder.appName("paddle_spark_extract")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session("paddle_spark_extract")
 
     cfg = ExtractConfig(
         n_buckets=args.n_buckets,

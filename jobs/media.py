@@ -15,6 +15,9 @@ pipelines: no pixel decode at all).
 
 Prints one JSON line: {"n_media", "n_decoded", "decode_rate",
 "by_kind": {...}, "elapsed_sec", "imgs_per_sec"}.
+
+Session: plans.session.build_session sets the engine keys; the launcher
+owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
 """
 
 from __future__ import annotations
@@ -46,21 +49,15 @@ def main(argv: list[str] | None = None) -> int:
     if not args.gen and not args.input:
         ap.error("one of --input / --gen is required")
 
-    from pyspark.sql import SparkSession, functions as F
-
-    spark = (
-        SparkSession.builder.appName("paddle_spark_media")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    from pyspark.sql import functions as F
 
     from paddle_spark.operators.multimodal import (
         binary_meta, pixel_stats, visual_features,
     )
+    from paddle_spark.plans import build_session
     from paddle_spark.sources.synth import gen_media_spark
+
+    spark = build_session("paddle_spark_media")
 
     n_parts = args.n_partitions or spark.sparkContext.defaultParallelism
     if args.gen:

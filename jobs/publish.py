@@ -18,6 +18,9 @@ Launch (cluster):
 Both sinks are embarrassingly parallel: the WET write is map-only (one
 archive per input partition), the CDX write's only shuffle is the range
 exchange that gives the index its total order.
+
+Session: plans.session.build_session sets the engine keys; the launcher
+owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cdx-shards", type=int, default=16)
     ap.add_argument("--wet-partitions", type=int, default=None,
                     help="repartition before the WET write (archive count)")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args(argv)
     if not args.wet_dir and not args.cdx_dir:
         ap.error("nothing to do: pass --wet-dir and/or --cdx-dir")
@@ -50,16 +52,10 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from paddle_spark.operators.export import cdx_index, export_wet, write_cdx
+    from paddle_spark.plans import build_session
 
     preexisting = SparkSession.getActiveSession() is not None
-    spark = (
-        SparkSession.builder.appName("paddle_spark_publish")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .getOrCreate()
-    )
+    spark = build_session("paddle_spark_publish")
     import time
     t0 = time.time()
     extracted = spark.read.parquet(args.input)

@@ -1,11 +1,16 @@
-"""SparkSession builder with the engine's scale-oriented defaults.
-
-Local mode is the sandbox; the same conf block is what we'd pass to
-``spark-submit`` on a real cluster (minus master/driver-memory, which the
-cluster manager owns). Iceberg catalog config is attached only when the
-runtime has the Iceberg Spark runtime jar (import-gated — not present in
-this sandbox, where tables fall back to parquet directories with the same
-layout; see paddle_spark.operators.checkpoint).
+"""SparkSession builder: the one place a session is built (jobs, benchmarks,
+tests). The code sets the engine keys in every session (``_ENGINE_CONF``: UTC,
+AQE with coalescing and the skew-join split, Arrow with 2048-row batches,
+snappy) and the WARN log level. The launcher owns master, driver memory,
+UI and the sizing keys ``spark.sql.shuffle.partitions`` and
+``spark.sql.files.minPartitionNum``: ``build_session(app)`` sets none of
+them, so ``spark-submit --conf`` decides, else Spark's defaults hold
+(``local[*]`` when launched bare, 200 shuffle partitions, no scan floor).
+As ``getOrCreate`` applies builder keys to an existing session, this also
+keeps a job run inside a caller's session (the tests) from resizing it.
+``cores=K`` is the local sandbox the benchmarks and tests measure through:
+it adds ``local[K]``, UI off, ``SPARK_DRIVER_MEM`` (default 16g) and both
+sizing keys at K (shuffle partitions at ``shuffle_partitions`` if given).
 """
 
 from __future__ import annotations
@@ -14,6 +19,24 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+_ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Arrow batch size is the analog of the reference's max_batch_size
+    # (config_gpu_paddlex.pbtxt:2). Measured on the bench corpus
+    # (~4 KB docs): 512-row batches leave workers starved on IPC
+    # (11.4k docs/s at 32 cores); 2048 reaches 17.6k and 8192 adds
+    # nothing — 2048 rows ≈ 8 MB/batch is the knee.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # snappy decodes ~40% faster than zstd on this payload mix and the
+    # corpus is scan-dominated; at 100 TB you'd pick per-table (zstd for
+    # cold archival, snappy/lz4 for hot extraction inputs).
+    "spark.sql.parquet.compression.codec": "snappy",
+}
+
 
 def build_session(
     app_name: str = "paddle_spark",
@@ -21,18 +44,12 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build a local session sized to the sandbox.
-
-    ``cores=None`` uses ``local[*]``. On a real cluster, drop the
-    ``master`` call and submit with ``spark-submit --py-files``.
-    """
-    # Make paddle_spark importable in the python WORKERS regardless of
-    # the driver's cwd: local-mode workers inherit PYTHONPATH from the
-    # driver process (they do not inherit sys.path edits), so a driver
-    # started outside the repo would otherwise fail every mapInPandas
-    # stage with ModuleNotFoundError. Must run before the JVM gateway
-    # launches; on clusters --py-files owns distribution and a
-    # nonexistent path entry is harmless.
+    """Engine keys always; with ``cores=K`` also the local deployment and
+    sizing (module docstring). ``extra_conf`` is applied last and wins."""
+    # Local-mode python workers inherit PYTHONPATH (not sys.path edits)
+    # from the driver: put the repo root on it before the JVM launches, so
+    # a driver started outside the repo can import paddle_spark in its
+    # workers. On clusters --py-files distributes the package.
     repo_root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
@@ -42,48 +59,25 @@ def build_session(
             repo_root + (os.pathsep + existing if existing else "")
         )
 
-    if cores is None:
-        master = "local[*]"
-        n = os.cpu_count() or 8
-    else:
-        master = f"local[{cores}]"
-        n = cores
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        # shuffle partitions ~ cores in local mode; AQE coalesces further
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size is the analog of the reference's max_batch_size
-        # (config_gpu_paddlex.pbtxt:2). Measured on the bench corpus
-        # (~4 KB docs): 512-row batches leave workers starved on IPC
-        # (11.4k docs/s at 32 cores); 2048 reaches 17.6k and 8192 adds
-        # nothing — 2048 rows ≈ 8 MB/batch is the knee.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # snappy decodes ~40% faster than zstd on this payload mix and the
-        # corpus is scan-dominated; at 100 TB you'd pick per-table (zstd for
-        # cold archival, snappy/lz4 for hot extraction inputs).
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        # Scan-parallelism floor (guide §6 / §2.4): Spark caps the split
-        # size at totalBytes/minPartitionNum, so a multi-row-group file
-        # scans in parallel WITHOUT a repartition shuffle. Scale-adaptive
-        # by construction — at real scale maxPartitionBytes dominates and
-        # this floor is a no-op; on single-file fixtures it is what lets
-        # query plans drop their round-robin fan-out exchange.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITIONS", str(n)),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    builder = SparkSession.builder.appName(app_name)
+    conf = dict(_ENGINE_CONF)
+    if cores is not None:
+        builder = builder.master(f"local[{cores}]")
+        conf.update({
+            # shuffle partitions ~ cores in local mode; AQE coalesces further
+            "spark.sql.shuffle.partitions": str(shuffle_partitions or cores),
+            # Scan-parallelism floor (guide §6 / §2.4): Spark caps the split
+            # size at totalBytes/minPartitionNum, so a multi-row-group file
+            # scans in parallel WITHOUT a repartition shuffle. Scale-adaptive
+            # by construction — at real scale maxPartitionBytes dominates and
+            # this floor is a no-op; on single-file fixtures it is what lets
+            # query plans drop their round-robin fan-out exchange.
+            "spark.sql.files.minPartitionNum": str(cores),
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "16g"),
+        })
+    conf.update(extra_conf or {})
+    spark = builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

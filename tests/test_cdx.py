@@ -165,7 +165,7 @@ class TestPublishJob:
         wet, cdx = str(tmp_path / "wet"), str(tmp_path / "cdx")
         assert main([
             "--input", src, "--wet-dir", wet, "--cdx-dir", cdx,
-            "--cdx-shards", "4", "--cpus", "4",
+            "--cdx-shards", "4",
         ]) == 0
 
         back = read_warc_pages(spark, wet + "/*.warc.wet.gz")

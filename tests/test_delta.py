@@ -96,6 +96,8 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path):
     assert rc == 0
     got = spark.read.parquet(out)
     assert got.count() == 10  # no stale rows from the first run
+    # the job's build_session left the shared session's sizing alone
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     # output == prev is refused
     with pytest.raises(SystemExit):
         job.main(["--input-new", str(tmp_path / "snap2"),
