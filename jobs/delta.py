@@ -32,14 +32,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--prev", required=True, help="previous extracted output dir")
     ap.add_argument("--output", required=True, help="merged extracted output dir")
     ap.add_argument("--n-partitions", type=int, default=None,
-                    help="initial partition count of the changed rows' "
-                         "bucket rebalance, which AQE then coalesces or "
-                         "splits (default: spark.sql.shuffle.partitions)")
+                    help="initial partition count of the merged output's "
+                         "bucket rebalance (carried and changed rows), which "
+                         "AQE then coalesces or splits (default: "
+                         "spark.sql.shuffle.partitions)")
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="lineage buckets, as --prev was extracted with; "
-                         "also the most tasks the extraction of changed "
-                         "rows runs until a bucket outgrows the AQE "
-                         "advisory partition size")
+                         "also the most tasks the merged output's write "
+                         "runs until a bucket outgrows the AQE advisory "
+                         "partition size")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument(
         "--wet", dest="wet", action="store_true", default=None,

@@ -11,9 +11,14 @@ an anti-join on the input-payload hash:
 ``payload_xxh`` (xxhash64 of the raw payload, computed JVM-side by
 extract_job.payload_key_col) is stored in every extracted row, so the
 previous output table IS the change-detection index — no extra state.
-Both joins are hash equi-joins on (url, payload_xxh); with both tables
-bucketed by the salted url hash they co-partition and the shuffle is
-one-sided.
+Both joins are equi-joins on (url, payload_xxh) against the other side's
+deduplicated keys: the planner broadcasts that key side while it is
+under the broadcast threshold, and beyond it sort-merges with both sides
+hash-shuffled on (url, payload_xxh). Either way the deduplication
+hash-shuffles each side on that key; the ``bucket=`` directories of the
+previous output co-partition nothing. Carried and fresh rows then meet in
+one rebalance on ``bucket``, so the ``partitionBy("bucket")`` sink writes
+one file per bucket, as a fresh run does.
 
 Byte-identity guarantee: carried rows were produced by the same kernels
 from the same bytes, so the merged output equals a full re-extraction
@@ -23,6 +28,7 @@ row-for-row (pinned by test_delta).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
 from paddle_spark.operators.extract_job import extract_pages, payload_key_col
@@ -52,7 +58,11 @@ def delta_extract(
     WET snapshots: pass ``cfg`` with ``wet_passthrough=True`` (the same
     cfg the previous output was extracted with) — the change key then
     mirrors the WET lineage hash, so unchanged conversion rows carry
-    forward instead of re-extracting every run."""
+    forward instead of re-extracting every run.
+
+    ``n_partitions`` is the initial width of the merged output's bucket
+    rebalance (default ``spark.sql.shuffle.partitions``), which AQE then
+    coalesces or splits."""
     new_keyed = pages_new.withColumn(
         "payload_xxh", payload_key_col(pages_new, cfg.wet_passthrough)
     ).dropDuplicates(_KEY)
@@ -66,26 +76,36 @@ def delta_extract(
     )
     # changed/new: snapshot rows with no matching previous output
     todo = new_keyed.join(prev.select(*_KEY), _KEY, "left_anti")
-    # shuffle=True: delta outputs feed the same partitionBy(bucket) sink
-    # as full runs — the rebalance gives the fresh rows one file per
-    # bucket (see checkpoint.py); carried rows keep the semi-join's
-    # partitioning
-    fresh = extract_pages(todo.drop("payload_xxh"), cfg, n_partitions, shuffle=True)
-    return carried.unionByName(fresh)
+    # shuffle=False: the snapshot's dedup exchange on (url, payload_xxh)
+    # has already spread host skew, so the kernels run in its partitions
+    fresh = extract_pages(todo.drop("payload_xxh"), cfg, shuffle=False)
+    # one rebalance on bucket above the union, for the partitionBy(bucket)
+    # sink: each bucket lands in one shuffle partition, so carried and
+    # fresh rows together write one file per bucket as a fresh run does
+    # (AQE sizes it and splits oversized buckets, as in extract_pages)
+    return carried.unionByName(fresh).hint(
+        "rebalance", *([n_partitions] if n_partitions else []), "bucket"
+    )
 
 
 def delta_stats(
     pages_new: DataFrame, extracted_prev: DataFrame, wet: bool = False
 ) -> dict:
-    """Driver-side summary of how much work a delta run saves (counts only
-    — three cheap aggregates, no extraction). ``wet`` must match the
+    """Driver-side summary of how much work a delta run saves (counts only,
+    no extraction): one aggregate over the snapshot keys left-joined to the
+    previous output's keys, which carry a marker — ``count(*)`` is the
+    snapshot, ``count(in_prev)`` the unchanged keys. ``wet`` must match the
     cfg.wet_passthrough the extraction runs with (key parity)."""
     new_keyed = pages_new.select(
         "url", payload_key_col(pages_new, wet).alias("payload_xxh")
     ).dropDuplicates(_KEY)
-    prev = extracted_prev.select(*_KEY).dropDuplicates(_KEY)
-    n_new = new_keyed.count()
-    n_unchanged = new_keyed.join(prev, _KEY, "left_semi").count()
+    prev = (
+        extracted_prev.select(*_KEY).dropDuplicates(_KEY)
+        .withColumn("in_prev", F.lit(True))
+    )
+    n_new, n_unchanged = new_keyed.join(prev, _KEY, "left").agg(
+        F.count(F.lit(1)), F.count("in_prev")
+    ).first()
     return {
         "snapshot_docs": n_new,
         "unchanged": n_unchanged,

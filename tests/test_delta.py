@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from paddle_spark.operators.delta import delta_extract, delta_stats
 from paddle_spark.operators.extract_job import extract_pages
 from paddle_spark.sources.synth import gen_pages_spark
+from tests.test_checkpoint_resume import _files_per_bucket, _jobs_started
 
 
 @pytest.fixture(scope="module")
@@ -54,6 +55,27 @@ def test_delta_stats_counts(spark, snapshots):
     assert 0.72 < s["work_saved_frac"] < 0.73
 
 
+def test_delta_stats_is_one_action(spark, snapshots):
+    """The snapshot and unchanged counts come from one aggregate over a
+    left join: 8 Spark jobs on this fixture, where two count() actions
+    took 14."""
+    v1, v2 = snapshots
+    prev = extract_pages(v1, n_partitions=4)
+    assert _jobs_started(spark, "delta_stats", lambda: delta_stats(v2, prev)) == 8
+
+
+def test_delta_write_is_one_file_per_bucket(spark, snapshots, tmp_path):
+    """One rebalance on bucket above the union of carried and fresh rows:
+    a partitionBy(bucket) write leaves one file in every bucket directory,
+    including buckets that hold both changed and unchanged urls."""
+    v1, v2 = snapshots
+    prev = extract_pages(v1, n_partitions=4).withColumn("run_id", F.lit("r1"))
+    out = str(tmp_path / "out")
+    delta_extract(v2, prev, n_partitions=4).write.partitionBy("bucket").parquet(out)
+    files = _files_per_bucket(out)
+    assert set(files.values()) == {1}, files
+
+
 def test_delta_duplicate_keys(spark, snapshots):
     """Crawls re-fetch pages: duplicate (url, payload_xxh) rows in either
     the snapshot or the previous output collapse to one — merged output
@@ -91,6 +113,7 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path):
     rc = job.main(["--input-new", str(tmp_path / "snap1" / "pages"),
                    "--prev", str(tmp_path / "prev"), "--output", out])
     assert rc == 0
+    assert set(_files_per_bucket(out).values()) == {1}
     rc = job.main(["--input-new", str(tmp_path / "snap2"),
                    "--prev", str(tmp_path / "prev"), "--output", out])
     assert rc == 0

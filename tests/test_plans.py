@@ -107,6 +107,25 @@ def test_extraction_plan_is_one_bucket_rebalance(spark, tiny_pages):
     assert "Exchange" not in plan_of(extract_pages(tiny_pages, shuffle=False))
 
 
+def test_delta_plan_is_one_bucket_rebalance_above_union(spark, tiny_pages):
+    """delta_extract ends in exactly one rebalance, hashed on bucket alone
+    and placed above the union of carried and fresh rows, so a recrawl
+    writes one file per bucket as a fresh run does."""
+    import re
+
+    from paddle_spark.operators.delta import delta_extract
+    from paddle_spark.operators.extract_job import extract_pages
+
+    prev = extract_pages(tiny_pages.limit(150), shuffle=False)
+    plan = plan_of(delta_extract(tiny_pages, prev))
+    rebalances = [ln for ln in plan.splitlines() if "REBALANCE_PARTITIONS_BY_COL" in ln]
+    assert len(rebalances) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(bucket#\d+, \d+\), ", rebalances[0]), plan
+    lines = plan.splitlines()
+    below = lines[lines.index(rebalances[0]) + 1]
+    assert below.strip().lstrip("+- ").startswith("Union"), plan
+
+
 def test_bucketed_tables_colocate_join_no_shuffle(spark, tmp_path):
     """The SCALE.md co-location claim, proven on a plan: two tables
     bucketed + sorted on the join key join WITHOUT any Exchange — the
