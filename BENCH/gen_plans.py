@@ -42,8 +42,8 @@ pages_p = spark.read.parquet(f"{tmp}/pages")
 
 section(
     "Extraction pipeline (pages -> extracted)",
-    extract_pages(pages_p, n_partitions=8),
-    "One shuffle (salted url-hash Exchange), then map-only mapInPandas;\n"
+    extract_pages(pages_p, n_partitions=8, shuffle=True),
+    "One rebalance on `bucket`, then map-only mapInPandas;\n"
     "ReadSchema excludes the unused `text` column.",
 )
 q = em.queries()
@@ -72,13 +72,13 @@ section("Language-ID + Gopher repetition signals (text_signals)",
         "equi-join is the only exchange.")
 section("Layout geometry chain with exact oracle (extract_layout_oracle)",
         q["extract_layout_oracle"](spark, SF),
-        "Scan (doc_id only) -> mapInPandas fixture synth -> one salted\n"
-        "Exchange -> mapInPandas extraction. Same two-stage shape as the\n"
-        "production pipeline.")
+        "Scan (doc_id only) -> the fixture fan-out Exchange (_t()) ->\n"
+        "mapInPandas fixture synth -> mapInPandas extraction; extract_pages\n"
+        "adds no shuffle of its own here (its default, shuffle=False).")
 section("Real-PDF parse chain with exact oracle (extract_real_pdf)",
         q["extract_real_pdf"](spark, SF),
         "Valid FlateDecode PDFs synthesized per doc_id -> the SAME\n"
-        "two-stage extraction plan as production; the whole PDF object\n"
+        "extraction stage as production; the whole PDF object\n"
         "scan/stream decode/operator replay runs inside the one\n"
         "mapInPandas stage — no extra shuffle vs the HTML branch.")
 section("Real pixel decode + channel stats (mm_pixel_stats)",

@@ -145,7 +145,7 @@ def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     from paddle_spark.operators.extract_job import extract_pages
 
     pages = _pages_from_documents(spark, sf_dir)
-    out = extract_pages(pages, n_partitions=8)
+    out = extract_pages(pages)
     return out.select(
         "url", "text", "text_sha256", "n_blocks_kept", "n_blocks_dropped",
         "parse_ok", "branch",
@@ -224,7 +224,7 @@ def q_extract_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").limit(50)
     pages = _pdf_pages(docs, "pdf", lambda i: make_pdf(_rng(42, i), i))
-    out = extract_pages(pages, n_partitions=4)
+    out = extract_pages(pages)
     return out.select(
         "url", "text_sha256", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
     )
@@ -245,7 +245,7 @@ def q_extract_layout_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < 100
     )
     pages = _pdf_pages(docs, "pdf-oracle", make_oracle_pdf)
-    out = extract_pages(pages, n_partitions=4)
+    out = extract_pages(pages)
     return out.select(
         "url", "text", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
     )
@@ -331,7 +331,7 @@ def q_extract_real_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pages = _pdf_pages(docs, "real-pdf", payload)
-    out = extract_pages(pages, n_partitions=4)
+    out = extract_pages(pages)
     return out.select(
         "url", "text", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
     )
@@ -361,7 +361,7 @@ def q_extract_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from paddle_spark.operators.blocks import extract_blocks
 
     pages = _pages_from_documents(spark, sf_dir)
-    return extract_blocks(pages, n_partitions=8).select(
+    return extract_blocks(pages).select(
         "url", "page_no", "block_id", "branch", "label", "text", "kept",
         "drop_reason",
     )
@@ -2616,7 +2616,7 @@ def q_extract_scanned_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "scanpdf",
         lambda i: make_scanned_pdf(i, "dct" if i % 2 else "flate"),
     )
-    return extract_pages(pages, n_partitions=8).select(
+    return extract_pages(pages).select(
         "url", "text", "n_blocks_kept", "n_blocks_dropped", "parse_ok", "branch"
     )
 

@@ -101,7 +101,9 @@ def main(argv: list[str] | None = None) -> int:
     # whose urls all disappeared would keep its stale files and the output
     # would no longer mirror the snapshot's url set.
     merged.write.mode("overwrite").partitionBy("bucket").parquet(args.output)
-    stats["written"] = spark.read.parquet(args.output).count()
+    # carried + fresh rows are exactly the snapshot's deduplicated
+    # (url, payload_xxh) keys, which delta_stats already counted
+    stats["written"] = stats["snapshot_docs"]
     print(json.dumps(stats))
     if not preexisting:  # don't tear down a caller-owned session (tests)
         spark.stop()

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-from paddle_spark.functions import url_bucket_col
 from paddle_spark.kernels.classify import KIND_HTML, KIND_PDF, classify_payload
 from paddle_spark.kernels.html import segment_blocks
 from paddle_spark.kernels.layout import pdf_pages, process_page
@@ -94,15 +93,11 @@ def document_blocks(url: str, payload: bytes, cfg: ExtractConfig) -> list[tuple]
 def extract_blocks(
     pages: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    n_partitions: int | None = None,
 ) -> DataFrame:
-    """Fan out documents into block rows (1 -> N, Arrow-batched)."""
-    n_parts = n_partitions or cfg.n_buckets
-    src = pages.select(
-        "url",
-        "html",
-        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt).alias("bucket"),
-    ).repartition(n_parts, "bucket", "url")
+    """Fan out documents into block rows (1 -> N, Arrow-batched). The plan
+    is map-only; a caller that wants fan-out repartitions before the
+    call."""
+    src = pages.select("url", "html")
 
     def fan_out(batches):
         for pdf in batches:

@@ -218,12 +218,11 @@ def run_extract_job(
     # lineage). The counters come only from this call's tasks, so stale
     # partitions left in a reused output dir by an earlier run are never
     # attributed to this run.
-    # shuffle=True (not auto): this path WRITES partitionBy(bucket), and
-    # the rebalance on bucket puts each bucket in one shuffle partition,
-    # so the write emits one file per bucket (more only where AQE splits
-    # an oversized bucket) — without it every task would emit a file into
-    # every bucket directory (the small-files trap, guide §6). The
-    # auto-skip is for noop/analysis consumers, not the partitioned sink.
+    # shuffle=True: this path WRITES partitionBy(bucket), and the
+    # rebalance on bucket puts each bucket in one shuffle partition, so
+    # the write emits one file per bucket (more only where AQE splits an
+    # oversized bucket) — without it every task would emit a file into
+    # every bucket directory (the small-files trap, guide §6).
     acc = spark.sparkContext.accumulator({}, PartitionCounts())
     extracted = extract_pages(
         todo, cfg, n_partitions, shuffle=True, metrics=acc

@@ -49,7 +49,9 @@ def curate(
     counts: dict[str, int] = {}
     counts["docs_in"] = pages.count()
 
-    extracted = extract_pages(pages, cfg, n_partitions).filter(
+    # shuffle=True: the rebalance on bucket spreads host-clustered input
+    # over the cores; n_partitions sizes it
+    extracted = extract_pages(pages, cfg, n_partitions, shuffle=True).filter(
         F.col("parse_ok") & (F.length("text") > 0)
     )
     # cache: the funnel reuses this frame across several stages

@@ -10,12 +10,12 @@ per-url byte-identity invariant hold at any parallelism.
 Scale design (100 TB / 10^12 rows):
 - Input scan stays columnar: we select exactly (url, warc_ts, html, lang)
   — column pruning reaches the parquet/Iceberg scan.
-- A rebalance on the salted url-hash ``bucket`` is the job's only shuffle:
-  it defuses host-domain skew (one mega-host = many buckets), gathers
-  each bucket (the unit of checkpoint lineage) into one shuffle
-  partition, and leaves the task count to AQE, which coalesces small
-  partitions and splits oversized ones. Everything downstream is
-  map-only.
+- A rebalance on the salted url-hash ``bucket``, which the job asks for
+  with ``shuffle=True``, is its only shuffle: it defuses host-domain
+  skew (one mega-host = many buckets), gathers each bucket (the unit of
+  checkpoint lineage) into one shuffle partition, and leaves the task
+  count to AQE, which coalesces small partitions and splits oversized
+  ones. Everything downstream is map-only.
 - Extraction runs in Arrow-batched Python workers (one per core — the
   analog of the reference's Triton instance pool,
   config_gpu_paddlex.pbtxt:18-24); per-doc try/except means one poisoned
@@ -171,12 +171,6 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
     return extract_batch
 
 
-# logical operators that introduce an exchange: downstream of one, the
-# frame's partitioning is (at least) spark.sql.shuffle.partitions wide
-_WIDE_NODES = ("Join", "Aggregate", "Window", "Deduplicate", "Repartition",
-               "Sort")
-
-
 def _local_row_groups(files: list[str]) -> int | None:
     """Total parquet row groups across LOCAL input files, or None when any
     file is remote/unreadable (callers must then stay conservative). Row
@@ -203,34 +197,6 @@ def _local_row_groups(files: list[str]) -> int | None:
         return None
 
 
-def _needs_fanout_shuffle(pages: DataFrame, n_parts: int) -> bool:
-    """Best-effort auto decision for the bucket rebalance: False only
-    when the input is provably at least min(n_parts, cores)-way parallel.
-
-    Wide plans (joins/aggregates/windows/repartitions upstream) are
-    judged by spark.sql.shuffle.partitions — their output partitioning —
-    WITHOUT touching df.rdd: materializing the RDD of an adaptive plan
-    finalizes it and eagerly runs every upstream shuffle stage at
-    plan-declaration time. Narrow scan-shaped plans have no stages to
-    run, so the exact partition count is safe to read there; it is then
-    clamped by the input files' total parquet row-group count, because
-    split-size floors can produce byte-range splits that carry no rows.
-    Anything unprovable keeps the shuffle (the skew-defense default)."""
-    try:
-        spark = pages.sparkSession
-        need = min(n_parts, spark.sparkContext.defaultParallelism)
-        lp = pages._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-        if any(k in lp for k in _WIDE_NODES):
-            return int(spark.conf.get("spark.sql.shuffle.partitions")) < need
-        incoming = pages.rdd.getNumPartitions()  # narrow: nothing to run
-        rgs = _local_row_groups(pages.inputFiles())
-        if rgs is not None:
-            incoming = min(incoming, rgs)
-        return incoming < need
-    except Exception:
-        return True
-
-
 def payload_key_col(pages: DataFrame, wet: bool) -> Column:
     """The input-lineage key stored as ``payload_xxh`` (JVM-side xxhash64
     of the raw input): plain ``xxhash64(html)`` normally; with WET
@@ -251,7 +217,7 @@ def extract_pages(
     pages: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     n_partitions: int | None = None,
-    shuffle: bool | None = None,
+    shuffle: bool = False,
     metrics: Accumulator | None = None,
 ) -> DataFrame:
     """Declare the extraction plan over a `pages` DataFrame.
@@ -260,27 +226,24 @@ def extract_pages(
     counters of every task that runs the plan (see ``make_extract_batch``);
     accumulators need a classic session, Spark Connect has none.
 
-    ``shuffle`` controls the rebalance on ``bucket`` ahead of the kernel
-    stage: ``True`` forces it (skew defense for inputs clustered by
-    host/crawl order), ``False`` skips it, and the default ``None`` skips
-    it only when the incoming frame already has at least
-    ``min(n_partitions or cfg.n_buckets, defaultParallelism)`` partitions
-    — a well-sharded corpus then flows scan -> kernel with NO shuffle of
-    the payload bytes at all (guide §2.4/§8: the extraction output is
-    per-row pure, so partitioning can never change results —
-    oracle-pinned). The shuffle stays the default whenever the input
-    arrives in few or skewed partitions.
+    ``shuffle=True`` adds a rebalance on ``bucket`` ahead of the kernel
+    stage; the default plans none, and the scan feeds the kernels
+    directly. The caller decides: pass ``True`` when the output feeds a
+    ``partitionBy("bucket")`` sink, or when the input arrives in few or
+    host-clustered partitions (skew defense). The extraction output is
+    per-row pure, so partitioning never changes results.
 
     The rebalance hashes on ``bucket`` alone, so each bucket lands in one
     shuffle partition and a ``partitionBy("bucket")`` write emits one file
-    per bucket. ``n_partitions`` is its initial partition count (default
-    ``spark.sql.shuffle.partitions``); AQE then coalesces small partitions
-    and splits any larger than ``advisoryPartitionSizeInBytes``, so bucket
-    count and task count stay decoupled without a fixed width. Until a
-    bucket outgrows the advisory size the stage runs at most one task per
-    bucket, so ``cfg.n_buckets`` should not be below the core count, and
-    a larger ``n_partitions`` does not widen it. AQE merges by shuffle
-    bytes, not kernel cost: an input under about 1 MB of shuffle per core
+    per bucket. ``n_partitions`` only sizes that rebalance: it is the
+    initial partition count (default ``spark.sql.shuffle.partitions``);
+    AQE then coalesces small partitions and splits any larger than
+    ``advisoryPartitionSizeInBytes``, so bucket count and task count stay
+    decoupled without a fixed width. Until a bucket outgrows the advisory
+    size the stage runs at most one task per bucket, so ``cfg.n_buckets``
+    should not be below the core count, and a larger ``n_partitions``
+    does not widen it. AQE merges by shuffle bytes, not kernel cost: an
+    input under about 1 MB of shuffle per core
     (``coalescePartitions.minPartitionSize``) runs on fewer tasks than
     cores however slow its pages are. With AQE disabled the rebalance is
     a plain hash repartition on ``bucket``.
@@ -307,8 +270,6 @@ def extract_pages(
         # lineage + delta-extraction key
         payload_key_col(pages, cfg.wet_passthrough).alias("payload_xxh"),
     )
-    if shuffle is None:
-        shuffle = _needs_fanout_shuffle(pages, n_partitions or cfg.n_buckets)
     if shuffle:
         src = src.hint("rebalance", *([n_partitions] if n_partitions else []), "bucket")
     return src.mapInPandas(make_extract_batch(cfg, metrics), schema=EXTRACTED_SCHEMA)

@@ -6,9 +6,9 @@ deterministic detector chain (binarize -> 8-connected components ->
 line grouping -> reading order -> template OCR). Mirrors the reference's
 image path (model.py:300-337) the same way extract_pages mirrors its
 document path: kernels are pure and Spark-free, per-item try/except
-isolates poisoned payloads (T5), and the plan has zero shuffles unless
-the caller asks for a repartition — embarrassingly parallel at any
-corpus size.
+isolates poisoned payloads (T5), and the plan has zero shuffles — a
+caller whose input arrives skewed repartitions it first. Embarrassingly
+parallel at any corpus size.
 """
 
 from __future__ import annotations
@@ -32,52 +32,6 @@ SCANNED_SCHEMA = T.StructType(
 )
 
 
-def extract_scanned(
-    pages: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Run the scanned-page chain over a (url, payload) DataFrame of page
-    images. ``n_partitions`` adds the one optional shuffle (url hash) when
-    upstream partitioning is skewed; by default the plan stays map-only."""
-    from paddle_spark.kernels.pixels import decoder_for
-
-    src = pages.select("url", "payload")
-    if n_partitions:
-        src = src.repartition(n_partitions, "url")
-    decode = decoder_for("auto")  # resolved at plan construction
-
-    def run(batches):
-        from paddle_spark.kernels.scan import ocr_page
-
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            payloads = pdf["payload"].tolist()
-            out = {
-                "url": urls,
-                "text": [None] * len(urls),
-                "n_glyphs": [0] * len(urls),
-                "n_lines": [0] * len(urls),
-                "n_dropped": [0] * len(urls),
-                "parse_ok": [False] * len(urls),
-                "error": [None] * len(urls),
-            }
-            for k, p in enumerate(payloads):
-                try:
-                    r = ocr_page(decode(p), cfg)
-                    out["text"][k] = r.text
-                    out["n_glyphs"][k] = r.n_glyphs
-                    out["n_lines"][k] = r.n_lines
-                    out["n_dropped"][k] = r.n_dropped
-                    out["parse_ok"][k] = r.parse_ok
-                    out["error"][k] = r.error
-                except Exception as e:  # per-item isolation (T5)
-                    out["error"][k] = f"{type(e).__name__}: {e}"
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, schema=SCANNED_SCHEMA)
-
-
 ORIENTED_SCHEMA = T.StructType(
     [T.StructField("url", T.StringType(), False),
      T.StructField("rotation", T.IntegerType(), False)]
@@ -85,51 +39,56 @@ ORIENTED_SCHEMA = T.StructType(
 )
 
 
+def extract_scanned(
+    pages: DataFrame,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+) -> DataFrame:
+    """Run the scanned-page chain over a (url, payload) DataFrame of page
+    images. The plan is map-only; a caller whose input arrives skewed
+    repartitions it before the call."""
+    from paddle_spark.kernels.scan import ocr_page
+
+    return _scanned_plan(pages, SCANNED_SCHEMA, lambda img: (0, ocr_page(img, cfg)))
+
+
 def extract_scanned_oriented(
     pages: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """extract_scanned with the orientation-classify stage in front (the
     reference's use_doc_orientation_classify, pipeline_config.yaml:264-272):
     each page additionally reports ``rotation`` — the number of
     quarter-turns (``np.rot90`` convention, 0/1/2/3 for 0/90/180/270°)
     applied before OCR. Same map-only plan shape as extract_scanned."""
+    from paddle_spark.kernels.scan import ocr_page_oriented
+
+    return _scanned_plan(
+        pages, ORIENTED_SCHEMA, lambda img: ocr_page_oriented(img, cfg)
+    )
+
+
+def _scanned_plan(pages: DataFrame, schema: T.StructType, page_ocr) -> DataFrame:
+    """The one mapInPandas stage behind both operators: decode each
+    payload, run ``page_ocr(image) -> (rotation, ScanResult)`` and emit a
+    ``schema`` row, with the rotation only when ``schema`` has that
+    column."""
     from paddle_spark.kernels.pixels import decoder_for
 
-    src = pages.select("url", "payload")
-    if n_partitions:
-        src = src.repartition(n_partitions, "url")
     decode = decoder_for("auto")  # resolved at plan construction
+    oriented = "rotation" in schema.fieldNames()
 
     def run(batches):
-        from paddle_spark.kernels.scan import ocr_page_oriented
-
         for pdf in batches:
-            urls = pdf["url"].tolist()
-            payloads = pdf["payload"].tolist()
-            out = {
-                "url": urls,
-                "rotation": [0] * len(urls),
-                "text": [None] * len(urls),
-                "n_glyphs": [0] * len(urls),
-                "n_lines": [0] * len(urls),
-                "n_dropped": [0] * len(urls),
-                "parse_ok": [False] * len(urls),
-                "error": [None] * len(urls),
-            }
-            for k, p in enumerate(payloads):
+            rows = []
+            for url, p in zip(pdf["url"], pdf["payload"]):
                 try:
-                    rot, r = ocr_page_oriented(decode(p), cfg)
-                    out["rotation"][k] = rot
-                    out["text"][k] = r.text
-                    out["n_glyphs"][k] = r.n_glyphs
-                    out["n_lines"][k] = r.n_lines
-                    out["n_dropped"][k] = r.n_dropped
-                    out["parse_ok"][k] = r.parse_ok
-                    out["error"][k] = r.error
+                    rot, r = page_ocr(decode(p))
+                    row = (url, rot, r.text, r.n_glyphs, r.n_lines,
+                           r.n_dropped, r.parse_ok, r.error)
                 except Exception as e:  # per-item isolation (T5)
-                    out["error"][k] = f"{type(e).__name__}: {e}"
-            yield pd.DataFrame(out)
+                    row = (url, 0, None, 0, 0, 0, False,
+                           f"{type(e).__name__}: {e}")
+                rows.append(row if oriented else (row[0], *row[2:]))
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
-    return src.mapInPandas(run, schema=ORIENTED_SCHEMA)
+    return pages.select("url", "payload").mapInPandas(run, schema=schema)

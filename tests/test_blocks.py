@@ -10,7 +10,7 @@ from paddle_spark.operators.blocks import extract_blocks
 
 @pytest.fixture(scope="module")
 def blocks(spark, tiny_pages):
-    return extract_blocks(tiny_pages, n_partitions=4).cache()
+    return extract_blocks(tiny_pages).cache()
 
 
 def test_fan_out_counts_match_metrics(spark, tiny_pages, blocks):

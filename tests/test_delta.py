@@ -2,6 +2,8 @@
 only changed payloads re-extract, and the merged output is row-identical
 to a full re-extraction of the new snapshot."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,10 +98,15 @@ def test_delta_duplicate_keys(spark, snapshots):
     assert m == f
 
 
-def test_delta_job_static_overwrite(spark, snapshots, tmp_path):
+def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
     """Reusing an output dir across snapshot runs must not leave stale
-    bucket partitions behind when a bucket's urls all disappear."""
+    bucket partitions behind when a bucket's urls all disappear. The
+    summary's ``written``, taken from delta_stats rather than read back,
+    equals the rows on disk after each run."""
     import jobs.delta as job
+
+    def written():
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])["written"]
 
     v1, v2 = snapshots
     (tmp_path / "snap1").mkdir()
@@ -114,11 +121,13 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path):
                    "--prev", str(tmp_path / "prev"), "--output", out])
     assert rc == 0
     assert set(_files_per_bucket(out).values()) == {1}
+    assert written() == spark.read.parquet(out).count()
     rc = job.main(["--input-new", str(tmp_path / "snap2"),
                    "--prev", str(tmp_path / "prev"), "--output", out])
     assert rc == 0
     got = spark.read.parquet(out)
     assert got.count() == 10  # no stale rows from the first run
+    assert written() == 10
     # the job's build_session left the shared session's sizing alone
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     # output == prev is refused

@@ -89,29 +89,39 @@ def test_scan_is_column_pruned(spark, tiny_pages, tmp_path):
     assert {"url", "html", "lang"} <= cols
 
 
-def test_fanout_shuffle_auto_decision(spark, tmp_path):
-    """The r6 auto-shuffle probe: multi-file sharded scans skip the salted
-    repartition, a single-file one-row-group input keeps it (byte-range
-    splits would be empty — partition COUNT over-reports), and frames
-    with an upstream exchange are judged from shuffle.partitions without
-    touching df.rdd (which would finalize the adaptive plan)."""
-    from pyspark.sql import functions as F
+def test_extraction_shuffle_is_the_callers_choice(spark, tiny_pages, tmp_path, monkeypatch):
+    """On a single-file, one-row-group input (one scan task), the default
+    extract_pages still plans no Exchange: the rebalance is the caller's
+    choice, never inferred from the input. curate asks for it, and gets
+    exactly one rebalance on bucket."""
+    import glob
+    import re
 
-    from paddle_spark.operators.extract_job import _needs_fanout_shuffle
+    import pyarrow.parquet as pq
 
-    n = spark.sparkContext.defaultParallelism
-    sharded = str(tmp_path / "sharded")
-    spark.range(0, 2000, 1, n).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        F.encode(F.col("id").cast("string"), "utf-8").alias("html"),
-    ).write.mode("overwrite").parquet(sharded)
-    many = spark.read.parquet(sharded)
-    assert _needs_fanout_shuffle(many, n) is False
+    import paddle_spark.operators.curate as curate_mod
+    from tests.test_plans import plan_of
 
-    single = str(tmp_path / "single")
-    many.coalesce(1).write.mode("overwrite").parquet(single)
-    one = spark.read.parquet(single)
-    assert _needs_fanout_shuffle(one, n) is True
+    path = str(tmp_path / "single")
+    tiny_pages.limit(40).coalesce(1).write.mode("overwrite").parquet(path)
+    (f,) = glob.glob(f"{path}/*.parquet")
+    assert pq.ParquetFile(f).metadata.num_row_groups == 1
+    pages = spark.read.parquet(path)
 
-    wide = one.repartition(n, "url")
-    assert _needs_fanout_shuffle(wide, n) is False
+    assert "Exchange" not in plan_of(extract_pages(pages))
+
+    planned = []
+
+    def spy(*args, **kwargs):
+        planned.append(extract_pages(*args, **kwargs))
+        return planned[-1]
+
+    monkeypatch.setattr(curate_mod, "extract_pages", spy)
+    curate_mod.curate(pages)
+    (extracted,) = planned
+    exchanges = [ln for ln in plan_of(extracted).splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(
+        r"Exchange hashpartitioning\(bucket#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL",
+        exchanges[0],
+    ), exchanges

@@ -170,7 +170,7 @@ class TestOperator:
         }
         out8 = {
             r["url"]: (r["text"], r["n_glyphs"])
-            for r in extract_scanned(base, n_partitions=8).collect()
+            for r in extract_scanned(base.repartition(8, "url")).collect()
         }
         assert out1 == out8
         for i in range(40):
@@ -434,7 +434,7 @@ class TestOrientation:
         rows = [(f"scan://{i}", bytearray(make_rotated_scan(i))) for i in range(12)]
         rows.append(("scan://bad", bytearray(b"garbage")))
         df = spark.createDataFrame(rows, "url string, payload binary")
-        out = {r["url"]: r for r in extract_scanned_oriented(df, n_partitions=3).collect()}
+        out = {r["url"]: r for r in extract_scanned_oriented(df).collect()}
         for i in range(12):
             r = out[f"scan://{i}"]
             assert r["rotation"] == i % 4

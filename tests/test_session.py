@@ -93,3 +93,30 @@ def test_sessions_built_in_one_place():
                     if "SparkSession.builder" in fh.read():
                         offenders.append(os.path.relpath(path, ROOT))
     assert offenders == []
+
+
+def test_no_spark_internals_outside_explain_str():
+    """No library decision reads Spark internals: ``_jdf``/``_jvm`` appear
+    in ``paddle_spark/`` only inside ``plans/session.explain_str``, the
+    plan-capture helper."""
+    import ast
+    import re
+
+    internals = re.compile(r"\b_j(?:df|vm)\b")
+    session_py = os.path.join(ROOT, "paddle_spark", "plans", "session.py")
+    offenders = []
+    for dirpath, dirnames, filenames in os.walk(os.path.join(ROOT, "paddle_spark")):
+        dirnames[:] = [d for d in dirnames if not d.startswith((".", "__"))]
+        for name in filenames:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                lines = fh.read().splitlines()
+            if path == session_py:
+                (fn,) = [n for n in ast.parse("\n".join(lines)).body
+                         if isinstance(n, ast.FunctionDef) and n.name == "explain_str"]
+                lines[fn.lineno - 1:fn.end_lineno] = []
+            offenders += [f"{os.path.relpath(path, ROOT)}: {ln.strip()}"
+                          for ln in lines if internals.search(ln)]
+    assert offenders == []
