@@ -1,12 +1,20 @@
-"""Regenerate BENCH/PLANS.md from this checkout.
+"""Regenerate BENCH/PLANS.md from this checkout, or check it.
 
-    python BENCH/gen_plans.py [DATA_DIR]
+    python BENCH/gen_plans.py [--check] [DATA_DIR]
 
 DATA_DIR holds the sf0.001 parquet inputs (default: the one
-``__spark_entry__.SF0001`` names).
+``__spark_entry__.SF0001`` names). ``--check`` regenerates the plans in
+memory and compares them with the committed file, with expression ids
+(``#N``), ``plan_id=N`` and the temporary input directory masked; it
+exits 1 and prints a unified diff when they differ.
 """
+import argparse
+import difflib
 import os
+import re
+import shutil
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -14,7 +22,21 @@ from paddle_spark.plans import build_session, explain_str
 from paddle_spark.operators.extract_job import extract_pages
 import __spark_entry__ as em
 
-SF = sys.argv[1] if len(sys.argv) > 1 else em.SF0001
+PLANS_MD = os.path.join(ROOT, "BENCH", "PLANS.md")
+
+ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+ap.add_argument("data_dir", nargs="?", default=em.SF0001)
+ap.add_argument("--check", action="store_true",
+                help="compare with the committed BENCH/PLANS.md, write nothing")
+args = ap.parse_args()
+SF = args.data_dir
+
+
+def masked(text):
+    text = re.sub(r"#\d+", "#N", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=N", text)
+    return re.sub(r"/tmp\w{8}/pages\b", "/TMP/pages", text)
+
 
 spark = build_session("plans", cores=4, shuffle_partitions=8)
 out = []
@@ -35,7 +57,6 @@ pages = spark.createDataFrame(
     [("https://h0.example/p/1", None, b"<html><body><p>xyz</p></body></html>", None, "en")],
     "url string, warc_ts timestamp, html binary, text string, lang string",
 )
-import tempfile
 tmp = tempfile.mkdtemp()
 pages.write.mode("overwrite").parquet(f"{tmp}/pages")
 pages_p = spark.read.parquet(f"{tmp}/pages")
@@ -152,6 +173,19 @@ section("EXIF metadata extraction (mm_exif)",
         "(APP1/IFD parse). Map-only, zero shuffles — metadata extraction\n"
         "parallelizes embarrassingly at any corpus size.")
 
-open(os.path.join(ROOT, 'BENCH', 'PLANS.md'), 'w').write("".join(out))
-print("wrote BENCH/PLANS.md", len("".join(out)), "chars")
 spark.stop()
+shutil.rmtree(tmp, ignore_errors=True)
+text = "".join(out)
+if args.check:
+    with open(PLANS_MD, encoding="utf-8") as fh:
+        committed = masked(fh.read())
+    diff = list(difflib.unified_diff(
+        committed.splitlines(keepends=True), masked(text).splitlines(keepends=True),
+        "BENCH/PLANS.md (committed)", "BENCH/PLANS.md (this checkout)",
+    ))
+    sys.stdout.writelines(diff)
+    print("BENCH/PLANS.md", "drifted from the code" if diff else "matches the code")
+    sys.exit(1 if diff else 0)
+with open(PLANS_MD, "w", encoding="utf-8") as fh:
+    fh.write(text)
+print("wrote BENCH/PLANS.md", len(text), "chars")

@@ -40,10 +40,13 @@ def main(argv: list[str] | None = None) -> int:
     if not args.gen and not args.input:
         ap.error("one of --input / --gen is required")
 
+    from pyspark.sql import SparkSession
+
     from paddle_spark.operators.curate import curate
     from paddle_spark.plans import build_session
     from paddle_spark.sources.synth import gen_pages_spark
 
+    preexisting = SparkSession.getActiveSession() is not None
     spark = build_session("paddle_spark_curate")
 
     if args.gen:
@@ -61,9 +64,11 @@ def main(argv: list[str] | None = None) -> int:
         transitive_near_dedup=args.transitive_near_dedup,
     )
     curated.write.mode("overwrite").parquet(args.output)
-    counts["written"] = spark.read.parquet(args.output).count()
+    # curate counted the written frame; reading it back is one more job
+    counts["written"] = counts["after_near_dedup"]
     print(json.dumps(counts))
-    spark.stop()
+    if not preexisting:  # don't tear down a caller-owned session (tests)
+        spark.stop()
     return 0
 
 

@@ -6,12 +6,13 @@ Launch (cluster):
         --input <pages table/path> --output <extracted path> \
         --checkpoint <checkpoint path> --run-id R1 --n-buckets 4096
 
-The extraction stage rebalances on the lineage bucket, so it runs at most
-one task per bucket until a bucket's shuffle data outgrows
-spark.sql.adaptive.advisoryPartitionSizeInBytes: --n-buckets, not
---n-partitions, bounds its parallelism. Keep --n-buckets at or above the
-cluster's core count, and keep it fixed across runs that resume or
-delta against the same output (it decides each url's bucket).
+The kernels run in the input scan's splits (one task per archive with
+--input-warc), so the input, not --n-buckets, sets their parallelism.
+Their output rebalances on the lineage bucket for the partitioned write,
+which then runs at most one task per bucket until a bucket's shuffle
+data outgrows spark.sql.adaptive.advisoryPartitionSizeInBytes. Keep
+--n-buckets fixed across runs that resume or delta against the same
+output (it decides each url's bucket).
 
 Launch (sandbox smoke):
     spark-submit --master 'local[8]' --py-files paddle_spark.zip \
@@ -63,14 +64,17 @@ def main(argv: list[str] | None = None) -> int:
                     help="catalog table for lineage instead of --checkpoint")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--n-partitions", type=int, default=None,
-                    help="initial partition count of the bucket rebalance, "
-                         "which AQE then coalesces or splits "
-                         "(default: spark.sql.shuffle.partitions); it does "
-                         "not widen the extraction stage")
+                    help="partitions of the --gen input (the kernels' "
+                         "tasks), and the initial partition count of the "
+                         "bucket rebalance above the kernels, which AQE "
+                         "then coalesces or splits (default: the core "
+                         "count for --gen, spark.sql.shuffle.partitions "
+                         "for the rebalance)")
     ap.add_argument("--n-buckets", type=int, default=64,
-                    help="lineage granularity (checkpoint unit); also the "
-                         "most tasks the extraction stage runs until a "
-                         "bucket outgrows the AQE advisory partition size")
+                    help="lineage granularity (checkpoint unit, one output "
+                         "directory each); also the most tasks the write "
+                         "runs until a bucket outgrows the AQE advisory "
+                         "partition size")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--bucket-groups", type=int, default=1,
                     help="commit incrementally in N sequential bucket groups\n"

@@ -185,6 +185,10 @@ def run_extract_job(
     Returns a summary dict: {run_id, n_docs, n_failures, buckets_skipped,
     elapsed_sec, docs_per_sec}. Needs a classic session: the lineage
     counters travel in an accumulator, which Spark Connect lacks.
+
+    ``n_partitions`` is the initial width of the bucket rebalance above
+    the kernels (default ``spark.sql.shuffle.partitions``), which AQE then
+    coalesces or splits.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = completed_buckets(spark, checkpoint_path, run_id, checkpoint_table)
@@ -218,15 +222,19 @@ def run_extract_job(
     # lineage). The counters come only from this call's tasks, so stale
     # partitions left in a reused output dir by an earlier run are never
     # attributed to this run.
-    # shuffle=True: this path WRITES partitionBy(bucket), and the
-    # rebalance on bucket puts each bucket in one shuffle partition, so
-    # the write emits one file per bucket (more only where AQE splits an
+    # The kernels run in the scan's partitions, as in delta_extract, and
+    # the one rebalance on bucket sits above them: it carries extracted
+    # rows, not raw payloads, and the write stage after it runs no Python.
+    # Each bucket lands in one shuffle partition, so the partitionBy(bucket)
+    # write emits one file per bucket (more only where AQE splits an
     # oversized bucket) — without it every task would emit a file into
     # every bucket directory (the small-files trap, guide §6).
     acc = spark.sparkContext.accumulator({}, PartitionCounts())
-    extracted = extract_pages(
-        todo, cfg, n_partitions, shuffle=True, metrics=acc
-    ).withColumn("run_id", F.lit(run_id))
+    extracted = (
+        extract_pages(todo, cfg, metrics=acc)
+        .hint("rebalance", *([n_partitions] if n_partitions else []), "bucket")
+        .withColumn("run_id", F.lit(run_id))
+    )
     write_extracted(extracted, output_path, output_table)
     elapsed = time.time() - t0
 

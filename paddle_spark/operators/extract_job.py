@@ -10,12 +10,14 @@ per-url byte-identity invariant hold at any parallelism.
 Scale design (100 TB / 10^12 rows):
 - Input scan stays columnar: we select exactly (url, warc_ts, html, lang)
   — column pruning reaches the parquet/Iceberg scan.
-- A rebalance on the salted url-hash ``bucket``, which the job asks for
-  with ``shuffle=True``, is its only shuffle: it defuses host-domain
-  skew (one mega-host = many buckets), gathers each bucket (the unit of
-  checkpoint lineage) into one shuffle partition, and leaves the task
-  count to AQE, which coalesces small partitions and splits oversized
-  ones. Everything downstream is map-only.
+- The kernels run in the scan's partitions, so their parallelism comes
+  from the input splits. The job's only shuffle is one rebalance on the
+  salted url-hash ``bucket`` above them: it carries extracted rows, not
+  raw payloads, defuses host-domain skew (one mega-host = many buckets),
+  gathers each bucket (the unit of checkpoint lineage) into one shuffle
+  partition, and leaves the task count to AQE, which coalesces small
+  partitions and splits oversized ones. The partitioned write after it
+  runs no Python.
 - Extraction runs in Arrow-batched Python workers (one per core — the
   analog of the reference's Triton instance pool,
   config_gpu_paddlex.pbtxt:18-24); per-doc try/except means one poisoned
@@ -68,9 +70,10 @@ class PartitionCounts(AccumulatorParam):
 
     Merging REPLACES a repeated partition id instead of adding to it. A
     failed attempt reports nothing, and a recomputed or speculative
-    attempt of a partition reports the same rows (the bucket rebalance
-    reproduces each partition exactly), so its entry overwrites an
-    identical one and the counts stay exact under retries. The
+    attempt of a partition reports the same rows (a scan split, or a
+    shuffle partition of a rebalance below the kernel, reproduces its
+    rows exactly), so its entry overwrites an identical one and the
+    counts stay exact under retries. The
     reference's analog is one heartbeat file per serving instance,
     rewritten in place (layout_status.py:61-86)."""
 
@@ -228,10 +231,12 @@ def extract_pages(
 
     ``shuffle=True`` adds a rebalance on ``bucket`` ahead of the kernel
     stage; the default plans none, and the scan feeds the kernels
-    directly. The caller decides: pass ``True`` when the output feeds a
-    ``partitionBy("bucket")`` sink, or when the input arrives in few or
-    host-clustered partitions (skew defense). The extraction output is
-    per-row pure, so partitioning never changes results.
+    directly. The caller decides: pass ``True`` when the input arrives in
+    few or host-clustered partitions (skew defense). For a
+    ``partitionBy("bucket")`` sink, rebalance above the kernel instead,
+    as ``run_extract_job`` and ``delta_extract`` do: that shuffle carries
+    extracted rows, and the write stage runs no Python. The extraction
+    output is per-row pure, so partitioning never changes results.
 
     The rebalance hashes on ``bucket`` alone, so each bucket lands in one
     shuffle partition and a ``partitionBy("bucket")`` write emits one file
@@ -242,11 +247,13 @@ def extract_pages(
     decoupled without a fixed width. Until a bucket outgrows the advisory
     size the stage runs at most one task per bucket, so ``cfg.n_buckets``
     should not be below the core count, and a larger ``n_partitions``
-    does not widen it. AQE merges by shuffle bytes, not kernel cost: an
-    input under about 1 MB of shuffle per core
-    (``coalescePartitions.minPartitionSize``) runs on fewer tasks than
-    cores however slow its pages are. With AQE disabled the rebalance is
-    a plain hash repartition on ``bucket``.
+    does not widen it. AQE merges by shuffle bytes, not kernel cost: below
+    the kernel, an input under about 64 KB of shuffle per core
+    (``coalescePartitions.minPartitionSize``, set in ``build_session``)
+    runs the kernels on fewer tasks than cores however slow its pages
+    are; a rebalance above the kernel, as the job and ``delta_extract``
+    use, leaves them in the scan's splits. With AQE disabled the
+    rebalance is a plain hash repartition on ``bucket``.
     """
     # WET conversion rows (html null, text pre-extracted by the crawl)
     # pass through the kernel stage verbatim when cfg.wet_passthrough;

@@ -1,7 +1,9 @@
 """SparkSession builder: the one place a session is built (jobs, benchmarks,
 tests). The code sets the engine keys in every session (``_ENGINE_CONF``: UTC,
-AQE with coalescing and the skew-join split, Arrow with 2048-row batches,
-snappy) and the WARN log level. The launcher owns master, driver memory,
+AQE with coalescing, its 64 KB partition floor and the skew-join split, Arrow
+with 2048-row batches, snappy) and the WARN log level. The coalescing floor is
+an engine key, not a sizing key: it bounds the fixed cost per task, whatever
+the cluster's size. The launcher owns master, driver memory,
 UI and the sizing keys ``spark.sql.shuffle.partitions`` and
 ``spark.sql.files.minPartitionNum``: ``build_session(app)`` sets none of
 them, so ``spark-submit --conf`` decides, else Spark's defaults hold
@@ -23,6 +25,11 @@ _ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # AQE coalesces no shuffle partition below this floor. Spark's 1 MB
+    # default runs a sub-MB write stage as one task; 64 KB spreads it over
+    # every core. At scale it cannot bind: AQE's target is
+    # min(total / parallelism, advisory size).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Arrow batch size is the analog of the reference's max_batch_size

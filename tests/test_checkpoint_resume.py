@@ -211,14 +211,18 @@ def test_reused_output_dir_never_attributes_stale_data(spark, tiny_pages, paths)
     assert per_run["new"] == n_subset
 
 
-def _jobs_started(spark, group, action):
+def _job_ids(spark, group, action):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_started(spark, group, action):
+    return len(_job_ids(spark, group, action))
 
 
 def test_run_starts_three_jobs(spark, tiny_pages, paths):
@@ -245,6 +249,60 @@ def test_run_starts_three_jobs(spark, tiny_pages, paths):
         lambda: run_extract_job(spark, tiny_pages, out_path, cp_path,
                                 run_id="j1", cfg=CFG),
     ) == 2
+
+
+def test_kernels_run_below_the_one_bucket_rebalance(spark, tiny_pages, paths, monkeypatch):
+    """The job's written plan has exactly one Exchange: a rebalance hashed
+    on bucket, placed above the kernels' MapInPandas, so it shuffles
+    extracted rows and no raw ``html`` payload."""
+    import re
+
+    from paddle_spark.operators import checkpoint as checkpoint_mod
+    from tests.test_plans import plan_of
+
+    written = []
+    write = checkpoint_mod.write_extracted
+
+    def spy(extracted, *args, **kwargs):
+        written.append(plan_of(extracted))
+        return write(extracted, *args, **kwargs)
+
+    monkeypatch.setattr(checkpoint_mod, "write_extracted", spy)
+    out_path, cp_path = paths
+    run_extract_job(spark, tiny_pages, out_path, cp_path, run_id="k1", cfg=CFG)
+    (plan,) = written
+    lines = plan.splitlines()
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert re.search(
+        r"Exchange hashpartitioning\(bucket#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL",
+        exchanges[0],
+    ), plan
+    below = lines[lines.index(exchanges[0]) + 1]
+    kernel_out = re.search(r"MapInPandas .*\)#\d+, \[([^\]]*)\]", below)
+    assert kernel_out, plan
+    assert "html" not in kernel_out.group(1), plan
+
+
+def test_small_write_stage_spreads_over_cores(spark, tmp_path):
+    """A job whose extracted shuffle is a few hundred KB (600 crawl docs,
+    64 buckets) writes in more than one task: AQE's coalescing floor is
+    64 KB, not its 1 MB default, which ran the whole write as one task."""
+    from jobbench import corpus
+
+    pages_path = str(tmp_path / "pages.parquet")
+    corpus.write_pages(pages_path, corpus.crawl_rows(600, 1))
+    pages = spark.read.parquet(pages_path)
+    # the rebalance map stage, the write, the checkpoint append
+    _, write_job, _ = _job_ids(
+        spark, "floor",
+        lambda: run_extract_job(spark, pages, str(tmp_path / "out"),
+                                str(tmp_path / "cp"), run_id="w1",
+                                cfg=ExtractConfig()),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    write_stage = max(tracker.getJobInfo(write_job).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks > 1
 
 
 def test_partition_counts_replace_repeated_partition(spark, tiny_pages):

@@ -151,3 +151,28 @@ def test_domain_stats_and_gate(spark):
     # relaxed thresholds admit the singleton host
     kept2 = domain_gate(df, domain_stats(df), min_docs=1, min_keep_frac=0.6)
     assert sorted(r["doc_id"] for r in kept2.collect()) == [0, 1, 2, 5]
+
+
+def test_curate_job_counts_written_without_reading_back(spark, tmp_path, capsys, monkeypatch):
+    """jobs/curate.py prints ``written`` from the funnel's own count: it
+    equals the rows on disk, and the job never reads its output back."""
+    import json
+
+    from pyspark.sql import DataFrameReader
+
+    import jobs.curate as job
+
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        read.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    out = str(tmp_path / "curated")
+    assert job.main(["--gen", "120", "--n-partitions", "4", "--output", out]) == 0
+    monkeypatch.undo()
+    counts = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out not in read
+    assert counts["written"] == spark.read.parquet(out).count() > 0

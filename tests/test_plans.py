@@ -255,3 +255,19 @@ def test_host_rank_iteration_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "partial_sum" in plan or "partial_" in plan
+
+
+def test_plans_md_matches_code():
+    """BENCH/PLANS.md shows the plans this checkout builds: ``gen_plans.py
+    --check`` regenerates them (ids, plan ids and the temporary input path
+    masked) and fails on any drift. Own process: it builds its own session."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "BENCH", "gen_plans.py"), "--check"],
+        cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-2000:]
