@@ -59,6 +59,32 @@ _FAN_KEY = {
 }
 
 
+def _local_row_groups(files: list[str]) -> int | None:
+    """Total parquet row groups across LOCAL input files, or None when any
+    file is remote/unreadable (callers must then stay conservative). Row
+    groups bound how many scan partitions can actually carry rows — with
+    a files.minPartitionNum floor, byte-range splits of a one-row-group
+    file are empty except one, so the raw partition COUNT over-reports
+    parallelism."""
+    if not files:
+        return None
+    try:
+        import pyarrow.parquet as pq
+
+        total = 0
+        for f in files:
+            if f.startswith("file:"):
+                f = f[5:]
+            elif "://" in f:
+                return None
+            if not os.path.exists(f):
+                return None
+            total += pq.ParquetFile(f).metadata.num_row_groups
+        return total
+    except Exception:
+        return None
+
+
 def _t(
     spark: SparkSession,
     sf_dir: str,
@@ -85,8 +111,6 @@ def _t(
         # One input file ≈ one row group ≈ one scan partition for these
         # small fixtures; fan out so per-row-heavy queries parallelize.
         # (inputFiles, not df.rdd.getNumPartitions — stay off the RDD API.)
-        from paddle_spark.operators.extract_job import _local_row_groups
-
         p = spark.sparkContext.defaultParallelism
         files = df.inputFiles()
         if (_local_row_groups(files) or 0) >= max(2, p // 8):

@@ -30,9 +30,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--langs", default="en", help="comma list of kept languages")
     ap.add_argument("--min-quality", type=float, default=0.3)
     ap.add_argument("--min-tokens", type=int, default=10)
-    ap.add_argument("--n-partitions", type=int, default=None,
-                    help="partitions of the --gen input, and the initial "
-                         "partition count of extraction's bucket rebalance")
     ap.add_argument("--transitive-near-dedup", action="store_true",
                     help="connected-components canonical keep instead of "
                          "greedy pair drop (chain-correct near-dedup)")
@@ -50,8 +47,10 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session("paddle_spark_curate")
 
     if args.gen:
-        n_parts = args.n_partitions or spark.sparkContext.defaultParallelism
-        pages = gen_pages_spark(spark, args.gen, seed=args.seed, n_partitions=n_parts)
+        pages = gen_pages_spark(
+            spark, args.gen, seed=args.seed,
+            n_partitions=spark.sparkContext.defaultParallelism,
+        )
     else:
         pages = spark.read.parquet(args.input)
 
@@ -60,7 +59,6 @@ def main(argv: list[str] | None = None) -> int:
         langs=tuple(args.langs.split(",")),
         min_quality=args.min_quality,
         min_tokens=args.min_tokens,
-        n_partitions=args.n_partitions,
         transitive_near_dedup=args.transitive_near_dedup,
     )
     curated.write.mode("overwrite").parquet(args.output)

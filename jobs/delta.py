@@ -31,11 +31,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input-new", required=True, help="new pages snapshot (parquet)")
     ap.add_argument("--prev", required=True, help="previous extracted output dir")
     ap.add_argument("--output", required=True, help="merged extracted output dir")
-    ap.add_argument("--n-partitions", type=int, default=None,
-                    help="initial partition count of the merged output's "
-                         "bucket rebalance (carried and changed rows), which "
-                         "AQE then coalesces or splits (default: "
-                         "spark.sql.shuffle.partitions)")
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="lineage buckets, as --prev was extracted with; "
                          "also the most tasks the merged output's write "
@@ -95,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     stats = delta_stats(pages_new, prev, wet=wet)
     stats["wet"] = bool(wet)
-    merged = delta_extract(pages_new, prev, cfg, args.n_partitions)
+    merged = delta_extract(pages_new, prev, cfg)
     # STATIC overwrite (not dynamic): the merged frame IS the complete new
     # snapshot, so every old partition must go — with dynamic mode a bucket
     # whose urls all disappeared would keep its stale files and the output

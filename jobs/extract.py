@@ -7,12 +7,19 @@ Launch (cluster):
         --checkpoint <checkpoint path> --run-id R1 --n-buckets 4096
 
 The kernels run in the input scan's splits (one task per archive with
---input-warc), so the input, not --n-buckets, sets their parallelism.
-Their output rebalances on the lineage bucket for the partitioned write,
-which then runs at most one task per bucket until a bucket's shuffle
-data outgrows spark.sql.adaptive.advisoryPartitionSizeInBytes. Keep
---n-buckets fixed across runs that resume or delta against the same
-output (it decides each url's bucket).
+--input-warc, defaultParallelism tasks with --gen), so the input, not
+--n-buckets, sets their parallelism. Their output rebalances on the
+lineage bucket for the partitioned write; the rebalance starts at the
+launcher's spark.sql.shuffle.partitions (pass --conf
+spark.sql.shuffle.partitions=N to size it), and the write then runs at
+most one task per bucket until a bucket's shuffle data outgrows
+spark.sql.adaptive.advisoryPartitionSizeInBytes. Keep --n-buckets fixed
+across runs that resume or delta against the same output (it decides
+each url's bucket).
+
+--bucket-groups N is run_extract_job(n_groups=N): the buckets run as N
+sequential groups, each committing its own output partitions and
+lineage rows, so a crash loses at most one group.
 
 Launch (sandbox smoke):
     spark-submit --master 'local[8]' --py-files paddle_spark.zip \
@@ -63,13 +70,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoint-table", default=None,
                     help="catalog table for lineage instead of --checkpoint")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--n-partitions", type=int, default=None,
-                    help="partitions of the --gen input (the kernels' "
-                         "tasks), and the initial partition count of the "
-                         "bucket rebalance above the kernels, which AQE "
-                         "then coalesces or splits (default: the core "
-                         "count for --gen, spark.sql.shuffle.partitions "
-                         "for the rebalance)")
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="lineage granularity (checkpoint unit, one output "
                          "directory each); also the most tasks the write "
@@ -77,8 +77,10 @@ def main(argv: list[str] | None = None) -> int:
                          "partition size")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--bucket-groups", type=int, default=1,
-                    help="commit incrementally in N sequential bucket groups\n"
-                         "(crash loses at most one group)")
+                    help="commit incrementally in N sequential bucket "
+                         "groups, each its own write and lineage append "
+                         "(run_extract_job's n_groups; a crash loses at "
+                         "most one group)")
     ap.add_argument("--max-pages-per-doc", type=int, default=None)
     ap.add_argument("--ocr-images", action="store_true",
                     help="run the deterministic OCR chain over standalone "
@@ -94,15 +96,17 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of --output / --output-table is required")
     if not args.checkpoint and not args.checkpoint_table:
         ap.error("one of --checkpoint / --checkpoint-table is required")
+    if args.bucket_groups < 1:
+        ap.error("--bucket-groups must be at least 1")
+
+    from pyspark.sql import SparkSession
 
     from paddle_spark.config import ExtractConfig
-    from paddle_spark.operators.checkpoint import (
-        run_extract_job,
-        run_extract_job_grouped,
-    )
+    from paddle_spark.operators.checkpoint import run_extract_job
     from paddle_spark.plans import build_session
     from paddle_spark.sources.synth import gen_pages_spark
 
+    preexisting = SparkSession.getActiveSession() is not None
     spark = build_session("paddle_spark_extract")
 
     cfg = ExtractConfig(
@@ -117,8 +121,10 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     if args.gen:
-        n_parts = args.n_partitions or spark.sparkContext.defaultParallelism
-        pages = gen_pages_spark(spark, args.gen, seed=args.seed, n_partitions=n_parts)
+        pages = gen_pages_spark(
+            spark, args.gen, seed=args.seed,
+            n_partitions=spark.sparkContext.defaultParallelism,
+        )
     elif args.input_warc:
         from paddle_spark.sources.warc import warc_paths_to_pages
 
@@ -126,28 +132,20 @@ def main(argv: list[str] | None = None) -> int:
     else:
         pages = spark.read.parquet(args.input)
 
-    if args.bucket_groups > 1:
-        summary = run_extract_job_grouped(
-            spark, pages, output_path=args.output,
-            checkpoint_path=args.checkpoint, run_id=args.run_id, cfg=cfg,
-            n_groups=args.bucket_groups, n_partitions=args.n_partitions,
-            output_table=args.output_table,
-            checkpoint_table=args.checkpoint_table,
-        )
-    else:
-        summary = run_extract_job(
-            spark,
-            pages,
-            output_path=args.output,
-            checkpoint_path=args.checkpoint,
-            run_id=args.run_id,
-            cfg=cfg,
-            n_partitions=args.n_partitions,
-            output_table=args.output_table,
-            checkpoint_table=args.checkpoint_table,
-        )
+    summary = run_extract_job(
+        spark,
+        pages,
+        output_path=args.output,
+        checkpoint_path=args.checkpoint,
+        run_id=args.run_id,
+        cfg=cfg,
+        n_groups=args.bucket_groups,
+        output_table=args.output_table,
+        checkpoint_table=args.checkpoint_table,
+    )
     print(json.dumps(summary))
-    spark.stop()
+    if not preexisting:  # don't tear down a caller-owned session (tests)
+        spark.stop()
     return 0
 
 

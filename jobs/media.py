@@ -44,11 +44,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--features", action="store_true",
                     help="also write dhash + histogram visual features")
     ap.add_argument("--max-dim", type=int, default=640)
-    ap.add_argument("--n-partitions", type=int, default=None)
     args = ap.parse_args(argv)
     if not args.gen and not args.input:
         ap.error("one of --input / --gen is required")
 
+    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from paddle_spark.operators.multimodal import (
@@ -57,11 +57,13 @@ def main(argv: list[str] | None = None) -> int:
     from paddle_spark.plans import build_session
     from paddle_spark.sources.synth import gen_media_spark
 
+    preexisting = SparkSession.getActiveSession() is not None
     spark = build_session("paddle_spark_media")
 
-    n_parts = args.n_partitions or spark.sparkContext.defaultParallelism
     if args.gen:
-        media = gen_media_spark(spark, args.gen, n_partitions=n_parts)
+        media = gen_media_spark(
+            spark, args.gen, n_partitions=spark.sparkContext.defaultParallelism
+        )
     else:
         media = spark.read.parquet(args.input)
 
@@ -114,7 +116,8 @@ def main(argv: list[str] | None = None) -> int:
             }
         )
     )
-    spark.stop()
+    if not preexisting:  # don't tear down a caller-owned session (tests)
+        spark.stop()
     return 0
 
 

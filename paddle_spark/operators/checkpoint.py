@@ -176,32 +176,35 @@ def run_extract_job(
     checkpoint_path: str,
     run_id: str | None = None,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    n_partitions: int | None = None,
+    n_groups: int = 1,
     output_table: str | None = None,
     checkpoint_table: str | None = None,
 ) -> dict:
     """Run (or resume) the extraction job.
 
     Returns a summary dict: {run_id, n_docs, n_failures, buckets_skipped,
-    elapsed_sec, docs_per_sec}. Needs a classic session: the lineage
-    counters travel in an accumulator, which Spark Connect lacks.
+    elapsed_sec, docs_per_sec}; ``buckets_skipped`` counts the buckets
+    already done when the call starts. Needs a classic session: the
+    lineage counters travel in an accumulator, which Spark Connect lacks.
 
-    ``n_partitions`` is the initial width of the bucket rebalance above
-    the kernels (default ``spark.sql.shuffle.partitions``), which AQE then
-    coalesces or splits.
+    ``n_groups`` > 1 commits incrementally: the buckets with
+    ``bucket % n_groups == g`` run as sequential group g, each with its
+    own write and lineage append, so a crash loses at most one group — at
+    10^12-doc scale this bounds re-work to one group instead of the whole
+    run (the reference's per-instance heartbeat cadence,
+    layout_status.py:100-102, turned into commit cadence). The checkpoint
+    is read once, up front, and a group whose buckets are all done starts
+    no job.
+
+    The bucket rebalance above the kernels starts at
+    ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE
+    then coalesces or splits.
     """
+    if n_groups < 1:
+        raise ValueError(f"n_groups must be >= 1, got {n_groups}")
     run_id = run_id or uuid.uuid4().hex[:12]
     done = completed_buckets(spark, checkpoint_path, run_id, checkpoint_table)
     done_set = {r["bucket"] for r in done.collect()}
-    n_skipped = len(done_set)
-    if n_skipped >= cfg.n_buckets:
-        # fully resumed: nothing to extract, write, or record — a no-op
-        # re-run costs one checkpoint-table read, nothing else
-        return {
-            "run_id": run_id, "n_docs": 0, "n_failures": 0,
-            "buckets_skipped": n_skipped, "elapsed_sec": 0.0,
-            "docs_per_sec": 0.0,
-        }
 
     # Resume filter: done buckets are at most n_buckets values, collected
     # above — a driver-side isin predicate beats even a broadcast anti-join
@@ -215,110 +218,71 @@ def run_extract_job(
         pages_b.filter(~F.col("bucket").isin(sorted(done_set)))
         if done_set
         else pages_b
-    ).drop("bucket")
-
-    t0 = time.time()
-    # Every output row is stamped with its producing run_id (per-row
-    # lineage). The counters come only from this call's tasks, so stale
-    # partitions left in a reused output dir by an earlier run are never
-    # attributed to this run.
-    # The kernels run in the scan's partitions, as in delta_extract, and
-    # the one rebalance on bucket sits above them: it carries extracted
-    # rows, not raw payloads, and the write stage after it runs no Python.
-    # Each bucket lands in one shuffle partition, so the partitionBy(bucket)
-    # write emits one file per bucket (more only where AQE splits an
-    # oversized bucket) — without it every task would emit a file into
-    # every bucket directory (the small-files trap, guide §6).
-    acc = spark.sparkContext.accumulator({}, PartitionCounts())
-    extracted = (
-        extract_pages(todo, cfg, metrics=acc)
-        .hint("rebalance", *([n_partitions] if n_partitions else []), "bucket")
-        .withColumn("run_id", F.lit(run_id))
     )
-    write_extracted(extracted, output_path, output_table)
-    elapsed = time.time() - t0
 
-    totals = sorted(bucket_totals(acc.value).items())
-    docs = sum(c[0] for _, c in totals)
-    fails = sum(c[1] for _, c in totals)
-    docs_per_sec = docs / elapsed if elapsed > 0 else 0.0
-    finished_at = datetime.now(timezone.utc)
-    started_at = finished_at - timedelta(seconds=elapsed)
-    # an Arrow table becomes a DataFrame in the JVM; a list of tuples
-    # would run a Python worker inside the append job
-    cp_rows = spark.createDataFrame(
-        pa.Table.from_pylist(
-            [
-                dict(run_id=run_id, bucket=b, n_docs=n, n_failures=f,
-                     blocks_kept=kept, blocks_dropped=dropped,
-                     docs_per_sec=docs_per_sec, started_at=started_at,
-                     finished_at=finished_at, status="success")
-                for b, (n, f, kept, dropped) in totals
-            ],
-            schema=to_arrow_schema(CHECKPOINT_SCHEMA),
-        ),
-        CHECKPOINT_SCHEMA,
-    ).coalesce(1)  # one checkpoint file per append
-    append_checkpoint(cp_rows, checkpoint_path, checkpoint_table)
+    docs = fails = 0
+    elapsed = 0.0
+    for g in range(n_groups):
+        if done_set.issuperset(range(g, cfg.n_buckets, n_groups)):
+            # nothing to extract, write, or record: a fully resumed re-run
+            # costs one checkpoint read, nothing else
+            continue
+        group = (
+            todo.filter(F.col("bucket") % n_groups == g) if n_groups > 1 else todo
+        )
+
+        t0 = time.time()
+        # Every output row is stamped with its producing run_id (per-row
+        # lineage). The counters come only from this group's tasks, so
+        # stale partitions left in a reused output dir by an earlier run
+        # are never attributed to this run.
+        # The kernels run in the scan's partitions, as in delta_extract,
+        # and the one rebalance on bucket sits above them: it carries
+        # extracted rows, not raw payloads, and the write stage after it
+        # runs no Python. Each bucket lands in one shuffle partition, so
+        # the partitionBy(bucket) write emits one file per bucket (more
+        # only where AQE splits an oversized bucket) — without it every
+        # task would emit a file into every bucket directory (the
+        # small-files trap, guide §6).
+        acc = spark.sparkContext.accumulator({}, PartitionCounts())
+        extracted = (
+            extract_pages(group.drop("bucket"), cfg, metrics=acc)
+            .hint("rebalance", "bucket")
+            .withColumn("run_id", F.lit(run_id))
+        )
+        write_extracted(extracted, output_path, output_table)
+        group_sec = time.time() - t0
+
+        totals = sorted(bucket_totals(acc.value).items())
+        group_docs = sum(c[0] for _, c in totals)
+        docs += group_docs
+        fails += sum(c[1] for _, c in totals)
+        elapsed += group_sec
+        group_rate = group_docs / group_sec if group_sec > 0 else 0.0
+        finished_at = datetime.now(timezone.utc)
+        started_at = finished_at - timedelta(seconds=group_sec)
+        # an Arrow table becomes a DataFrame in the JVM; a list of tuples
+        # would run a Python worker inside the append job
+        cp_rows = spark.createDataFrame(
+            pa.Table.from_pylist(
+                [
+                    dict(run_id=run_id, bucket=b, n_docs=n, n_failures=f,
+                         blocks_kept=kept, blocks_dropped=dropped,
+                         docs_per_sec=group_rate, started_at=started_at,
+                         finished_at=finished_at, status="success")
+                    for b, (n, f, kept, dropped) in totals
+                ],
+                schema=to_arrow_schema(CHECKPOINT_SCHEMA),
+            ),
+            CHECKPOINT_SCHEMA,
+        ).coalesce(1)  # one checkpoint file per append
+        append_checkpoint(cp_rows, checkpoint_path, checkpoint_table)
 
     return {
         "run_id": run_id,
         "n_docs": docs,
         "n_failures": fails,
-        "buckets_skipped": n_skipped,
+        "buckets_skipped": len(done_set),
         "elapsed_sec": elapsed,
-        "docs_per_sec": docs_per_sec,
+        "docs_per_sec": docs / elapsed if elapsed > 0 else 0.0,
     }
-
-
-def run_extract_job_grouped(
-    spark: SparkSession,
-    pages: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    run_id: str | None = None,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    n_groups: int = 4,
-    n_partitions: int | None = None,
-    output_table: str | None = None,
-    checkpoint_table: str | None = None,
-) -> dict:
-    """Incremental-commit variant: buckets are processed in ``n_groups``
-    sequential sub-jobs, each committing its own output partitions and
-    lineage rows. A crash in group k preserves groups 0..k-1 durably —
-    at 10^12-doc scale this bounds re-work to one group instead of the
-    whole run. Resume semantics are unchanged (same run_id resume filter);
-    the reference analog is the per-instance heartbeat cadence
-    (layout_status.py:100-102) turned into commit cadence.
-    """
-    run_id = run_id or uuid.uuid4().hex[:12]
-    from paddle_spark.functions import url_bucket_col
-    from pyspark.sql import functions as F
-
-    # skipped = buckets already durable for this run_id (counted once —
-    # each sub-job's own counter sees the full run's lineage)
-    n_skipped = completed_buckets(
-        spark, checkpoint_path, run_id, checkpoint_table
-    ).count()
-    totals = {"n_docs": 0, "n_failures": 0, "buckets_skipped": n_skipped,
-              "elapsed_sec": 0.0}
-    for g in range(n_groups):
-        sub = pages.where(
-            F.pmod(
-                url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt), F.lit(n_groups)
-            )
-            == g
-        )
-        s = run_extract_job(
-            spark, sub, output_path, checkpoint_path, run_id=run_id, cfg=cfg,
-            n_partitions=n_partitions, output_table=output_table,
-            checkpoint_table=checkpoint_table,
-        )
-        totals["n_docs"] += s["n_docs"]
-        totals["n_failures"] += s["n_failures"]
-        totals["elapsed_sec"] += s["elapsed_sec"]
-    totals["run_id"] = run_id
-    totals["docs_per_sec"] = (
-        totals["n_docs"] / totals["elapsed_sec"] if totals["elapsed_sec"] else 0.0
-    )
-    return totals

@@ -35,7 +35,6 @@ def curate(
     min_tokens: int = 10,
     num_perm: int = 32,
     bands: int = 8,
-    n_partitions: int | None = None,
     max_dup_line_frac: float | None = None,
     max_top_bigram_frac: float | None = None,
     transitive_near_dedup: bool = False,
@@ -45,13 +44,16 @@ def curate(
     The counts dict materializes the intermediate stages (each count is an
     action) — callers that only want the plan can ignore it by passing the
     returned DataFrame straight to a writer.
+
+    Extraction's bucket rebalance starts at ``spark.sql.shuffle.partitions``
+    (the launcher's width), which AQE then coalesces or splits.
     """
     counts: dict[str, int] = {}
     counts["docs_in"] = pages.count()
 
     # shuffle=True: the rebalance on bucket spreads host-clustered input
-    # over the cores; n_partitions sizes it
-    extracted = extract_pages(pages, cfg, n_partitions, shuffle=True).filter(
+    # over the cores
+    extracted = extract_pages(pages, cfg, shuffle=True).filter(
         F.col("parse_ok") & (F.length("text") > 0)
     )
     # cache: the funnel reuses this frame across several stages

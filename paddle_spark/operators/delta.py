@@ -40,7 +40,6 @@ def delta_extract(
     pages_new: DataFrame,
     extracted_prev: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Extraction output for the NEW snapshot, re-running kernels only on
     changed/new payloads. Disappeared urls drop out (the output always
@@ -60,8 +59,8 @@ def delta_extract(
     mirrors the WET lineage hash, so unchanged conversion rows carry
     forward instead of re-extracting every run.
 
-    ``n_partitions`` is the initial width of the merged output's bucket
-    rebalance (default ``spark.sql.shuffle.partitions``), which AQE then
+    The merged output's bucket rebalance starts at
+    ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE then
     coalesces or splits."""
     new_keyed = pages_new.withColumn(
         "payload_xxh", payload_key_col(pages_new, cfg.wet_passthrough)
@@ -83,9 +82,7 @@ def delta_extract(
     # sink: each bucket lands in one shuffle partition, so carried and
     # fresh rows together write one file per bucket as a fresh run does
     # (AQE sizes it and splits oversized buckets, as in extract_pages)
-    return carried.unionByName(fresh).hint(
-        "rebalance", *([n_partitions] if n_partitions else []), "bucket"
-    )
+    return carried.unionByName(fresh).hint("rebalance", "bucket")
 
 
 def delta_stats(

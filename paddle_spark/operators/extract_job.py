@@ -28,7 +28,6 @@ Scale design (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
-import os
 from dataclasses import replace
 
 import pandas as pd
@@ -172,32 +171,6 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
             metrics.add({TaskContext.get().partitionId(): counts})
 
     return extract_batch
-
-
-def _local_row_groups(files: list[str]) -> int | None:
-    """Total parquet row groups across LOCAL input files, or None when any
-    file is remote/unreadable (callers must then stay conservative). Row
-    groups bound how many scan partitions can actually carry rows — with
-    a files.minPartitionNum floor, byte-range splits of a one-row-group
-    file are empty except one, so the raw partition COUNT over-reports
-    parallelism."""
-    if not files:
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in files:
-            if f.startswith("file:"):
-                f = f[5:]
-            elif "://" in f:
-                return None
-            if not os.path.exists(f):
-                return None
-            total += pq.ParquetFile(f).metadata.num_row_groups
-        return total
-    except Exception:
-        return None
 
 
 def payload_key_col(pages: DataFrame, wet: bool) -> Column:

@@ -52,7 +52,7 @@ def assert_lineage_is_oracle(spark, out_path, cp_path, run_id):
 def test_full_run_writes_lineage(spark, tiny_pages, paths):
     out_path, cp_path = paths
     summary = run_extract_job(
-        spark, tiny_pages, out_path, cp_path, run_id="r1", cfg=CFG, n_partitions=4
+        spark, tiny_pages, out_path, cp_path, run_id="r1", cfg=CFG
     )
     assert summary["n_docs"] == tiny_pages.count()
     cp = read_checkpoint(spark, cp_path)
@@ -71,14 +71,14 @@ def test_resume_skips_done_buckets_exactly_once(spark, tiny_pages, paths):
         "b", url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
     ).filter(F.col("b") < 4).drop("b")
     s1 = run_extract_job(
-        spark, half, out_path, cp_path, run_id="r2", cfg=CFG, n_partitions=4
+        spark, half, out_path, cp_path, run_id="r2", cfg=CFG
     )
     done = completed_buckets(spark, cp_path, "r2")
     assert {r["bucket"] for r in done.collect()} == {0, 1, 2, 3}
 
     # --- phase 2: resume with the FULL input ---
     s2 = run_extract_job(
-        spark, tiny_pages, out_path, cp_path, run_id="r2", cfg=CFG, n_partitions=4
+        spark, tiny_pages, out_path, cp_path, run_id="r2", cfg=CFG
     )
     assert s2["buckets_skipped"] == 4
     # resumed run processed only the remainder
@@ -110,7 +110,6 @@ def test_crash_then_resume_exactly_once(spark, tiny_pages, paths):
     with _pytest.raises(Exception):
         run_extract_job(
             spark, tiny_pages, out_path, cp_path, run_id="r4", cfg=poisoned,
-            n_partitions=4,
         )
     # job-level atomicity: no committed output, no lineage rows
     import os
@@ -126,7 +125,7 @@ def test_crash_then_resume_exactly_once(spark, tiny_pages, paths):
 
     # clean resume completes everything exactly-once
     s = run_extract_job(
-        spark, tiny_pages, out_path, cp_path, run_id="r4", cfg=CFG, n_partitions=4
+        spark, tiny_pages, out_path, cp_path, run_id="r4", cfg=CFG
     )
     assert s["n_docs"] == tiny_pages.count()
     out = spark.read.parquet(out_path)
@@ -138,8 +137,6 @@ def test_grouped_commit_bounds_rework(spark, tiny_pages, paths):
     the re-run redoes only the remainder."""
     import pytest as _pytest
     from dataclasses import replace
-
-    from paddle_spark.operators.checkpoint import run_extract_job_grouped
 
     out_path, cp_path = paths
     # find a url in the LAST group (bucket % 4 == 3) to poison
@@ -153,18 +150,18 @@ def test_grouped_commit_bounds_rework(spark, tiny_pages, paths):
     )
     poisoned = replace(CFG, fail_batch_marker=victim)
     with _pytest.raises(Exception):
-        run_extract_job_grouped(
+        run_extract_job(
             spark, tiny_pages, out_path, cp_path, run_id="rg", cfg=poisoned,
-            n_groups=4, n_partitions=4,
+            n_groups=4,
         )
     # groups 0-2 committed durably (their buckets have lineage), group 3 not
     done = {r["bucket"] for r in completed_buckets(spark, cp_path, "rg").collect()}
     assert done and all(b % 4 != 3 for b in done)
 
     # clean resume completes only the remainder, exactly-once overall
-    s = run_extract_job_grouped(
+    s = run_extract_job(
         spark, tiny_pages, out_path, cp_path, run_id="rg", cfg=CFG,
-        n_groups=4, n_partitions=4,
+        n_groups=4,
     )
     assert s["buckets_skipped"] == len(done)
     out = spark.read.parquet(out_path)
@@ -187,20 +184,16 @@ def test_reused_output_dir_never_attributes_stale_data(spark, tiny_pages, paths)
     holds an EARLIER run's output must (a) not record the old run's docs as
     this run's successes, (b) actually process every group of the current
     input. Exactness comes from the per-row run_id stamp."""
-    from paddle_spark.operators.checkpoint import run_extract_job_grouped
-
     out_path, cp_path = paths
     # old run over the full corpus, separate checkpoint dir (dead lineage)
     run_extract_job(
-        spark, tiny_pages, out_path, cp_path + "_old", run_id="old", cfg=CFG,
-        n_partitions=4,
+        spark, tiny_pages, out_path, cp_path + "_old", run_id="old", cfg=CFG
     )
     # new grouped run over a 60-doc subset into the SAME output dir
     subset = tiny_pages.limit(60)
     n_subset = subset.count()
-    s = run_extract_job_grouped(
-        spark, subset, out_path, cp_path, run_id="new", cfg=CFG, n_groups=4,
-        n_partitions=4,
+    s = run_extract_job(
+        spark, subset, out_path, cp_path, run_id="new", cfg=CFG, n_groups=4
     )
     assert s["n_docs"] == n_subset, "lineage must count ONLY this run's docs"
     cp = read_checkpoint(spark, cp_path).filter(F.col("run_id") == "new")
@@ -249,6 +242,33 @@ def test_run_starts_three_jobs(spark, tiny_pages, paths):
         lambda: run_extract_job(spark, tiny_pages, out_path, cp_path,
                                 run_id="j1", cfg=CFG),
     ) == 2
+
+
+def test_grouped_run_starts_three_jobs_per_group(spark, tiny_pages, paths, monkeypatch):
+    """A fresh run in 4 groups over 8 buckets is three jobs per group (the
+    rebalance map stage, the write, the checkpoint append) and reads the
+    checkpoint once, before the first group."""
+    from paddle_spark.operators import checkpoint as checkpoint_mod
+
+    reads = []
+    read = checkpoint_mod.read_checkpoint
+
+    def spy(*args):
+        reads.append(args)
+        return read(*args)
+
+    monkeypatch.setattr(checkpoint_mod, "read_checkpoint", spy)
+    out_path, cp_path = paths
+    assert _jobs_started(
+        spark, "grouped_run",
+        lambda: run_extract_job(spark, tiny_pages, out_path, cp_path,
+                                run_id="g1", cfg=CFG, n_groups=4),
+    ) == 12
+    assert len(reads) == 1
+    assert_lineage_is_oracle(spark, out_path, cp_path, "g1")
+    with pytest.raises(ValueError):
+        run_extract_job(spark, tiny_pages, out_path, cp_path, run_id="g0",
+                        cfg=CFG, n_groups=0)
 
 
 def test_kernels_run_below_the_one_bucket_rebalance(spark, tiny_pages, paths, monkeypatch):
@@ -430,7 +450,7 @@ def test_table_write_branch(spark, tiny_pages, tmp_path):
     try:
         s = run_extract_job(
             spark, tiny_pages, str(tmp_path / "unused_out"),
-            str(tmp_path / "unused_cp"), run_id="t1", cfg=CFG, n_partitions=4,
+            str(tmp_path / "unused_cp"), run_id="t1", cfg=CFG,
             output_table=out_t, checkpoint_table=cp_t,
         )
         assert s["n_docs"] == tiny_pages.count()
@@ -443,7 +463,7 @@ def test_table_write_branch(spark, tiny_pages, tmp_path):
         # second invocation, same run_id: everything skipped, lineage append-only
         s2 = run_extract_job(
             spark, tiny_pages, str(tmp_path / "unused_out"),
-            str(tmp_path / "unused_cp"), run_id="t1", cfg=CFG, n_partitions=4,
+            str(tmp_path / "unused_cp"), run_id="t1", cfg=CFG,
             output_table=out_t, checkpoint_table=cp_t,
         )
         assert s2["n_docs"] == 0 and s2["buckets_skipped"] == CFG.n_buckets
@@ -476,7 +496,7 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
     try:
         s = run_extract_job(
             spark, tiny_pages, str(tmp_path / "uo"), str(tmp_path / "uc"),
-            run_id="i1", cfg=CFG, n_partitions=4,
+            run_id="i1", cfg=CFG,
             output_table=out_t, checkpoint_table=cp_t,
         )
         assert s["n_docs"] == tiny_pages.count()
@@ -485,7 +505,7 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
         # same run_id: full resume, zero new rows, lineage intact
         s2 = run_extract_job(
             spark, tiny_pages, str(tmp_path / "uo"), str(tmp_path / "uc"),
-            run_id="i1", cfg=CFG, n_partitions=4,
+            run_id="i1", cfg=CFG,
             output_table=out_t, checkpoint_table=cp_t,
         )
         assert s2["n_docs"] == 0 and s2["buckets_skipped"] == CFG.n_buckets
@@ -497,7 +517,7 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
         ).filter(F.col("b") < 2).drop("b")
         run_extract_job(
             spark, sub, str(tmp_path / "uo"), str(tmp_path / "uc"),
-            run_id="i2", cfg=CFG, n_partitions=4,
+            run_id="i2", cfg=CFG,
             output_table=out_t, checkpoint_table=cp_t,
         )
         out = spark.table(out_t)
@@ -556,3 +576,28 @@ def test_rebalance_split_keeps_output(spark, tiny_pages, tmp_path):
     assert_lineage_is_oracle(spark, out_path, cp_path, "s1")
     assert again["n_docs"] == 0
     assert again["buckets_skipped"] == CFG.n_buckets
+
+
+def test_extract_job_cli_groups_and_resumes(spark, tmp_path, capsys):
+    """jobs/extract.py in the caller's session: a 4-group run writes one
+    file per bucket directory, the same command again skips every bucket,
+    and the caller's session survives both runs."""
+    import jobs.extract as job
+
+    argv = ["--gen", "200", "--n-buckets", "8", "--bucket-groups", "4",
+            "--output", str(tmp_path / "out"),
+            "--checkpoint", str(tmp_path / "cp"), "--run-id", "cli"]
+
+    def summary():
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert job.main(argv) == 0
+    first = summary()
+    assert first["n_docs"] == 200 and first["buckets_skipped"] == 0
+    files = _files_per_bucket(str(tmp_path / "out"))
+    assert len(files) == 8 and set(files.values()) == {1}, files
+    assert job.main(argv) == 0
+    again = summary()
+    assert again["n_docs"] == 0
+    assert again["buckets_skipped"] == 8
+    assert spark.range(3).count() == 3

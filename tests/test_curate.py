@@ -70,9 +70,9 @@ def test_repetition_gate(spark, tiny_pages):
     any other stage (off by default = identical funnel)."""
     from paddle_spark.operators.curate import curate
 
-    base, c0 = curate(tiny_pages, n_partitions=4)
+    base, c0 = curate(tiny_pages)
     gated, c1 = curate(
-        tiny_pages, n_partitions=4, max_dup_line_frac=0.05,
+        tiny_pages, max_dup_line_frac=0.05,
         max_top_bigram_frac=0.5,
     )
     assert "after_repetition" in c1 and "after_repetition" not in c0
@@ -171,7 +171,7 @@ def test_curate_job_counts_written_without_reading_back(spark, tmp_path, capsys,
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     out = str(tmp_path / "curated")
-    assert job.main(["--gen", "120", "--n-partitions", "4", "--output", out]) == 0
+    assert job.main(["--gen", "120", "--output", out]) == 0
     monkeypatch.undo()
     counts = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out not in read

@@ -39,7 +39,7 @@ def snapshots(spark):
 def test_delta_equals_full_reextraction(spark, snapshots):
     v1, v2 = snapshots
     prev = extract_pages(v1, n_partitions=4).withColumn("run_id", F.lit("r1"))
-    merged = delta_extract(v2, prev, n_partitions=4)
+    merged = delta_extract(v2, prev)
     full = extract_pages(v2, n_partitions=4)
     assert merged.count() == v2.count()
     m = {r["url"]: (r["text_sha256"], r["payload_xxh"]) for r in merged.collect()}
@@ -73,7 +73,7 @@ def test_delta_write_is_one_file_per_bucket(spark, snapshots, tmp_path):
     v1, v2 = snapshots
     prev = extract_pages(v1, n_partitions=4).withColumn("run_id", F.lit("r1"))
     out = str(tmp_path / "out")
-    delta_extract(v2, prev, n_partitions=4).write.partitionBy("bucket").parquet(out)
+    delta_extract(v2, prev).write.partitionBy("bucket").parquet(out)
     files = _files_per_bucket(out)
     assert set(files.values()) == {1}, files
 
@@ -90,7 +90,7 @@ def test_delta_duplicate_keys(spark, snapshots):
     prev_dup = prev_dup.unionByName(prev_dup.limit(25)).withColumn(
         "run_id", F.lit("r1")
     )
-    merged = delta_extract(v2_dup, prev_dup, n_partitions=4)
+    merged = delta_extract(v2_dup, prev_dup)
     full = extract_pages(v2.dropDuplicates(["url"]), n_partitions=4)
     assert merged.count() == v2.count()  # one row per distinct key
     m = {r["url"]: (r["text_sha256"], r["payload_xxh"]) for r in merged.collect()}
@@ -170,7 +170,7 @@ def test_delta_wet_snapshot(spark):
     s = delta_stats(v2, prev, wet=True)
     assert s["snapshot_docs"] == 52
     assert s["to_extract"] == 5, "unchanged WET rows must not re-extract"
-    merged = delta_extract(v2, prev, cfg, n_partitions=4)
+    merged = delta_extract(v2, prev, cfg)
     full = extract_pages(v2, cfg, n_partitions=4)
     assert merged.count() == full.count() == 52
     m = {(r["url"], r["payload_xxh"]): r["text_sha256"] for r in merged.collect()}

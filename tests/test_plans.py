@@ -22,21 +22,34 @@ def test_filter_pushed_to_scan(spark, tmp_path, tiny_pages):
     assert "PushedFilters" in plan and "lang" in plan.split("PushedFilters")[1][:200]
 
 
-def test_resume_antijoin_is_broadcast(spark, tiny_pages, tmp_path):
+def test_resume_plan_filters_without_a_join(spark, tiny_pages, tmp_path, monkeypatch):
+    """A resumed run drops its done buckets with a driver-side NOT IN
+    filter: the plan it writes has no join and exactly one Exchange, the
+    bucket rebalance."""
     from paddle_spark.config import ExtractConfig
-    from paddle_spark.operators.checkpoint import run_extract_job, completed_buckets
     from paddle_spark.functions import url_bucket_col
+    from paddle_spark.operators import checkpoint as checkpoint_mod
 
     cfg = ExtractConfig(n_buckets=8)
     out, cp = str(tmp_path / "o"), str(tmp_path / "c")
-    run_extract_job(spark, tiny_pages.limit(20), out, cp, run_id="p1", cfg=cfg)
-    done = completed_buckets(spark, cp, "p1")
-    pages_b = tiny_pages.withColumn(
-        "bucket", url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt)
+    half = tiny_pages.filter(
+        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt) < 4
     )
-    todo = pages_b.join(F.broadcast(done), "bucket", "left_anti")
-    plan = plan_of(todo)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    checkpoint_mod.run_extract_job(spark, half, out, cp, run_id="p1", cfg=cfg)
+
+    written = []
+    write = checkpoint_mod.write_extracted
+
+    def spy(extracted, *args, **kwargs):
+        written.append(plan_of(extracted))
+        return write(extracted, *args, **kwargs)
+
+    monkeypatch.setattr(checkpoint_mod, "write_extracted", spy)
+    s = checkpoint_mod.run_extract_job(spark, tiny_pages, out, cp, run_id="p1", cfg=cfg)
+    assert s["buckets_skipped"] == 4
+    (plan,) = written
+    assert "Join" not in plan, plan
+    assert sum("Exchange" in ln for ln in plan.splitlines()) == 1, plan
 
 
 def test_relational_query_wholestage_codegen(spark):
