@@ -71,13 +71,12 @@ def _local_row_groups(files: list[str]) -> int | None:
     try:
         import pyarrow.parquet as pq
 
+        from paddle_spark.operators.checkpoint import local_path
+
         total = 0
         for f in files:
-            if f.startswith("file:"):
-                f = f[5:]
-            elif "://" in f:
-                return None
-            if not os.path.exists(f):
+            f = local_path(f)
+            if f is None or not os.path.exists(f):
                 return None
             total += pq.ParquetFile(f).metadata.num_row_groups
         return total

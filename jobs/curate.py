@@ -6,7 +6,7 @@
 Prints one JSON line with the funnel counts.
 
 Session: plans.session.build_session sets the engine keys; the launcher
-owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
+owns master, memory, UI and the three sizing keys (plans/session.py).
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ The previous output table's ``payload_xxh`` column is the change index
 Prints one JSON summary line with the work-saved fraction.
 
 Session: plans.session.build_session sets the engine keys; the launcher
-owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
+owns master, memory, UI and the three sizing keys (plans/session.py).
 """
 
 from __future__ import annotations
@@ -47,9 +47,18 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--no-wet", dest="wet", action="store_false",
                     help="force WET handling off (skip the auto-probe)")
     args = ap.parse_args(argv)
-    out_norm = os.path.normpath(os.path.realpath(args.output))
+
+    from paddle_spark.operators.checkpoint import local_path
+
+    def resolved(path: str) -> str:
+        # plain paths and file: URIs name the same local tree; compare
+        # every other store by its normalized URI
+        local = local_path(path)
+        return os.path.realpath(local) if local is not None else os.path.normpath(path)
+
+    out_norm = resolved(args.output)
     for other in (args.prev, args.input_new):
-        o_norm = os.path.normpath(os.path.realpath(other))
+        o_norm = resolved(other)
         # reject equality AND ancestry in either direction: a static
         # overwrite of an ancestor deletes the input tree recursively
         if (

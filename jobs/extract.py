@@ -35,7 +35,7 @@ accumulator, so the job needs a classic session (spark-submit gives one);
 Spark Connect has no accumulators.
 
 Session: plans.session.build_session sets the engine keys; the launcher
-owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
+owns master, memory, UI and the three sizing keys (plans/session.py).
 """
 
 from __future__ import annotations

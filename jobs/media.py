@@ -17,7 +17,7 @@ Prints one JSON line: {"n_media", "n_decoded", "decode_rate",
 "by_kind": {...}, "elapsed_sec", "imgs_per_sec"}.
 
 Session: plans.session.build_session sets the engine keys; the launcher
-owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
+owns master, memory, UI and the three sizing keys (plans/session.py).
 """
 
 from __future__ import annotations

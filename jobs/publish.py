@@ -20,7 +20,7 @@ archive per input partition), the CDX write's only shuffle is the range
 exchange that gives the index its total order.
 
 Session: plans.session.build_session sets the engine keys; the launcher
-owns master, memory, UI, shuffle.partitions and files.minPartitionNum.
+owns master, memory, UI and the three sizing keys (plans/session.py).
 """
 
 from __future__ import annotations

@@ -37,6 +37,7 @@ import uuid
 from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,9 +86,40 @@ def _empty_checkpoint(spark: SparkSession) -> DataFrame:
     )
 
 
+def local_path(path: str) -> str | None:
+    """The local file ``path`` names, split as Hadoop splits a path (a
+    scheme is a ``:`` before the first ``/``): a path without a scheme as
+    is, a ``file:`` URI without an authority (``file:/x``, ``file:///x``)
+    as ``/x``; None for every other scheme or authority."""
+    colon, slash = path.find(":"), path.find("/")
+    if colon == -1 or -1 < slash < colon:
+        return path
+    scheme, rest = path[:colon], path[colon + 1:]
+    if scheme.lower() != "file":
+        return None
+    if rest.startswith("//"):
+        authority, _, tail = rest[2:].partition("/")
+        return None if authority else "/" + tail
+    return rest
+
+
 def read_checkpoint(spark: SparkSession, path: str | None) -> DataFrame:
-    if path and os.path.isdir(path) and any(
-        f.endswith(".parquet") for root, _, fs in os.walk(path) for f in fs
+    """The lineage rows under ``path``; an absent or empty checkpoint reads
+    as no rows. A local path is probed with ``os``, which starts no job
+    (a fresh run's checkpoint is missing); any other store is asked
+    through Spark, whose missing-path error means empty."""
+    if not path:
+        return _empty_checkpoint(spark)
+    local = local_path(path)
+    if local is None:
+        try:
+            return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return _empty_checkpoint(spark)
+    if os.path.isdir(local) and any(
+        f.endswith(".parquet") for _, _, fs in os.walk(local) for f in fs
     ):
         return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
     return _empty_checkpoint(spark)

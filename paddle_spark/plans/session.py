@@ -4,15 +4,18 @@ AQE with coalescing, its 64 KB partition floor and the skew-join split, Arrow
 with 2048-row batches, snappy) and the WARN log level. The coalescing floor is
 an engine key, not a sizing key: it bounds the fixed cost per task, whatever
 the cluster's size. The launcher owns master, driver memory,
-UI and the sizing keys ``spark.sql.shuffle.partitions`` and
-``spark.sql.files.minPartitionNum``: ``build_session(app)`` sets none of
-them, so ``spark-submit --conf`` decides, else Spark's defaults hold
-(``local[*]`` when launched bare, 200 shuffle partitions, no scan floor).
-As ``getOrCreate`` applies builder keys to an existing session, this also
+UI and the three sizing keys ``spark.sql.shuffle.partitions``,
+``spark.sql.files.minPartitionNum`` and
+``spark.sql.sources.parallelPartitionDiscovery.parallelism``:
+``build_session(app)`` sets none of them, so ``spark-submit --conf``
+decides, else Spark's defaults hold (``local[*]`` when launched bare, 200
+shuffle partitions, no scan floor, up to 10000 listing tasks). As
+``getOrCreate`` applies builder keys to an existing session, this also
 keeps a job run inside a caller's session (the tests) from resizing it.
 ``cores=K`` is the local sandbox the benchmarks and tests measure through:
-it adds ``local[K]``, UI off, ``SPARK_DRIVER_MEM`` (default 16g) and both
-sizing keys at K (shuffle partitions at ``shuffle_partitions`` if given).
+it adds ``local[K]``, UI off, ``SPARK_DRIVER_MEM`` (default 16g) and the
+three sizing keys at K (shuffle partitions at ``shuffle_partitions`` if
+given).
 """
 
 from __future__ import annotations
@@ -80,6 +83,12 @@ def build_session(
             # this floor is a no-op; on single-file fixtures it is what lets
             # query plans drop their round-robin fan-out exchange.
             "spark.sql.files.minPartitionNum": str(cores),
+            # Reading a partitionBy(bucket) output lists its directories in
+            # a Spark job once there are more than 32 of them; the job runs
+            # min(#dirs, this) tasks, each deserializing the whole Hadoop
+            # conf. Spark's 10000 makes a 64-bucket read a 64-task job on K
+            # cores; K tasks list the same directories.
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism": str(cores),
             "spark.ui.enabled": "false",
             "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "16g"),
         })

@@ -18,6 +18,7 @@ from paddle_spark.config import ExtractConfig
 from paddle_spark.functions import url_bucket_col
 from paddle_spark.operators.checkpoint import (
     completed_buckets,
+    local_path,
     read_checkpoint,
     run_extract_job,
 )
@@ -323,6 +324,72 @@ def test_small_write_stage_spreads_over_cores(spark, tmp_path):
     tracker = spark.sparkContext.statusTracker()
     write_stage = max(tracker.getJobInfo(write_job).stageIds)
     assert tracker.getStageInfo(write_stage).numTasks > 1
+
+
+def test_bucketed_read_lists_in_core_count_tasks(spark, tmp_path):
+    """Reading back a 64-bucket output lists its bucket directories in a
+    job of at most 4 tasks (the conftest session's cores), not one task
+    per directory as Spark's default discovery parallelism would run."""
+    out = str(tmp_path / "out")
+    spark.range(64).withColumn("bucket", F.col("id")).write.partitionBy(
+        "bucket").parquet(out)
+    jobs = _job_ids(spark, "listing", lambda: spark.read.parquet(out))
+    assert jobs
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [tracker.getStageInfo(s).numTasks
+             for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert max(tasks) <= 4, tasks
+
+
+@pytest.mark.parametrize("path, local", [
+    ("/d/cp", "/d/cp"),
+    ("rel/cp", "rel/cp"),
+    ("/d/a:b", "/d/a:b"),
+    ("file:/d/cp", "/d/cp"),
+    ("file:///d/cp", "/d/cp"),
+    ("file://host/d/cp", None),
+    ("hdfs://nn/d/cp", None),
+    ("s3a://bucket/cp", None),
+])
+def test_local_path(path, local):
+    assert local_path(path) == local
+
+
+def test_file_uri_checkpoint_resumes(spark, tiny_pages, paths):
+    """A ``file:`` URI names the same local checkpoint as its plain path:
+    the re-run with the same run_id extracts nothing and adds no lineage."""
+    out_path, cp_path = paths
+    cp_uri = "file://" + os.path.abspath(cp_path)
+    run_extract_job(spark, tiny_pages, out_path, cp_uri, run_id="u1", cfg=CFG)
+    again = run_extract_job(spark, tiny_pages, out_path, cp_uri, run_id="u1",
+                            cfg=CFG)
+    assert again["n_docs"] == 0
+    assert again["buckets_skipped"] == CFG.n_buckets
+    assert read_checkpoint(spark, cp_path).count() == CFG.n_buckets
+
+
+def test_remote_checkpoint_resumes(spark, tiny_pages, paths):
+    """A checkpoint on a non-local store (a viewfs mount of the test's
+    directory) is read through Spark: missing, it reads as empty; after a
+    run, the re-run with the same run_id extracts nothing."""
+    import uuid
+
+    out_path, cp_path = paths
+    cluster = "cp" + uuid.uuid4().hex[:8]
+    key = f"fs.viewfs.mounttable.{cluster}.link./cp"
+    spark.conf.set(key, "file://" + os.path.abspath(cp_path))
+    try:
+        cp_uri = f"viewfs://{cluster}/cp"
+        assert read_checkpoint(spark, cp_uri).count() == 0
+        first = run_extract_job(spark, tiny_pages, out_path, cp_uri,
+                                run_id="v1", cfg=CFG)
+        assert first["n_docs"] == tiny_pages.count()
+        again = run_extract_job(spark, tiny_pages, out_path, cp_uri,
+                                run_id="v1", cfg=CFG)
+        assert again["n_docs"] == 0
+        assert read_checkpoint(spark, cp_uri).count() == CFG.n_buckets
+    finally:
+        spark.conf.unset(key)
 
 
 def test_partition_counts_replace_repeated_partition(spark, tiny_pages):

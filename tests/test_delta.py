@@ -137,6 +137,26 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
                   "--output", str(tmp_path / "prev")])
 
 
+@pytest.mark.parametrize("output, other", [
+    ("{d}/out", "file://{d}/out/prev"),
+    ("file:{d}/out", "{d}/out"),
+    ("file://{d}/out/x", "{d}/out"),
+    ("hdfs://nn/out", "hdfs://nn/out/prev"),
+])
+@pytest.mark.parametrize("flag", ["--prev", "--input-new"])
+def test_delta_job_rejects_nesting_in_any_path_form(tmp_path, output, other, flag):
+    """The overwrite guard compares what a path names, not how it is
+    spelled: a plain path and a ``file:`` URI of one local tree nest."""
+    import jobs.delta as job
+
+    d = str(tmp_path)
+    args = {"--prev": str(tmp_path / "p"), "--input-new": str(tmp_path / "n")}
+    args[flag] = other.format(d=d)
+    with pytest.raises(SystemExit):
+        job.main(["--output", output.format(d=d),
+                  *(x for kv in args.items() for x in kv)])
+
+
 def test_delta_wet_snapshot(spark):
     """WET conversion rows (html null, text pre-extracted) must key the
     delta on the text bytes: unchanged WET rows carry forward (never

@@ -21,7 +21,11 @@ ENGINE = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     "spark.sql.parquet.compression.codec": "snappy",
 }
-SIZING = ("spark.sql.shuffle.partitions", "spark.sql.files.minPartitionNum")
+SIZING = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+)
 
 _LAUNCHED_SCRIPT = r"""
 import json, sys
@@ -45,6 +49,8 @@ def test_cores_k_sets_engine_and_local_sizing(spark):
         assert spark.conf.get(k) == v, k
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.conf.get("spark.sql.files.minPartitionNum") == "4"
+    assert spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism") == "4"
     assert spark.sparkContext.master == "local[4]"
     assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
 
@@ -72,6 +78,8 @@ def test_launcher_owns_deployment_and_sizing():
     assert res["ui"] is None
     assert res["conf"]["spark.sql.shuffle.partitions"] == "3"
     assert res["conf"]["spark.sql.files.minPartitionNum"] is None
+    assert res["conf"][
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism"] is None
     for k, v in ENGINE.items():
         assert res["conf"][k] == v, k
 
