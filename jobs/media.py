@@ -48,9 +48,10 @@ def main(argv: list[str] | None = None) -> int:
     if not args.gen and not args.input:
         ap.error("one of --input / --gen is required")
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
+    from paddle_spark.kernels.classify import PAYLOAD_KINDS
     from paddle_spark.operators.multimodal import (
         binary_meta, pixel_stats, visual_features,
     )
@@ -67,21 +68,24 @@ def main(argv: list[str] | None = None) -> int:
     else:
         media = spark.read.parquet(args.input)
 
+    # counts ride on the map-only writes (observe in a result stage counts
+    # each task once); the job never reads its output back
     t0 = time.time()
-    meta = binary_meta(media)
-    meta.write.mode("overwrite").parquet(os.path.join(args.output, "meta"))
+    meta_obs = Observation("meta")
+    binary_meta(media).observe(
+        meta_obs,
+        F.count(F.lit(1)).alias("n_media"),
+        *[F.count_if(F.col("kind") == k).alias(k) for k in PAYLOAD_KINDS],
+    ).write.mode("overwrite").parquet(os.path.join(args.output, "meta"))
 
     n_decoded = None
     if args.codec != "fake":
+        pixels_obs = Observation("pixels")
         stats = pixel_stats(media, max_dim=args.max_dim, codec=args.codec)
-        stats.write.mode("overwrite").parquet(
-            os.path.join(args.output, "pixels")
-        )
-        n_decoded = (
-            spark.read.parquet(os.path.join(args.output, "pixels"))
-            .filter(F.col("decode_ok"))
-            .count()
-        )
+        stats.observe(
+            pixels_obs, F.count_if(F.col("decode_ok")).alias("n_decoded")
+        ).write.mode("overwrite").parquet(os.path.join(args.output, "pixels"))
+        n_decoded = pixels_obs.get["n_decoded"]
     if args.features and args.codec == "fake":
         # visual_features has no digest stand-in arm (decoder_for knows
         # no 'fake'); skip it like the pixel stage does instead of
@@ -95,12 +99,9 @@ def main(argv: list[str] | None = None) -> int:
         )
     elapsed = time.time() - t0
 
-    meta_df = spark.read.parquet(os.path.join(args.output, "meta"))
-    n_media = meta_df.count()
-    by_kind = {
-        r["kind"]: r["n"]
-        for r in meta_df.groupBy("kind").agg(F.count("*").alias("n")).collect()
-    }
+    counts = meta_obs.get
+    n_media = counts["n_media"]
+    by_kind = {k: counts[k] for k in PAYLOAD_KINDS if counts[k]}
     print(
         json.dumps(
             {

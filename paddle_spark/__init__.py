@@ -17,7 +17,9 @@ pipeline over Common-Crawl-style page tables:
   sampling (MJPEG through the same JPEG kernel, BI_RGB raw DIB), visual
   features (dhash + histogram embeddings), banded visual near-dup, frame
   sampling, orientation classify and table-grid markdown — all map-only
-  mapInPandas plans behind an explicit pixel-codec gate.
+  mapInPandas plans; the host picks the pixel decoder
+  (``kernels.pixels.decoder_for``), and one per-item map
+  (``operators.per_item``) turns a poisoned payload into a failure row.
 - Both branches run inside ``mapInPandas`` over Arrow batches — never
   per-row Python at the DataFrame level.
 

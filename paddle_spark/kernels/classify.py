@@ -42,6 +42,8 @@ KIND_IMAGE = "image"
 KIND_AUDIO = "audio"
 KIND_VIDEO = "video"
 KIND_GARBAGE = "garbage"
+# every value classify_payload / functions.payload_kind_col returns
+PAYLOAD_KINDS = (KIND_HTML, KIND_PDF, KIND_IMAGE, KIND_AUDIO, KIND_VIDEO, KIND_GARBAGE)
 
 
 def classify_payload(payload: bytes | None) -> str:

@@ -11,7 +11,8 @@ never materializes this at 10^12 scale, so this operator is opt-in.
 
 from __future__ import annotations
 
-import pandas as pd
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -20,6 +21,7 @@ from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
 from paddle_spark.kernels.classify import KIND_HTML, KIND_PDF, classify_payload
 from paddle_spark.kernels.html import segment_blocks
 from paddle_spark.kernels.layout import pdf_pages, process_page
+from paddle_spark.operators.per_item import item_rows, map_per_item
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -40,54 +42,60 @@ BLOCKS_SCHEMA = T.StructType(
 )
 
 
-def document_blocks(url: str, payload: bytes, cfg: ExtractConfig) -> list[tuple]:
-    """Per-document block rows (pure; never raises)."""
-    rows: list[tuple] = []
-    try:
-        kind = classify_payload(payload)
-        if kind == KIND_HTML:
-            for b in segment_blocks(payload, cfg):
-                rows.append(
-                    (url, 0, b.block_id, "html", b.tag or "text", None, None,
-                     None, None, None, b.text, b.kept, b.drop_reason or None)
-                )
-        elif kind == KIND_PDF:
-            pages = pdf_pages(payload)[: cfg.hard_page_cap]
-            for page_no, page in enumerate(pages):
-                blocks, _ = process_page(page, cfg)
-                for i, blk in enumerate(blocks):
-                    x1, y1, x2, y2 = blk["bbox"]
-                    rows.append(
-                        (url, page_no, i, "layout", blk["label"], x1, y1, x2,
-                         y2, blk["score"], blk["text"], True, None)
-                    )
-                if not blocks and page.get("images") and cfg.ocr_scanned_pdfs:
-                    # scanned page: the SAME fallback extract_layout runs,
-                    # surfaced here with the detector's per-line boxes
-                    from paddle_spark.kernels.scan import ocr_page
+HTML_TABLES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), True),
+        T.StructField("table_no", T.IntegerType(), True),
+        T.StructField("table_md", T.StringType(), True),
+    ]
+)
 
-                    i = 0
-                    for img in page["images"]:
-                        r = ocr_page(img, cfg)
-                        if not r.text:
+
+def _block_rows(url: str, payload: bytes, cfg: ExtractConfig):
+    """Yield one document's block rows; raises on a poisoned payload."""
+    kind = classify_payload(payload)
+    if kind == KIND_HTML:
+        for b in segment_blocks(payload, cfg):
+            yield (url, 0, b.block_id, "html", b.tag or "text", None, None,
+                   None, None, None, b.text, b.kept, b.drop_reason or None)
+    elif kind == KIND_PDF:
+        pages = pdf_pages(payload)[: cfg.hard_page_cap]
+        for page_no, page in enumerate(pages):
+            blocks, _ = process_page(page, cfg)
+            for i, blk in enumerate(blocks):
+                x1, y1, x2, y2 = blk["bbox"]
+                yield (url, page_no, i, "layout", blk["label"], x1, y1, x2,
+                       y2, blk["score"], blk["text"], True, None)
+            if not blocks and page.get("images") and cfg.ocr_scanned_pdfs:
+                # scanned page: the SAME fallback extract_layout runs,
+                # surfaced here with the detector's per-line boxes
+                from paddle_spark.kernels.scan import ocr_page
+
+                i = 0
+                for img in page["images"]:
+                    r = ocr_page(img, cfg)
+                    if not r.text:
+                        continue
+                    for ln, box in zip(
+                        r.text.split("\n"), r.line_boxes
+                    ):
+                        if not ln:
                             continue
-                        for ln, box in zip(
-                            r.text.split("\n"), r.line_boxes
-                        ):
-                            if not ln:
-                                continue
-                            x1, y1, x2, y2 = box
-                            rows.append(
-                                (url, page_no, i, "layout", "ocr_text",
-                                 x1, y1, x2, y2, None, ln, True, None)
-                            )
-                            i += 1
-    except Exception as exc:  # noqa: BLE001 — per-doc isolation (T5)
-        rows.append(
-            (url, 0, 0, "error", "error", None, None, None, None, None,
-             None, False, f"{type(exc).__name__}: {exc}")
-        )
-    return rows
+                        x1, y1, x2, y2 = box
+                        yield (url, page_no, i, "layout", "ocr_text",
+                               x1, y1, x2, y2, None, ln, True, None)
+                        i += 1
+
+
+def _error_row(url: str, exc: Exception) -> tuple:
+    return (url, 0, 0, "error", "error", None, None, None, None, None,
+            None, False, f"{type(exc).__name__}: {exc}")
+
+
+def document_blocks(url: str, payload: bytes, cfg: ExtractConfig) -> list[tuple]:
+    """Per-document block rows (pure; never raises: a poisoned payload
+    keeps the rows made before the fault and ends in one ``error`` row)."""
+    return item_rows(partial(_block_rows, cfg=cfg), url, payload, _error_row)
 
 
 def extract_blocks(
@@ -97,16 +105,8 @@ def extract_blocks(
     """Fan out documents into block rows (1 -> N, Arrow-batched). The plan
     is map-only; a caller that wants fan-out repartitions before the
     call."""
-    src = pages.select("url", "html")
-
-    def fan_out(batches):
-        for pdf in batches:
-            out: list[tuple] = []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                out.extend(document_blocks(url, payload, cfg))
-            yield pd.DataFrame(out, columns=[f.name for f in BLOCKS_SCHEMA.fields])
-
-    return src.mapInPandas(fan_out, schema=BLOCKS_SCHEMA)
+    return map_per_item(pages.select("url", "html"), BLOCKS_SCHEMA,
+                        partial(_block_rows, cfg=cfg), _error_row)
 
 
 def html_table_blocks(
@@ -127,24 +127,11 @@ def html_table_blocks(
         F.col(url_col).alias("url"), F.col(payload_col).alias("payload")
     )
 
-    def batch(batches):
-        for pdf in batches:
-            urls, nos, mds = [], [], []
-            for url, payload in zip(pdf["url"], pdf["payload"]):
-                try:
-                    tables = html_tables(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except Exception:
-                    continue
-                for i, md in enumerate(tables):
-                    urls.append(url)
-                    nos.append(i)
-                    mds.append(md)
-            yield pd.DataFrame(
-                {"url": urls, "table_no": nos, "table_md": mds}
-            )
+    def table_rows(url, payload):
+        tables = html_tables(
+            bytes(payload) if payload is not None else b""
+        )
+        for i, md in enumerate(tables):
+            yield (url, i, md)
 
-    return src.mapInPandas(
-        batch, schema="url string, table_no int, table_md string"
-    )
+    return map_per_item(src, HTML_TABLES_SCHEMA, table_rows)

@@ -19,6 +19,11 @@ Feature vectors are PIXEL-DERIVED since round 4 (``visual_features``:
 dhash + channel histograms); ``decode_fake``'s digest feature remains
 only as the plumbing stand-in for NEURAL embeddings.
 
+Every Python operator here is a per-payload row function plus its
+failure row, run by ``operators/per_item.map_per_item`` — the package's
+one T5 point: a poisoned payload yields a failure row (or, for the
+frame fan-outs, fewer rows), never a failed task.
+
 Reference analog: the blip-caption backend's batched execute loop
 (/root/reference/server/model_repo/blip-caption/1/model.py:226-292 —
 iterate requests -> decode image -> infer -> encode), which is exactly an
@@ -31,10 +36,12 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from paddle_spark.kernels.pixels import to_3ch
+from paddle_spark.operators.per_item import map_per_item
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -67,6 +74,22 @@ def binary_meta(media: DataFrame, id_col: str = "media_id",
         F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
         F.sha2(F.col(payload_col), 256).alias("sha256"),
         payload_kind_col(F.col(payload_col)).alias("kind"),
+    )
+
+
+def _per_media(media: DataFrame, id_col: str, payload_col: str,
+               schema: T.StructType, rows, failed=None) -> DataFrame:
+    """``map_per_item`` over ``(media_id long, payload)``: ``rows(mid,
+    payload)`` gets the id as an int and the payload as bytes or None;
+    ``failed(mid)`` is the item's failure row."""
+    src = media.select(
+        F.col(id_col).cast("long").alias("media_id"),
+        F.col(payload_col).alias("payload"),
+    )
+    return map_per_item(
+        src, schema,
+        lambda mid, p: rows(int(mid), bytes(p) if p is not None else None),
+        None if failed is None else lambda mid, exc: failed(int(mid)),
     )
 
 
@@ -103,13 +126,10 @@ def decode_media(media: DataFrame, id_col: str = "media_id",
     codec switch, ``kernels/pixels.decoder_for`` ('auto', 'python' or
     'system'), resolved HERE at plan construction;
     the feature becomes the real per-channel pixel means (0..1)."""
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(payload_col).alias("payload")
-    )
     if codec == "fake":
         decode_one = decode_fake
     else:
-        from paddle_spark.kernels.pixels import decoder_for, to_3ch
+        from paddle_spark.kernels.pixels import decoder_for
         from paddle_spark.kernels.raster import decode_image_header
 
         decode = decoder_for(codec)  # validates at plan construction
@@ -124,21 +144,11 @@ def decode_media(media: DataFrame, id_col: str = "media_id",
             means = to_3ch(img).reshape(-1, 3).mean(axis=0) / 255.0
             return int(w), int(h), nf, [round(float(m), 6) for m in means]
 
-    def decode_batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, nf, feat = decode_one(payload)
-                    rows.append((int(mid), w, h, nf, feat, True))
-                except Exception:  # per-item isolation (T5)
-                    rows.append((int(mid), 0, 0, 0, [], False))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_frames", "feature", "decode_ok"],
-            )
+    def decoded(mid, payload):
+        yield (mid, *decode_one(payload), True)
 
-    return src.mapInPandas(decode_batch, schema=DECODED_SCHEMA)
+    return _per_media(media, id_col, payload_col, DECODED_SCHEMA, decoded,
+                      failed=lambda mid: (mid, 0, 0, 0, [], False))
 
 
 VISUAL_SCHEMA = T.StructType(
@@ -176,59 +186,39 @@ def visual_features(
     """
     import numpy as np
 
-    from paddle_spark.kernels.pixels import (
-        decoder_for,
-        resize_bilinear,
-        to_3ch,
-    )
+    from paddle_spark.kernels.pixels import decoder_for, resize_bilinear
 
     decode = decoder_for(codec)
-
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
-    )
     width = 256 // bins
 
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode(
-                        bytes(payload) if payload is not None else None
-                    )
-                    if img is None:
-                        rows.append((int(mid), None, None, False))
-                        continue
-                    img3 = to_3ch(img)
-                    gray = img3.mean(axis=2, dtype=np.float64)
-                    small = resize_bilinear(
-                        gray[:, :, None], hash_size + 1, hash_size
-                    )[:, :, 0]
-                    diff = small[:, :-1] < small[:, 1:]
-                    weights = np.int64(1) << np.arange(
-                        hash_size * hash_size, dtype=np.int64
-                    )
-                    dhash = int((diff.reshape(-1) * weights).sum())
-                    n_px = img3.shape[0] * img3.shape[1]
-                    feat = []
-                    for ch in range(3):
-                        counts = np.bincount(
-                            (img3[:, :, ch] // width).reshape(-1),
-                            minlength=bins,
-                        )[:bins]
-                        feat.extend(
-                            round(float(c) / n_px, 6) for c in counts
-                        )
-                    rows.append((int(mid), dhash, feat, True))
-                except Exception:  # per-item isolation
-                    rows.append((int(mid), None, None, False))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "dhash", "feature", "decode_ok"]
+    def features(mid, payload):
+        img = decode(payload)
+        if img is None:
+            raise ValueError("undecodable payload")
+        img3 = to_3ch(img)
+        gray = img3.mean(axis=2, dtype=np.float64)
+        small = resize_bilinear(
+            gray[:, :, None], hash_size + 1, hash_size
+        )[:, :, 0]
+        diff = small[:, :-1] < small[:, 1:]
+        weights = np.int64(1) << np.arange(
+            hash_size * hash_size, dtype=np.int64
+        )
+        dhash = int((diff.reshape(-1) * weights).sum())
+        n_px = img3.shape[0] * img3.shape[1]
+        feat = []
+        for ch in range(3):
+            counts = np.bincount(
+                (img3[:, :, ch] // width).reshape(-1),
+                minlength=bins,
+            )[:bins]
+            feat.extend(
+                round(float(c) / n_px, 6) for c in counts
             )
+        yield (mid, dhash, feat, True)
 
-    return src.mapInPandas(batch, schema=VISUAL_SCHEMA)
+    return _per_media(media, id_col, payload_col, VISUAL_SCHEMA, features,
+                      failed=lambda mid: (mid, None, None, False))
 
 
 def visual_near_dups(
@@ -324,51 +314,28 @@ def pixel_stats(
     from paddle_spark.kernels.pixels import decoder_for, preprocess_frame
 
     decode = decoder_for(codec)
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
+
+    def stats(mid, payload):
+        img = decode(payload)
+        if img is None:
+            raise ValueError("undecodable payload")
+        h, w = img.shape[:2]
+        nch = img.shape[2] if img.ndim == 3 else 1
+        bgr, ow, oh = preprocess_frame(img, max_dim)
+        means = bgr.reshape(-1, 3).mean(axis=0)  # b, g, r
+        yield (
+            mid, int(w), int(h), int(ow), int(oh),
+            int(nch),
+            round(float(means[2]), 6),
+            round(float(means[1]), 6),
+            round(float(means[0]), 6),
+            True,
+        )
+
+    return _per_media(
+        media, id_col, payload_col, PIXEL_SCHEMA, stats,
+        failed=lambda mid: (mid, 0, 0, 0, 0, 0, None, None, None, False),
     )
-
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode(
-                        bytes(payload) if payload is not None else None
-                    )
-                    if img is None:
-                        rows.append(
-                            (int(mid), 0, 0, 0, 0, 0, None, None, None, False)
-                        )
-                        continue
-                    h, w = img.shape[:2]
-                    nch = img.shape[2] if img.ndim == 3 else 1
-                    bgr, ow, oh = preprocess_frame(img, max_dim)
-                    means = bgr.reshape(-1, 3).mean(axis=0)  # b, g, r
-                    rows.append(
-                        (
-                            int(mid), int(w), int(h), int(ow), int(oh),
-                            int(nch),
-                            round(float(means[2]), 6),
-                            round(float(means[1]), 6),
-                            round(float(means[0]), 6),
-                            True,
-                        )
-                    )
-                except Exception:  # per-item isolation
-                    rows.append(
-                        (int(mid), 0, 0, 0, 0, 0, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "out_width", "out_height",
-                    "n_channels", "mean_r", "mean_g", "mean_b", "decode_ok",
-                ],
-            )
-
-    return src.mapInPandas(batch, schema=PIXEL_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -382,6 +349,20 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("mean_b", T.DoubleType(), True),
     ]
 )
+
+
+def _frame_row(mid: int, fno: int, img) -> tuple:
+    """One FRAME_SCHEMA row: a decoded frame's dims + channel means. Gray /
+    gray+alpha frames normalize to 3 channels first, so 1-channel decodes
+    report means too."""
+    h, w = img.shape[:2]
+    m = to_3ch(img).reshape(-1, 3).mean(axis=0)
+    return (
+        mid, int(fno), int(w), int(h),
+        round(float(m[0]), 6),
+        round(float(m[1]), 6),
+        round(float(m[2]), 6),
+    )
 
 
 def frame_sample(
@@ -427,50 +408,17 @@ def frame_sample(
             return decode_tiff_pixels(p, ifd=fno)
         return decode(p) if fno == 0 else None
 
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
-    )
+    def frames(mid, p):
+        if not p:
+            return
+        meta = decode_image_header(p)
+        n = int(meta["n_frames"]) if meta else 1
+        for fno in list(range(0, n, every_k))[:max_frames]:
+            img = decode_frame(p, fno)
+            if img is not None:
+                yield _frame_row(mid, fno, img)
 
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    p = bytes(payload) if payload is not None else None
-                    if not p:
-                        continue
-                    meta = decode_image_header(p)
-                    n = int(meta["n_frames"]) if meta else 1
-                    for fno in list(range(0, n, every_k))[:max_frames]:
-                        img = decode_frame(p, fno)
-                        if img is None:
-                            continue
-                        h, w = img.shape[:2]
-                        # gray / gray+alpha frames normalize to 3 channels
-                        # first, so 1-channel decodes report means too
-                        from paddle_spark.kernels.pixels import to_3ch
-
-                        m = to_3ch(img).reshape(-1, 3).mean(axis=0)
-                        rows.append(
-                            (
-                                int(mid), int(fno), int(w), int(h),
-                                round(float(m[0]), 6),
-                                round(float(m[1]), 6),
-                                round(float(m[2]), 6),
-                            )
-                        )
-                except Exception:  # per-item isolation
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_no", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return src.mapInPandas(batch, schema=FRAME_SCHEMA)
+    return _per_media(media, id_col, payload_col, FRAME_SCHEMA, frames)
 
 
 AUDIO_SCHEMA = T.StructType(
@@ -499,34 +447,20 @@ def audio_stats(media: DataFrame, id_col: str = "media_id",
     like the image feature vectors."""
     from paddle_spark.kernels.riffav import audio_features
 
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
+    def stats(mid, p):
+        f = audio_features(p)
+        if f is None:
+            raise ValueError("no PCM audio")
+        yield (
+            mid, f["sample_rate"], f["channels"], f["bits"],
+            f["n_samples"], f["duration_ms"], f["rms"], f["peak"],
+            True,
+        )
+
+    return _per_media(
+        media, id_col, payload_col, AUDIO_SCHEMA, stats,
+        failed=lambda mid: (mid, 0, 0, 0, 0, 0.0, 0.0, 0.0, False),
     )
-
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    p = bytes(payload) if payload is not None else None
-                    f = audio_features(p)
-                except Exception:  # per-item isolation
-                    f = None
-                if f is None:
-                    rows.append((int(mid), 0, 0, 0, 0, 0.0, 0.0, 0.0, False))
-                else:
-                    rows.append((
-                        int(mid), f["sample_rate"], f["channels"], f["bits"],
-                        f["n_samples"], f["duration_ms"], f["rms"], f["peak"],
-                        True,
-                    ))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "channels", "bits", "n_samples",
-                "duration_ms", "rms", "peak", "decode_ok",
-            ])
-
-    return src.mapInPandas(batch, schema=AUDIO_SCHEMA)
 
 
 CONTAINER_SCHEMA = T.StructType([
@@ -553,11 +487,6 @@ def container_meta(media: DataFrame, id_col: str = "media_id",
     from paddle_spark.kernels.ebml import webm_meta
     from paddle_spark.kernels.riffav import avi_meta
 
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
-    )
-
     def _avi(p):
         m = avi_meta(p)
         if m is None:
@@ -567,32 +496,22 @@ def container_meta(media: DataFrame, id_col: str = "media_id",
                 "n_tracks": 1,  # the minimal walk reports the vids stream
                 "width": m["width"], "height": m["height"]}
 
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = None
-                try:
-                    p = bytes(payload) if payload is not None else None
-                    meta = _avi(p) or mp4_meta(p) or webm_meta(p)
-                except Exception:  # per-item isolation
-                    meta = None
-                if meta is None:
-                    rows.append((int(mid), "unknown", None, 0, None, None, False))
-                else:
-                    rows.append((
-                        int(mid), meta["format"],
-                        None if meta["duration_ms"] is None
-                        else float(meta["duration_ms"]),
-                        int(meta["n_tracks"]),
-                        meta["width"], meta["height"], True,
-                    ))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "format", "duration_ms", "n_tracks",
-                "width", "height", "decode_ok",
-            ])
+    def container(mid, p):
+        meta = _avi(p) or mp4_meta(p) or webm_meta(p)
+        if meta is None:
+            raise ValueError("no known container")
+        yield (
+            mid, meta["format"],
+            None if meta["duration_ms"] is None
+            else float(meta["duration_ms"]),
+            int(meta["n_tracks"]),
+            meta["width"], meta["height"], True,
+        )
 
-    return src.mapInPandas(batch, schema=CONTAINER_SCHEMA)
+    return _per_media(
+        media, id_col, payload_col, CONTAINER_SCHEMA, container,
+        failed=lambda mid: (mid, "unknown", None, 0, None, None, False),
+    )
 
 
 def video_frames(
@@ -613,7 +532,7 @@ def video_frames(
     per-item isolation as frame_sample. Frame payloads sniff their own
     codec: JPEG SOI -> the pixel codec switch (MJPEG), else BI_RGB raw
     DIB frames decode directly (uncompressed AVI)."""
-    from paddle_spark.kernels.pixels import decoder_for, to_3ch
+    from paddle_spark.kernels.pixels import decoder_for
     from paddle_spark.kernels.riffav import (
         avi_frames,
         avi_video_format,
@@ -621,55 +540,43 @@ def video_frames(
     )
 
     decode = decoder_for(codec)  # validates at plan construction
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
-    )
 
-    def batch(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    p = bytes(payload) if payload is not None else None
-                    frames = avi_frames(p)
-                    vf = avi_video_format(p) if frames else None
-                    raw_ok = vf is not None and vf["compression"] == 0
-                    for fno in list(range(0, len(frames), every_k))[:max_frames]:
-                        fb = frames[fno]
-                        if fb[:3] == b"\xff\xd8\xff":
-                            img = decode(fb)
-                        elif raw_ok:
-                            img = decode_dib_frame(
-                                fb, vf["width"], vf["height"], vf["bpp"]
-                            )
-                        else:
-                            img = decode(fb)
-                        if img is None:
-                            continue
-                        h, w = img.shape[:2]
-                        m = to_3ch(img).reshape(-1, 3).mean(axis=0)
-                        rows.append((
-                            int(mid), int(fno), int(w), int(h),
-                            round(float(m[0]), 6),
-                            round(float(m[1]), 6),
-                            round(float(m[2]), 6),
-                        ))
-                except Exception:  # per-item isolation
-                    continue
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "frame_no", "width", "height",
-                "mean_r", "mean_g", "mean_b",
-            ])
+    def sampled(mid, p):
+        frames = avi_frames(p)
+        vf = avi_video_format(p) if frames else None
+        raw_ok = vf is not None and vf["compression"] == 0
+        for fno in list(range(0, len(frames), every_k))[:max_frames]:
+            fb = frames[fno]
+            if fb[:3] == b"\xff\xd8\xff":
+                img = decode(fb)
+            elif raw_ok:
+                img = decode_dib_frame(
+                    fb, vf["width"], vf["height"], vf["bpp"]
+                )
+            else:
+                img = decode(fb)
+            if img is not None:
+                yield _frame_row(mid, fno, img)
 
-    return src.mapInPandas(batch, schema=FRAME_SCHEMA)
+    return _per_media(media, id_col, payload_col, FRAME_SCHEMA, sampled)
 
 
-EXIF_SCHEMA = (
-    "media_id long, has_exif boolean, orientation long, make string, "
-    "model string, datetime string, exif_width long, exif_height long, "
-    "iso long, f_number double, exposure_time double, "
-    "gps_lat double, gps_lon double"
+EXIF_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), True),
+        T.StructField("has_exif", T.BooleanType(), True),
+        T.StructField("orientation", T.LongType(), True),
+        T.StructField("make", T.StringType(), True),
+        T.StructField("model", T.StringType(), True),
+        T.StructField("datetime", T.StringType(), True),
+        T.StructField("exif_width", T.LongType(), True),
+        T.StructField("exif_height", T.LongType(), True),
+        T.StructField("iso", T.LongType(), True),
+        T.StructField("f_number", T.DoubleType(), True),
+        T.StructField("exposure_time", T.DoubleType(), True),
+        T.StructField("gps_lat", T.DoubleType(), True),
+        T.StructField("gps_lon", T.DoubleType(), True),
+    ]
 )
 
 
@@ -686,40 +593,20 @@ def exif_meta(
     quarter-turn normalization the scanned-OCR branch applies."""
     from paddle_spark.kernels.exif import parse_exif
 
-    src = media.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.col(payload_col).alias("payload"),
-    )
+    def exif(mid, payload):
+        r = parse_exif(payload)
+        if r is None:
+            raise ValueError("no EXIF")
+        yield (
+            mid, True,
+            int(r["orientation"]) if r["orientation"] is not None else None,
+            r["make"], r["model"], r["datetime"],
+            int(r["exif_width"]) if r["exif_width"] is not None else None,
+            int(r["exif_height"]) if r["exif_height"] is not None else None,
+            int(r["iso"]) if r["iso"] is not None else None,
+            r["f_number"], r["exposure_time"],
+            r["gps_lat"], r["gps_lon"],
+        )
 
-    def batch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    r = parse_exif(
-                        bytes(payload) if payload is not None else None
-                    )
-                except Exception:
-                    r = None
-                if r is None:
-                    rows.append((int(mid), False) + (None,) * 11)
-                    continue
-                rows.append((
-                    int(mid), True,
-                    int(r["orientation"]) if r["orientation"] is not None else None,
-                    r["make"], r["model"], r["datetime"],
-                    int(r["exif_width"]) if r["exif_width"] is not None else None,
-                    int(r["exif_height"]) if r["exif_height"] is not None else None,
-                    int(r["iso"]) if r["iso"] is not None else None,
-                    r["f_number"], r["exposure_time"],
-                    r["gps_lat"], r["gps_lon"],
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "has_exif", "orientation", "make", "model",
-                "datetime", "exif_width", "exif_height", "iso",
-                "f_number", "exposure_time", "gps_lat", "gps_lon",
-            ])
-
-    return src.mapInPandas(batch, schema=EXIF_SCHEMA)
+    return _per_media(media, id_col, payload_col, EXIF_SCHEMA, exif,
+                      failed=lambda mid: (mid, False) + (None,) * 11)

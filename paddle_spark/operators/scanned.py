@@ -5,7 +5,7 @@ map-only ``mapInPandas`` stage decodes each page image and runs the
 deterministic detector chain (binarize -> 8-connected components ->
 line grouping -> reading order -> template OCR). Mirrors the reference's
 image path (model.py:300-337) the same way extract_pages mirrors its
-document path: kernels are pure and Spark-free, per-item try/except
+document path: kernels are pure and Spark-free, ``map_per_item``
 isolates poisoned payloads (T5), and the plan has zero shuffles — a
 caller whose input arrives skewed repartitions it first. Embarrassingly
 parallel at any corpus size.
@@ -13,11 +13,11 @@ parallel at any corpus size.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
+from paddle_spark.operators.per_item import map_per_item
 
 SCANNED_SCHEMA = T.StructType(
     [
@@ -77,18 +77,15 @@ def _scanned_plan(pages: DataFrame, schema: T.StructType, page_ocr) -> DataFrame
     decode = decoder_for("auto")  # resolved at plan construction
     oriented = "rotation" in schema.fieldNames()
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for url, p in zip(pdf["url"], pdf["payload"]):
-                try:
-                    rot, r = page_ocr(decode(p))
-                    row = (url, rot, r.text, r.n_glyphs, r.n_lines,
-                           r.n_dropped, r.parse_ok, r.error)
-                except Exception as e:  # per-item isolation (T5)
-                    row = (url, 0, None, 0, 0, 0, False,
-                           f"{type(e).__name__}: {e}")
-                rows.append(row if oriented else (row[0], *row[2:]))
-            yield pd.DataFrame(rows, columns=schema.fieldNames())
+    def row(url, rot, *rest):
+        return (url, rot, *rest) if oriented else (url, *rest)
 
-    return pages.select("url", "payload").mapInPandas(run, schema=schema)
+    def ocr(url, p):
+        rot, r = page_ocr(decode(p))
+        yield row(url, rot, r.text, r.n_glyphs, r.n_lines, r.n_dropped,
+                  r.parse_ok, r.error)
+
+    def failed(url, e):
+        return row(url, 0, None, 0, 0, 0, False, f"{type(e).__name__}: {e}")
+
+    return map_per_item(pages.select("url", "payload"), schema, ocr, failed)

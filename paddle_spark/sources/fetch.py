@@ -5,8 +5,9 @@ fetch (/root/reference/server/model_repo/layout-parsing/1/model.py:397,
 wheel ``paddlex_hps_client/utils.py``). For a Common-Crawl-shaped table
 the bytes-in-table form is the right default (SURVEY §2 S1), but the URL
 form exists as an injectable stage: a ``fetcher(url) -> bytes`` callable
-runs Arrow-batched with per-item fault isolation (one dead URL = one
-failed row, never a failed task — T5). The default fetcher raises: this
+runs Arrow-batched under ``operators/per_item.map_per_item``, the
+package's one per-item fault isolation point (one dead URL = one failed
+row, never a failed task — T5). The default fetcher raises: this
 sandbox has no network, and a silent stub would hide that.
 
 At scale the fetch stage is IO-bound, not CPU-bound — run it with more
@@ -16,9 +17,10 @@ the fetch so extraction parallelism is not coupled to fetch parallelism.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from paddle_spark.operators.per_item import map_per_item
 
 FETCHED_SCHEMA = T.StructType(
     [
@@ -40,17 +42,13 @@ def default_fetcher(url: str) -> bytes:
 def fetch_pages(urls: DataFrame, fetcher=None, url_col: str = "url") -> DataFrame:
     """urls(url) -> (url, html, fetch_ok, fetch_error), Arrow-batched."""
     fn = fetcher or default_fetcher
-    src = urls.select(urls[url_col].alias("url"))
+    # the url is both the row key and the item the fetcher works on
+    src = urls.select(urls[url_col].alias("url"), urls[url_col].alias("payload"))
 
-    def fetch_batch(batches):
-        for pdf in batches:
-            rows = []
-            for u in pdf["url"]:
-                try:
-                    payload = fn(str(u))
-                    rows.append((u, payload, True, None))
-                except Exception as exc:  # per-item isolation (T5)
-                    rows.append((u, None, False, f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(rows, columns=["url", "html", "fetch_ok", "fetch_error"])
+    def fetched(u, url):
+        yield (u, fn(str(url)), True, None)
 
-    return src.mapInPandas(fetch_batch, schema=FETCHED_SCHEMA)
+    def failed(u, exc):
+        return (u, None, False, f"{type(exc).__name__}: {exc}")
+
+    return map_per_item(src, FETCHED_SCHEMA, fetched, failed)
