@@ -10,7 +10,8 @@ own, imported from it.
 Usage:
   python bench_extra.py plans [suffix]     # write plans/r06/<q>_<suffix>.txt
   python bench_extra.py time [q1 q2 ...]   # noop-timed best-of-3 per query
-  python bench_extra.py pixels             # per-format decode rates
+  python bench_extra.py pixels             # per-format decode rates (median of
+                                           # ~2 s of passes, with max/min spread)
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 here: the driver's
 measurement SF), SPARK_GRAFT_CPUS (default 32).
 """
@@ -19,7 +20,9 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
+import time
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
@@ -39,6 +42,19 @@ def build(app: str):
         extra["spark.local.dir"] = "/dev/shm/spark-local"
     return build_session(app, cores=CPUS, shuffle_partitions=CPUS,
                          extra_conf=extra)
+
+
+def timed_passes(mk, total_s: float = 2.0, min_passes: int = 3) -> list[float]:
+    """Seconds of each noop-forced pass of ``mk()``, repeated until the
+    passes add up to ``total_s`` (and at least ``min_passes``): a fast
+    format's 0.3 s pass is too short for one timing to resolve a small
+    move, so its rate is the median over about 2 s of passes."""
+    secs: list[float] = []
+    while len(secs) < min_passes or sum(secs) < total_s:
+        t0 = time.perf_counter()
+        force(mk())
+        secs.append(time.perf_counter() - t0)
+    return secs
 
 
 def main() -> None:
@@ -118,15 +134,15 @@ def main() -> None:
                 ).write.mode("overwrite").parquet(path)
             images = spark.read.parquet(path)
             for codec in codecs:
+                key = f"{fmt}_{codec}"
                 try:
                     force(pixel_stats(images, max_dim=640, codec=codec))  # warm
-                    sec = timed_best(
-                        lambda: pixel_stats(images, max_dim=640, codec=codec),
-                        repeats=2,
-                    )
-                    out[f"{fmt}_{codec}_imgs_per_sec"] = round(n / sec, 1)
+                    secs = timed_passes(
+                        lambda: pixel_stats(images, max_dim=640, codec=codec))
+                    out[f"{key}_imgs_per_sec"] = round(n / statistics.median(secs), 1)
+                    out[f"{key}_spread_pct"] = round(100 * (max(secs) / min(secs) - 1), 1)
                 except Exception as e:  # noqa: BLE001
-                    out[f"{fmt}_{codec}_imgs_per_sec"] = None
+                    out[f"{key}_imgs_per_sec"] = None
                     print(f"{fmt}/{codec}: {e}", file=sys.stderr)
         print(json.dumps(out))
         spark.stop()

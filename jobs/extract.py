@@ -6,13 +6,13 @@ Launch (cluster):
         --input <pages table/path> --output <extracted path> \
         --checkpoint <checkpoint path> --run-id R1 --n-buckets 4096
 
-The kernels run in the input scan's splits (one task per archive with
---input-warc, defaultParallelism tasks with --gen), so the input, not
---n-buckets, sets their parallelism. Their output rebalances on the
-lineage bucket for the partitioned write; the rebalance starts at the
-launcher's spark.sql.shuffle.partitions (pass --conf
-spark.sql.shuffle.partitions=N to size it), and the write then runs at
-most one task per bucket until a bucket's shuffle data outgrows
+The input's raw pages rebalance on the lineage bucket, and the kernels
+and the partitioned write run in the rebalance's tasks, so the buckets
+and AQE, not the input's splits or parquet row groups, set kernel
+parallelism. The rebalance starts at the launcher's
+spark.sql.shuffle.partitions (pass --conf spark.sql.shuffle.partitions=N
+to size it), and the stage then runs at most one task per bucket until
+a bucket's shuffle data outgrows
 spark.sql.adaptive.advisoryPartitionSizeInBytes. Keep --n-buckets fixed
 across runs that resume or delta against the same output (it decides
 each url's bucket).
@@ -72,9 +72,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="lineage granularity (checkpoint unit, one output "
-                         "directory each); also the most tasks the write "
-                         "runs until a bucket outgrows the AQE advisory "
-                         "partition size")
+                         "directory each); also the most tasks the kernels "
+                         "and the write run until a bucket outgrows the AQE "
+                         "advisory partition size")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--bucket-groups", type=int, default=1,
                     help="commit incrementally in N sequential bucket "

@@ -17,7 +17,9 @@ Launch (cluster):
 
 Both sinks are embarrassingly parallel: the WET write is map-only (one
 archive per input partition), the CDX write's only shuffle is the range
-exchange that gives the index its total order.
+exchange that gives the index its total order. The printed counts come
+from the writes themselves (the WET manifest rows, an observation on the
+CDX write); the job never reads its output back.
 
 Session: plans.session.build_session sets the engine keys; the launcher
 owns master, memory, UI and the three sizing keys (plans/session.py).
@@ -75,8 +77,7 @@ def main(argv: list[str] | None = None) -> int:
         summary["wet_bytes"] = int(sum(r["n_bytes"] for r in manifest))
     if args.cdx_dir:
         idx = cdx_index(extracted)
-        write_cdx(idx, args.cdx_dir, n_shards=args.cdx_shards)
-        summary["cdx_rows"] = spark.read.text(args.cdx_dir).count()
+        summary["cdx_rows"] = write_cdx(idx, args.cdx_dir, n_shards=args.cdx_shards)
     summary["elapsed_sec"] = round(time.time() - t0, 3)
     print(json.dumps(summary))
     if not preexisting:  # don't tear down a caller-owned session (tests)

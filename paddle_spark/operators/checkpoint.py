@@ -228,9 +228,10 @@ def run_extract_job(
     is read once, up front, and a group whose buckets are all done starts
     no job.
 
-    The bucket rebalance above the kernels starts at
+    The bucket rebalance below the kernels starts at
     ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE
-    then coalesces or splits.
+    then coalesces or splits; the kernels run in its partitions, so their
+    parallelism does not depend on how the input was written.
     """
     if n_groups < 1:
         raise ValueError(f"n_groups must be >= 1, got {n_groups}")
@@ -268,20 +269,18 @@ def run_extract_job(
         # lineage). The counters come only from this group's tasks, so
         # stale partitions left in a reused output dir by an earlier run
         # are never attributed to this run.
-        # The kernels run in the scan's partitions, as in delta_extract,
-        # and the one rebalance on bucket sits above them: it carries
-        # extracted rows, not raw payloads, and the write stage after it
-        # runs no Python. Each bucket lands in one shuffle partition, so
-        # the partitionBy(bucket) write emits one file per bucket (more
-        # only where AQE splits an oversized bucket) — without it every
-        # task would emit a file into every bucket directory (the
-        # small-files trap, guide §6).
+        # The job's one shuffle is a rebalance of the raw payloads on
+        # bucket, below the kernels: the scan stage runs no Python, and
+        # the kernels and the partitionBy(bucket) write share the tasks
+        # AQE sizes from the shuffle bytes, however few row groups the
+        # input has. Each bucket lands in one shuffle partition, so the
+        # write emits one file per bucket (more only where AQE splits an
+        # oversized bucket) — without it every task would emit a file
+        # into every bucket directory (the small-files trap, guide §6).
         acc = spark.sparkContext.accumulator({}, PartitionCounts())
-        extracted = (
-            extract_pages(group.drop("bucket"), cfg, metrics=acc)
-            .hint("rebalance", "bucket")
-            .withColumn("run_id", F.lit(run_id))
-        )
+        extracted = extract_pages(
+            group.drop("bucket"), cfg, shuffle=True, metrics=acc
+        ).withColumn("run_id", F.lit(run_id))
         write_extracted(extracted, output_path, output_table)
         group_sec = time.time() - t0
 

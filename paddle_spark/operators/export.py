@@ -184,7 +184,7 @@ def cdx_index(extracted: DataFrame) -> DataFrame:
     )
 
 
-def write_cdx(index: DataFrame, out_dir: str, n_shards: int = 16) -> None:
+def write_cdx(index: DataFrame, out_dir: str, n_shards: int = 16) -> int:
     """Write a GLOBALLY SORTED sharded CDX index: range-partition by
     (surt, ts14) then sort within each shard — total order across files
     without a single-reducer sort (the shards and the keys inside each
@@ -196,9 +196,15 @@ def write_cdx(index: DataFrame, out_dir: str, n_shards: int = 16) -> None:
 
     Lines are space-separated ``surt ts14 url digest n_bytes`` (the
     classic CDX text layout; a JSON payload variant is one concat away).
+
+    Returns the number of lines written, observed on the final projection
+    (the write's result stage, whose tasks count once); below the range
+    exchange its sampling pass would count every row twice.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    lines = Observation("cdx")
     (
         index.repartitionByRange(n_shards, "surt", "ts14")
         .sortWithinPartitions("surt", "ts14")
@@ -208,9 +214,11 @@ def write_cdx(index: DataFrame, out_dir: str, n_shards: int = 16) -> None:
                 F.col("n_bytes").cast("string"),
             ).alias("value")
         )
+        .observe(lines, F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite")
         .text(out_dir)
     )
+    return lines.get["n"]
 
 
 def read_cdx_prefix(spark, cdx_dir: str, surt_prefix: str) -> DataFrame:

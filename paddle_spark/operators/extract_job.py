@@ -10,18 +10,20 @@ per-url byte-identity invariant hold at any parallelism.
 Scale design (100 TB / 10^12 rows):
 - Input scan stays columnar: we select exactly (url, warc_ts, html, lang)
   — column pruning reaches the parquet/Iceberg scan.
-- The kernels run in the scan's partitions, so their parallelism comes
-  from the input splits. The job's only shuffle is one rebalance on the
-  salted url-hash ``bucket`` above them: it carries extracted rows, not
-  raw payloads, defuses host-domain skew (one mega-host = many buckets),
-  gathers each bucket (the unit of checkpoint lineage) into one shuffle
-  partition, and leaves the task count to AQE, which coalesces small
-  partitions and splits oversized ones. The partitioned write after it
-  runs no Python.
+- The job's only shuffle is one rebalance of the raw payloads on the
+  salted url-hash ``bucket``, below the kernels: it defuses host-domain
+  skew (one mega-host = many buckets), gathers each bucket (the unit of
+  checkpoint lineage) into one shuffle partition, and leaves the task
+  count to AQE, which coalesces small partitions and splits oversized
+  ones. The kernels and the partitioned write run in those tasks, so
+  kernel parallelism follows the buckets and AQE, not the input's
+  parquet row groups.
 - Extraction runs in Arrow-batched Python workers (one per core — the
   analog of the reference's Triton instance pool,
   config_gpu_paddlex.pbtxt:18-24); per-doc try/except means one poisoned
-  payload can never fail a task (T5, model.py:569-589).
+  payload can never fail a task (T5, model.py:569-589). The batch body
+  installs ``paddle_spark.worker``'s fix, so a worker's later tasks skip
+  PySpark's per-task re-read of ``pyspark.zip`` (about 60 ms of CPU).
 - Output writes partitioned by ``bucket``, so a re-run of failed buckets is
   a partition overwrite — idempotent resume without rewriting good data.
 """
@@ -39,6 +41,7 @@ from pyspark.sql import types as T
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
 from paddle_spark.functions import url_bucket_col
 from paddle_spark.kernels.extract import extract_document, sha256_text
+from paddle_spark.worker import install as install_worker_fix
 
 # Output schema = the `extracted` table (SURVEY.md §1.2).
 EXTRACTED_SCHEMA = T.StructType(
@@ -105,7 +108,8 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
     With a ``PartitionCounts`` accumulator as ``metrics``, the body tallies
     the ``extraction_metrics`` counters per bucket as it goes and, after
     the task's last batch, reports them once under the task's partition
-    id."""
+    id. The body runs only in Python workers, and first installs
+    ``paddle_spark.worker``'s fix there."""
 
     # Resolve the pixel decoder once, at plan construction (same contract
     # as operators/scanned.py), not per row on the executors.
@@ -116,6 +120,7 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
         pixel_decode = decoder_for("auto")
 
     def extract_batch(batches):
+        install_worker_fix()
         counts = None if metrics is None else {}
         for pdf in batches:
             if cfg.fail_batch_marker and pdf["url"].str.contains(
@@ -205,10 +210,12 @@ def extract_pages(
     ``shuffle=True`` adds a rebalance on ``bucket`` ahead of the kernel
     stage; the default plans none, and the scan feeds the kernels
     directly. The caller decides: pass ``True`` when the input arrives in
-    few or host-clustered partitions (skew defense). For a
-    ``partitionBy("bucket")`` sink, rebalance above the kernel instead,
-    as ``run_extract_job`` and ``delta_extract`` do: that shuffle carries
-    extracted rows, and the write stage runs no Python. The extraction
+    few or host-clustered partitions (skew defense), or, as
+    ``run_extract_job`` does, for a ``partitionBy("bucket")`` sink: the
+    kernels and the write then share the rebalance's tasks, whatever the
+    input's row groups, and each bucket is still one file.
+    ``delta_extract`` rebalances above the kernel instead, whose input is
+    already spread by the snapshot's dedup exchange. The extraction
     output is per-row pure, so partitioning never changes results.
 
     The rebalance hashes on ``bucket`` alone, so each bucket lands in one
@@ -224,9 +231,10 @@ def extract_pages(
     the kernel, an input under about 64 KB of shuffle per core
     (``coalescePartitions.minPartitionSize``, set in ``build_session``)
     runs the kernels on fewer tasks than cores however slow its pages
-    are; a rebalance above the kernel, as the job and ``delta_extract``
-    use, leaves them in the scan's splits. With AQE disabled the
-    rebalance is a plain hash repartition on ``bucket``.
+    are (the 600-doc ``crawl_job`` shuffles 0.9 MB of raw payloads, which
+    still spreads over 4 cores); a rebalance above the kernel, as
+    ``delta_extract`` uses, leaves them in the input's partitions. With
+    AQE disabled the rebalance is a plain hash repartition on ``bucket``.
     """
     # WET conversion rows (html null, text pre-extracted by the crawl)
     # pass through the kernel stage verbatim when cfg.wet_passthrough;

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from paddle_spark.worker import install as install_worker_fix
+
 Rows = Callable[[object, object], Iterable[tuple]]
 OnError = Callable[[object, Exception], tuple]
 
@@ -47,11 +49,13 @@ def map_per_item(
     """Map a two-column ``(key, payload)`` frame to ``schema`` rows, item by
     item under ``item_rows``. Rows are tuples in ``schema`` order; each
     Arrow batch becomes one ``pd.DataFrame(rows, columns=...)``. The plan
-    is map-only."""
+    is map-only. The batch body runs only in Python workers, and first
+    installs ``paddle_spark.worker``'s fix there."""
     key_col, payload_col = src.columns
     columns = schema.fieldNames()
 
     def batch(batches):
+        install_worker_fix()
         for pdf in batches:
             out: list[tuple] = []
             for key, payload in zip(pdf[key_col], pdf[payload_col]):

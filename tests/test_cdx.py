@@ -148,10 +148,16 @@ class TestCdxSink:
 
 
 class TestPublishJob:
-    def test_publish_wet_and_cdx(self, spark, tmp_path):
+    def test_publish_wet_and_cdx(self, spark, tmp_path, capsys, monkeypatch):
         """jobs/publish.py end-to-end: extracted parquet -> WET archives
         that round-trip through our own reader + a sorted CDX index
-        whose rows cover exactly the http(s) corpus."""
+        whose rows cover exactly the http(s) corpus. The printed
+        ``cdx_rows`` is the line count on disk, taken from the write:
+        no reader call touches ``--cdx-dir``."""
+        import json
+
+        from pyspark.sql import DataFrameReader
+
         from paddle_spark.operators.extract_job import extract_pages
         from paddle_spark.sources.synth import gen_pages_spark
         from paddle_spark.sources.warc import read_warc_pages
@@ -163,10 +169,21 @@ class TestPublishJob:
         extracted.write.parquet(src)
 
         wet, cdx = str(tmp_path / "wet"), str(tmp_path / "cdx")
+        read = []
+        for name in ("load", "text", "parquet", "csv", "json", "orc"):
+            def spy(self, path=None, *args, _read=getattr(DataFrameReader, name),
+                    **kwargs):
+                read.extend(path if isinstance(path, list) else [path])
+                return _read(self, path, *args, **kwargs)
+
+            monkeypatch.setattr(DataFrameReader, name, spy)
         assert main([
             "--input", src, "--wet-dir", wet, "--cdx-dir", cdx,
             "--cdx-shards", "4",
         ]) == 0
+        monkeypatch.undo()
+        assert not [p for p in read if str(p).startswith(cdx)], read
+        printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
         back = read_warc_pages(spark, wet + "/*.warc.wet.gz")
         got = {r["url"]: r["text"] for r in back.collect()}
@@ -179,7 +196,7 @@ class TestPublishJob:
                 lines.extend(fh.read().splitlines())
         assert lines == sorted(lines)
         n_http = sum(1 for u in want if u.lower().startswith("http"))
-        assert len(lines) == n_http == 100
+        assert len(lines) == n_http == 100 == printed["cdx_rows"]
 
 
 class TestCdxPrefixLookup:

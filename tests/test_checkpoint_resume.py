@@ -272,10 +272,10 @@ def test_grouped_run_starts_three_jobs_per_group(spark, tiny_pages, paths, monke
                         cfg=CFG, n_groups=0)
 
 
-def test_kernels_run_below_the_one_bucket_rebalance(spark, tiny_pages, paths, monkeypatch):
+def test_kernels_run_above_the_one_bucket_rebalance(spark, tiny_pages, paths, monkeypatch):
     """The job's written plan has exactly one Exchange: a rebalance hashed
-    on bucket, placed above the kernels' MapInPandas, so it shuffles
-    extracted rows and no raw ``html`` payload."""
+    on bucket, directly below the kernels' MapInPandas, so the kernels run
+    in the rebalance's partitions, in the same tasks as the write."""
     import re
 
     from paddle_spark.operators import checkpoint as checkpoint_mod
@@ -299,10 +299,40 @@ def test_kernels_run_below_the_one_bucket_rebalance(spark, tiny_pages, paths, mo
         r"Exchange hashpartitioning\(bucket#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL",
         exchanges[0],
     ), plan
-    below = lines[lines.index(exchanges[0]) + 1]
-    kernel_out = re.search(r"MapInPandas .*\)#\d+, \[([^\]]*)\]", below)
-    assert kernel_out, plan
-    assert "html" not in kernel_out.group(1), plan
+    above = lines[lines.index(exchanges[0]) - 1]
+    assert "MapInPandas" in above, plan
+
+
+def test_one_row_group_input_runs_kernels_in_several_tasks(spark, tmp_path, monkeypatch):
+    """A 600-doc input written as one parquet row group is one scan split,
+    yet its kernels run in at least 2 tasks that each extract documents:
+    at least 2 partition ids report documents in the job's
+    ``PartitionCounts`` accumulator."""
+    import pyarrow.parquet as pq
+
+    from jobbench import corpus
+
+    pages_path = str(tmp_path / "pages.parquet")
+    corpus.write_pages(pages_path, corpus.crawl_rows(600, 1))
+    assert pq.ParquetFile(pages_path).num_row_groups == 1
+    sc = spark.sparkContext
+    accs = []
+    accumulator = sc.accumulator
+
+    def spy(value, param):
+        accs.append(accumulator(value, param))
+        return accs[-1]
+
+    monkeypatch.setattr(sc, "accumulator", spy)
+    summary = run_extract_job(
+        spark, spark.read.parquet(pages_path), str(tmp_path / "out"),
+        str(tmp_path / "cp"), run_id="rg1", cfg=ExtractConfig())
+    monkeypatch.undo()
+    assert summary["n_docs"] == 600
+    (acc,) = accs
+    working = [p for p, counts in acc.value.items()
+               if sum(c[0] for c in counts.values()) > 0]
+    assert len(working) >= 2, acc.value
 
 
 def test_small_write_stage_spreads_over_cores(spark, tmp_path):
