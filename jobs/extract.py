@@ -14,7 +14,7 @@ spark.sql.shuffle.partitions (pass --conf spark.sql.shuffle.partitions=N
 to size it), and the stage then runs at most one task per bucket until
 a bucket's shuffle data outgrows
 spark.sql.adaptive.advisoryPartitionSizeInBytes. Keep --n-buckets fixed
-across runs that resume or delta against the same output (it decides
+across runs that resume or recrawl against the same output (it decides
 each url's bucket).
 
 --bucket-groups N is run_extract_job(n_groups=N): the buckets run as N
@@ -28,7 +28,15 @@ Launch (sandbox smoke):
 Re-running the same command with the same --run-id resumes: buckets with
 committed lineage are filtered out by a driver-side NOT IN predicate and
 their output partitions are left untouched (idempotent per-bucket
-overwrite).
+overwrite). A run's first write replaces the whole output, so --output
+may not equal or nest with --input or --prev.
+
+Recrawl snapshot B against A's output (extracted with the same
+--n-buckets/--salt): add --prev <A's output> to --input <B>. Unchanged
+pages carry A's rows, only changed and new pages run the kernels
+(operators/delta.py), and the run resumes, writes lineage and stamps its
+run_id like a fresh run. WET conversion rows pass through for
+--input-warc, and for --input when one null-html probe finds one.
 
 The lineage counters are reported by the extraction tasks through an
 accumulator, so the job needs a classic session (spark-submit gives one);
@@ -66,9 +74,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoint", default=None, help="checkpoint parquet dir path")
     ap.add_argument("--output-table", default=None,
                     help="catalog table target instead of --output (Iceberg: "
-                         "writeTo().overwritePartitions() per bucket)")
+                         "a run's first write replaces the table, later "
+                         "writes overwritePartitions())")
     ap.add_argument("--checkpoint-table", default=None,
                     help="catalog table for lineage instead of --checkpoint")
+    ap.add_argument("--prev", default=None,
+                    help="a previous run's extracted output: re-extract only "
+                         "the pages it does not hold unchanged (a recrawl)")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="lineage granularity (checkpoint unit, one output "
@@ -98,8 +110,24 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of --checkpoint / --checkpoint-table is required")
     if args.bucket_groups < 1:
         ap.error("--bucket-groups must be at least 1")
+    if args.output:
+        from paddle_spark.operators.checkpoint import local_path
+
+        def resolved(path: str) -> str:
+            # plain paths and file: URIs name the same local tree; compare
+            # every other store by its normalized URI
+            local = local_path(path)
+            return os.path.realpath(local) if local is not None else os.path.normpath(path)
+
+        out = resolved(args.output)
+        for other in map(resolved, filter(None, (args.input, args.prev))):
+            # equality or ancestry either way: the first write's overwrite
+            # of an ancestor deletes the input recursively
+            if out == other or other.startswith(out + os.sep) or out.startswith(other + os.sep):
+                ap.error("--output must not equal or nest with --input/--prev")
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from paddle_spark.config import ExtractConfig
     from paddle_spark.operators.checkpoint import run_extract_job
@@ -109,17 +137,7 @@ def main(argv: list[str] | None = None) -> int:
     preexisting = SparkSession.getActiveSession() is not None
     spark = build_session("paddle_spark_extract")
 
-    cfg = ExtractConfig(
-        n_buckets=args.n_buckets,
-        salt=args.salt,
-        max_pages_per_doc=args.max_pages_per_doc,
-        # WET conversion records carry pre-extracted text; only archive
-        # ingestion opts into reading the text column
-        wet_passthrough=bool(args.input_warc),
-        ocr_images=args.ocr_images,
-        ocr_scanned_pdfs=args.ocr_scanned_pdfs,
-    )
-
+    wet = bool(args.input_warc)
     if args.gen:
         pages = gen_pages_spark(
             spark, args.gen, seed=args.seed,
@@ -131,6 +149,19 @@ def main(argv: list[str] | None = None) -> int:
         pages = warc_paths_to_pages(spark, args.input_warc)
     else:
         pages = spark.read.parquet(args.input)
+        # one pushed-down null-html probe finds WET conversion rows
+        wet = {"html", "text"} <= set(pages.columns) and (
+            pages.filter(F.col("html").isNull()).limit(1).count() > 0
+        )
+
+    cfg = ExtractConfig(
+        n_buckets=args.n_buckets,
+        salt=args.salt,
+        max_pages_per_doc=args.max_pages_per_doc,
+        wet_passthrough=wet,
+        ocr_images=args.ocr_images,
+        ocr_scanned_pdfs=args.ocr_scanned_pdfs,
+    )
 
     summary = run_extract_job(
         spark,
@@ -142,6 +173,7 @@ def main(argv: list[str] | None = None) -> int:
         n_groups=args.bucket_groups,
         output_table=args.output_table,
         checkpoint_table=args.checkpoint_table,
+        prev=spark.read.parquet(args.prev) if args.prev else None,
     )
     print(json.dumps(summary))
     if not preexisting:  # don't tear down a caller-owned session (tests)

@@ -118,10 +118,6 @@ class ExtractConfig:
     # ---- job level ----
     n_buckets: int = 64          # url-hash buckets for checkpoint lineage
     salt: int = 0                # repartition salt (defuses domain skew)
-    # fault injection for resume tests: a batch containing a url with this
-    # substring raises at the TASK level (not per-doc), simulating an
-    # executor/job crash (the per-doc try/except must not see it)
-    fail_batch_marker: str | None = None
     # WET ingestion: pass pre-extracted `text` (html null) through as
     # branch='wet' rows. OPT-IN because it forces the scan to read the
     # text column — the default plan keeps the F1 pruning invariant

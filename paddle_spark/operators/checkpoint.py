@@ -5,8 +5,8 @@ Re-expresses the reference's per-process heartbeat-file accounting
 aggregated by /root/reference/server/status_server.py:56-123) as rows in a
 ``checkpoint`` table:
 
-    run_id, bucket, n_docs, n_failures, docs_per_sec,
-    started_at, finished_at, status
+    run_id, bucket, n_docs, n_carried, n_failures, blocks_kept,
+    blocks_dropped, docs_per_sec, started_at, finished_at, status
 
 The counters in a lineage row come from the extraction tasks themselves,
 as each serving instance reports its own (layout_status.py): every task
@@ -14,17 +14,20 @@ reports its per-bucket counts under its partition id into a
 ``PartitionCounts`` accumulator (operators/extract_job.py), and the driver
 sums them — the output is never read back. Accumulators need a classic
 session (``spark-submit`` jobs are classic); Spark Connect has none.
+``n_carried`` counts a recrawl's rows carried over unchanged from the
+previous output (``run_extract_job(prev=)``); it is 0 on a fresh run.
 
 Resume: pages whose bucket already has a ``success`` row for this run_id
 are filtered out by a driver-side ``NOT IN`` predicate (the batch analog
 of TTL-dropping stale heartbeats, status_server.py:79-101). Output is
-written ``partitionBy("bucket")`` with dynamic partition overwrite, so
-re-running a bucket replaces exactly its own files — exactly-once per url
-without a transactional table.
+written ``partitionBy("bucket")``: a run's first write replaces the whole
+output, and every later write of the run (later groups, resumes) replaces
+exactly its own buckets, so re-running a bucket is exactly-once per url
+without a transactional table (see ``write_extracted``).
 
 On a cluster with the Iceberg runtime jar this maps 1:1 onto
-``writeTo(...).overwritePartitions()`` + an Iceberg checkpoint table —
-pass ``output_table``/``checkpoint_table`` (see ``write_extracted`` /
+``writeTo(...)`` commits + an Iceberg checkpoint table — pass
+``output_table``/``checkpoint_table`` (see ``write_extracted`` /
 ``append_checkpoint``; ``iceberg_catalog_configured`` probes the binding).
 The sandbox falls back to plain parquet directories with identical layout.
 """
@@ -44,7 +47,9 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
+from paddle_spark.operators.delta import carried_counts, delta_extract
 from paddle_spark.operators.extract_job import (
+    EXTRACTED_SCHEMA,
     PartitionCounts,
     bucket_totals,
     extract_pages,
@@ -65,6 +70,7 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType(), False),
         T.StructField("bucket", T.IntegerType(), False),
         T.StructField("n_docs", T.LongType(), False),
+        T.StructField("n_carried", T.LongType(), False),
         T.StructField("n_failures", T.LongType(), False),
         T.StructField("blocks_kept", T.LongType(), False),
         T.StructField("blocks_dropped", T.LongType(), False),
@@ -152,35 +158,48 @@ def write_extracted(
     extracted: DataFrame,
     output_path: str | None = None,
     output_table: str | None = None,
+    replace_all: bool = False,
 ) -> None:
-    """Durable-write the extracted frame, replacing exactly the bucket
-    partitions present in it (idempotent resume).
+    """Durable-write the extracted frame, partitioned by ``bucket``.
 
-    Iceberg path (``output_table`` on a configured catalog):
-    ``writeTo(...).overwritePartitions()`` — a single ACID snapshot commit.
-    Parquet-dir fallback: dynamic partition overwrite, scoped to THIS write
-    via the writer option (never mutates session conf — a leaked
-    ``partitionOverwriteMode=dynamic`` would silently turn every later
-    ``mode('overwrite')`` in the session into a partial overwrite).
+    One rule for fresh runs and recrawls: a run's first write
+    (``replace_all``, made while the checkpoint holds no row for its
+    run_id) replaces the whole output, so no bucket of an earlier run
+    survives (the trade-off: the old output is gone before the new one
+    commits); every later write of the run (later groups, resumes)
+    replaces exactly the buckets present in the frame.
+
+    Parquet dir: ``partitionOverwriteMode`` (``static`` for the first
+    write, then ``dynamic``) is set on THIS writer, never in session conf,
+    where a leaked ``dynamic`` would turn every later overwrite in the
+    session into a partial one.
+
+    Table: created partitioned on its first write; then a run's first
+    write is ``overwrite(F.lit(True))`` and later writes
+    ``overwritePartitions()``, each one ACID commit on an Iceberg catalog.
+    The session catalog rejects every v2 write into an existing v1 table
+    ("Cannot write into v1 table"), so those two run only in
+    ``test_iceberg_catalog_contract``, where the Iceberg jar is present. A
+    checkpoint table created before lineage rows had ``n_carried`` needs
+    that column added (``ALTER TABLE ... ADD COLUMNS (n_carried bigint)``).
     """
     if output_table is not None:
-        spark = extracted.sparkSession
-        if spark.catalog.tableExists(output_table):
-            # ACID snapshot commit replacing exactly the buckets present
-            # in the frame (the Iceberg-native analog of dynamic
-            # partition overwrite). Existence is checked explicitly —
-            # never except-fallback into createOrReplace, which would
-            # clobber other buckets' durable data on a resume.
-            extracted.writeTo(output_table).overwritePartitions()
+        writer = extracted.writeTo(output_table)
+        # existence is checked explicitly — never except-fallback into
+        # createOrReplace, which would clobber other buckets' durable data
+        # on a resume
+        if not extracted.sparkSession.catalog.tableExists(output_table):
+            # plain create (CTAS): also the only create form the session
+            # catalog supports, which is what the sandbox test exercises
+            writer.partitionedBy(F.col("bucket")).create()
+        elif replace_all:
+            writer.overwrite(F.lit(True))
         else:
-            # existence was checked above, so plain create (CTAS) — also
-            # the only create form the session catalog supports, which is
-            # what the sandbox test exercises this path against
-            extracted.writeTo(output_table).partitionedBy(F.col("bucket")).create()
+            writer.overwritePartitions()
         return
     (
         extracted.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .option("partitionOverwriteMode", "static" if replace_all else "dynamic")
         .partitionBy("bucket")
         .parquet(output_path)
     )
@@ -211,13 +230,24 @@ def run_extract_job(
     n_groups: int = 1,
     output_table: str | None = None,
     checkpoint_table: str | None = None,
+    prev: DataFrame | None = None,
 ) -> dict:
     """Run (or resume) the extraction job.
 
-    Returns a summary dict: {run_id, n_docs, n_failures, buckets_skipped,
-    elapsed_sec, docs_per_sec}; ``buckets_skipped`` counts the buckets
-    already done when the call starts. Needs a classic session: the
-    lineage counters travel in an accumulator, which Spark Connect lacks.
+    Returns a summary dict: {run_id, n_docs, n_carried, n_failures,
+    buckets_skipped, elapsed_sec, docs_per_sec}; ``buckets_skipped``
+    counts the buckets already done when the call starts. Needs a classic
+    session: the lineage counters travel in an accumulator, which Spark
+    Connect lacks.
+
+    ``prev``, a previous run's extracted output (same ``cfg.n_buckets``
+    and ``cfg.salt``; never read from ``output_path``, which the first
+    write replaces), makes the run a recrawl: each group runs
+    ``delta_extract`` against ``prev``'s rows of the group's buckets, so
+    only changed and new pages run the kernels. Every written row gets
+    this run's ``run_id``; each lineage row's ``n_carried`` comes from one
+    grouped count of the carried rows, so a bucket of carried rows only
+    still gets a lineage row and a resume skips it.
 
     ``n_groups`` > 1 commits incrementally: the buckets with
     ``bucket % n_groups == g`` run as sequential group g, each with its
@@ -226,7 +256,8 @@ def run_extract_job(
     run (the reference's per-instance heartbeat cadence,
     layout_status.py:100-102, turned into commit cadence). The checkpoint
     is read once, up front, and a group whose buckets are all done starts
-    no job.
+    no job. The run's first write replaces the whole output, later writes
+    only their own buckets (``write_extracted``).
 
     The bucket rebalance below the kernels starts at
     ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE
@@ -242,52 +273,69 @@ def run_extract_job(
     # Resume filter: done buckets are at most n_buckets values, collected
     # above — a driver-side isin predicate beats even a broadcast anti-join
     # (no join at all, and the NOT-IN can partition-prune a bucketed scan).
+    # The same predicates select a group's rows of the pages and of prev.
+    def pending(df: DataFrame, g: int) -> DataFrame:
+        if done_set:
+            df = df.filter(~F.col("bucket").isin(sorted(done_set)))
+        return df.filter(F.col("bucket") % n_groups == g) if n_groups > 1 else df
+
     from paddle_spark.functions import url_bucket_col
 
     pages_b = pages.withColumn(
         "bucket", url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt)
     )
-    todo = (
-        pages_b.filter(~F.col("bucket").isin(sorted(done_set)))
-        if done_set
-        else pages_b
-    )
 
-    docs = fails = 0
+    replace_all = not done_set
+    docs = fails = carried = 0
     elapsed = 0.0
     for g in range(n_groups):
         if done_set.issuperset(range(g, cfg.n_buckets, n_groups)):
             # nothing to extract, write, or record: a fully resumed re-run
             # costs one checkpoint read, nothing else
             continue
-        group = (
-            todo.filter(F.col("bucket") % n_groups == g) if n_groups > 1 else todo
-        )
+        group = pending(pages_b, g).drop("bucket")
 
         t0 = time.time()
         # Every output row is stamped with its producing run_id (per-row
         # lineage). The counters come only from this group's tasks, so
         # stale partitions left in a reused output dir by an earlier run
         # are never attributed to this run.
-        # The job's one shuffle is a rebalance of the raw payloads on
-        # bucket, below the kernels: the scan stage runs no Python, and
-        # the kernels and the partitionBy(bucket) write share the tasks
-        # AQE sizes from the shuffle bytes, however few row groups the
-        # input has. Each bucket lands in one shuffle partition, so the
-        # write emits one file per bucket (more only where AQE splits an
-        # oversized bucket) — without it every task would emit a file
-        # into every bucket directory (the small-files trap, guide §6).
         acc = spark.sparkContext.accumulator({}, PartitionCounts())
-        extracted = extract_pages(
-            group.drop("bucket"), cfg, shuffle=True, metrics=acc
-        ).withColumn("run_id", F.lit(run_id))
-        write_extracted(extracted, output_path, output_table)
+        if prev is None:
+            # The job's one shuffle is a rebalance of the raw payloads on
+            # bucket, below the kernels: the scan stage runs no Python,
+            # and the kernels and the partitionBy(bucket) write share the
+            # tasks AQE sizes from the shuffle bytes, however few row
+            # groups the input has. Each bucket lands in one shuffle
+            # partition, so the write emits one file per bucket (more
+            # only where AQE splits an oversized bucket) — without it
+            # every task would emit a file into every bucket directory
+            # (the small-files trap, guide §6).
+            n_carried = {}
+            extracted = extract_pages(group, cfg, shuffle=True, metrics=acc)
+        else:
+            group_prev = pending(prev, g)
+            n_carried = carried_counts(group, group_prev, cfg)
+            # the carried rows lead with the join keys: put the columns
+            # back in a fresh run's order, so both write one schema
+            extracted = delta_extract(
+                group, group_prev, cfg, metrics=acc
+            ).select(*EXTRACTED_SCHEMA.fieldNames())
+        write_extracted(
+            extracted.withColumn("run_id", F.lit(run_id)),
+            output_path, output_table, replace_all=replace_all,
+        )
+        replace_all = False
         group_sec = time.time() - t0
 
-        totals = sorted(bucket_totals(acc.value).items())
+        totals = bucket_totals(acc.value)
+        for b in n_carried:  # a bucket of carried rows only gets a row too
+            totals.setdefault(b, [0, 0, 0, 0])
+        totals = sorted(totals.items())
         group_docs = sum(c[0] for _, c in totals)
         docs += group_docs
         fails += sum(c[1] for _, c in totals)
+        carried += sum(n_carried.values())
         elapsed += group_sec
         group_rate = group_docs / group_sec if group_sec > 0 else 0.0
         finished_at = datetime.now(timezone.utc)
@@ -297,7 +345,8 @@ def run_extract_job(
         cp_rows = spark.createDataFrame(
             pa.Table.from_pylist(
                 [
-                    dict(run_id=run_id, bucket=b, n_docs=n, n_failures=f,
+                    dict(run_id=run_id, bucket=b, n_docs=n,
+                         n_carried=n_carried.get(b, 0), n_failures=f,
                          blocks_kept=kept, blocks_dropped=dropped,
                          docs_per_sec=group_rate, started_at=started_at,
                          finished_at=finished_at, status="success")
@@ -312,6 +361,7 @@ def run_extract_job(
     return {
         "run_id": run_id,
         "n_docs": docs,
+        "n_carried": carried,
         "n_failures": fails,
         "buckets_skipped": len(done_set),
         "elapsed_sec": elapsed,

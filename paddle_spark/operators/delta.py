@@ -27,6 +27,7 @@ row-for-row (pinned by test_delta).
 
 from __future__ import annotations
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,6 +41,7 @@ def delta_extract(
     pages_new: DataFrame,
     extracted_prev: DataFrame,
     cfg: ExtractConfig = DEFAULT_CONFIG,
+    metrics: Accumulator | None = None,
 ) -> DataFrame:
     """Extraction output for the NEW snapshot, re-running kernels only on
     changed/new payloads. Disappeared urls drop out (the output always
@@ -59,6 +61,11 @@ def delta_extract(
     mirrors the WET lineage hash, so unchanged conversion rows carry
     forward instead of re-extracting every run.
 
+    ``metrics``, a ``PartitionCounts`` accumulator, receives the counters
+    of the changed and new pages' kernel tasks (``extract_pages``); the
+    carried rows run no kernel and report nothing (``carried_counts``
+    counts them).
+
     The merged output's bucket rebalance starts at
     ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE then
     coalesces or splits."""
@@ -77,12 +84,33 @@ def delta_extract(
     todo = new_keyed.join(prev.select(*_KEY), _KEY, "left_anti")
     # shuffle=False: the snapshot's dedup exchange on (url, payload_xxh)
     # has already spread host skew, so the kernels run in its partitions
-    fresh = extract_pages(todo.drop("payload_xxh"), cfg, shuffle=False)
+    fresh = extract_pages(
+        todo.drop("payload_xxh"), cfg, shuffle=False, metrics=metrics
+    )
     # one rebalance on bucket above the union, for the partitionBy(bucket)
     # sink: each bucket lands in one shuffle partition, so carried and
     # fresh rows together write one file per bucket as a fresh run does
     # (AQE sizes it and splits oversized buckets, as in extract_pages)
     return carried.unionByName(fresh).hint("rebalance", "bucket")
+
+
+def carried_counts(
+    pages_new: DataFrame,
+    extracted_prev: DataFrame,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+) -> dict[int, int]:
+    """``{bucket: rows}`` that ``delta_extract(pages_new, extracted_prev,
+    cfg)`` carries over: the distinct (url, payload_xxh) keys of the
+    previous output that the snapshot still holds, counted per stored
+    ``bucket`` in one grouped aggregate."""
+    new_keys = pages_new.select(
+        "url", payload_key_col(pages_new, cfg.wet_passthrough).alias("payload_xxh")
+    )
+    carried = (
+        extracted_prev.select("bucket", *_KEY).dropDuplicates(_KEY)
+        .join(new_keys, _KEY, "left_semi")
+    )
+    return {r["bucket"]: r["count"] for r in carried.groupBy("bucket").count().collect()}
 
 
 def delta_stats(

@@ -72,12 +72,14 @@ class PartitionCounts(AccumulatorParam):
 
     Merging REPLACES a repeated partition id instead of adding to it. A
     failed attempt reports nothing, and a recomputed or speculative
-    attempt of a partition reports the same rows (a scan split, or a
-    shuffle partition of a rebalance below the kernel, reproduces its
-    rows exactly), so its entry overwrites an identical one and the
-    counts stay exact under retries. The
-    reference's analog is one heartbeat file per serving instance,
-    rewritten in place (layout_status.py:61-86)."""
+    attempt of a partition reports the same rows (a scan split, a shuffle
+    partition of a rebalance below the kernel, or, in ``delta_extract``,
+    a partition of the anti-join over the snapshot's dedup exchange: each
+    is a deterministic repartition, which a recompute reproduces
+    exactly), so its entry overwrites an identical one and the counts
+    stay exact under retries. The reference's analog is one heartbeat
+    file per serving instance, rewritten in place
+    (layout_status.py:61-86)."""
 
     def zero(self, value):
         return {}
@@ -123,12 +125,6 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
         install_worker_fix()
         counts = None if metrics is None else {}
         for pdf in batches:
-            if cfg.fail_batch_marker and pdf["url"].str.contains(
-                cfg.fail_batch_marker, regex=False
-            ).any():
-                raise RuntimeError(
-                    f"fault injection: batch contains {cfg.fail_batch_marker!r}"
-                )
             n = len(pdf)
             out = {
                 "url": pdf["url"].to_numpy(),

@@ -98,19 +98,33 @@ def test_resume_skips_done_buckets_exactly_once(spark, tiny_pages, paths):
     assert_lineage_is_oracle(spark, out_path, cp_path, "r2")
 
 
-def test_crash_then_resume_exactly_once(spark, tiny_pages, paths):
+def crash_on(spark, pages, marker, tmp_path):
+    """``pages``, written as parquet under ``tmp_path`` and read back, with
+    an ``html`` that raises in the JVM on every url containing ``marker``:
+    a task-level crash (an executor/job failure) that the kernels' per-doc
+    try/except never sees. The parquet round trip matters: over an
+    in-memory relation the optimizer evaluates the projection at plan
+    time, before the job's filters, and every plan would raise."""
+    src = str(tmp_path / "crash_pages")
+    pages.write.parquet(src)
+    return spark.read.parquet(src).withColumn("html", F.when(
+        F.col("url").contains(marker),
+        F.raise_error(F.lit(f"fault injection: url contains {marker!r}")),
+    ).otherwise(F.col("html")))
+
+
+def test_crash_then_resume_exactly_once(spark, tiny_pages, paths, tmp_path):
     """A task-level crash (fault injection, not per-doc) fails the whole
     job atomically: no partial output commit, no checkpoint rows. The
     clean re-run then completes exactly-once."""
     import pytest as _pytest
 
-    from dataclasses import replace
-
     out_path, cp_path = paths
-    poisoned = replace(CFG, fail_batch_marker="/p/000000")  # hits many batches
-    with _pytest.raises(Exception):
+    # hits many batches
+    poisoned = crash_on(spark, tiny_pages, "/p/000000", tmp_path)
+    with _pytest.raises(Exception, match="fault injection"):
         run_extract_job(
-            spark, tiny_pages, out_path, cp_path, run_id="r4", cfg=poisoned,
+            spark, poisoned, out_path, cp_path, run_id="r4", cfg=CFG,
         )
     # job-level atomicity: no committed output, no lineage rows
     import os
@@ -133,11 +147,10 @@ def test_crash_then_resume_exactly_once(spark, tiny_pages, paths):
     assert out.select("url").distinct().count() == tiny_pages.count()
 
 
-def test_grouped_commit_bounds_rework(spark, tiny_pages, paths):
+def test_grouped_commit_bounds_rework(spark, tiny_pages, paths, tmp_path):
     """Crash mid-run with grouped commits: completed groups stay durable,
     the re-run redoes only the remainder."""
     import pytest as _pytest
-    from dataclasses import replace
 
     out_path, cp_path = paths
     # find a url in the LAST group (bucket % 4 == 3) to poison
@@ -149,11 +162,10 @@ def test_grouped_commit_bounds_rework(spark, tiny_pages, paths):
         .select("url")
         .first()["url"]
     )
-    poisoned = replace(CFG, fail_batch_marker=victim)
-    with _pytest.raises(Exception):
+    with _pytest.raises(Exception, match="fault injection"):
         run_extract_job(
-            spark, tiny_pages, out_path, cp_path, run_id="rg", cfg=poisoned,
-            n_groups=4,
+            spark, crash_on(spark, tiny_pages, victim, tmp_path), out_path,
+            cp_path, run_id="rg", cfg=CFG, n_groups=4,
         )
     # groups 0-2 committed durably (their buckets have lineage), group 3 not
     done = {r["bucket"] for r in completed_buckets(spark, cp_path, "rg").collect()}
@@ -203,6 +215,9 @@ def test_reused_output_dir_never_attributes_stale_data(spark, tiny_pages, paths)
     out = spark.read.parquet(out_path)
     per_run = {r["run_id"]: r["n"] for r in out.groupBy("run_id").agg(F.count("*").alias("n")).collect()}
     assert per_run["new"] == n_subset
+    # the run's first write replaced the whole output: no row of run old
+    # remains
+    assert "old" not in per_run, per_run
 
 
 def _job_ids(spark, group, action):
@@ -576,8 +591,10 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
     run-where-available pattern as the PIL parity tests. In this sandbox
     the jar is absent and the test skips; on a cluster image with
     iceberg-spark-runtime it exercises: hadoop-catalog binding,
-    create-partitioned on first write, ACID overwritePartitions replacing
-    exactly the buckets present on resume, and append-only lineage."""
+    create-partitioned on first write, a new run_id's first write
+    replacing the whole table (overwrite(lit(True))), ACID
+    overwritePartitions adding exactly a later group's buckets, and
+    append-only lineage."""
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
     except Exception:
@@ -607,20 +624,20 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
         )
         assert s2["n_docs"] == 0 and s2["buckets_skipped"] == CFG.n_buckets
         assert spark.table(out_t).count() == n_total
-        # new run over a SUBSET of buckets: overwritePartitions must
-        # replace exactly those buckets and leave the rest untouched
-        sub = tiny_pages.withColumn(
-            "b", url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
-        ).filter(F.col("b") < 2).drop("b")
-        run_extract_job(
+        # a second run_id over a SUBSET of buckets, in 2 groups: its first
+        # write, overwrite(lit(True)), replaces the whole table, and its
+        # second group's overwritePartitions adds only that group's buckets
+        b = url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
+        sub = tiny_pages.filter(b < 4)
+        s3 = run_extract_job(
             spark, sub, str(tmp_path / "uo"), str(tmp_path / "uc"),
-            run_id="i2", cfg=CFG,
+            run_id="i2", cfg=CFG, n_groups=2,
             output_table=out_t, checkpoint_table=cp_t,
         )
         out = spark.table(out_t)
-        assert out.count() == n_total  # same rows, buckets 0-1 replaced
-        assert out.filter((F.col("bucket") < 2) & (F.col("run_id") == "i2")).count() > 0
-        assert out.filter((F.col("bucket") >= 2) & (F.col("run_id") != "i1")).count() == 0
+        assert out.count() == s3["n_docs"] == sub.count()
+        assert out.filter(F.col("run_id") != "i2").count() == 0
+        assert {r["bucket"] for r in out.select("bucket").distinct().collect()} == {0, 1, 2, 3}
     finally:
         for t in (out_t, cp_t):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -1,16 +1,22 @@
-"""Incremental extraction across snapshots (operators/delta.py):
-only changed payloads re-extract, and the merged output is row-identical
-to a full re-extraction of the new snapshot."""
+"""Incremental extraction across snapshots (operators/delta.py, and the
+recrawl path of run_extract_job(prev=) / jobs/extract.py --prev): only
+changed payloads re-extract, and the merged output is row-identical to a
+full re-extraction of the new snapshot."""
 
 import json
 
 import pytest
 from pyspark.sql import functions as F
 
+from paddle_spark.config import ExtractConfig
+from paddle_spark.functions import url_bucket_col
+from paddle_spark.operators.checkpoint import read_checkpoint, run_extract_job
 from paddle_spark.operators.delta import delta_extract, delta_stats
-from paddle_spark.operators.extract_job import extract_pages
+from paddle_spark.operators.extract_job import extract_pages, extraction_metrics
 from paddle_spark.sources.synth import gen_pages_spark
-from tests.test_checkpoint_resume import _files_per_bucket, _jobs_started
+from tests.test_checkpoint_resume import _files_per_bucket, _jobs_started, crash_on
+
+CFG = ExtractConfig(n_buckets=8)
 
 
 @pytest.fixture(scope="module")
@@ -100,13 +106,15 @@ def test_delta_duplicate_keys(spark, snapshots):
 
 def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
     """Reusing an output dir across snapshot runs must not leave stale
-    bucket partitions behind when a bucket's urls all disappear. The
-    summary's ``written``, taken from delta_stats rather than read back,
-    equals the rows on disk after each run."""
-    import jobs.delta as job
+    bucket partitions behind when a bucket's urls all disappear: a run's
+    first write replaces the whole output. The summary's ``written``
+    (``n_docs + n_carried``, taken from the run's counters rather than
+    read back) equals the rows on disk after each run."""
+    import jobs.extract as job
 
     def written():
-        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])["written"]
+        s = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        return s["n_docs"] + s["n_carried"]
 
     v1, v2 = snapshots
     (tmp_path / "snap1").mkdir()
@@ -116,14 +124,16 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
     v_small.write.mode("overwrite").parquet(str(tmp_path / "snap2"))
     prev = extract_pages(v1, n_partitions=4).withColumn("run_id", F.lit("r1"))
     prev.write.mode("overwrite").parquet(str(tmp_path / "prev"))
-    out = str(tmp_path / "out")
-    rc = job.main(["--input-new", str(tmp_path / "snap1" / "pages"),
-                   "--prev", str(tmp_path / "prev"), "--output", out])
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    rc = job.main(["--input", str(tmp_path / "snap1" / "pages"),
+                   "--prev", str(tmp_path / "prev"), "--output", out,
+                   "--checkpoint", cp])
     assert rc == 0
     assert set(_files_per_bucket(out).values()) == {1}
     assert written() == spark.read.parquet(out).count()
-    rc = job.main(["--input-new", str(tmp_path / "snap2"),
-                   "--prev", str(tmp_path / "prev"), "--output", out])
+    rc = job.main(["--input", str(tmp_path / "snap2"),
+                   "--prev", str(tmp_path / "prev"), "--output", out,
+                   "--checkpoint", cp])
     assert rc == 0
     got = spark.read.parquet(out)
     assert got.count() == 10  # no stale rows from the first run
@@ -132,9 +142,9 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     # output == prev is refused
     with pytest.raises(SystemExit):
-        job.main(["--input-new", str(tmp_path / "snap2"),
+        job.main(["--input", str(tmp_path / "snap2"),
                   "--prev", str(tmp_path / "prev"),
-                  "--output", str(tmp_path / "prev")])
+                  "--output", str(tmp_path / "prev"), "--checkpoint", cp])
 
 
 @pytest.mark.parametrize("output, other", [
@@ -143,18 +153,19 @@ def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
     ("file://{d}/out/x", "{d}/out"),
     ("hdfs://nn/out", "hdfs://nn/out/prev"),
 ])
-@pytest.mark.parametrize("flag", ["--prev", "--input-new"])
-def test_delta_job_rejects_nesting_in_any_path_form(tmp_path, output, other, flag):
+@pytest.mark.parametrize("flag", ["--prev", "--input"])
+def test_delta_job_rejects_nesting_in_any_path_form(tmp_path, capsys, output, other, flag):
     """The overwrite guard compares what a path names, not how it is
     spelled: a plain path and a ``file:`` URI of one local tree nest."""
-    import jobs.delta as job
+    import jobs.extract as job
 
     d = str(tmp_path)
-    args = {"--prev": str(tmp_path / "p"), "--input-new": str(tmp_path / "n")}
+    args = {"--prev": str(tmp_path / "p"), "--input": str(tmp_path / "n")}
     args[flag] = other.format(d=d)
     with pytest.raises(SystemExit):
-        job.main(["--output", output.format(d=d),
+        job.main(["--output", output.format(d=d), "--checkpoint", f"{d}/cp",
                   *(x for kv in args.items() for x in kv)])
+    assert "must not equal or nest" in capsys.readouterr().err
 
 
 def test_delta_wet_snapshot(spark):
@@ -211,3 +222,155 @@ def test_delta_only_extracts_changed(spark, snapshots):
         prev.select("url", "payload_xxh"), ["url", "payload_xxh"], "left_anti"
     )
     assert todo.count() == 60
+
+
+@pytest.fixture(scope="module")
+def recrawl(spark, snapshots, tmp_path_factory):
+    """A fresh run over snapshot 1 into ``a``, then a recrawl of snapshot 2
+    against ``a``'s output into ``b``: (dir, prev frame, recrawl summary)."""
+    v1, v2 = snapshots
+    d = tmp_path_factory.mktemp("recrawl")
+    run_extract_job(spark, v1, str(d / "a"), str(d / "cp"), run_id="a", cfg=CFG)
+    prev = spark.read.parquet(str(d / "a"))
+    summary = run_extract_job(spark, v2, str(d / "b"), str(d / "cp"),
+                              run_id="b", cfg=CFG, prev=prev)
+    return d, prev, summary
+
+
+def test_recrawl_equals_full_reextraction(spark, snapshots, recrawl):
+    """run_extract_job(prev=) writes, url for url, what a fresh run of the
+    new snapshot writes (text, text_sha256, payload_xxh), in a fresh run's
+    schema, every row stamped with the recrawl's run_id."""
+    _, v2 = snapshots
+    d, _, _ = recrawl
+    run_extract_job(spark, v2, str(d / "full"), str(d / "cp_full"),
+                    run_id="full", cfg=CFG)
+    got = spark.read.parquet(str(d / "b"))
+    full = spark.read.parquet(str(d / "full"))
+    assert got.schema == full.schema
+
+    def per_url(df):
+        return {r["url"]: (r["text"], r["text_sha256"], r["payload_xxh"])
+                for r in df.collect()}
+
+    assert got.count() == v2.count()
+    assert per_url(got) == per_url(full)
+    assert {r["run_id"] for r in got.select("run_id").distinct().collect()} == {"b"}
+
+
+def test_recrawl_lineage_counts_match_delta_stats(spark, snapshots, recrawl):
+    """delta_stats is the oracle of a recrawl's lineage: n_docs + n_carried
+    sums to the deduplicated snapshot and n_carried to its unchanged keys;
+    per bucket, the two add up to the rows written. A fresh run's lineage
+    carries nothing."""
+    _, v2 = snapshots
+    d, prev, summary = recrawl
+    cp = read_checkpoint(spark, str(d / "cp"))
+    lineage = cp.filter(F.col("run_id") == "b").collect()
+    stats = delta_stats(v2, prev)
+    n_docs = sum(r["n_docs"] for r in lineage)
+    n_carried = sum(r["n_carried"] for r in lineage)
+    assert n_docs + n_carried == stats["snapshot_docs"]
+    assert n_carried == stats["unchanged"]
+    assert (summary["n_docs"], summary["n_carried"]) == (n_docs, n_carried)
+    rows = extraction_metrics(spark.read.parquet(str(d / "b"))).collect()
+    assert ({r["bucket"]: r["n_docs"] + r["n_carried"] for r in lineage}
+            == {r["bucket"]: r["n_docs"] for r in rows})
+    fresh = cp.filter(F.col("run_id") == "a").collect()
+    assert fresh and all(r["n_carried"] == 0 for r in fresh)
+
+
+def test_crashed_recrawl_resumes_only_its_last_group(spark, snapshots, recrawl, tmp_path):
+    """A recrawl in 4 groups that crashes in group 3, re-run with the same
+    run_id, extracts only group 3's changed and new pages, and leaves one
+    lineage row per bucket."""
+    _, v2 = snapshots
+    d, prev, _ = recrawl
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    bucket = url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
+    victim = v2.filter(bucket % 4 == 3).select("url").first()["url"]
+    with pytest.raises(Exception, match="fault injection"):
+        run_extract_job(spark, crash_on(spark, v2, victim, tmp_path), out, cp,
+                        run_id="c", cfg=CFG, n_groups=4, prev=prev)
+    done = {r["bucket"] for r in read_checkpoint(spark, cp).collect()}
+    assert done and all(b % 4 != 3 for b in done)
+
+    todo = (
+        v2.filter(bucket % 4 == 3)
+        .select("url", F.xxhash64("html").alias("payload_xxh"))
+        .join(prev.select("url", "payload_xxh"), ["url", "payload_xxh"], "left_anti")
+        .count()
+    )
+    assert todo > 0
+    s = run_extract_job(spark, v2, out, cp, run_id="c", cfg=CFG, n_groups=4,
+                        prev=prev)
+    assert s["buckets_skipped"] == len(done)
+    assert s["n_docs"] == todo
+    per_bucket = read_checkpoint(spark, cp).groupBy("bucket").count().collect()
+    assert {r["bucket"] for r in per_bucket} == set(range(CFG.n_buckets))
+    assert all(r["count"] == 1 for r in per_bucket)
+    got = spark.read.parquet(out)
+    assert got.count() == got.select("url").distinct().count() == v2.count()
+
+
+def test_recrawl_launch_jobs(spark, snapshots, recrawl, tmp_path, capsys):
+    """A launched recrawl (jobs/extract.py --input --prev) starts 17 Spark
+    jobs on this fixture and reads none of its output back: 1 each to read
+    the input's and prev's schemas, 2 for the WET probe, 4 for the
+    n_carried count, 8 for the write (the stages of the joins and the
+    rebalance) and 1 for the lineage append."""
+    import jobs.extract as job
+
+    _, v2 = snapshots
+    d, _, _ = recrawl
+    v2.write.parquet(str(tmp_path / "snap2"))
+    argv = ["--input", str(tmp_path / "snap2"), "--prev", str(d / "a"),
+            "--output", str(tmp_path / "out"), "--checkpoint", str(tmp_path / "cp"),
+            "--n-buckets", str(CFG.n_buckets)]
+    n = _jobs_started(spark, "recrawl_launch", lambda: job.main(argv))
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_docs"] + summary["n_carried"] == v2.count()
+    assert n == 17, n
+
+
+def test_wet_snapshot_recrawl_carries_every_row(spark, tmp_path, capsys):
+    """One WET rule for every launch: a fresh jobs/extract.py --input run
+    over a parquet snapshot with WET conversion rows passes them through
+    (found by its null-html probe), keyed on their text, so a --prev
+    recrawl of the same snapshot carries every row and extracts none."""
+    import datetime as dt
+
+    import jobs.extract as job
+
+    ts = dt.datetime(2024, 1, 1)
+    wet = [(f"https://wet{i}.example/p", ts, None, f"wet text {i}", "en")
+           for i in range(20)]
+    wet += [("https://wetdup.example/p", ts, None, "alpha text", "en"),
+            ("https://wetdup.example/p", ts, None, "beta text", "en")]
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    snap = str(tmp_path / "snap")
+    gen_pages_spark(spark, 30, seed=42, n_partitions=2).unionByName(
+        spark.createDataFrame(wet, schema)
+    ).write.parquet(snap)
+    n_keys = 52  # 30 pages + 22 WET rows, the two wetdup texts kept apart
+
+    def launch(*extra):
+        argv = ["--input", snap, "--checkpoint", str(tmp_path / "cp"),
+                "--n-buckets", str(CFG.n_buckets), *extra]
+        assert job.main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def wet_failures(out):
+        return spark.read.parquet(out).filter(
+            F.col("url").startswith("https://wet") & ~F.col("parse_ok")
+        ).count()
+
+    fresh = launch("--output", str(tmp_path / "a"))
+    assert fresh["n_docs"] == n_keys
+    assert wet_failures(str(tmp_path / "a")) == 0
+    again = launch("--output", str(tmp_path / "b"), "--prev", str(tmp_path / "a"))
+    assert again["n_docs"] == 0
+    lineage = read_checkpoint(spark, str(tmp_path / "cp")).filter(
+        F.col("run_id") == again["run_id"]).collect()
+    assert sum(r["n_carried"] for r in lineage) == n_keys
+    assert wet_failures(str(tmp_path / "b")) == 0
