@@ -32,7 +32,8 @@ overwrite). A run's first write replaces the whole output, so --output
 may not equal or nest with --input or --prev.
 
 Recrawl snapshot B against A's output (extracted with the same
---n-buckets/--salt): add --prev <A's output> to --input <B>. Unchanged
+--n-buckets/--salt, or the run fails before its first write): add
+--prev <A's output> to --input <B>. Unchanged
 pages carry A's rows, only changed and new pages run the kernels
 (operators/delta.py), and the run resumes, writes lineage and stamps its
 run_id like a fresh run. WET conversion rows pass through for

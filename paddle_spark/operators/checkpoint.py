@@ -47,9 +47,9 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-from paddle_spark.operators.delta import carried_counts, delta_extract
+from paddle_spark.functions import url_bucket_col
+from paddle_spark.operators.delta import delta_extract
 from paddle_spark.operators.extract_job import (
-    EXTRACTED_SCHEMA,
     PartitionCounts,
     bucket_totals,
     extract_pages,
@@ -240,14 +240,16 @@ def run_extract_job(
     session: the lineage counters travel in an accumulator, which Spark
     Connect lacks.
 
-    ``prev``, a previous run's extracted output (same ``cfg.n_buckets``
-    and ``cfg.salt``; never read from ``output_path``, which the first
-    write replaces), makes the run a recrawl: each group runs
-    ``delta_extract`` against ``prev``'s rows of the group's buckets, so
-    only changed and new pages run the kernels. Every written row gets
-    this run's ``run_id``; each lineage row's ``n_carried`` comes from one
-    grouped count of the carried rows, so a bucket of carried rows only
-    still gets a lineage row and a resume skips it.
+    ``prev``, a previous run's extracted output (never read from
+    ``output_path``, which the first write replaces), makes the run a
+    recrawl: each group runs ``delta_extract`` against ``prev``'s rows of
+    the group's buckets, so only changed and new pages run the kernels.
+    ``prev`` must have been written with ``cfg.n_buckets`` and
+    ``cfg.salt``, else the run raises ``ValueError`` before its first
+    write. Every written row gets this run's ``run_id``; each lineage
+    row's ``n_carried`` comes from the accumulator, as its other counters
+    do (the carried rows pass through the kernel tasks), so a bucket of
+    carried rows only still gets a lineage row and a resume skips it.
 
     ``n_groups`` > 1 commits incrementally: the buckets with
     ``bucket % n_groups == g`` run as sequential group g, each with its
@@ -262,7 +264,9 @@ def run_extract_job(
     The bucket rebalance below the kernels starts at
     ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE
     then coalesces or splits; the kernels run in its partitions, so their
-    parallelism does not depend on how the input was written.
+    parallelism does not depend on how the input was written. A recrawl's
+    kernels run instead in the union of the snapshot's and ``prev``'s
+    repartitions on ``bucket`` (see ``delta_extract``).
     """
     if n_groups < 1:
         raise ValueError(f"n_groups must be >= 1, got {n_groups}")
@@ -279,20 +283,28 @@ def run_extract_job(
             df = df.filter(~F.col("bucket").isin(sorted(done_set)))
         return df.filter(F.col("bucket") % n_groups == g) if n_groups > 1 else df
 
-    from paddle_spark.functions import url_bucket_col
-
     pages_b = pages.withColumn(
         "bucket", url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt)
     )
 
+    # a group whose buckets are all done has nothing to extract, write or
+    # record: a fully resumed re-run costs one checkpoint read, nothing else
+    groups = [g for g in range(n_groups)
+              if not done_set.issuperset(range(g, cfg.n_buckets, n_groups))]
+    if prev is not None and groups:
+        # before the first write, one limit(1) probe that reads only url
+        # and bucket: a prev written with other n_buckets or another salt
+        # would match none of its rows
+        want = url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt)
+        wrong = prev.select("url", "bucket").filter(F.col("bucket") != want).limit(1).collect()
+        if wrong:
+            raise ValueError(f"prev was written with another bucket scheme than "
+                             f"n_buckets={cfg.n_buckets}, salt={cfg.salt}: {wrong[0]}")
+
     replace_all = not done_set
     docs = fails = carried = 0
     elapsed = 0.0
-    for g in range(n_groups):
-        if done_set.issuperset(range(g, cfg.n_buckets, n_groups)):
-            # nothing to extract, write, or record: a fully resumed re-run
-            # costs one checkpoint read, nothing else
-            continue
+    for g in groups:
         group = pending(pages_b, g).drop("bucket")
 
         t0 = time.time()
@@ -311,16 +323,9 @@ def run_extract_job(
             # only where AQE splits an oversized bucket) — without it
             # every task would emit a file into every bucket directory
             # (the small-files trap, guide §6).
-            n_carried = {}
             extracted = extract_pages(group, cfg, shuffle=True, metrics=acc)
         else:
-            group_prev = pending(prev, g)
-            n_carried = carried_counts(group, group_prev, cfg)
-            # the carried rows lead with the join keys: put the columns
-            # back in a fresh run's order, so both write one schema
-            extracted = delta_extract(
-                group, group_prev, cfg, metrics=acc
-            ).select(*EXTRACTED_SCHEMA.fieldNames())
+            extracted = delta_extract(group, pending(prev, g), cfg, metrics=acc)
         write_extracted(
             extracted.withColumn("run_id", F.lit(run_id)),
             output_path, output_table, replace_all=replace_all,
@@ -328,14 +333,12 @@ def run_extract_job(
         replace_all = False
         group_sec = time.time() - t0
 
-        totals = bucket_totals(acc.value)
-        for b in n_carried:  # a bucket of carried rows only gets a row too
-            totals.setdefault(b, [0, 0, 0, 0])
-        totals = sorted(totals.items())
+        # a bucket of carried rows only reports too, so it gets a row
+        totals = sorted(bucket_totals(acc.value).items())
         group_docs = sum(c[0] for _, c in totals)
         docs += group_docs
         fails += sum(c[1] for _, c in totals)
-        carried += sum(n_carried.values())
+        carried += sum(c[4] for _, c in totals)
         elapsed += group_sec
         group_rate = group_docs / group_sec if group_sec > 0 else 0.0
         finished_at = datetime.now(timezone.utc)
@@ -346,11 +349,11 @@ def run_extract_job(
             pa.Table.from_pylist(
                 [
                     dict(run_id=run_id, bucket=b, n_docs=n,
-                         n_carried=n_carried.get(b, 0), n_failures=f,
+                         n_carried=n_carried, n_failures=f,
                          blocks_kept=kept, blocks_dropped=dropped,
                          docs_per_sec=group_rate, started_at=started_at,
                          finished_at=finished_at, status="success")
-                    for b, (n, f, kept, dropped) in totals
+                    for b, (n, f, kept, dropped, n_carried) in totals
                 ],
                 schema=to_arrow_schema(CHECKPOINT_SCHEMA),
             ),

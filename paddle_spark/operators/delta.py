@@ -2,23 +2,27 @@
 
 Common-Crawl-style corpora arrive as monthly snapshots where most pages
 are byte-identical to the previous crawl. Re-extracting 10^12 documents
-when ~10% changed wastes 90% of the fleet — the idiomatic Spark shape is
-an anti-join on the input-payload hash:
+when ~10% changed wastes 90% of the fleet, so only changed and new
+payloads run the kernels:
 
     new snapshot ──┬─ (url, payload_xxh) unchanged ──> carry prev rows
-                   └─ changed / new ──> extract_pages (the narrow waist)
+                   └─ changed / new ──> the kernels (the narrow waist)
 
 ``payload_xxh`` (xxhash64 of the raw payload, computed JVM-side by
-extract_job.payload_key_col) is stored in every extracted row, so the
+extract_job.extract_source) is stored in every extracted row, so the
 previous output table IS the change-detection index — no extra state.
-Both joins are equi-joins on (url, payload_xxh) against the other side's
-deduplicated keys: the planner broadcasts that key side while it is
-under the broadcast threshold, and beyond it sort-merges with both sides
-hash-shuffled on (url, payload_xxh). Either way the deduplication
-hash-shuffles each side on that key; the ``bucket=`` directories of the
-previous output co-partition nothing. Carried and fresh rows then meet in
-one rebalance on ``bucket``, so the ``partitionBy("bucket")`` sink writes
-one file per bucket, as a fresh run does.
+
+Each input crosses one exchange: the snapshot is repartitioned on its
+lineage ``bucket`` (``extract_source``, as a fresh run computes it), the
+previous output on its stored ``bucket``. The bucket is a function of the
+url, so the key (bucket, url, payload_xxh) means (url, payload_xxh), and
+the rest runs in one stage above the two exchanges: their union, one
+group-by on that key in place of deduplications and joins, the kernels'
+``mapInPandas`` (carried rows pass through it) and the
+``partitionBy("bucket")`` write. Spark's partition-aware union
+(``spark.sql.unionOutputPartitioning``, on by default) keeps each bucket
+in one partition, so a recrawl writes one file per bucket as a fresh run
+does.
 
 Byte-identity guarantee: carried rows were produced by the same kernels
 from the same bytes, so the merged output equals a full re-extraction
@@ -32,7 +36,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
-from paddle_spark.operators.extract_job import extract_pages, payload_key_col
+from paddle_spark.operators.extract_job import (
+    EXTRACTED_SCHEMA,
+    RESULT_DEFAULTS,
+    extract_source,
+    make_extract_batch,
+)
 
 _KEY = ["url", "payload_xxh"]
 
@@ -49,88 +58,67 @@ def delta_extract(
     unchanged urls carry their previous rows verbatim.
 
     Duplicate (url, payload_xxh) rows — crawls do re-fetch the same page
-    — are collapsed to one on BOTH sides before the joins: duplicate keys
-    carry byte-identical payloads by construction, so the kernels would
-    produce identical rows anyway, and semi/anti joins are set-valued (a
-    key present twice in prev would otherwise survive twice while the
-    snapshot expects once, and vice versa). The equality invariant is
-    against the deduplicated snapshot (test_delta pins it).
+    — collapse to one on BOTH sides (the kernels would produce identical
+    rows anyway): ``max(struct(carried, …))`` picks it by value, whatever
+    the partitioning, and prefers a previous row. The output equals a
+    full re-extraction of the deduplicated snapshot (test_delta pins it).
+    ``extracted_prev`` must have been written with ``cfg``'s
+    ``n_buckets`` and ``salt``, or none of its rows match.
 
     WET snapshots: pass ``cfg`` with ``wet_passthrough=True`` (the same
-    cfg the previous output was extracted with) — the change key then
-    mirrors the WET lineage hash, so unchanged conversion rows carry
-    forward instead of re-extracting every run.
+    cfg the previous output was extracted with), so unchanged conversion
+    rows match on their text and carry forward.
 
-    ``metrics``, a ``PartitionCounts`` accumulator, receives the counters
-    of the changed and new pages' kernel tasks (``extract_pages``); the
-    carried rows run no kernel and report nothing (``carried_counts``
-    counts them).
-
-    The merged output's bucket rebalance starts at
-    ``spark.sql.shuffle.partitions`` (the launcher's width), which AQE then
-    coalesces or splits."""
-    new_keyed = pages_new.withColumn(
-        "payload_xxh", payload_key_col(pages_new, cfg.wet_passthrough)
-    ).dropDuplicates(_KEY)
-    prev_cols = [c for c in extracted_prev.columns if c != "run_id"]
-    prev = extracted_prev.select(*prev_cols).dropDuplicates(_KEY)
-
-    # unchanged: previous rows whose (url, hash) still exists in the new
-    # snapshot — a semi-join keeps exactly those
-    carried = prev.join(
-        new_keyed.select(*_KEY), _KEY, "left_semi"
+    The kernel stage's partitions are the union of the two inputs'
+    repartitions on ``bucket``: both start at
+    ``spark.sql.shuffle.partitions`` (the launcher's width), and AQE
+    coalesces them alike but never splits one. ``metrics``, a
+    ``PartitionCounts`` accumulator, receives that stage's counters: the
+    changed and new pages' as a fresh run's, and the carried rows' as
+    ``n_carried``."""
+    snapshot = extract_source(pages_new, cfg).repartition("bucket").select(
+        "*", F.lit(False).alias("carried"),
+        *(F.lit(v).cast(EXTRACTED_SCHEMA[c].dataType).alias(c)
+          for c, v in RESULT_DEFAULTS.items()),
     )
-    # changed/new: snapshot rows with no matching previous output
-    todo = new_keyed.join(prev.select(*_KEY), _KEY, "left_anti")
-    # shuffle=False: the snapshot's dedup exchange on (url, payload_xxh)
-    # has already spread host skew, so the kernels run in its partitions
-    fresh = extract_pages(
-        todo.drop("payload_xxh"), cfg, shuffle=False, metrics=metrics
+    prev = (
+        extracted_prev.select(*EXTRACTED_SCHEMA.fieldNames()).repartition("bucket")
+        .select("*", F.lit(None).cast("binary").alias("html"),
+                F.lit(None).cast("string").alias("wet_text"), F.lit(True).alias("carried"))
     )
-    # one rebalance on bucket above the union, for the partitionBy(bucket)
-    # sink: each bucket lands in one shuffle partition, so carried and
-    # fresh rows together write one file per bucket as a fresh run does
-    # (AQE sizes it and splits oversized buckets, as in extract_pages)
-    return carried.unionByName(fresh).hint("rebalance", "bucket")
-
-
-def carried_counts(
-    pages_new: DataFrame,
-    extracted_prev: DataFrame,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-) -> dict[int, int]:
-    """``{bucket: rows}`` that ``delta_extract(pages_new, extracted_prev,
-    cfg)`` carries over: the distinct (url, payload_xxh) keys of the
-    previous output that the snapshot still holds, counted per stored
-    ``bucket`` in one grouped aggregate."""
-    new_keys = pages_new.select(
-        "url", payload_key_col(pages_new, cfg.wet_passthrough).alias("payload_xxh")
+    key = ["bucket", *_KEY]
+    row = ["carried", *(c for c in snapshot.columns if c not in key + ["carried"])]
+    return (
+        snapshot.unionByName(prev)
+        .groupBy(*key)
+        # keep the keys the snapshot holds: min(carried) is false there
+        .agg(F.max(F.struct(*row)).alias("row"), F.min("carried").alias("prev_only"))
+        .filter(~F.col("prev_only"))
+        .select(*key, "row.*")
+        .mapInPandas(make_extract_batch(cfg, metrics), schema=EXTRACTED_SCHEMA)
     )
-    carried = (
-        extracted_prev.select("bucket", *_KEY).dropDuplicates(_KEY)
-        .join(new_keys, _KEY, "left_semi")
-    )
-    return {r["bucket"]: r["count"] for r in carried.groupBy("bucket").count().collect()}
 
 
 def delta_stats(
     pages_new: DataFrame, extracted_prev: DataFrame, wet: bool = False
 ) -> dict:
     """Driver-side summary of how much work a delta run saves (counts only,
-    no extraction): one aggregate over the snapshot keys left-joined to the
-    previous output's keys, which carry a marker — ``count(*)`` is the
-    snapshot, ``count(in_prev)`` the unchanged keys. ``wet`` must match the
+    no extraction): one shuffle over the tagged union of the snapshot's
+    and the previous output's (url, payload_xxh) keys, grouped per key —
+    ``count_if(new)`` is the deduplicated snapshot, ``count_if(new AND
+    prev)`` its unchanged keys. ``wet`` must match the
     cfg.wet_passthrough the extraction runs with (key parity)."""
-    new_keyed = pages_new.select(
-        "url", payload_key_col(pages_new, wet).alias("payload_xxh")
-    ).dropDuplicates(_KEY)
-    prev = (
-        extracted_prev.select(*_KEY).dropDuplicates(_KEY)
-        .withColumn("in_prev", F.lit(True))
+    keys = extract_source(pages_new, ExtractConfig(wet_passthrough=wet)).select(
+        *_KEY, F.lit(True).alias("new"), F.lit(False).alias("prev")
+    ).unionByName(
+        extracted_prev.select(*_KEY, F.lit(False).alias("new"), F.lit(True).alias("prev"))
     )
-    n_new, n_unchanged = new_keyed.join(prev, _KEY, "left").agg(
-        F.count(F.lit(1)), F.count("in_prev")
-    ).first()
+    n_new, n_unchanged = (
+        keys.groupBy(*_KEY)
+        .agg(F.max("new").alias("new"), F.max("prev").alias("prev"))
+        .agg(F.count_if("new"), F.count_if(F.col("new") & F.col("prev")))
+        .first()
+    )
     return {
         "snapshot_docs": n_new,
         "unchanged": n_unchanged,

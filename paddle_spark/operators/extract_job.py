@@ -34,7 +34,7 @@ from dataclasses import replace
 
 import pandas as pd
 from pyspark import Accumulator, AccumulatorParam, TaskContext
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,18 +68,20 @@ EXTRACTED_SCHEMA = T.StructType(
 class PartitionCounts(AccumulatorParam):
     """Accumulator of per-task extraction counters:
     ``{partition_id: {bucket: [n_docs, n_failures, blocks_kept,
-    blocks_dropped]}}``.
+    blocks_dropped, n_carried]}}`` (``n_carried`` counts the rows
+    ``delta_extract`` carries through the kernel stage unchanged; the
+    other four count the rows the kernels ran on).
 
     Merging REPLACES a repeated partition id instead of adding to it. A
     failed attempt reports nothing, and a recomputed or speculative
     attempt of a partition reports the same rows (a scan split, a shuffle
     partition of a rebalance below the kernel, or, in ``delta_extract``,
-    a partition of the anti-join over the snapshot's dedup exchange: each
-    is a deterministic repartition, which a recompute reproduces
-    exactly), so its entry overwrites an identical one and the counts
-    stay exact under retries. The reference's analog is one heartbeat
-    file per serving instance, rewritten in place
-    (layout_status.py:61-86)."""
+    a partition of the union of the snapshot's and the previous output's
+    repartitions on ``bucket``: each is a deterministic repartition,
+    which a recompute reproduces exactly), so its entry overwrites an
+    identical one and the counts stay exact under retries. The
+    reference's analog is one heartbeat file per serving instance,
+    rewritten in place (layout_status.py:61-86)."""
 
     def zero(self, value):
         return {}
@@ -91,15 +93,21 @@ class PartitionCounts(AccumulatorParam):
 
 def bucket_totals(parts: dict) -> dict:
     """Sum a ``PartitionCounts`` value over partitions: ``{bucket:
-    [n_docs, n_failures, blocks_kept, blocks_dropped]}`` (one bucket may
-    span several partitions when AQE splits it)."""
+    [n_docs, n_failures, blocks_kept, blocks_dropped, n_carried]}`` (one
+    bucket may span several partitions when AQE splits it)."""
     totals: dict = {}
     for counts in parts.values():
         for b, c in counts.items():
-            t = totals.setdefault(b, [0, 0, 0, 0])
+            t = totals.setdefault(b, [0] * len(c))
             for j, v in enumerate(c):
                 t[j] += v
     return totals
+
+
+# The kernel's result columns, each with the value a row holds until the
+# kernel (or the WET passthrough) fills it in.
+RESULT_DEFAULTS = {"text": None, "text_sha256": "", "n_blocks_kept": 0,
+                   "n_blocks_dropped": 0, "parse_ok": False, "branch": "", "error": None}
 
 
 def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
@@ -111,7 +119,12 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
     the ``extraction_metrics`` counters per bucket as it goes and, after
     the task's last batch, reports them once under the task's partition
     id. The body runs only in Python workers, and first installs
-    ``paddle_spark.worker``'s fix there."""
+    ``paddle_spark.worker``'s fix there.
+
+    A batch with a ``carried`` column comes from ``delta_extract``: its
+    carried rows hold their previous result columns and pass through
+    verbatim (counted as ``n_carried``), and only the others run the
+    kernels."""
 
     # Resolve the pixel decoder once, at plan construction (same contract
     # as operators/scanned.py), not per row on the executors.
@@ -127,23 +140,24 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
         for pdf in batches:
             n = len(pdf)
             out = {
-                "url": pdf["url"].to_numpy(),
-                "warc_ts": pdf["warc_ts"].to_numpy(),
-                "lang": pdf["lang"].to_numpy(),
-                "bucket": pdf["bucket"].to_numpy(),
-                "payload_xxh": pdf["payload_xxh"].to_numpy(),
-                "text": [None] * n,
-                "text_sha256": [""] * n,
-                "n_blocks_kept": [0] * n,
-                "n_blocks_dropped": [0] * n,
-                "parse_ok": [False] * n,
-                "branch": [""] * n,
-                "error": [None] * n,
+                c: pdf[c].to_numpy()
+                for c in ("url", "warc_ts", "lang", "bucket", "payload_xxh")
             }
+            if "carried" in pdf:
+                # delta_extract's rows: a carried row holds its previous
+                # result and passes through, a changed or new one holds
+                # the defaults
+                carried = pdf["carried"].to_numpy()
+                out.update({c: pdf[c].tolist() for c in RESULT_DEFAULTS})
+            else:
+                carried = [False] * n
+                out.update({c: [v] * n for c, v in RESULT_DEFAULTS.items()})
             payloads = pdf["html"].to_numpy()
             wet = pdf["wet_text"].to_numpy()
             for i in range(n):
-                if payloads[i] is None and wet[i] is not None:
+                if carried[i]:
+                    pass  # the previous result passes through
+                elif payloads[i] is None and wet[i] is not None:
                     # WET conversion record: the text IS the extraction
                     # output (Common Crawl pre-extracted it) — pass it
                     # through verbatim instead of failing on a null
@@ -162,11 +176,14 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
                     out["branch"][i] = r.branch
                     out["error"][i] = r.error or None
                 if counts is not None:
-                    c = counts.setdefault(int(out["bucket"][i]), [0, 0, 0, 0])
-                    c[0] += 1
-                    c[1] += not out["parse_ok"][i]
-                    c[2] += out["n_blocks_kept"][i]
-                    c[3] += out["n_blocks_dropped"][i]
+                    c = counts.setdefault(int(out["bucket"][i]), [0, 0, 0, 0, 0])
+                    if carried[i]:
+                        c[4] += 1
+                    else:
+                        c[0] += 1
+                        c[1] += not out["parse_ok"][i]
+                        c[2] += out["n_blocks_kept"][i]
+                        c[3] += out["n_blocks_dropped"][i]
             yield pd.DataFrame(out)
         if counts is not None:
             metrics.add({TaskContext.get().partitionId(): counts})
@@ -174,20 +191,29 @@ def make_extract_batch(cfg: ExtractConfig, metrics: Accumulator | None = None):
     return extract_batch
 
 
-def payload_key_col(pages: DataFrame, wet: bool) -> Column:
-    """The input-lineage key stored as ``payload_xxh`` (JVM-side xxhash64
-    of the raw input): plain ``xxhash64(html)`` normally; with WET
-    passthrough, null-html conversion rows key on the pre-extracted text
-    bytes. extract_pages stores it and delta extraction matches on it
-    (operators/delta.py) — without the WET form, unchanged WET rows
-    (html null → xxhash64(NULL) is a constant) would never match their
-    previous output, so every delta run would re-extract them, and
-    distinct-text WET rows sharing a url would collapse under the
-    constant hash."""
-    if not (wet and "text" in pages.columns):
-        return F.xxhash64("html")
-    wet_text = F.when(F.col("html").isNull(), F.col("text"))
-    return F.xxhash64(F.coalesce(F.col("html"), F.encode(wet_text, "utf-8")))
+def extract_source(pages: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """The kernel stage's input: ``url``, ``warc_ts``, ``html``,
+    ``wet_text``, ``lang``, the lineage ``bucket`` and ``payload_xxh``,
+    the input-lineage key (JVM-side xxhash64 of the raw input) that rides
+    through the kernel untouched and that delta extraction matches on.
+
+    WET conversion rows (html null, text pre-extracted by the crawl) pass
+    through the kernel stage verbatim when ``cfg.wet_passthrough``, keyed
+    on their text bytes: under the constant hash of a null input,
+    unchanged WET rows would never match their previous output, and
+    distinct-text WET rows sharing a url would collapse. Off by default:
+    reading ``text`` would break the F1 column-pruning invariant for
+    ordinary corpora."""
+    if cfg.wet_passthrough and "text" in pages.columns:
+        wet_text = F.when(F.col("html").isNull(), F.col("text"))
+        payload = F.coalesce(F.col("html"), F.encode(wet_text, "utf-8"))
+    else:
+        wet_text, payload = F.lit(None).cast("string"), F.col("html")
+    return pages.select(
+        "url", "warc_ts", "html", wet_text.alias("wet_text"), "lang",
+        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt).alias("bucket"),
+        F.xxhash64(payload).alias("payload_xxh"),
+    )
 
 
 def extract_pages(
@@ -210,9 +236,9 @@ def extract_pages(
     ``run_extract_job`` does, for a ``partitionBy("bucket")`` sink: the
     kernels and the write then share the rebalance's tasks, whatever the
     input's row groups, and each bucket is still one file.
-    ``delta_extract`` rebalances above the kernel instead, whose input is
-    already spread by the snapshot's dedup exchange. The extraction
-    output is per-row pure, so partitioning never changes results.
+    ``delta_extract`` plans its own exchanges around ``extract_source``'s
+    projection and the same kernel body. The extraction output is per-row
+    pure, so partitioning never changes results.
 
     The rebalance hashes on ``bucket`` alone, so each bucket lands in one
     shuffle partition and a ``partitionBy("bucket")`` write emits one file
@@ -228,32 +254,10 @@ def extract_pages(
     (``coalescePartitions.minPartitionSize``, set in ``build_session``)
     runs the kernels on fewer tasks than cores however slow its pages
     are (the 600-doc ``crawl_job`` shuffles 0.9 MB of raw payloads, which
-    still spreads over 4 cores); a rebalance above the kernel, as
-    ``delta_extract`` uses, leaves them in the input's partitions. With
-    AQE disabled the rebalance is a plain hash repartition on ``bucket``.
+    still spreads over 4 cores). With AQE disabled the rebalance is a
+    plain hash repartition on ``bucket``.
     """
-    # WET conversion rows (html null, text pre-extracted by the crawl)
-    # pass through the kernel stage verbatim when cfg.wet_passthrough;
-    # their lineage hash keys on the text bytes so delta extraction
-    # still detects changes. Off by default: reading `text` would break
-    # the F1 column-pruning invariant for ordinary corpora.
-    use_wet = cfg.wet_passthrough and "text" in pages.columns
-    wet_text = (
-        F.when(F.col("html").isNull(), F.col("text"))
-        if use_wet
-        else F.lit(None).cast("string")
-    )
-    src = pages.select(
-        "url",
-        "warc_ts",
-        "html",
-        wet_text.alias("wet_text"),
-        "lang",
-        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt).alias("bucket"),
-        # the input hash rides through the kernel untouched: input
-        # lineage + delta-extraction key
-        payload_key_col(pages, cfg.wet_passthrough).alias("payload_xxh"),
-    )
+    src = extract_source(pages, cfg)
     if shuffle:
         src = src.hint("rebalance", *([n_partitions] if n_partitions else []), "bucket")
     return src.mapInPandas(make_extract_batch(cfg, metrics), schema=EXTRACTED_SCHEMA)

@@ -454,18 +454,23 @@ def test_partition_counts_replace_repeated_partition(spark, tiny_pages):
     extracted = extract_pages(tiny_pages, CFG, shuffle=True, metrics=acc)
     for _ in range(2):
         extracted.write.format("noop").mode("overwrite").save()
-    counted = sorted((b, *c) for b, c in bucket_totals(acc.value).items())
+    totals = bucket_totals(acc.value)
+    counted = sorted((b, *c[:4]) for b, c in totals.items())
     oracle = extraction_metrics(extracted).select(*COUNTERS).collect()
     assert counted == sorted(map(tuple, oracle))
+    assert all(c[4] == 0 for c in totals.values())  # a fresh run carries nothing
 
 
-_RETRY_SCRIPT = r"""
+# The head of a script for run_flaky: a local[2,2] session (two attempts
+# per task) with 16-row Arrow batches, in which attempt 0 of partition 0
+# of every kernel stage fails after two batches and leaves ``marker``.
+FLAKY_SESSION = r"""
 import json, os, sys
 from pyspark import TaskContext
 from pyspark.sql import SparkSession, functions as F, types as T
 
 from paddle_spark.config import ExtractConfig
-from paddle_spark.operators import checkpoint, extract_job
+from paddle_spark.operators import checkpoint, delta, extract_job
 from paddle_spark.sources.synth import gen_pages_pdf
 
 tmp, n_rows = sys.argv[1], int(sys.argv[2])
@@ -495,7 +500,7 @@ def flaky_make_extract_batch(cfg, metrics=None):
     return run
 
 
-extract_job.make_extract_batch = flaky_make_extract_batch
+extract_job.make_extract_batch = delta.make_extract_batch = flaky_make_extract_batch
 schema = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("warc_ts", T.TimestampType()),
@@ -503,6 +508,9 @@ schema = T.StructType([
     T.StructField("text", T.StringType()),
     T.StructField("lang", T.StringType()),
 ])
+"""
+
+_RETRY_SCRIPT = FLAKY_SESSION + r"""
 pages = spark.createDataFrame(gen_pages_pdf(n_rows, seed=42), schema=schema)
 out, cp = os.path.join(tmp, "out"), os.path.join(tmp, "cp")
 summary = checkpoint.run_extract_job(
@@ -525,12 +533,9 @@ spark.stop()
 """
 
 
-def test_retried_task_counts_once(tmp_path):
-    """Attempt 0 of partition 0 fails after two Arrow batches; its retry
-    reports the partition's counters once, so the lineage still equals the
-    output oracle and the summary equals N. Runs in its own local[2,2]
-    session (two task attempts) with 16-row batches."""
-    n_rows = 200
+def run_flaky(script, tmp_path, n_rows):
+    """Run ``script`` (``FLAKY_SESSION`` + a body that reads ``tmp`` and
+    ``n_rows``) in its own Python process; its last stdout line as JSON."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
@@ -538,11 +543,20 @@ def test_retried_task_counts_once(tmp_path):
     )
     env.setdefault("PYSPARK_PYTHON", sys.executable)
     proc = subprocess.run(
-        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path), str(n_rows)],
+        [sys.executable, "-c", script, str(tmp_path), str(n_rows)],
         env=env, cwd=root, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_retried_task_counts_once(tmp_path):
+    """Attempt 0 of partition 0 fails after two Arrow batches; its retry
+    reports the partition's counters once, so the lineage still equals the
+    output oracle and the summary equals N. Runs in its own local[2,2]
+    session (two task attempts) with 16-row batches."""
+    n_rows = 200
+    res = run_flaky(_RETRY_SCRIPT, tmp_path, n_rows)
     assert res["failed_once"]
     assert res["lineage"] == res["oracle"]
     assert res["summary_docs"] == n_rows

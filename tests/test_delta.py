@@ -12,9 +12,20 @@ from paddle_spark.config import ExtractConfig
 from paddle_spark.functions import url_bucket_col
 from paddle_spark.operators.checkpoint import read_checkpoint, run_extract_job
 from paddle_spark.operators.delta import delta_extract, delta_stats
-from paddle_spark.operators.extract_job import extract_pages, extraction_metrics
+from paddle_spark.operators.extract_job import (
+    PartitionCounts,
+    bucket_totals,
+    extract_pages,
+    extraction_metrics,
+)
 from paddle_spark.sources.synth import gen_pages_spark
-from tests.test_checkpoint_resume import _files_per_bucket, _jobs_started, crash_on
+from tests.test_checkpoint_resume import (
+    FLAKY_SESSION,
+    _files_per_bucket,
+    _jobs_started,
+    crash_on,
+    run_flaky,
+)
 
 CFG = ExtractConfig(n_buckets=8)
 
@@ -64,12 +75,13 @@ def test_delta_stats_counts(spark, snapshots):
 
 
 def test_delta_stats_is_one_action(spark, snapshots):
-    """The snapshot and unchanged counts come from one aggregate over a
-    left join: 8 Spark jobs on this fixture, where two count() actions
-    took 14."""
+    """The snapshot and unchanged counts come from one shuffle over the
+    tagged union of both key sets: 6 Spark jobs on this fixture, where a
+    left join of the two deduplicated key sets took 8 and two count()
+    actions 14."""
     v1, v2 = snapshots
     prev = extract_pages(v1, n_partitions=4)
-    assert _jobs_started(spark, "delta_stats", lambda: delta_stats(v2, prev)) == 8
+    assert _jobs_started(spark, "delta_stats", lambda: delta_stats(v2, prev)) == 6
 
 
 def test_delta_write_is_one_file_per_bucket(spark, snapshots, tmp_path):
@@ -102,6 +114,58 @@ def test_delta_duplicate_keys(spark, snapshots):
     m = {r["url"]: (r["text_sha256"], r["payload_xxh"]) for r in merged.collect()}
     f = {r["url"]: (r["text_sha256"], r["payload_xxh"]) for r in full.collect()}
     assert m == f
+
+
+def test_delta_pick_is_deterministic(spark):
+    """A duplicate key keeps the row its values pick, not the one row
+    order puts first: prev holds one (url, payload_xxh) twice with two
+    warc_ts, the snapshot one new page twice with two warc_ts, and
+    delta_extract gives the same rows at 1, 4 and 16 shuffle partitions,
+    each with the later warc_ts."""
+    pages = gen_pages_spark(spark, 12, seed=42, n_partitions=2)
+    u0, u1 = sorted(r["url"] for r in pages.select("url").collect())[:2]
+    later = F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
+    base = extract_pages(pages.filter(F.col("url") != u1), CFG)
+    prev = base.unionByName(base.filter(F.col("url") == u0).withColumn("warc_ts", later))
+    snap = pages.unionByName(pages.filter(F.col("url") == u1).withColumn("warc_ts", later))
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    runs = []
+    try:
+        for n in (1, 4, 16):
+            spark.conf.set(key, str(n))
+            runs.append(sorted(map(tuple, delta_extract(snap, prev, CFG).collect())))
+    finally:
+        spark.conf.set(key, saved)
+    assert runs[0] == runs[1] == runs[2]
+    got = {r[0]: r[1] for r in runs[0]}  # url -> warc_ts
+    assert len(got) == 12
+    first = {r["url"]: r["warc_ts"] for r in pages.collect()}
+    for url in (u0, u1):
+        assert (got[url] - first[url]).days == 1
+
+
+def test_delta_keeps_buckets_whole_at_a_small_advisory_size(spark, snapshots, tmp_path):
+    """AQE never splits a key's snapshot row from its prev row: at a 16 KB
+    advisory partition size, below every bucket's shuffle bytes, the
+    kernel stage still counts exactly delta_stats' carried and extracted
+    keys, and each bucket is still one file."""
+    v1, v2 = snapshots
+    prev = extract_pages(v1, CFG, n_partitions=4)
+    out = str(tmp_path / "out")
+    acc = spark.sparkContext.accumulator({}, PartitionCounts())
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        delta_extract(v2, prev, CFG, metrics=acc).write.partitionBy("bucket").parquet(out)
+    finally:
+        spark.conf.set(key, saved)
+    totals = bucket_totals(acc.value).values()
+    stats = delta_stats(v2, prev)
+    assert sum(c[0] for c in totals) == stats["to_extract"]
+    assert sum(c[4] for c in totals) == stats["unchanged"]
+    assert set(_files_per_bucket(out).values()) == {1}
 
 
 def test_delta_job_static_overwrite(spark, snapshots, tmp_path, capsys):
@@ -208,20 +272,19 @@ def test_delta_wet_snapshot(spark):
     f = {(r["url"], r["payload_xxh"]): r["text_sha256"] for r in full.collect()}
     assert m == f, "WET delta output must equal full re-extraction"
     # every WET row passed through (no parse_ok=false regressions)
-    bad = merged.filter(F.col("url").contains(".example/") & ~F.col("parse_ok"))
+    bad = merged.filter(F.col("url").startswith("https://wet") & ~F.col("parse_ok"))
     assert bad.count() == 0
 
 
 def test_delta_only_extracts_changed(spark, snapshots):
-    """The fresh branch's plan touches only changed/new rows (anti-join),
-    never the unchanged majority."""
+    """Only the changed and new rows run the kernels, never the unchanged
+    majority: the kernel tasks count 60 extracted and 160 carried rows."""
     v1, v2 = snapshots
     prev = extract_pages(v1, n_partitions=4)
-    new_keyed = v2.withColumn("payload_xxh", F.xxhash64("html"))
-    todo = new_keyed.join(
-        prev.select("url", "payload_xxh"), ["url", "payload_xxh"], "left_anti"
-    )
-    assert todo.count() == 60
+    acc = spark.sparkContext.accumulator({}, PartitionCounts())
+    delta_extract(v2, prev, metrics=acc).write.format("noop").mode("overwrite").save()
+    totals = bucket_totals(acc.value).values()
+    assert (sum(c[0] for c in totals), sum(c[4] for c in totals)) == (60, 160)
 
 
 @pytest.fixture(scope="module")
@@ -314,11 +377,12 @@ def test_crashed_recrawl_resumes_only_its_last_group(spark, snapshots, recrawl, 
 
 
 def test_recrawl_launch_jobs(spark, snapshots, recrawl, tmp_path, capsys):
-    """A launched recrawl (jobs/extract.py --input --prev) starts 17 Spark
+    """A launched recrawl (jobs/extract.py --input --prev) starts 10 Spark
     jobs on this fixture and reads none of its output back: 1 each to read
-    the input's and prev's schemas, 2 for the WET probe, 4 for the
-    n_carried count, 8 for the write (the stages of the joins and the
-    rebalance) and 1 for the lineage append."""
+    the input's and prev's schemas, 2 for the WET probe, 2 for the bucket
+    scheme probe, 3 for the write (the two bucket repartitions and the
+    stage above them, whose kernel tasks also count the carried rows) and
+    1 for the lineage append."""
     import jobs.extract as job
 
     _, v2 = snapshots
@@ -330,7 +394,65 @@ def test_recrawl_launch_jobs(spark, snapshots, recrawl, tmp_path, capsys):
     n = _jobs_started(spark, "recrawl_launch", lambda: job.main(argv))
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["n_docs"] + summary["n_carried"] == v2.count()
-    assert n == 17, n
+    assert n == 10, n
+
+
+def test_recrawl_rejects_another_bucket_scheme(spark, snapshots, recrawl, tmp_path):
+    """A recrawl against a prev written with other n_buckets or another
+    salt would match none of its rows: it fails before its first write,
+    so nothing exists under the output."""
+    import jobs.extract as job
+
+    _, v2 = snapshots
+    d, prev, _ = recrawl
+    v2.write.parquet(str(tmp_path / "snap2"))
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="another bucket scheme"):
+        job.main(["--input", str(tmp_path / "snap2"), "--prev", str(d / "a"),
+                  "--output", str(out), "--checkpoint", str(tmp_path / "cp"),
+                  "--n-buckets", str(2 * CFG.n_buckets)])
+    assert not out.exists()
+    with pytest.raises(ValueError, match="another bucket scheme"):
+        run_extract_job(spark, v2, str(out), str(tmp_path / "cp"),
+                        cfg=ExtractConfig(n_buckets=CFG.n_buckets, salt=1), prev=prev)
+    assert not out.exists()
+
+
+_RECRAWL_RETRY_SCRIPT = FLAKY_SESSION + r"""
+import pandas as pd
+
+cfg = ExtractConfig(n_buckets=8)
+v1 = gen_pages_pdf(n_rows, seed=42)
+changed = gen_pages_pdf(40, seed=43).assign(url=v1["url"][:40].to_numpy())
+v2 = pd.concat([v1[40:], changed, gen_pages_pdf(20, seed=42, start=10000)])
+a, b, cp = (os.path.join(tmp, x) for x in ("a", "b", "cp"))
+checkpoint.run_extract_job(spark, spark.createDataFrame(v1, schema=schema), a, cp,
+                           run_id="a", cfg=cfg)
+if os.path.exists(marker):
+    os.remove(marker)
+pages, prev = spark.createDataFrame(v2, schema=schema), spark.read.parquet(a)
+summary = checkpoint.run_extract_job(spark, pages, b, cp, run_id="b", cfg=cfg, prev=prev)
+lineage = checkpoint.read_checkpoint(spark, cp).filter(F.col("run_id") == "b").collect()
+stats = delta.delta_stats(pages, prev)
+print(json.dumps({
+    "failed_once": os.path.exists(marker),
+    "lineage": [sum(r["n_docs"] for r in lineage), sum(r["n_carried"] for r in lineage)],
+    "summary": [summary["n_docs"], summary["n_carried"]],
+    "stats": [stats["to_extract"], stats["unchanged"]],
+    "written": spark.read.parquet(b).count(),
+}))
+spark.stop()
+"""
+
+
+def test_retried_recrawl_counts_carried_once(tmp_path):
+    """A recrawl whose kernel task fails once after two Arrow batches
+    (carried rows included) still reports each row once: the lineage's
+    n_docs and n_carried equal delta_stats' to_extract and unchanged."""
+    res = run_flaky(_RECRAWL_RETRY_SCRIPT, tmp_path, 200)
+    assert res["failed_once"]
+    assert res["lineage"] == res["summary"] == res["stats"] == [60, 160]
+    assert res["written"] == 220
 
 
 def test_wet_snapshot_recrawl_carries_every_row(spark, tmp_path, capsys):

@@ -120,23 +120,44 @@ def test_extraction_plan_is_one_bucket_rebalance(spark, tiny_pages):
     assert "Exchange" not in plan_of(extract_pages(tiny_pages, shuffle=False))
 
 
-def test_delta_plan_is_one_bucket_rebalance_above_union(spark, tiny_pages):
-    """delta_extract ends in exactly one rebalance, hashed on bucket alone
-    and placed above the union of carried and fresh rows, so a recrawl
-    writes one file per bucket as a fresh run does."""
+def test_delta_plan_is_two_bucket_repartitions_under_one_union(spark, tiny_pages, tmp_path):
+    """delta_extract moves each input once: exactly two Exchanges, the
+    snapshot's and prev's repartitions hashed on bucket alone, both under
+    one Union (with only a projection between), and none above the
+    kernels' MapInPandas, so each bucket stays in one partition through
+    the group-by, the kernels and a partitionBy(bucket) write."""
     import re
 
     from paddle_spark.operators.delta import delta_extract
     from paddle_spark.operators.extract_job import extract_pages
 
-    prev = extract_pages(tiny_pages.limit(150), shuffle=False)
-    plan = plan_of(delta_extract(tiny_pages, prev))
-    rebalances = [ln for ln in plan.splitlines() if "REBALANCE_PARTITIONS_BY_COL" in ln]
-    assert len(rebalances) == 1, plan
-    assert re.search(r"Exchange hashpartitioning\(bucket#\d+, \d+\), ", rebalances[0]), plan
-    lines = plan.splitlines()
-    below = lines[lines.index(rebalances[0]) + 1]
-    assert below.strip().lstrip("+- ").startswith("Union"), plan
+    extract_pages(tiny_pages.limit(150)).write.partitionBy("bucket").parquet(
+        str(tmp_path / "prev"))
+    prev = spark.read.parquet(str(tmp_path / "prev"))
+    lines = plan_of(delta_extract(tiny_pages, prev)).splitlines()
+
+    def depth(i):
+        return len(lines[i]) - len(lines[i].lstrip(" :+-"))
+
+    def parent(i):
+        return next(k for k in range(i - 1, -1, -1) if depth(k) < depth(i))
+
+    def node(i):
+        return lines[i].lstrip(" :+-")
+
+    exchanges = [i for i in range(len(lines)) if node(i).startswith("Exchange")]
+    assert len(exchanges) == 2, "\n".join(lines)
+    unions = set()
+    for i in exchanges:
+        assert re.match(r"Exchange hashpartitioning\(bucket#\d+, \d+\), ", node(i)), node(i)
+        k = parent(i)
+        while node(k).startswith("Project"):
+            k = parent(k)
+        assert node(k).startswith("Union"), node(k)
+        unions.add(k)
+    assert len(unions) == 1
+    kernels = next(i for i in range(len(lines)) if node(i).startswith("MapInPandas"))
+    assert kernels < min(exchanges), "\n".join(lines)
 
 
 def test_bucketed_tables_colocate_join_no_shuffle(spark, tmp_path):
