@@ -9,7 +9,7 @@ submitted via `spark-submit --py-files paddle_spark.zip`, at
   * 4N = 4 executors x 2 cores  (spark.cores.max=8,  executor.cores=2)
 
 Each executor is a separate CoarseGrainedExecutorBackend JVM with its own
-python workers; the salted repartition in extract_pages shuffles over real
+python workers; the bucket repartition in extract_pages shuffles over real
 netty streams between them. The child counts its executor JVMs from the
 process table and reports their ids, so the 4N level's "4 real executors"
 is externally verifiable, not asserted.

@@ -32,7 +32,7 @@ overwrite). A run's first write replaces the whole output, so --output
 may not equal or nest with --input or --prev.
 
 Recrawl snapshot B against A's output (extracted with the same
---n-buckets/--salt, or the run fails before its first write): add
+--n-buckets, or the run fails before its first write): add
 --prev <A's output> to --input <B>. Unchanged
 pages carry A's rows, only changed and new pages run the kernels
 (operators/delta.py), and the run resumes, writes lineage and stamps its
@@ -88,7 +88,6 @@ def main(argv: list[str] | None = None) -> int:
                          "directory each); also the most tasks the kernels "
                          "and the write run until a bucket outgrows the AQE "
                          "advisory partition size")
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--bucket-groups", type=int, default=1,
                     help="commit incrementally in N sequential bucket "
                          "groups, each its own write and lineage append "
@@ -157,7 +156,6 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = ExtractConfig(
         n_buckets=args.n_buckets,
-        salt=args.salt,
         max_pages_per_doc=args.max_pages_per_doc,
         wet_passthrough=wet,
         ocr_images=args.ocr_images,

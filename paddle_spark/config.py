@@ -117,7 +117,6 @@ class ExtractConfig:
 
     # ---- job level ----
     n_buckets: int = 64          # url-hash buckets for checkpoint lineage
-    salt: int = 0                # repartition salt (defuses domain skew)
     # WET ingestion: pass pre-extracted `text` (html null) through as
     # branch='wet' rows. OPT-IN because it forces the scan to read the
     # text column — the default plan keeps the F1 pruning invariant

@@ -153,13 +153,14 @@ def above_cond(txt: str, img: str, max_distance: float = 100.0) -> Column:
     )
 
 
-def url_bucket_col(url: Column, n_buckets: int, salt: int = 0) -> Column:
-    """Salted url-hash bucket for repartition + checkpoint lineage.
+def url_bucket_col(url: Column, n_buckets: int) -> Column:
+    """Url-hash bucket for repartition + checkpoint lineage.
 
-    ``xxhash64`` of the url plus a salt literal spreads any single hot
-    host/domain across all buckets (the reference's analog is spreading
-    requests across Triton instances, config_gpu_paddlex.pbtxt:18-24)."""
-    return F.pmod(F.xxhash64(url, F.lit(salt)), F.lit(n_buckets)).cast("int")
+    ``xxhash64`` of the whole url spreads any single hot host/domain
+    across all buckets (the reference's analog is spreading requests
+    across Triton instances, config_gpu_paddlex.pbtxt:18-24). The
+    constant ``0`` second argument keeps every stored ``bucket`` id."""
+    return F.pmod(F.xxhash64(url, F.lit(0)), F.lit(n_buckets)).cast("int")
 
 
 def hash_bucket_col(key: Column, n_buckets: int) -> Column:

@@ -4,9 +4,11 @@ A from-scratch Readability/trafilatura-class boilerplate stripper:
 
 1. Tokenize the HTML byte stream with one compiled regex (comments,
    script/style islands, tags, text runs).
-2. Segment into *blocks* at block-level element boundaries, tracking
-   (a) the drop-region stack (nav/footer/aside/... subtrees are
-   boilerplate wholesale — the HTML analog of the reference label filter,
+2. Segment into *blocks* at block-level element boundaries in the same
+   single pass over the tokens (``segment_blocks``, the one segmenter),
+   tracking (a) the open drop regions (nav/footer/aside/... subtrees,
+   nested ones included, are boilerplate wholesale — the HTML analog of
+   the reference label filter,
    /root/reference/server/model_repo/layout-parsing/1/layout_captioning.py:240-241),
    (b) the number of characters inside ``<a>`` links per block.
 3. Score each block: keep when it clears a minimum length and its
@@ -49,11 +51,8 @@ _TOKEN_RE = re.compile(
 _TAG_NAME_RE = re.compile(r"</?\s*([a-zA-Z][a-zA-Z0-9]*)")
 _WS_RE = re.compile(r"\s+")
 
-# Island-marker sentinel: a private-use codepoint that decode_html scrubs
-# from every input, so a marker tag like "< 12/>" cannot be forged by
-# wild/adversarial pages (it is also unmatchable by _TAG_NAME_RE, which only
-# admits ASCII-letter tag names).
-_MARK = "\ue000"
+# U+E000, a private-use codepoint that decode_html deletes from every page.
+_SCRUBBED_CHAR = "\ue000"
 
 # Elements whose entire subtree is boilerplate or non-text.
 DROP_TAGS = frozenset(
@@ -152,204 +151,40 @@ def decode_html(payload: bytes) -> str:
     """Decode page bytes: declared charset first, then utf-8, then latin-1
     (total function — never raises).
 
-    The private-use sentinel ``_MARK`` is scrubbed from the decoded text so
-    the fast path's island markers (``<\\ue000N/>``) can never collide with
-    wild/adversarial input. Both ``segment_blocks`` and
-    ``segment_blocks_reference`` decode through here, so the scrub cannot
-    break fast-vs-reference equivalence.
+    Every ``_SCRUBBED_CHAR`` (U+E000) is deleted from the decoded text, so
+    extracted text never contains it. The deletion is part of the per-url
+    output: stored texts and their ``text_sha256`` were made with it, so
+    dropping it would change every page that holds the codepoint.
     """
     charset = sniff_charset(payload)
     if charset:
         try:
-            return payload.decode(charset).replace(_MARK, "")
+            return payload.decode(charset).replace(_SCRUBBED_CHAR, "")
         except UnicodeDecodeError:
             pass
     try:
-        return payload.decode("utf-8").replace(_MARK, "")
+        return payload.decode("utf-8").replace(_SCRUBBED_CHAR, "")
     except UnicodeDecodeError:
-        return payload.decode("latin-1").replace(_MARK, "")
-
-
-# Fast-path island pre-removal: comments and script/style vanish silently
-# (exactly the reference path's behavior); each boilerplate subtree
-# (head/nav/footer/...) is replaced by a numbered sentinel marker so the
-# main loop can emit its drop-block at the right position with the right
-# char count. One C-level regex pass removes ~half the tokens the Python
-# loop would otherwise touch. Same-tag nesting inside an island (a <form>
-# in a <form>) ends the island early — the leftover close tag then flows
-# through the stack logic below, so unbalanced documents stay safe.
-_DROP_ISLAND_TAGS = (
-    "head|nav|aside|footer|header|form|svg|iframe|noscript|template|button"
-    "|select|datalist|canvas|object|embed"
-)
-_DROP_ISLAND_RE = re.compile(
-    rf"<({_DROP_ISLAND_TAGS})\b[^>]*>.*?</\1\s*>",
-    re.DOTALL | re.IGNORECASE,
-)
-_SILENT_ISLAND_RE = re.compile(
-    r"<!--.*?-->|<(script|style)\b[^>]*>.*?</\1\s*>", re.DOTALL | re.IGNORECASE
-)
-
-
-def _island_text_chars(island: str) -> int:
-    """Non-whitespace text-run chars inside an island. Comments and
-    script/style content were already removed by the global silent pass
-    (parity with the token-loop counting, which skips those tokens)."""
-    n = 0
-    for part in island.split("<"):
-        t = part.partition(">")[2]
-        if t and not t.isspace():
-            n += len(t)
-    return n
+        return payload.decode("latin-1").replace(_SCRUBBED_CHAR, "")
 
 
 def segment_blocks(payload: bytes, cfg: ExtractConfig = DEFAULT_CONFIG) -> list[Block]:
-    """Tokenize + segment + score. Returns blocks in document order.
+    """Tokenize + segment + score in one pass over ``_TOKEN_RE``'s tokens.
+    Returns blocks in document order.
 
-    Equivalent to ``segment_blocks_reference`` (cross-checked in tests) but
-    ~1.5-2x faster via the island pre-pass above.
-    """
-    doc = decode_html(payload)
-
-    # pass 1 (C-level, no callback): comments + script/style vanish with
-    # NO separator — exactly how the reference loop skips those tokens
-    # leaving neighbors adjacent. Removing them globally FIRST also means
-    # a comment/script that straddles a drop-island boundary (e.g. a
-    # '</nav>' inside a script string) can no longer truncate the island —
-    # tightening fast-vs-reference equivalence on adversarial nesting.
-    doc = _SILENT_ISLAND_RE.sub("", doc)
-
-    islands: list[tuple[str, int]] = []
-
-    def _replace(m: re.Match) -> str:
-        # drop islands always produce a marker: entering a boilerplate
-        # subtree must end the open block even when the subtree is empty
-        islands.append((m[1].lower(), _island_text_chars(m[0])))
-        return f"<{_MARK}{len(islands) - 1}/>"
-
-    # pass 2: boilerplate subtrees -> numbered markers
-    doc = _DROP_ISLAND_RE.sub(_replace, doc)
-    blocks: list[Block] = []
-    drop_depth = 0          # nesting depth inside DROP_TAGS subtrees
-    link_depth = 0          # nesting depth inside <a>
-    cur_parts: list[str] = []
-    cur_link_chars = 0
-    cur_tag = ""
-    block_id = 0
-    drop_chars = 0          # text chars seen inside the current drop subtree
-    drop_tag = ""
-
-    def flush(next_tag: str) -> None:
-        nonlocal cur_parts, cur_link_chars, cur_tag, block_id
-        if cur_parts:
-            raw = "".join(cur_parts)
-            text = normalize_text(raw)
-            if text:
-                n = len(text)
-                # Link chars were counted pre-normalization; clamp so the
-                # density ratio stays in [0, 1] after collapse.
-                nl = min(cur_link_chars, n)
-                blk = _score_block(block_id, cur_tag, text, n, nl, cfg)
-                blocks.append(blk)
-                block_id += 1
-        cur_parts = []
-        cur_link_chars = 0
-        cur_tag = next_tag
-
-    for m in _TOKEN_RE.finditer(doc):
-        tok = m[0]
-        if tok[0] != "<":
-            # text run
-            if drop_depth == 0:
-                if not tok.isspace():
-                    cur_parts.append(tok)
-                    if link_depth > 0:
-                        cur_link_chars += len(normalize_text(tok))
-                else:
-                    cur_parts.append(" ")
-            elif not tok.isspace():
-                drop_chars += len(tok)
-            continue
-        if tok[:4] == "<!--":
-            continue
-        lower4 = tok[:4].lower()
-        if lower4 == "<scr" or lower4 == "<sty":
-            # whole script/style island consumed by the tokenizer
-            continue
-        if tok[1:2] == _MARK:
-            # pre-removed boilerplate island: ends any open block and emits
-            # the drop-block at its document position (no block if empty).
-            # _MARK cannot occur in input (decode_html scrubs it), so the
-            # index is always ours — the parse is still guarded for safety.
-            if drop_depth == 0:
-                flush("")
-                try:
-                    tag, n = islands[int(tok[2:-2])]
-                except (ValueError, IndexError):  # pragma: no cover
-                    continue
-                if n > 0:
-                    blocks.append(
-                        Block(block_id, tag, "", n, 0, False, "drop_region")
-                    )
-                    block_id += 1
-            continue
-
-        nm = _TAG_NAME_RE.match(tok)
-        if nm is None:  # doctype, malformed
-            continue
-        name = nm[1].lower()
-        closing = tok[1] == "/"
-        self_closing = tok.rstrip()[-2:-1] == "/" or name in _VOID_TAGS
-
-        if name == "a":
-            if closing:
-                link_depth = max(0, link_depth - 1)
-            elif not self_closing:
-                link_depth += 1
-            continue
-
-        if name in DROP_TAGS:
-            if closing:
-                drop_depth = max(0, drop_depth - 1)
-                if drop_depth == 0 and drop_chars > 0:
-                    # record the boilerplate subtree as one dropped block
-                    blocks.append(
-                        Block(block_id, drop_tag, "", drop_chars, 0, False,
-                              "drop_region")
-                    )
-                    block_id += 1
-                    drop_chars = 0
-            elif not self_closing:
-                # entering a boilerplate subtree ends any open block
-                if drop_depth == 0:
-                    flush("")
-                    drop_tag = name
-                drop_depth += 1
-            continue
-
-        if name in BLOCK_TAGS and drop_depth == 0:
-            if closing or name in ("br", "hr"):
-                flush("")
-            else:
-                flush(name)
-    flush("")
-    return blocks
-
-
-def segment_blocks_reference(
-    payload: bytes, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> list[Block]:
-    """Single-pass token-loop implementation (no island pre-pass).
-
-    Kept as the executable spec for ``segment_blocks``: tests assert both
-    produce identical blocks over the synthetic corpus and crafted cases.
-    Known divergence (fast path documented above): same-tag nesting inside
-    a boilerplate island, and text chars of islands nested in unbalanced
-    drop regions — both outside the corpus and the scored-output contract.
+    Comments and script/style islands vanish with no separator, so their
+    neighbours stay adjacent. Boilerplate subtrees (``DROP_TAGS``) are
+    tracked on a stack of open element names, so ``<nav><nav>..</nav>
+    menu</nav>`` drops both levels; a close tag ends its own element and
+    any unclosed one inside it, a close tag of no open element is
+    ignored, and an unclosed subtree drops the rest of the page. Each
+    subtree with text becomes one ``drop_region`` block carrying its text
+    char count; an empty one still ends the open block.
     """
     doc = decode_html(payload)
     blocks: list[Block] = []
-    drop_depth = 0
+    drop_stack: list[str] = []  # open DROP_TAGS elements, innermost last
+    n_open = dict.fromkeys(DROP_TAGS, 0)  # each name's count on drop_stack
     link_depth = 0
     cur_parts: list[str] = []
     cur_link_chars = 0
@@ -374,7 +209,7 @@ def segment_blocks_reference(
     for m in _TOKEN_RE.finditer(doc):
         tok = m[0]
         if tok[0] != "<":
-            if drop_depth == 0:
+            if not drop_stack:
                 if not tok.isspace():
                     cur_parts.append(tok)
                     if link_depth > 0:
@@ -405,8 +240,14 @@ def segment_blocks_reference(
 
         if name in DROP_TAGS:
             if closing:
-                drop_depth = max(0, drop_depth - 1)
-                if drop_depth == 0 and drop_chars > 0:
+                if not n_open[name]:
+                    continue
+                while True:
+                    top = drop_stack.pop()
+                    n_open[top] -= 1
+                    if top == name:
+                        break
+                if not drop_stack and drop_chars > 0:
                     blocks.append(
                         Block(block_id, drop_tag, "", drop_chars, 0, False,
                               "drop_region")
@@ -414,13 +255,14 @@ def segment_blocks_reference(
                     block_id += 1
                     drop_chars = 0
             elif not self_closing:
-                if drop_depth == 0:
+                if not drop_stack:
                     flush("")
                     drop_tag = name
-                drop_depth += 1
+                drop_stack.append(name)
+                n_open[name] += 1
             continue
 
-        if name in BLOCK_TAGS and drop_depth == 0:
+        if name in BLOCK_TAGS and not drop_stack:
             if closing or name in ("br", "hr"):
                 flush("")
             else:
@@ -467,6 +309,11 @@ def extract_html(
 # whose markdown contract — header row, | --- | separator, \| escaping —
 # this renderer reproduces exactly) ---
 
+# Comments and script/style islands: removed before the table patterns run,
+# so a "</table>" inside a script string cannot truncate a table.
+_SILENT_ISLAND_RE = re.compile(
+    r"<!--.*?-->|<(script|style)\b[^>]*>.*?</\1\s*>", re.DOTALL | re.IGNORECASE
+)
 _TABLE_RE = re.compile(r"(?is)<table\b[^>]*>(.*?)</table\s*>")
 _TR_RE = re.compile(r"(?is)<tr\b[^>]*>(.*?)</tr\s*>")
 _CELL_RE = re.compile(r"(?is)<t([dh])\b[^>]*>(.*?)</t[dh]\s*>")

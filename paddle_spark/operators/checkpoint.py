@@ -244,9 +244,9 @@ def run_extract_job(
     ``output_path``, which the first write replaces), makes the run a
     recrawl: each group runs ``delta_extract`` against ``prev``'s rows of
     the group's buckets, so only changed and new pages run the kernels.
-    ``prev`` must have been written with ``cfg.n_buckets`` and
-    ``cfg.salt``, else the run raises ``ValueError`` before its first
-    write. Every written row gets this run's ``run_id``; each lineage
+    ``prev`` must have been written with ``cfg.n_buckets``, else the run
+    raises ``ValueError`` before its first write. Every written row gets
+    this run's ``run_id``; each lineage
     row's ``n_carried`` comes from the accumulator, as its other counters
     do (the carried rows pass through the kernel tasks), so a bucket of
     carried rows only still gets a lineage row and a resume skips it.
@@ -284,7 +284,7 @@ def run_extract_job(
         return df.filter(F.col("bucket") % n_groups == g) if n_groups > 1 else df
 
     pages_b = pages.withColumn(
-        "bucket", url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt)
+        "bucket", url_bucket_col(F.col("url"), cfg.n_buckets)
     )
 
     # a group whose buckets are all done has nothing to extract, write or
@@ -293,13 +293,13 @@ def run_extract_job(
               if not done_set.issuperset(range(g, cfg.n_buckets, n_groups))]
     if prev is not None and groups:
         # before the first write, one limit(1) probe that reads only url
-        # and bucket: a prev written with other n_buckets or another salt
-        # would match none of its rows
-        want = url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt)
+        # and bucket: a prev written with other n_buckets holds rows outside
+        # their bucket
+        want = url_bucket_col(F.col("url"), cfg.n_buckets)
         wrong = prev.select("url", "bucket").filter(F.col("bucket") != want).limit(1).collect()
         if wrong:
             raise ValueError(f"prev was written with another bucket scheme than "
-                             f"n_buckets={cfg.n_buckets}, salt={cfg.salt}: {wrong[0]}")
+                             f"n_buckets={cfg.n_buckets}: {wrong[0]}")
 
     replace_all = not done_set
     docs = fails = carried = 0

@@ -63,7 +63,7 @@ def delta_extract(
     the partitioning, and prefers a previous row. The output equals a
     full re-extraction of the deduplicated snapshot (test_delta pins it).
     ``extracted_prev`` must have been written with ``cfg``'s
-    ``n_buckets`` and ``salt``, or none of its rows match.
+    ``n_buckets``, or its rows sit under other buckets.
 
     WET snapshots: pass ``cfg`` with ``wet_passthrough=True`` (the same
     cfg the previous output was extracted with), so unchanged conversion

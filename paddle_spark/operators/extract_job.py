@@ -11,7 +11,7 @@ Scale design (100 TB / 10^12 rows):
 - Input scan stays columnar: we select exactly (url, warc_ts, html, lang)
   — column pruning reaches the parquet/Iceberg scan.
 - The job's only shuffle is one rebalance of the raw payloads on the
-  salted url-hash ``bucket``, below the kernels: it defuses host-domain
+  url-hash ``bucket``, below the kernels: it defuses host-domain
   skew (one mega-host = many buckets), gathers each bucket (the unit of
   checkpoint lineage) into one shuffle partition, and leaves the task
   count to AQE, which coalesces small partitions and splits oversized
@@ -211,7 +211,7 @@ def extract_source(pages: DataFrame, cfg: ExtractConfig) -> DataFrame:
         wet_text, payload = F.lit(None).cast("string"), F.col("html")
     return pages.select(
         "url", "warc_ts", "html", wet_text.alias("wet_text"), "lang",
-        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt).alias("bucket"),
+        url_bucket_col(F.col("url"), cfg.n_buckets).alias("bucket"),
         F.xxhash64(payload).alias("payload_xxh"),
     )
 

@@ -17,7 +17,7 @@ Payload mix (classified by magic bytes, SURVEY.md §2 S2):
   fragments, boilerplate header/footer boxes and sub-threshold scores.
 - ~2 % garbage bytes -> parse_ok=false rows.
 
-Host skew: host0 carries ~40 % of rows (Zipf-ish) to exercise the salted
+Host skew: host0 carries ~40 % of rows (Zipf-ish) to exercise the
 url-hash repartition (SURVEY.md §4).
 """
 

@@ -15,13 +15,10 @@ actual distribution format of Common Crawl — with nothing but the stdlib:
   ``Content-Encoding: gzip/deflate``, yielding the page bytes that feed
   extraction.
 
-Scale shape: one WARC file is one task unit, and the DEFAULT entry point
+Scale shape: one WARC file is one task unit, and the Spark entry point
 is ``warc_paths_to_pages`` — a path-per-row ``mapInPandas`` fan-out
 (UDTF-style, U5) where each worker opens its own ~1 GB archive and
 streams it, so file bytes never ride through a shuffle row.
-``read_warc_pages`` (binaryFile: whole file bytes in one row) remains
-for tests/small files and refuses rows above a size guard so the
-scale footgun cannot be hit silently.
 """
 
 from __future__ import annotations
@@ -227,59 +224,14 @@ def warc_records_to_rows(data: bytes) -> list[tuple]:
     return rows
 
 
-#: read_warc_pages refuses archives above this size — 1 GB CC files must
-#: come in through warc_paths_to_pages (the default), never through a row.
-MAX_BINARYFILE_BYTES = 64 * 1024 * 1024
-
-
-def read_warc_pages(
-    spark: SparkSession,
-    path_glob: str,
-    max_bytes: int = MAX_BINARYFILE_BYTES,
-) -> DataFrame:
-    """TEST-SCALE variant: WARC files -> pages via binaryFile, shipping
-    each file's bytes through one row. The production entry point is
-    ``warc_paths_to_pages`` (path-per-row; workers stream the archive
-    themselves). Guard: files larger than ``max_bytes`` raise — a 1 GB
-    Common Crawl archive through a binaryFile row is a silent scale
-    footgun, so it fails loudly instead.
-    """
-    files = (
-        spark.read.format("binaryFile")
-        .load(path_glob)
-        .select("path", "length", "content")
-    )
-
-    def fan_out(batches):
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path, length, data in zip(
-                pdf["path"], pdf["length"], pdf["content"]
-            ):
-                if length > max_bytes:
-                    raise ValueError(
-                        f"{path}: {length} bytes > max_bytes={max_bytes}; "
-                        "use warc_paths_to_pages for large archives"
-                    )
-                try:
-                    rows.extend(warc_records_to_rows(bytes(data)))
-                except Exception:  # per-file isolation (T5)
-                    continue
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return files.mapInPandas(fan_out, schema=PAGES_SCHEMA)
-
-
 def warc_paths_to_pages(
     spark: SparkSession, paths: list[str], rows_per_batch: int = 2048
 ) -> DataFrame:
-    """Path-per-row PRODUCTION variant: each worker STREAMS its archive
-    (gzip member by member, one record resident at a time) and emits page
-    rows in bounded ``rows_per_batch`` chunks — peak memory per task is
-    one record plus one output batch, never the 1 GB archive or its
-    multi-GB decompressed form."""
+    """WARC/WET files -> pages, one path per row: each worker STREAMS its
+    archive (gzip member by member, one record resident at a time) and
+    emits page rows in bounded ``rows_per_batch`` chunks — peak memory per
+    task is one record plus one output batch, never the 1 GB archive or
+    its multi-GB decompressed form."""
     src = spark.createDataFrame([(p,) for p in paths], "path string")
     cols = ["url", "warc_ts", "html", "text", "lang"]
 

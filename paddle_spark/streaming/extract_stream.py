@@ -11,8 +11,8 @@ topic of WARC records).
 
 Checkpointing: Structured Streaming's own WAL checkpoint replaces the
 batch job's bucket-lineage table (exactly-once per micro-batch from the
-sink+WAL contract); the salted-bucket column is still computed so the
-downstream layout matches the batch output.
+sink+WAL contract); the url-hash ``bucket`` column is still computed so
+the downstream layout matches the batch output.
 """
 
 from __future__ import annotations
@@ -23,14 +23,6 @@ from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
 from paddle_spark.operators.extract_job import extract_pages
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def streaming_extract(
-    pages_stream: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Declare the streaming extraction plan over a streaming pages frame:
-    the batch plan (extract_pages) without its fan-out shuffle."""
-    return extract_pages(pages_stream, cfg, shuffle=False)
 
 
 def read_pages_stream(
@@ -53,7 +45,7 @@ def run_extract_stream_once(
 ) -> None:
     """Process everything currently in the source, exactly-once, and stop
     (availableNow trigger — the streaming analog of one batch run)."""
-    stream = streaming_extract(read_pages_stream(spark, pages_path), cfg)
+    stream = extract_pages(read_pages_stream(spark, pages_path), cfg)
     q = (
         stream.writeStream.format("parquet")
         .option("path", output_path)

@@ -160,7 +160,7 @@ class TestPublishJob:
 
         from paddle_spark.operators.extract_job import extract_pages
         from paddle_spark.sources.synth import gen_pages_spark
-        from paddle_spark.sources.warc import read_warc_pages
+        from paddle_spark.sources.warc import warc_paths_to_pages
         from jobs.publish import main
 
         pages = gen_pages_spark(spark, 100, seed=7, n_partitions=4)
@@ -185,7 +185,7 @@ class TestPublishJob:
         assert not [p for p in read if str(p).startswith(cdx)], read
         printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
-        back = read_warc_pages(spark, wet + "/*.warc.wet.gz")
+        back = warc_paths_to_pages(spark, sorted(glob.glob(wet + "/*.warc.wet.gz")))
         got = {r["url"]: r["text"] for r in back.collect()}
         want = {r["url"]: (r["text"] or "") for r in extracted.collect()}
         assert got == want

@@ -69,7 +69,7 @@ def test_resume_skips_done_buckets_exactly_once(spark, tiny_pages, paths):
     out_path, cp_path = paths
     # --- phase 1: "crashed" run that only processed buckets 0-3 ---
     half = tiny_pages.withColumn(
-        "b", url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
+        "b", url_bucket_col(F.col("url"), CFG.n_buckets)
     ).filter(F.col("b") < 4).drop("b")
     s1 = run_extract_job(
         spark, half, out_path, cp_path, run_id="r2", cfg=CFG
@@ -156,7 +156,7 @@ def test_grouped_commit_bounds_rework(spark, tiny_pages, paths, tmp_path):
     # find a url in the LAST group (bucket % 4 == 3) to poison
     victim = (
         tiny_pages.withColumn(
-            "b", url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
+            "b", url_bucket_col(F.col("url"), CFG.n_buckets)
         )
         .filter(F.col("b") % 4 == 3)
         .select("url")
@@ -641,7 +641,7 @@ def test_iceberg_catalog_contract(spark, tiny_pages, tmp_path):
         # a second run_id over a SUBSET of buckets, in 2 groups: its first
         # write, overwrite(lit(True)), replaces the whole table, and its
         # second group's overwritePartitions adds only that group's buckets
-        b = url_bucket_col(F.col("url"), CFG.n_buckets, CFG.salt)
+        b = url_bucket_col(F.col("url"), CFG.n_buckets)
         sub = tiny_pages.filter(b < 4)
         s3 = run_extract_job(
             spark, sub, str(tmp_path / "uo"), str(tmp_path / "uc"),

@@ -102,7 +102,7 @@ def test_wet_export_roundtrips_through_own_reader(spark, tmp_path):
     from paddle_spark.operators.export import export_wet
     from paddle_spark.operators.extract_job import extract_pages
     from paddle_spark.sources.synth import gen_pages_spark
-    from paddle_spark.sources.warc import read_warc_pages
+    from paddle_spark.sources.warc import warc_paths_to_pages
 
     pages = gen_pages_spark(spark, 120, seed=42, n_partitions=3)
     extracted = extract_pages(pages, n_partitions=3)
@@ -111,7 +111,7 @@ def test_wet_export_roundtrips_through_own_reader(spark, tmp_path):
     assert sum(m["n_records"] for m in manifest) == 120
     assert all(m["file"].endswith(".warc.wet.gz") for m in manifest)
 
-    back = read_warc_pages(spark, out + "/*.warc.wet.gz")
+    back = warc_paths_to_pages(spark, sorted(glob.glob(out + "/*.warc.wet.gz")))
     got = {r["url"]: r["text"] for r in back.collect()}
     want = {r["url"]: (r["text"] or "") for r in extracted.collect()}
     assert got == want

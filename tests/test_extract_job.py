@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from paddle_spark.operators.extract_job import extract_pages, extraction_metrics
-from paddle_spark.operators.extract_job import with_config
 
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "tiny_digests.json").read_text()
@@ -56,9 +55,10 @@ def test_garbage_rows_isolated_not_failed(extracted_rows):
 
 
 def test_partitioning_invariance(spark, tiny_pages, extracted_rows):
-    """Same digests at a different partition count / salt (byte-identity
-    across shuffles — the whole point of pure kernels)."""
-    alt = extract_pages(tiny_pages, cfg=with_config(salt=99), n_partitions=3)
+    """Same digests whatever the partitioning: a 7-way round-robin input
+    under a 3-wide bucket rebalance (byte-identity across shuffles — the
+    whole point of pure kernels)."""
+    alt = extract_pages(tiny_pages.repartition(7), shuffle=True, n_partitions=3)
     alt_rows = {r["url"]: r["text_sha256"] for r in alt.select("url", "text_sha256").collect()}
     assert alt_rows == {u: r["text_sha256"] for u, r in extracted_rows.items()}
 

@@ -1,5 +1,10 @@
 """HTML branch unit tests: density scoring, drop regions, normalization."""
 
+import time
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from paddle_spark.config import ExtractConfig
 from paddle_spark.kernels.html import extract_html, normalize_text, segment_blocks
 
@@ -153,3 +158,120 @@ def test_blocks_have_monotonic_ids():
     blocks = segment_blocks(doc(f"<p>{LONG}</p><p>{LONG}</p><nav>x y z w</nav>"))
     ids = [b.block_id for b in blocks]
     assert ids == sorted(ids) and len(set(ids)) == len(ids)
+
+
+def test_nested_boilerplate_dropped_whole():
+    """A boilerplate element nesting its own tag drops at every level: the
+    text after the inner close is still inside the outer subtree."""
+    menu = "Home About Contact Careers Press Investors Legal"
+    for tag in ("nav", "form", "svg", "template"):
+        payload = doc(f"<{tag}><{tag}>menu</{tag}>{menu}</{tag}><p>{LONG}</p>")
+        assert extract_html(payload) == (LONG, 1, 1), tag
+
+
+def test_stray_or_unclosed_close_inside_boilerplate():
+    """A close tag ends its own boilerplate element and any unclosed one
+    inside it; a close tag of an element that is not open is ignored."""
+    menu = "Home About Contact Careers Press Investors Legal"
+    for inner in ("</form>", "<button>", "<select><svg>", "<form></svg>"):
+        payload = doc(f"<nav>{inner}{menu}</nav><p>{LONG}</p>")
+        assert extract_html(payload) == (LONG, 1, 1), inner
+
+
+def test_marker_lookalike_tags_are_plain_markup():
+    """Tags that look like internal markers (``<xdropped0/>``) or hold the
+    private-use U+E000 are ordinary unknown tags; U+E000 never reaches the
+    extracted text."""
+    cases = [
+        (b"<html><body><p>before</p><xdropped0/>"
+         b"<p>afterwards text that is long enough</p></body></html>",
+         ("afterwards text that is long enough", 1, 1)),
+        (b"<html><body><xdropped999/><nav>boiler</nav>"
+         b"<p>main content paragraph long enough</p></body></html>",
+         ("main content paragraph long enough", 1, 1)),
+        (b"<html><body><p>a \xee\x80\x80 sentinel in text run long enough"
+         b" to keep</p></body></html>",
+         ("a sentinel in text run long enough to keep", 1, 0)),
+        (b"<html><body><\xee\x80\x8012/><p>fake sentinel tag plus long"
+         b" enough text</p></body></html>",
+         ("fake sentinel tag plus long enough text", 1, 0)),
+        (b"<html><body><xdroppedfoo><p>unparseable index long enough"
+         b" paragraph</p></body></html>",
+         ("unparseable index long enough paragraph", 1, 0)),
+    ]
+    for payload, want in cases:
+        assert extract_html(payload) == want, payload
+
+
+# A word that occurs only inside boilerplate subtrees, in a run long enough
+# to be kept if it ever leaked into a main-text block.
+MARKER = "zqxmarker"
+_MARKER_RUN = f"{MARKER} words that would clear the keep threshold"
+_BOILERPLATE = ("nav", "footer", "aside", "form", "svg", "template")
+
+
+def _boilerplate(depth: int = 0) -> st.SearchStrategy[str]:
+    """A balanced boilerplate subtree, possibly nesting its own tag."""
+    leaf = st.sampled_from(
+        [_MARKER_RUN, f"<p>{_MARKER_RUN}</p>", f"<a href='/m'>{_MARKER_RUN}</a>",
+         f"<div>{_MARKER_RUN}<br></div>", "<img src='m.png'>"]
+    )
+    kid = leaf if depth >= 2 else st.one_of(leaf, st.deferred(lambda: _boilerplate(depth + 1)))
+    return st.builds(
+        lambda tag, kids: f"<{tag}>{''.join(kids)}</{tag}>",
+        st.sampled_from(_BOILERPLATE),
+        st.lists(kid, min_size=1, max_size=3),
+    )
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.sampled_from(
+                [
+                    "<p>some reasonably long paragraph text for scoring</p>",
+                    "<div><h2>Head</h2>",
+                    "</div>",
+                    "<script>var x = '<p>trap</p>';</script>",
+                    "<!-- a comment with <p>markup</p> inside -->",
+                    "plain top-level text run that is long enough to keep",
+                    "<br>",
+                    "<img src='x.jpg'>",
+                    "<a href='/l'>inline link text</a>",
+                    "<head><title>t</title><style>p{}</style></head>",
+                    "<p>a private-use \ue000 char in a long enough paragraph</p>",
+                    "<\ue0000/><xdropped1/>",
+                ]
+            ),
+            _boilerplate(),
+        ),
+        max_size=12,
+    )
+)
+def test_boilerplate_text_never_leaks(parts):
+    payload = ("<html><body>" + "".join(parts) + "</body></html>").encode()
+    first = extract_html(payload)
+    assert extract_html(payload) == first
+    assert MARKER not in first[0]
+    assert "\ue000" not in first[0]
+
+
+def test_unclosed_boilerplate_is_linear():
+    """Unclosed ``<nav>`` openers, alone or followed by as many stray
+    ``</form>`` closes: 8x the bytes must cost well under the 64x of a
+    quadratic scan (linear reads about 8x)."""
+
+    def best_of_3(payload: bytes) -> float:
+        times = []
+        for _ in range(3):
+            t0 = time.process_time()
+            extract_html(payload)
+            times.append(time.process_time() - t0)
+        return min(times)
+
+    for unit, tail in (("<nav>x", ""), ("<nav>", "</form>")):
+        n = 8 * 1024 // len(unit + tail)
+        small = (unit * n + tail * n).encode()
+        large = (unit * 8 * n + tail * 8 * n).encode()
+        assert best_of_3(large) / best_of_3(small) < 16, unit

@@ -2,7 +2,7 @@
 
 Checks the scale-critical properties .explain() would show a reviewer:
 filter pushdown reaching the parquet scan, broadcast on small join sides,
-whole-stage codegen on hot relational paths, and salted-bucket evenness
+whole-stage codegen on hot relational paths, and url-hash bucket evenness
 under the planted host skew.
 """
 
@@ -33,7 +33,7 @@ def test_resume_plan_filters_without_a_join(spark, tiny_pages, tmp_path, monkeyp
     cfg = ExtractConfig(n_buckets=8)
     out, cp = str(tmp_path / "o"), str(tmp_path / "c")
     half = tiny_pages.filter(
-        url_bucket_col(F.col("url"), cfg.n_buckets, cfg.salt) < 4
+        url_bucket_col(F.col("url"), cfg.n_buckets) < 4
     )
     checkpoint_mod.run_extract_job(spark, half, out, cp, run_id="p1", cfg=cfg)
 
@@ -73,12 +73,12 @@ def test_ann_query_broadcasts_queries_side(spark):
 
 
 def test_salted_buckets_defuse_host_skew(spark, tiny_pages):
-    """The corpus plants ~40% of rows on one mega-host; salted url-hash
+    """The corpus plants ~40% of rows on one mega-host; url-hash
     buckets must still be near-uniform (no bucket > 3x the mean)."""
     from paddle_spark.functions import url_bucket_col
 
     counts = (
-        tiny_pages.select(url_bucket_col(F.col("url"), 16, 0).alias("b"))
+        tiny_pages.select(url_bucket_col(F.col("url"), 16).alias("b"))
         .groupBy("b")
         .count()
         .collect()
@@ -193,7 +193,7 @@ def test_bucketed_tables_colocate_join_no_shuffle(spark, tmp_path):
 
 def test_aqe_splits_skewed_join_partition(spark):
     """The runtime half of the skew story: the STATIC defense is the
-    salted url-hash repartition (test_salted_buckets_defuse_host_skew);
+    url-hash repartition (test_salted_buckets_defuse_host_skew);
     for joins we rely on AQE's skew-join split — prove it fires on a
     planted hot key (one key carrying ~83% of the fact side)."""
     from pyspark.sql import functions as F

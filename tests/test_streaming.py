@@ -74,8 +74,8 @@ def test_streaming_scanned_pdf_byte_identity(spark, tmp_path):
     import pandas as pd
 
     from paddle_spark.kernels.extract import extract_document
+    from paddle_spark.operators.extract_job import extract_pages
     from paddle_spark.sources.synth import make_scanned_pdf
-    from paddle_spark.streaming.extract_stream import streaming_extract
 
     rows = [
         (f"scanpdf://{i}", None, bytearray(make_scanned_pdf(i, "dct" if i % 2 else "flate")), None, "en")
@@ -92,7 +92,7 @@ def test_streaming_scanned_pdf_byte_identity(spark, tmp_path):
             "url string, warc_ts timestamp, html binary, text string, lang string"
         ).parquet(str(src) + "/*")
     )
-    out = streaming_extract(stream)
+    out = extract_pages(stream)
     q = (
         out.writeStream.format("memory").queryName("scanned_stream")
         .option("checkpointLocation", str(tmp_path / "cp"))
@@ -115,7 +115,7 @@ def test_streaming_wet_passthrough_matches_batch(spark, tmp_path):
 
     from paddle_spark.operators.extract_job import extract_pages, with_config
     from paddle_spark.sources.synth import gen_pages_spark
-    from paddle_spark.streaming.extract_stream import PAGES_DDL, streaming_extract
+    from paddle_spark.streaming.extract_stream import PAGES_DDL
 
     ts = dt.datetime(2024, 1, 1)
     wet = [(f"https://wet{i}.example/p", ts, None, f"wet text {i}", "en")
@@ -126,7 +126,7 @@ def test_streaming_wet_passthrough_matches_batch(spark, tmp_path):
     ).write.parquet(src)
     cfg = with_config(wet_passthrough=True)
 
-    stream = streaming_extract(spark.readStream.schema(PAGES_DDL).parquet(src), cfg)
+    stream = extract_pages(spark.readStream.schema(PAGES_DDL).parquet(src), cfg)
     q = (
         stream.writeStream.format("memory").queryName("wet_stream")
         .option("checkpointLocation", str(tmp_path / "cp"))

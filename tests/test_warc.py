@@ -2,14 +2,13 @@
 pages rows -> the standard extraction pipeline, pure stdlib."""
 
 import datetime as dt
+import glob
 
-import pytest
 from pyspark.sql import functions as F
 
 from paddle_spark.sources.synth import gen_page_row, make_warc
 from paddle_spark.sources.warc import (
     iter_warc_records,
-    read_warc_pages,
     warc_paths_to_pages,
     warc_records_to_rows,
 )
@@ -82,17 +81,6 @@ def test_deflate_content_encoding():
         assert len(rows) == 1 and rows[0][2] == body
 
 
-def test_read_warc_pages_size_guard(spark, tmp_path):
-    """Oversize archives fail loudly through the binaryFile entry point
-    (the production path is warc_paths_to_pages)."""
-    p = tmp_path / "big.warc"
-    p.write_bytes(make_warc(_records(3)))
-    with pytest.raises(Exception, match="warc_paths_to_pages"):
-        read_warc_pages(spark, str(p), max_bytes=16).collect()
-    # same file passes through the path-per-row default
-    assert warc_paths_to_pages(spark, [str(p)]).count() == 3
-
-
 def test_non_response_records_skipped():
     data = (
         b"WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 4\r\n\r\nabcd\r\n\r\n"
@@ -124,17 +112,13 @@ def test_spark_warc_to_extraction(spark, tmp_path):
     p1.write_bytes(make_warc(recs[:25], gz=True))
     p2.write_bytes(make_warc(recs[25:]))
 
-    pages = read_warc_pages(spark, str(tmp_path / "*.warc*"))
+    pages = warc_paths_to_pages(spark, sorted(glob.glob(str(tmp_path / "*.warc*"))))
     assert pages.count() == 40
     out = {r["url"]: r["text_sha256"]
            for r in extract_pages(pages, n_partitions=2).collect()}
     for url, _, payload in recs:
         assert out[url] == extract_document(payload).text_sha256, url
-
-    # path-per-row variant parses the same rows
-    via_paths = warc_paths_to_pages(spark, [str(p1), str(p2)])
-    assert via_paths.count() == 40
-    assert via_paths.filter(F.col("html").isNull()).count() == 0
+    assert pages.filter(F.col("html").isNull()).count() == 0
 
 
 def test_warc_parser_fuzz_never_raises():
